@@ -96,7 +96,10 @@ def session_cache_storage_bytes(spark: SparkSession) -> int:
 _BARS_CACHE: dict = {}
 
 
-def _bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+def session_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The session's bars artifact: `daily_bars` over `sf_dir`'s events,
+    landed once per (session, sf_dir) and shared by the bars-based
+    registry queries and `serve.JsonApi`."""
     return session_cached(
         _BARS_CACHE,
         spark,
@@ -140,7 +143,7 @@ def _nulled(spark: SparkSession, sf_dir: str) -> DataFrame:
     "S3/J-foundation: events → canonical per-symbol daily OHLCV bars (FIXTURES.md F7)",
 )
 def q_bars(spark, sf_dir):
-    return _bars(spark, sf_dir)
+    return session_bars(spark, sf_dir)
 
 
 # ---------------------------------------------------------------- P: cleaning
@@ -190,7 +193,7 @@ def q_cleaning_report(spark, sf_dir):
         "symbol", nul_date, F.lit("n_rows").alias("metric"),
         F.col("n_rows").alias("n"),
     )
-    shifted = _bars(spark, sf_dir).withColumn("high", F.col("high") - 3.0)
+    shifted = session_bars(spark, sf_dir).withColumn("high", F.col("high") - 3.0)
     inc = cleaning.detect_inconsistencies(shifted).select(
         "symbol",
         F.col("date").cast("string").alias("date"),
@@ -236,7 +239,7 @@ def q_drop_invalid(spark, sf_dir):
 def q_align(spark, sf_dir):
     from .operators.alignment import align_to_calendar
 
-    aligned = align_to_calendar(_bars(spark, sf_dir))
+    aligned = align_to_calendar(session_bars(spark, sf_dir))
     filled = cleaning.forward_fill(
         aligned,
         value_col="close",
@@ -278,7 +281,7 @@ seq AS (
     "(algorithms/technical.py:161-186)",
 )
 def q_returns(spark, sf_dir):
-    out = technical.returns_bundle(_bars(spark, sf_dir))
+    out = technical.returns_bundle(session_bars(spark, sf_dir))
     return out.select(
         "symbol",
         "date",
@@ -312,7 +315,7 @@ def q_returns(spark, sf_dir):
     "from one WindowExec",
 )
 def q_rolling(spark, sf_dir):
-    out = technical.rolling_features(_bars(spark, sf_dir), 5)
+    out = technical.rolling_features(session_bars(spark, sf_dir), 5)
     return out.select(
         "symbol", "date", r6(F.col("sma_5")).alias("sma_5"), "gaps_in_window"
     )
@@ -423,7 +426,7 @@ def q_risk(spark, sf_dir):
     # pin them equal to this fusion.
     from pyspark.sql import Window
 
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     w = Window.partitionBy("symbol").orderBy("date")
     prev_close = F.lag("close").over(w)
     prev_high = F.lag("high").over(w)
@@ -564,7 +567,7 @@ GROUP BY 1""",
 )
 def q_risk_summary(spark, sf_dir):
     classified = volatility.classify_risk(
-        volatility.historical_volatility(_bars(spark, sf_dir))
+        volatility.historical_volatility(session_bars(spark, sf_dir))
     )
     return volatility.risk_summary(classified)
 
@@ -633,7 +636,7 @@ SELECT 'window_5' AS kind, symbol, streak_length, frequency FROM win""",
     "algorithm (algorithms/patterns.py:106-141); oracle simulates every window",
 )
 def q_streak_histograms(spark, sf_dir):
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     glob = patterns.global_streak_histogram(bars).select(
         F.lit("global").alias("kind"),
         "symbol",
@@ -693,7 +696,7 @@ def q_streak_histograms(spark, sf_dir):
 def q_pair_metrics(spark, sf_dir):
     from .functions import regression_line
 
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     sim = similarity.pair_metrics(bars, 0, 1).select(
         r6(F.col("euclidean")).alias("euclidean"),
         r6(F.col("pearson")).alias("pearson"),
@@ -777,7 +780,7 @@ HEATMAP_TOP_K = 10
 )
 def q_heatmap(spark, sf_dir):
     out = similarity.correlation_heatmap_blocked(
-        _bars(spark, sf_dir),
+        session_bars(spark, sf_dir),
         min_abs_corr=HEATMAP_MIN_ABS_CORR,
         top_k_per_symbol=HEATMAP_TOP_K,
     )
@@ -864,7 +867,7 @@ def dtw_pairs_distances(spark, sf_dir):
     pairs, algorithms/similarity.py:200-352), capped at 100 symbols =
     4,950 pairs at any scale (all-pairs over the full universe is the
     min_abs_corr-prefiltered library path)."""
-    bars = _bars(spark, sf_dir).filter(F.col("symbol") < _DTW_SYMBOL_CAP)
+    bars = session_bars(spark, sf_dir).filter(F.col("symbol") < _DTW_SYMBOL_CAP)
     out = similarity.dtw_pairs(bars)
     return out.select("sym_a", "sym_b", r6(F.col("dtw")).alias("dtw"))
 
@@ -893,7 +896,7 @@ def q_topk(spark, sf_dir):
     "O13 multi-criteria ordering (main.py:139-169) materialized as a rank for order verification (O16)",
 )
 def q_sort_rank(spark, sf_dir):
-    out = sorting.with_sort_rank(_bars(spark, sf_dir), ["date", "close", "symbol"])
+    out = sorting.with_sort_rank(session_bars(spark, sf_dir), ["date", "close", "symbol"])
     return out.select(
         "symbol", "date", "close", F.col("sort_rank").cast("long").alias("sort_rank")
     )

@@ -17,10 +17,10 @@ from pyspark.sql import functions as F
 
 from .driver_queries import (
     DTW_PAIRS_ORACLE,
-    _bars,
     dtw_pairs_distances,
     register,
     r6,
+    session_bars,
     session_cached,
 )
 from .operators import cleaning, dedup, relational, text, vectors
@@ -1207,7 +1207,7 @@ def q_dtw_report(spark, sf_dir):
         F.lit(None).cast("int").alias("i"),
         F.lit(None).cast("int").alias("j"),
     )
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     path = similarity.dtw_path(bars, 0, 1).select(
         F.lit("path").alias("kind"),
         "sym_a", "sym_b", r6(F.col("dtw")).alias("dtw"), "step", "i", "j"
@@ -1991,7 +1991,7 @@ def q_attribution_join(spark, sf_dir):
 )
 def q_wide_roundtrip(spark, sf_dir):
     from .operators import alignment
-    bars = _bars(spark, sf_dir).filter(
+    bars = session_bars(spark, sf_dir).filter(
         F.col("symbol").isin(0, 1, 2, 3)
     )
     symbols = ["0", "1", "2", "3"]
@@ -2196,7 +2196,7 @@ def q_bar_slices(spark, sf_dir):
     from .functions import cents, date_parts, date_to_unix
     from .operators import sampling
 
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     w = Window.partitionBy("symbol")
     tail = (
         bars.withColumn("_max", F.max("date").over(w))
@@ -2287,7 +2287,7 @@ def q_asof_join(spark, sf_dir):
         .filter(F.col("event_id") % 10 == 0)
         .select("event_id", "user_id", F.to_date("ts").alias("event_date"))
     )
-    bars = _bars(spark, sf_dir).select(
+    bars = session_bars(spark, sf_dir).select(
         F.col("symbol").alias("user_id"), "date", "close"
     )
     out = asof.asof_join(
@@ -4033,7 +4033,7 @@ def q_price_anomalies(spark, sf_dir):
     from .operators import technical
 
     return technical.rolling_zscore(
-        _bars(spark, sf_dir), value_col="close", window_size=20,
+        session_bars(spark, sf_dir), value_col="close", window_size=20,
         threshold=2.5,
     )
 
@@ -4160,7 +4160,7 @@ def q_fuzzy_part_match(spark, sf_dir):
 def q_interpolated_bars(spark, sf_dir):
     from .operators import alignment
 
-    bars = _bars(spark, sf_dir)
+    bars = session_bars(spark, sf_dir)
     grid = alignment.align_to_calendar(bars.select("symbol", "date", "close"))
     filled = cleaning.interpolate_missing(
         grid.select("symbol", "date", "close"),
@@ -4536,7 +4536,7 @@ def q_incremental_distinct(spark, sf_dir):
 def q_weekly_bars(spark, sf_dir):
     from .operators import technical
 
-    return technical.resample_bars(_bars(spark, sf_dir), freq="week")
+    return technical.resample_bars(session_bars(spark, sf_dir), freq="week")
 
 
 @register(
@@ -4925,7 +4925,7 @@ def q_order_value_drift(spark, sf_dir):
 def q_acf_report(spark, sf_dir):
     from .operators import technical
 
-    return technical.acf_report(_bars(spark, sf_dir), max_lag=5)
+    return technical.acf_report(session_bars(spark, sf_dir), max_lag=5)
 
 
 @register(
@@ -4963,7 +4963,7 @@ def q_seasonal_decomposition(spark, sf_dir):
     from .operators import technical
 
     return technical.seasonal_decomposition(
-        _bars(spark, sf_dir), period=7, trend_window=7
+        session_bars(spark, sf_dir), period=7, trend_window=7
     )
 
 

@@ -673,6 +673,9 @@ def _zero_fill_log_returns(prices):
 def compare_two_assets(bars: DataFrame, sym_a, sym_b, window: int | None = None) -> DataFrame:
     """X3 full bundle: euclidean/pearson/cosine natively + DTW UDF."""
     metrics = pair_metrics(bars, sym_a, sym_b)
+    if sym_a == sym_b:
+        # dtw_pairs keeps sym_a < sym_b only; a series is 0 from itself
+        return metrics.withColumn("dtw", F.lit(0.0))
     dtw = dtw_pairs(bars, pairs=[(sym_a, sym_b)], window=window).select("dtw")
     return metrics.crossJoin(dtw)
 

@@ -24,14 +24,14 @@ each of their endpoints' numbers comes from.
 
 from __future__ import annotations
 
+import functools
 import json
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .driver_queries import session_bars
 from .operators import patterns, sampling, similarity, volatility
-from .sources.readers import daily_bars, load_table
 
 
 def _rows(df: DataFrame) -> list[dict]:
@@ -41,32 +41,61 @@ def _rows(df: DataFrame) -> list[dict]:
     return [json.loads(s) for s in df.toJSON().collect()]
 
 
+def _memoized(route):
+    """Compute a whole-dataset route once per `JsonApi` and keep the
+    finished payload on the instance."""
+
+    @functools.wraps(route)
+    def answer(self) -> dict:
+        if route.__name__ not in self._answers:
+            self._answers[route.__name__] = route(self)
+        return self._answers[route.__name__]
+
+    return answer
+
+
 class JsonApi:
     """Route handlers over one SparkSession + dataset directory.
 
-    Plans are built per call (they are cheap); the bars scan is cached
-    once so repeated routes don't re-read parquet.
+    Every route reads the session's bars artifact
+    (`driver_queries.session_bars`), the same landing the registry
+    queries share, taken on first use so that construction runs no
+    Spark work.
+
+    /api/symbols, /api/heatmap and /api/risk are memoized per instance:
+    their answers depend only on the dataset, and the reference keeps
+    them the same way (`app.py:324-325, 449-450, 481`). Building their
+    plans alone takes 0.5-0.9 s per call at sf0.001, before any job
+    runs. A memoized payload is shared by every caller, so callers must
+    not mutate it. The per-symbol and per-pair routes build and run
+    their plans on every request.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.sf_dir = sf_dir
-        self.bars = daily_bars(load_table(spark, sf_dir, "events")).cache()
+        self._answers: dict[str, dict] = {}
+
+    @property
+    def bars(self) -> DataFrame:
+        return session_bars(self.spark, self.sf_dir)
 
     # -- /api/symbols (app.py:156-163)
+    @_memoized
     def symbols(self) -> dict:
         rows = self.bars.select("symbol").distinct().orderBy("symbol").collect()
         return {"symbols": [r.symbol for r in rows]}
 
     # -- /api/similarity?a=&b= (app.py:166-319)
     def similarity(self, sym_a: int, sym_b: int) -> dict:
-        known = {r.symbol for r in self.bars.select("symbol").distinct().collect()}
+        known = set(self.symbols()["symbols"])
         if sym_a not in known or sym_b not in known:
             return {"error": "symbol not found"}
         bundle = _rows(similarity.compare_two_assets(self.bars, sym_a, sym_b))[0]
         return {"a": sym_a, "b": sym_b, **bundle}
 
     # -- /api/heatmap (app.py:322-353)
+    @_memoized
     def heatmap(self) -> dict:
         rows = _rows(
             similarity.correlation_heatmap(self.bars).orderBy("sym_a", "sym_b")
@@ -98,6 +127,7 @@ class JsonApi:
         }
 
     # -- /api/risk (app.py:447-486)
+    @_memoized
     def risk(self) -> dict:
         out = volatility.analyze_portfolio_risk(self.bars).orderBy("rank")
         return {"assets": _rows(out)}

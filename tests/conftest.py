@@ -24,12 +24,14 @@ def tables(spark):
 
 
 @pytest.fixture(scope="session")
-def bars(spark, tables):
-    from algoritmos_etl_spark.sources import daily_bars
+def bars(spark):
+    """The session's bars artifact. Not `daily_bars(...).cache()`: Spark
+    substitutes a cached plan into every later plan over the same
+    events, so the registry's landing and `serve.JsonApi` would inherit
+    the cache's uncoalesced 64+ partitions."""
+    from algoritmos_etl_spark.driver_queries import session_bars
 
-    df = daily_bars(tables["events"]).cache()
-    df.count()
-    return df
+    return session_bars(spark, SF_DIR)
 
 
 @pytest.fixture(scope="session")

@@ -6,9 +6,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from algoritmos_etl_spark.driver_queries import session_bars
 from algoritmos_etl_spark.operators import similarity
 from algoritmos_etl_spark.plans import run_etl
-from algoritmos_etl_spark.sources.readers import daily_bars, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -105,7 +105,7 @@ def test_read_wide_csv_rejects_malformed_headers(spark, tmp_path):
 
 
 def test_dtw_path_consistency(spark):
-    bars = daily_bars(load_table(spark, SF_DIR, "events")).cache()
+    bars = session_bars(spark, SF_DIR)
     # downsampling off: this test pins the raw DP/backtrack invariants
     path_df = similarity.dtw_path(
         bars, 0, 1, target_points=None, path_points=None

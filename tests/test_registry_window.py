@@ -42,7 +42,6 @@ MUST_BE_IN_WINDOW = {
     "exact_repeat_runs_tokens",
     "pps_sample",
     "quality_tiers",
-    
     "ann_ivf_topk",
     "streaming_heavy_hitters",
     "streaming_cdc_state",

@@ -7,6 +7,7 @@ import json
 
 import pytest
 
+from algoritmos_etl_spark.driver_queries import session_bars
 from algoritmos_etl_spark.serve import JsonApi
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -15,6 +16,76 @@ SF_DIR = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def api(spark):
     return JsonApi(spark, SF_DIR)
+
+
+def _jobs_of(spark, group: str, fn):
+    """(fn's result, ids of the Spark jobs fn launched), read from the
+    status tracker through a job group of fn's own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_construction_launches_no_job(spark):
+    _, jobs = _jobs_of(spark, "serve-construct", lambda: JsonApi(spark, SF_DIR))
+    assert jobs == []
+
+
+def test_whole_dataset_routes_are_memoized(spark):
+    api = JsonApi(spark, SF_DIR)
+    for path in ("/api/symbols", "/api/heatmap", "/api/risk"):
+        first = api.dispatch(path, {})
+        again, jobs = _jobs_of(
+            spark, f"serve-memo{path}", lambda: api.dispatch(path, {})
+        )
+        assert again == first and again[0] == 200
+        assert jobs == [], f"{path} ran {len(jobs)} job(s) on a repeat"
+
+
+def test_routes_read_the_session_bars_artifact(spark, api):
+    """The API shares the registry's bars landing: no route plan scans a
+    cached (InMemoryRelation) copy of its own."""
+    assert api.bars is session_bars(spark, SF_DIR)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        runs = store.executionsList()
+        return [runs.apply(i) for i in range(runs.length())]
+
+    seen = {e.executionId() for e in executions()}
+    fresh = JsonApi(spark, SF_DIR)
+    for path, query in (
+        ("/api/symbols", {}), ("/api/similarity", {"a": "0", "b": "1"}),
+        ("/api/heatmap", {}), ("/api/candlestick/0", {}),
+        ("/api/patterns/0", {}), ("/api/risk", {}),
+    ):
+        assert fresh.dispatch(path, query)[0] == 200
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    plans = [
+        e.physicalPlanDescription() for e in executions()
+        if e.executionId() not in seen
+    ]
+    assert plans
+    assert not any("InMemory" in p for p in plans)
+
+
+def test_warm_candlestick_runs_few_tasks(spark, api):
+    """At sf0.001 the bars landing is one partition, so a warm
+    per-symbol route runs a handful of tasks, not one per cached
+    partition."""
+    api.dispatch("/api/candlestick/0", {})
+    (status, _), jobs = _jobs_of(
+        spark, "serve-candlestick", lambda: api.dispatch("/api/candlestick/0", {})
+    )
+    assert status == 200
+    store = spark.sparkContext._jsc.sc().statusStore()
+    tasks = sum(store.job(j).numCompletedTasks() for j in jobs)
+    assert 0 < tasks < 8
 
 
 def test_symbols_route(api):
@@ -27,6 +98,9 @@ def test_similarity_route_and_validation(api):
     status, out = api.dispatch("/api/similarity", {"a": "0", "b": "1"})
     assert status == 200
     assert {"euclidean", "pearson", "cosine", "dtw", "n_points"} <= set(out)
+    status, out = api.dispatch("/api/similarity", {"a": "0", "b": "0"})
+    assert status == 200
+    assert out["dtw"] == 0.0 and out["euclidean"] == 0.0 and out["n_points"] > 0
     status, out = api.dispatch("/api/similarity", {"a": "0", "b": "999999"})
     assert status == 400 and "error" in out
     status, out = api.dispatch("/api/similarity", {"a": "0"})
