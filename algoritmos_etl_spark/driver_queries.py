@@ -24,6 +24,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import store
 from .functions.scalars import fixed6, one_partition
 from .sources.readers import ORACLE_BARS_CTE, daily_bars, load_table
 from .operators import cleaning, patterns, relational, similarity, sorting, technical, volatility
@@ -49,35 +50,6 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-# The canonical bars model feeds ~20 registry queries. The reference
-# materializes its master dataset once and every endpoint reads it
-# (etl/data_unifier.py → CSV, app.py reads); the in-session twin of that
-# is materializing the events→bars aggregation once per (session,
-# sf_dir) and letting every query start from the cached blocks.
-# Lifetime: while an entry is cached its checkpoint blocks are LIVE
-# (the cache holds a strong reference, so GC-based ContextCleaner
-# release never fires for cached entries — they are freed when the
-# session stops). Every access prunes entries whose SparkContext has
-# stopped, so dead-session entries don't accumulate across sessions.
-def session_cached(cache: dict, spark: SparkSession, key_extra, build):
-    """(applicationId, …)-keyed per-session memo of a materialized
-    DataFrame, with dead-context eviction on access.
-
-    applicationId, not id(spark): a Python session object can be GC'd
-    and a new one allocated at the same address, which would hand out
-    DataFrames bound to a dead context.
-    """
-    for k in [k for k, (ctx, _) in cache.items() if ctx._jsc is None]:
-        del cache[k]  # context stopped — blocks are gone with the JVM
-    sc = spark.sparkContext
-    key = (sc.applicationId, key_extra)
-    entry = cache.get(key)
-    if entry is None:
-        entry = (sc, build().localCheckpoint(eager=False))
-        cache[key] = entry
-    return entry[1]
-
-
 def session_cache_storage_bytes(spark: SparkSession) -> int:
     """Total bytes of persisted/checkpointed RDD blocks currently held
     by this session's executors (memory + disk) — the accounting hook
@@ -86,23 +58,25 @@ def session_cache_storage_bytes(spark: SparkSession) -> int:
     fixture files, parse tables — each a few MB to tens of MB at
     bench SFs) may live as localCheckpoint blocks; corpus-SIZED
     tables (positional shingles, encoded corpus) must land as parquet
-    artifacts via `_landed_parquet` so executor storage stays flat as
+    artifacts (`store.parquet`) so executor storage stays flat as
     the registry grows. `tests/test_plans.py` pins the parquet
     artifacts holding zero blocks."""
     infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
     return int(sum(i.memSize() + i.diskSize() for i in infos))
 
 
-_BARS_CACHE: dict = {}
-
-
+# The canonical bars model feeds ~20 registry queries. The reference
+# materializes its master dataset once and every endpoint reads it
+# (etl/data_unifier.py → CSV, app.py reads); the in-session twin of that
+# is landing the events→bars aggregation once per (session, sf_dir)
+# and letting every query start from the landed blocks.
 def session_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The session's bars artifact: `daily_bars` over `sf_dir`'s events,
     landed once per (session, sf_dir) and shared by the bars-based
     registry queries and `serve.JsonApi`."""
-    return session_cached(
-        _BARS_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "bars",
         sf_dir,
         lambda: daily_bars(load_table(spark, sf_dir, "events")),
     )

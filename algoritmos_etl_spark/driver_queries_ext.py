@@ -11,17 +11,15 @@ Imported by driver_queries for registration side effects.
 
 from __future__ import annotations
 
-import atexit
-
 from pyspark.sql import functions as F
 
+from . import store
 from .driver_queries import (
     DTW_PAIRS_ORACLE,
     dtw_pairs_distances,
     register,
     r6,
     session_bars,
-    session_cached,
 )
 from .operators import cleaning, dedup, relational, text, vectors
 from .sources.readers import ORACLE_BARS_CTE, load_table
@@ -230,19 +228,16 @@ sh AS (
 
 _SHINGLE_DF_CAP = 100
 
-# Documents-table row count per sf_dir — the size driver for the
-# landed-cache spread floor below. One metadata-only parquet count per
-# corpus; the value is engine- and session-independent, so a plain
-# dict memo is safe across sessions.
-_DOC_COUNT_CACHE: dict[str, int] = {}
-
-
+# Documents-table row count per (session, sf_dir) — the size driver
+# for the landed-cache spread floor below: one metadata-only parquet
+# count, with the same lifetime as the tables it sizes.
 def _doc_count(spark, sf_dir: str) -> int:
-    n = _DOC_COUNT_CACHE.get(sf_dir)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        _DOC_COUNT_CACHE[sf_dir] = n
-    return n
+    return store.value(
+        spark.sparkContext,
+        "doc_count",
+        sf_dir,
+        lambda: load_table(spark, sf_dir, "documents").count(),
+    )
 
 
 def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
@@ -264,17 +259,14 @@ def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
 # AND dedup_minhash_lsh (signatures + verification) — the corpus is
 # shingled once per (session, sf_dir). At cluster scale this is the
 # written `ngram_write_index` table computed at ingest.
-_SHINGLES_CACHE: dict = {}
-
-
 def _shingles(spark, sf_dir):
     # repartition before the checkpoint: AQE coalesces the shingle
     # table to ~2 partitions by BYTES, single-tasking the md5/banding
     # maps every consumer runs on it (r12 optimization round — the
     # landed-cache spread pattern, see _deduped_links_pages)
-    return session_cached(
-        _SHINGLES_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "shingles",
         sf_dir,
         lambda: dedup.doc_shingles(
             load_table(spark, sf_dir, "documents"), k=3
@@ -286,15 +278,11 @@ def _shingles(spark, sf_dir):
 # neardup_clusters (same candidate policy, same threshold). Like the
 # bars model, materialize it once per (session, sf_dir) — a pipeline
 # would land it as a table; recomputing the inverted-index join twice
-# per session is pure waste. Dead-context entries evicted on access
-# (see driver_queries.session_cached).
-_NGRAM_PAIRS_CACHE: dict = {}
-
-
+# per session is pure waste.
 def _ngram_pairs(spark, sf_dir):
-    return session_cached(
-        _NGRAM_PAIRS_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "ngram_pairs",
         sf_dir,
         lambda: dedup.ngram_jaccard_pairs(
             load_table(spark, sf_dir, "documents"),
@@ -311,13 +299,10 @@ def _ngram_pairs(spark, sf_dir):
 # — at cluster scale this is a written index computed at ingest. Only
 # the narrow (vec_id, tbl, sig) rows are materialized; consumers join
 # vectors from the columnar source.
-_LSH_SIGS_CACHE: dict = {}
-
-
 def _lsh_sigs(spark, sf_dir):
-    return session_cached(
-        _LSH_SIGS_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "lsh_sigs",
         sf_dir,
         lambda: vectors.lsh_signatures(
             load_table(spark, sf_dir, "embeddings")
@@ -329,14 +314,10 @@ def _lsh_sigs(spark, sf_dir):
 # sf_dir), shared by ann_ivf_topk and kmeans_clusters — the same
 # ingest-time artifact both would read on a cluster (the IVF index is
 # literally this k-means).
-_IVF_FLAT_CACHE: dict = {}
-_IVF_CENTS_CACHE: dict = {}
-
-
 def _ivf_flat(spark, sf_dir):
-    return session_cached(
-        _IVF_FLAT_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "ivf_flat",
         sf_dir,
         lambda: vectors._quantized_flat(
             vectors.with_dvec(load_table(spark, sf_dir, "embeddings")),
@@ -346,9 +327,9 @@ def _ivf_flat(spark, sf_dir):
 
 
 def _ivf_cents(spark, sf_dir):
-    return session_cached(
-        _IVF_CENTS_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "ivf_cents",
         sf_dir,
         lambda: vectors.ivf_train(
             load_table(spark, sf_dir, "embeddings"),
@@ -555,74 +536,32 @@ def q_streaming_neardup(spark, sf_dir):
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
+def _write_stage(work: str, df, key: str, m: int, parts) -> None:
+    """Stage `df` as one parquet file per split `pmod(key, m) == i`,
+    i in `parts`, at `{work}/stage/b{i}` — one micro-batch each under
+    maxFilesPerTrigger=1."""
+    for i in parts:
+        df.filter(F.pmod(F.col(key), F.lit(m)) == i).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{work}/stage/b{i}")
+
+
 # Staging for the streaming near-dup query is an INGEST artifact (the
 # base-corpus LSH index + the two increment files), not operator work —
 # built once per (session, sf_dir) like the bars/shingle caches, so
 # each run times the stream itself: per-batch incremental LSH +
-# idempotent index appends + pair writes. Unlike session_cached (whose
-# payloads die with the JVM), these entries own DISK trees — eviction
-# below and the atexit hook rmtree them.
-# Shared lifecycle for every staged-ingest disk tree in this module:
-# one cached workdir per (applicationId, sf_dir), dead-context entries
-# evicted (tree removed) on access, every tree removed at interpreter
-# exit. Unlike `session_cached` (whose payloads die with the JVM),
-# these entries own DISK trees — hence the explicit rmtree lifecycle.
-_WORKDIR_CACHES: list[dict] = []
-
-
-def _workdirs_cleanup() -> None:
-    import shutil
-
-    for cache in _WORKDIR_CACHES:
-        for _, w in cache.values():
-            shutil.rmtree(w, ignore_errors=True)
-        cache.clear()
-
-
-atexit.register(_workdirs_cleanup)
-
-
-def _session_workdir(cache: dict, spark, sf_dir: str, prefix: str, populate) -> str:
-    """Return `cache`'s workdir for this (session, sf_dir), building it
-    with `populate(work)` exactly once per session."""
-    import shutil
-    import tempfile
-
-    if not any(c is cache for c in _WORKDIR_CACHES):
-        _WORKDIR_CACHES.append(cache)
-    for k in [k for k, (ctx, _) in cache.items() if ctx._jsc is None]:
-        shutil.rmtree(cache.pop(k)[1], ignore_errors=True)
-    sc = spark.sparkContext
-    key = (sc.applicationId, sf_dir)
-    if key not in cache:
-        work = tempfile.mkdtemp(prefix=prefix)
-        try:
-            populate(work)
-        except BaseException:
-            shutil.rmtree(work, ignore_errors=True)
-            raise
-        cache[key] = (sc, work)
-    return cache[key][1]
-
-
-_STREAM_NEARDUP_SETUP: dict = {}
-
-
+# idempotent index appends + pair writes.
 def _stream_neardup_setup(spark, sf_dir: str) -> str:
     def populate(work: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         base = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0)
         dedup.minhash_write_index(base, f"{work}/index", k_shingle=3)
-        # two deterministic increments, one parquet file each → one
-        # micro-batch each under maxFilesPerTrigger=1 (the union result
-        # is batching-invariant, so file/batch order needn't be pinned)
-        for i in (1, 2):
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+        # two deterministic increments (the union result is
+        # batching-invariant, so file/batch order needn't be pinned)
+        _write_stage(work, docs, "doc_id", 3, (1, 2))
 
-    return _session_workdir(
-        _STREAM_NEARDUP_SETUP, spark, sf_dir, "streaming_neardup_", populate
+    return store.workdir(
+        spark.sparkContext, "streaming_neardup", sf_dir, populate
     )
 
 
@@ -1439,14 +1378,10 @@ def q_ann_ivf(spark, sf_dir):
 # like the IVF artifacts these are ingest products (the codes table IS
 # the compressed standing index queries scan), shared so repeated
 # queries pay only the ADC scan.
-_PQ_CENTS_CACHE: dict = {}
-_PQ_CODES_CACHE: dict = {}
-
-
 def _pq_cents(spark, sf_dir):
-    return session_cached(
-        _PQ_CENTS_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "pq_cents",
         sf_dir,
         lambda: vectors.pq_train(
             load_table(spark, sf_dir, "embeddings"),
@@ -1456,9 +1391,9 @@ def _pq_cents(spark, sf_dir):
 
 
 def _pq_codes(spark, sf_dir):
-    return session_cached(
-        _PQ_CODES_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "pq_codes",
         sf_dir,
         lambda: vectors.pq_encode(
             load_table(spark, sf_dir, "embeddings"),
@@ -1690,23 +1625,18 @@ def q_audio_features(spark, sf_dir):
 # fixture cached, parse in-query). Spread before the checkpoint: the
 # consumers are Python-heavy per row and the corpora coalesce to one
 # partition by bytes.
-_WAV_CORPUS_CACHE: dict = {}
-_PNG_CORPUS_CACHE: dict = {}
-_JPEG_CORPUS_CACHE: dict = {}
-
-
-def _landed_fixture(cache, spark, sf_dir, synth):
+def _landed_fixture(spark, sf_dir, name, synth):
     def build():
         docs = load_table(spark, sf_dir, "documents").select("doc_id")
         return synth(docs).repartition(_spread_n(spark, sf_dir))
-    return session_cached(cache, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, name, sf_dir, build)
 
 
 def _wav_corpus(spark, sf_dir):
     from .operators import multimodal
 
     return _landed_fixture(
-        _WAV_CORPUS_CACHE, spark, sf_dir, multimodal.synthesize_wav_corpus
+        spark, sf_dir, "wav_corpus", multimodal.synthesize_wav_corpus
     )
 
 
@@ -1714,7 +1644,7 @@ def _png_corpus(spark, sf_dir):
     from .operators import multimodal
 
     return _landed_fixture(
-        _PNG_CORPUS_CACHE, spark, sf_dir,
+        spark, sf_dir, "png_corpus",
         lambda d: multimodal.synthesize_png_corpus(d, cluster=5),
     )
 
@@ -1723,7 +1653,7 @@ def _jpeg_corpus(spark, sf_dir):
     from .operators import multimodal
 
     return _landed_fixture(
-        _JPEG_CORPUS_CACHE, spark, sf_dir,
+        spark, sf_dir, "jpeg_corpus",
         lambda d: multimodal.synthesize_jpeg_corpus(d, cluster=5),
     )
 
@@ -1776,20 +1706,13 @@ def q_trailing_revenue(spark, sf_dir):
 
 # Staged 2-file orders corpus for the incremental-MV query — an INGEST
 # artifact (one split per session/sf_dir), so each query invocation
-# times the incremental maintenance itself. Disk trees owned like
-# _STREAM_NEARDUP_SETUP (atexit + dead-context eviction).
-_MV_SETUP: dict = {}
-
-
+# times the incremental maintenance itself.
 def _mv_setup(spark, sf_dir: str) -> str:
     def populate(work: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
-        for i in (0, 1):
-            orders.filter(F.pmod(F.col("o_orderkey"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+        _write_stage(work, orders, "o_orderkey", 2, (0, 1))
 
-    return _session_workdir(_MV_SETUP, spark, sf_dir, "agg_mv_", populate)
+    return store.workdir(spark.sparkContext, "agg_mv", sf_dir, populate)
 
 
 @register(
@@ -2623,7 +2546,6 @@ _VOCAB_K = 200
 
 # deterministic query workload over the synthetic corpus vocabulary —
 # literal on both engines so the oracle reproduces scores bit-for-bit
-_BM25_TFS_CACHE: dict = {}
 _BM25_QUERIES = [
     (0, "spark table scan"),
     (1, "hash join merge"),
@@ -2684,16 +2606,24 @@ def q_bm25_topk(spark, sf_dir):
     queries = spark.createDataFrame(
         _BM25_QUERIES, "query_id int, query_text string"
     )
-    # the posting grain is the standing retrieval index: build (and
-    # plan) it once per session, serve every query batch from it
-    tfs = session_cached(
-        _BM25_TFS_CACHE,
-        spark,
+    return retrieval.bm25_topk(
+        load_table(spark, sf_dir, "documents"),
+        queries,
+        top_k=_BM25_K,
+        tfs=_bm25_tfs(spark, sf_dir),
+    )
+
+
+def _bm25_tfs(spark, sf_dir):
+    """The posting grain is the standing retrieval index: build (and
+    plan) it once per session, serve every query batch from it."""
+    from .operators import retrieval
+
+    return store.blocks(
+        spark.sparkContext,
+        "bm25_tfs",
         sf_dir,
         lambda: retrieval.doc_term_freqs(load_table(spark, sf_dir, "documents")),
-    )
-    return retrieval.bm25_topk(
-        load_table(spark, sf_dir, "documents"), queries, top_k=_BM25_K, tfs=tfs
     )
 
 
@@ -3041,43 +2971,14 @@ _PASSAGE_K = 8
 # passage_scrub via the spans table) — at cluster scale it is a
 # written ingest artifact; land it once per (session, sf_dir) and
 # spread it over the cores (r12 optimization round: three identical
-# corpus-wide shingle builds per bench pass → one).
-_POS_SHINGLES_DIRS: dict = {}
-_POS_SHINGLES_DFS: dict = {}
-
-
-def _landed_parquet(dirs_cache, df_cache, spark, sf_dir, prefix, build):
-    """Corpus-sized session tables land as parquet ARTIFACTS under a
-    session workdir instead of localCheckpoint executor blocks (r13,
-    VERDICT r12 #4 / guide §5): blocks pin executor storage for the
-    session's lifetime and are NOT fault-tolerant (a lost executor
-    kills the lineage-truncated RDD), while the parquet artifact
-    costs disk only, survives executor loss, and gives every consumer
-    column pruning + predicate pushdown at the scan (e.g. the span
-    find's hash count reads `h` without the shingle strings). Disk
-    trees follow the _session_workdir lifecycle (dead-context
-    eviction + atexit rmtree); the read-back DataFrame is memoised so
-    schema inference runs once per session."""
-    sc = spark.sparkContext
-    for k in [k for k, (ctx, _) in df_cache.items() if ctx._jsc is None]:
-        del df_cache[k]
-    key = (sc.applicationId, sf_dir)
-    if key not in df_cache:
-        def populate(work: str) -> None:
-            build().write.mode("overwrite").parquet(f"{work}/data")
-
-        work = _session_workdir(dirs_cache, spark, sf_dir, prefix, populate)
-        df_cache[key] = (sc, spark.read.parquet(f"{work}/data"))
-    return df_cache[key][1]
-
-
+# corpus-wide shingle builds per bench pass → one). Corpus-sized, so
+# it lands as parquet, not executor blocks (r13, VERDICT r12 #4): the
+# span find's hash count then reads `h` without the shingle strings.
 def _pos_shingles(spark, sf_dir):
-    return _landed_parquet(
-        _POS_SHINGLES_DIRS,
-        _POS_SHINGLES_DFS,
-        spark,
+    return store.parquet(
+        spark.sparkContext,
+        "pos_shingles",
         sf_dir,
-        "pos_shingles_",
         lambda: dedup.positional_shingles(
             load_table(spark, sf_dir, "documents"), k=_PASSAGE_K
         ).repartition(_spread_n(spark, sf_dir)),
@@ -3353,8 +3254,6 @@ def q_behavioral_report(spark, sf_dir):
 
 # ------------------------------------- round 6: BPE tokenizer training
 
-_BPE_CACHE: dict = {}
-
 _BPE_N_MERGES = 8
 _BPE_MIN_FREQ = 2
 
@@ -3460,55 +3359,43 @@ def q_bpe_tokenize(spark, sf_dir):
     from .operators import bpe
 
     docs = load_table(spark, sf_dir, "documents")
-    vocab = session_cached(
-        _BPE_CACHE,
-        spark,
+    vocab = store.blocks(
+        spark.sparkContext,
+        "bpe_vocab",
         sf_dir,
         lambda: bpe.learn_bpe(spark, docs, n_merges=8, min_freq=2)[1],
     )
     return bpe.bpe_segment(vocab, docs)
 
 
-# merges + alphabet are PLAIN PYTHON (deterministic per sf_dir — the
-# learner's tie-breaks make them engine/parallelism-independent), so
-# unlike the DataFrame cache above this one never holds JVM state and
-# is safe across sessions.
-_BPE_MODEL_CACHE: dict[str, tuple[list, list]] = {}
-
-
+# merges + alphabet as PLAIN PYTHON (deterministic per sf_dir — the
+# learner's tie-breaks make them engine/parallelism-independent)
 def _bpe_model(spark, sf_dir):
     from .operators import bpe
 
-    model = _BPE_MODEL_CACHE.get(sf_dir)
-    if model is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         merges, _vocab = bpe.learn_bpe(spark, docs, n_merges=8, min_freq=2)
-        model = (merges, bpe.bpe_alphabet(docs))
-        _BPE_MODEL_CACHE[sf_dir] = model
-    return model
+        return merges, bpe.bpe_alphabet(docs)
+
+    return store.value(spark.sparkContext, "bpe_model", sf_dir, build)
 
 
 # The encoded corpus (doc_id, n_tokens, token_ids) feeds bpe_encode AND
 # exact_repeat_runs_tokens — one segmentation+reassembly per (session,
 # sf_dir), like the bars/shingle/pair caches: a pipeline would land it
 # as a table at tokenize time, not re-encode per query.
-_BPE_ENC_DIRS: dict = {}
-_BPE_ENC_DFS: dict = {}
-
-
 def _bpe_encoded(spark, sf_dir):
     from .operators import bpe
 
     merges, alphabet = _bpe_model(spark, sf_dir)
-    # parquet artifact, not executor blocks (r13 — see
-    # _landed_parquet); spread before the write so the token-grain
-    # consumers' first stage fans out over the cores
-    return _landed_parquet(
-        _BPE_ENC_DIRS,
-        _BPE_ENC_DFS,
-        spark,
+    # corpus-sized: parquet artifact, not executor blocks (r13); spread
+    # before the write so the token-grain consumers' first stage fans
+    # out over the cores
+    return store.parquet(
+        spark.sparkContext,
+        "bpe_encoded",
         sf_dir,
-        "bpe_encoded_",
         lambda: bpe.bpe_encode(
             load_table(spark, sf_dir, "documents"), merges, alphabet
         ).repartition(_spread_n(spark, sf_dir)),
@@ -3640,11 +3527,6 @@ def q_exact_repeat_runs_tokens(spark, sf_dir):
 
 # ------------------------- round 8: snapshot tables (mini time travel)
 
-# work dirs per (applicationId, sf_dir): same lifecycle discipline as
-# _MV_SETUP (atexit + dead-context eviction).
-_SNAP_SETUP: dict = {}
-
-
 def _snap_setup(spark, sf_dir: str) -> str:
     """Build the 4-version snapshot table once per (session, sf_dir):
     v1 overwrite (keys %3==0), v2 append (%3==1), v3 compact,
@@ -3670,7 +3552,7 @@ def _snap_setup(spark, sf_dir: str) -> str:
         )
         snap.snapshot_upsert(spark, table, updates, key_cols=["o_orderkey"])
 
-    work = _session_workdir(_SNAP_SETUP, spark, sf_dir, "snap_table_", populate)
+    work = store.workdir(spark.sparkContext, "snap_table", sf_dir, populate)
     return f"{work}/orders_snap"
 
 
@@ -4262,22 +4144,16 @@ def q_idle_rich_customers(spark, sf_dir):
     )
 
 
-# Staged 2-file events corpus for the streaming CDC query — same
-# session-cached disk-tree pattern as _MV_SETUP.
-_CDC_SETUP: dict = {}
-
-
+# Staged 2-file events corpus for the streaming CDC query (the
+# _mv_setup staging over events).
 def _cdc_setup(spark, sf_dir: str) -> str:
     def populate(work: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "user_id", "ts", "event_id", "event_type", "value"
         )
-        for i in (0, 1):
-            ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+        _write_stage(work, ev, "event_id", 2, (0, 1))
 
-    return _session_workdir(_CDC_SETUP, spark, sf_dir, "cdc_merge_", populate)
+    return store.workdir(spark.sparkContext, "cdc_merge", sf_dir, populate)
 
 
 @register(
@@ -4800,14 +4676,7 @@ _HYBRID_IDS = "(3, 17, 41)"
 def q_hybrid_rrf_topk(spark, sf_dir):
     from .operators import retrieval
 
-    tfs = session_cached(
-        _BM25_TFS_CACHE,
-        spark,
-        sf_dir,
-        lambda: retrieval.doc_term_freqs(
-            load_table(spark, sf_dir, "documents")
-        ),
-    )
+    tfs = _bm25_tfs(spark, sf_dir)
     return retrieval.hybrid_rrf_topk(
         load_table(spark, sf_dir, "documents"),
         load_table(spark, sf_dir, "embeddings"),
@@ -5066,9 +4935,6 @@ def q_html_extraction(spark, sf_dir):
 
 # ------------------- round 9: snapshot row-delete + schema evolution
 
-_SNAP_EVO_SETUP: dict = {}
-
-
 def _snap_evo_setup(spark, sf_dir: str) -> str:
     """Build the 4-version evolution table once per (session, sf_dir):
     v1 overwrite (keys %5==0), v2 keyed DELETE (%35==0 — copy-on-write
@@ -5100,7 +4966,7 @@ def _snap_evo_setup(spark, sf_dir: str) -> str:
             mode="append",
         )
 
-    work = _session_workdir(_SNAP_EVO_SETUP, spark, sf_dir, "snap_evo_", populate)
+    work = store.workdir(spark.sparkContext, "snap_evo", sf_dir, populate)
     return f"{work}/orders_evo"
 
 
@@ -5443,19 +5309,13 @@ def q_triplet_mining(spark, sf_dir):
 
 
 # Two-batch staged documents stream for the count-min MV (mirror of
-# _mv_setup's orders staging; cached per (session, sf_dir))
-_DOCS_MV_SETUP: dict = {}
-
-
+# _mv_setup's orders staging)
 def _docs_mv_setup(spark, sf_dir: str) -> str:
     def populate(work: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
-        for i in (0, 1):
-            docs.filter(F.pmod(F.col("doc_id"), F.lit(2)) == i).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{work}/stage/b{i}")
+        _write_stage(work, docs, "doc_id", 2, (0, 1))
 
-    return _session_workdir(_DOCS_MV_SETUP, spark, sf_dir, "cm_mv_", populate)
+    return store.workdir(spark.sparkContext, "cm_mv", sf_dir, populate)
 
 
 @register(
@@ -5611,9 +5471,6 @@ def q_customer_distribution(spark, sf_dir):
 # sf_dir): seven appends, one per o_orderdate year, each recording
 # per-file min/max metrics for the date column — so a date-range scan
 # can prove most files irrelevant from the manifest alone.
-_SNAP_SCAN_SETUP: dict = {}
-
-
 def _snap_scan_setup(spark, sf_dir: str) -> str:
     from .sources import snapshots as snap
 
@@ -5629,7 +5486,7 @@ def _snap_scan_setup(spark, sf_dir: str) -> str:
                 stats_cols=["o_orderdate"],
             )
 
-    return _session_workdir(_SNAP_SCAN_SETUP, spark, sf_dir, "snap_scan_", populate)
+    return store.workdir(spark.sparkContext, "snap_scan", sf_dir, populate)
 
 
 @register(
@@ -5889,9 +5746,6 @@ def q_warc_extraction(spark, sf_dir):
 # of the two-strategies-one-contract pair; synthesizing it twice was
 # pure duplicated applyInPandas work (r12 optimization round). cdx is
 # a superset fixture: the sequential parser projects it away.
-_CHARSET_FILES_CACHE: dict = {}
-
-
 def _charset_warc_files(spark, sf_dir):
     from .sources import warc
 
@@ -5904,7 +5758,7 @@ def _charset_warc_files(spark, sf_dir):
             docs, with_cdx=True, charsets=True
         ).repartition(_spread_n(spark, sf_dir))
 
-    return session_cached(_CHARSET_FILES_CACHE, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, "charset_warc_files", sf_dir, build)
 
 
 # -------------------- round 10: trained language-ID (VERDICT #2)
@@ -6006,9 +5860,6 @@ def q_lang_id_trained(spark, sf_dir):
 
 # ------------- round 10: merge-on-read snapshot deletes (VERDICT #4)
 
-_SNAP_MOR_SETUP: dict = {}
-
-
 def _snap_mor_setup(spark, sf_dir: str) -> str:
     """Build the 4-version MoR lifecycle table once per (session,
     sf_dir): v1 overwrite (keys %4==0, 4 files), v2 MERGE-ON-READ
@@ -6039,7 +5890,7 @@ def _snap_mor_setup(spark, sf_dir: str) -> str:
         )
         snap.snapshot_compact(spark, table)
 
-    work = _session_workdir(_SNAP_MOR_SETUP, spark, sf_dir, "snap_mor_", populate)
+    work = store.workdir(spark.sparkContext, "snap_mor", sf_dir, populate)
     return f"{work}/orders_mor"
 
 
@@ -6132,9 +5983,6 @@ def q_image_jpeg_neardup(spark, sf_dir):
 
 # ----------- round 10: position-grain MoR deletes (deletion vectors)
 
-_SNAP_POS_SETUP: dict = {}
-
-
 def _snap_pos_setup(spark, sf_dir: str) -> str:
     """3-version position-delete lifecycle on a DUPLICATE-KEY table:
     v1 overwrite = (orders %6==0, price as-is) ∪ (orders %12==0, price
@@ -6160,7 +6008,7 @@ def _snap_pos_setup(spark, sf_dir: str) -> str:
         )
         snap.snapshot_compact(spark, table)
 
-    work = _session_workdir(_SNAP_POS_SETUP, spark, sf_dir, "snap_pos_", populate)
+    work = store.workdir(spark.sparkContext, "snap_pos", sf_dir, populate)
     return f"{work}/orders_pos"
 
 
@@ -6277,9 +6125,6 @@ def _oracle_url_dedup() -> str:
 # fixture + binary parse; a real pipeline parses a crawl drop once
 # and every curation stage reads the landed table (r12 optimization
 # round: 3× the synthesize+parse subtree → 1×).
-_MESSY_PAGES_CACHE: dict = {}
-
-
 def _messy_pages(spark, sf_dir):
     from .sources import warc
 
@@ -6293,7 +6138,7 @@ def _messy_pages(spark, sf_dir):
             F.col("ok") & (F.col("warc_type") == "response")
         ).repartition(_spread_n(spark, sf_dir))
 
-    return session_cached(_MESSY_PAGES_CACHE, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, "messy_pages", sf_dir, build)
 
 
 # the URL-deduped frontier robots_gate consumes as INPUT (a real
@@ -6301,13 +6146,10 @@ def _messy_pages(spark, sf_dir):
 # r13: q_url_dedup no longer returns this memo — it computes its own
 # keep-first window per run (VERDICT r12 #1); this landed view exists
 # only so robots_gate's input matches the _deduped_links_pages shape.
-_MESSY_DEDUP_CACHE: dict = {}
-
-
 def _messy_deduped(spark, sf_dir):
-    return session_cached(
-        _MESSY_DEDUP_CACHE,
-        spark,
+    return store.blocks(
+        spark.sparkContext,
+        "messy_deduped",
         sf_dir,
         lambda: url_ops.url_dedup(
             _messy_pages(spark, sf_dir), "url", "warc_date"
@@ -6550,9 +6392,6 @@ def q_quality_rules(spark, sf_dir):
 
 # ------------- round 11: streaming WARC crawl ingestion (VERDICT #5)
 
-_STREAM_WARC_SETUP: dict = {}
-
-
 # crawl-file size cap for the streaming fixture: a WARC file is ONE
 # sequential parse unit (tape format), so per-batch latency is bounded
 # by the largest file — real crawls cap at ~100k records/file for the
@@ -6575,8 +6414,7 @@ def _stream_warc_setup(spark, sf_dir: str) -> str:
     """Staged ingest fixture: the base corpus (doc_id % 3 == 0) is
     already in the standing LSH index; the increments arrive as real
     .warc.gz files on disk (docs-per-file from `_warc_stream_dpf`,
-    every 2nd file torn mid-last-member), written executor-side.
-    Cached per (session, sf_dir) like every staged-ingest tree."""
+    every 2nd file torn mid-last-member), written executor-side."""
 
     def populate(work: str) -> None:
         import os
@@ -6601,9 +6439,7 @@ def _stream_warc_setup(spark, sf_dir: str) -> str:
 
         files.foreachPartition(write_part)
 
-    return _session_workdir(
-        _STREAM_WARC_SETUP, spark, sf_dir, "streaming_warc_", populate
-    )
+    return store.workdir(spark.sparkContext, "streaming_warc", sf_dir, populate)
 
 
 def _oracle_streaming_warc_ingest() -> str:
@@ -7183,22 +7019,18 @@ def _bpe_bytes_sql_ctes(
     return ",\n    ".join(parts)
 
 
-# byte-level model cache: plain Python (merges list), deterministic
-# per sf_dir — the _BPE_MODEL_CACHE contract
-_BPE_BYTES_MODEL_CACHE: dict[str, list] = {}
-
-
+# byte-level merges list, plain Python like _bpe_model's
 def _bpe_bytes_model(spark, sf_dir):
     from .operators import bpe
 
-    merges = _BPE_BYTES_MODEL_CACHE.get(sf_dir)
-    if merges is None:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         merges, _tab = bpe.learn_bpe_bytes(
             spark, docs, n_merges=_BPE_N_MERGES, min_freq=_BPE_MIN_FREQ
         )
-        _BPE_BYTES_MODEL_CACHE[sf_dir] = merges
-    return merges
+        return merges
+
+    return store.value(spark.sparkContext, "bpe_bytes_model", sf_dir, build)
 
 
 @register(
@@ -7626,9 +7458,6 @@ def q_domain_token_budget(spark, sf_dir):
 # re-parse the WARC drop per downstream query.
 
 # deduped messy+links crawl pages: host_pagerank + image_caption_pairs
-_LINKS_PAGES_CACHE: dict = {}
-
-
 def _deduped_links_pages(spark, sf_dir):
     from .sources import warc
 
@@ -7653,7 +7482,7 @@ def _deduped_links_pages(spark, sf_dir):
             .select("url_norm", "html")
             .repartition(_spread_n(spark, sf_dir))
         )
-    return session_cached(_LINKS_PAGES_CACHE, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, "links_pages", sf_dir, build)
 
 
 # the landed PARSE of the messy+charset crawl drop: the ingest
@@ -7662,9 +7491,6 @@ def _deduped_links_pages(spark, sf_dir):
 # crawl COMPOSITION itself runs inside each consumer's plan (r13,
 # VERDICT r12 #1: q_crawl_corpus previously returned the memoised
 # corpus itself, so the bench measured an RDD scan).
-_CRAWL_PARSED_CACHE: dict = {}
-
-
 def _crawl_parsed_pages(spark, sf_dir):
     from .sources import warc
 
@@ -7678,15 +7504,12 @@ def _crawl_parsed_pages(spark, sf_dir):
         return warc.parse_warc_records(files).repartition(
             _spread_n(spark, sf_dir)
         )
-    return session_cached(_CRAWL_PARSED_CACHE, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, "crawl_parsed", sf_dir, build)
 
 
 # the curated corpus as a landed table: domain_token_budget's INPUT
 # (the mixture table is planned FROM a landed curated corpus — its
 # own computation is the budget rollup, which runs in its plan)
-_CRAWL_CORPUS_CACHE: dict = {}
-
-
 def _crawl_corpus_df(spark, sf_dir):
     from .plans.crawl import crawl_to_corpus
 
@@ -7696,4 +7519,4 @@ def _crawl_corpus_df(spark, sf_dir):
             blocklist=_URL_BLOCKLIST,
             quality_rules=_CRAWL_RULES,
         )
-    return session_cached(_CRAWL_CORPUS_CACHE, spark, sf_dir, build)
+    return store.blocks(spark.sparkContext, "crawl_corpus", sf_dir, build)

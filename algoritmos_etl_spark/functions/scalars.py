@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
+
 
 def one_partition(col: Column) -> Column:
     """All-zero NON-FOLDABLE partition key for windows that are
@@ -120,26 +122,11 @@ def regression_line(
 # large constant expression families (the 16-permutation minhash
 # aggregates, the 64 simhash vote sums, the PSL literal-set flags)
 # cost 0.2-1.3 s of py4j round trips to CONSTRUCT, and several hot
-# queries rebuilt them on every invocation. Unresolved Columns are
-# immutable and carry no data, but their py4j handles die with the
-# JVM — so the memo keys on applicationId and evicts dead contexts
-# (the session_cached convention).
-_CTX_COLUMN_MEMO: dict = {}
-
-
+# queries rebuilt them on every invocation.
 def ctx_memo(tag, build):
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     if sc is None:  # no active context — nothing to pin the handles to
         return build()
-    for k in [
-        k for k, (ctx, _) in _CTX_COLUMN_MEMO.items() if ctx._jsc is None
-    ]:
-        del _CTX_COLUMN_MEMO[k]
-    key = (sc.applicationId, tag)
-    ent = _CTX_COLUMN_MEMO.get(key)
-    if ent is None:
-        ent = (sc, build())
-        _CTX_COLUMN_MEMO[key] = ent
-    return ent[1]
+    return store.value(sc, "ctx_memo", tag, build)

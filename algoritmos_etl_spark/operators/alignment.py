@@ -19,11 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def master_calendar(df: DataFrame, date_col: str = "date") -> DataFrame:
-    """Distinct ordered union of all symbols' dates (J1)."""
-    return df.select(date_col).distinct().orderBy(date_col)
-
-
 def align_to_calendar(df: DataFrame) -> DataFrame:
     """Every (symbol, calendar-date) pair; missing days → null OHLCV (J2).
 

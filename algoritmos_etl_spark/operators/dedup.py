@@ -326,24 +326,6 @@ def _verify_jaccard(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, n_hashes: int = MINHASH_HASHES, k_shingle: int = 3
-) -> DataFrame:
-    """MinHash signature columns h0..h{n-1}: min over k-word SHINGLES of
-    a seeded md5-prefix hash. One shingle-explode pass, n min-aggregates
-    (all partial/map-side).
-
-    Shingles, not unigram tokens, on purpose: natural-language docs
-    share so much vocabulary that token-Jaccard ≥ 0.2 forms a
-    near-complete candidate graph (measured: 56% of ALL pairs on the
-    test corpus — the banding join degenerates to a cross join).
-    Phrase-level shingles keep unrelated docs' similarity near zero, so
-    LSH buckets stay sparse — the property the whole scheme relies on
-    at scale."""
-    sh = doc_shingles(docs, k_shingle)
-    return _with_base_hash(sh).groupBy("doc_id").agg(*_minhash_aggs(n_hashes))
-
-
 def _with_base_hash(sh: DataFrame) -> DataFrame:
     """One md5-prefix hash per shingle row, reduced mod p."""
     return sh.withColumn(

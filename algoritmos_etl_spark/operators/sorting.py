@@ -1,4 +1,4 @@
-"""Sorts, multi-key ordering, top-K, sorted-output verification.
+"""Multi-key sort rank and top-K.
 
 Reference parity (SURVEY.md §2.6): the reference ships 12 sort
 algorithms behind one registry (`algorithms/sorting.py:33-857`) plus a
@@ -9,12 +9,11 @@ Tungsten sort; the 12-way algorithm identity is a deliberate non-goal
 (SURVEY.md §7.3). What we preserve:
 
 - O13 multi-key ordering (date asc, close asc) — no integer encoding
-  needed; `orderBy` composes keys natively.
+  needed; `with_sort_rank` materializes the order as a rank column so
+  an order-insensitive comparison verifies it (O16).
 - W9 top-K by volume — `orderBy(desc).limit(k)` which Catalyst plans as
   `TakeOrderedAndProject`: per-partition heap of k, no global sort —
   exactly the reference's partial-selection optimization, distributed.
-- O16 differential verification — order-sensitive comparison of two
-  plans' outputs.
 """
 
 from __future__ import annotations
@@ -25,11 +24,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from algoritmos_etl_spark.functions.scalars import one_partition
-
-
-def multi_key_sort(df: DataFrame, keys: Sequence) -> DataFrame:
-    """O13: total order over arbitrary key expressions."""
-    return df.orderBy(*keys)
 
 
 def with_sort_rank(df: DataFrame, keys: Sequence) -> DataFrame:
@@ -109,13 +103,3 @@ def top_k_per_group(
         .drop("_rk")
     )
 
-
-def verify_same_order(df1: DataFrame, df2: DataFrame, keys: Sequence) -> bool:
-    """O16: do two plans produce identical sorted output?
-
-    Compares rank-stamped rows symmetrically with exceptAll — runs
-    distributed, no driver collect (`benchmarks/timing.py:104-134`).
-    """
-    a = with_sort_rank(df1, keys)
-    b = with_sort_rank(df2, keys)
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

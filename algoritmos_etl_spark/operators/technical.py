@@ -17,7 +17,7 @@ on symbol, then per-partition streaming evaluation — no Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -205,15 +205,6 @@ def rolling_features(df: DataFrame, window_size: int = 5) -> DataFrame:
             ),
         )
         .drop("_rn", "_gap")
-    )
-
-
-def cumulative_return(df: DataFrame, price_col: str = "close") -> Column:
-    """Total log growth per symbol — convenience for reports."""
-    # try_divide: a zero first/min price would ANSI-throw on plain
-    # division; NULL (log of NULL) is the defined degenerate result
-    return F.log(
-        F.try_divide(F.max_by(price_col, "date"), F.min_by(price_col, "date"))
     )
 
 

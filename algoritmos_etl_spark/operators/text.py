@@ -335,23 +335,6 @@ LANGID_BUCKETS = 2048
 LANGID_N = 3
 
 
-def char_ngrams_col(text: Column, n: int = LANGID_N) -> Column:
-    """Character n-grams over the ASCII-normalized text — the
-    fastText/CLD3 feature space (hashed char-n-grams), restricted to
-    [a-z ] so Java and DuckDB normalize byte-identically (non-ASCII
-    signals like accents fold into the space separator — the
-    documented feature floor of the stdlib-only tier). Normalization:
-    lower → every non-[a-z] run becomes one space → trim."""
-    norm = F.trim(F.regexp_replace(F.lower(text), "[^a-z]+", " "))
-    return F.when(
-        F.length(norm) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(norm) - (n - 1)),
-            lambda i: F.substr(norm, i, F.lit(n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def lang_id_trained(
     docs: DataFrame,
     n: int = LANGID_N,

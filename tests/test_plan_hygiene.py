@@ -201,3 +201,61 @@ def test_no_undeclared_driver_collect_in_engine_modules():
         "undeclared driver-side collect in engine modules — make it "
         f"distributed or declare the bound: {violations}"
     )
+
+
+# ---------------------------------------------------------------------------
+# Static no-memo gate: per-session artifacts live in `store.py`, the one
+# table with a lock, dead-context eviction and exit cleanup. A
+# module-level name bound to an empty {} / dict() / [] elsewhere is the
+# start of another memo with none of those; the registry is the one
+# module-level collection that is not a memo.
+# ---------------------------------------------------------------------------
+
+import ast
+
+_EMPTY_OK = {("driver_queries.py", "REGISTRY")}
+
+
+def _is_empty_collection(node) -> bool:
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.List):
+        return not node.elts
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "dict"
+        and not node.args
+        and not node.keywords
+    )
+
+
+def test_no_module_level_memo_outside_store():
+    violations = []
+    for root, _dirs, files in os.walk(_PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
+            if rel == "store.py":
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in tree.body:
+                if isinstance(node, ast.Assign):
+                    targets, value = node.targets, node.value
+                elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                    targets, value = [node.target], node.value
+                else:
+                    continue
+                if not _is_empty_collection(value):
+                    continue
+                for t in targets:
+                    name = t.id if isinstance(t, ast.Name) else ast.unparse(t)
+                    if (rel, name) not in _EMPTY_OK:
+                        violations.append(f"{rel}:{node.lineno} {name}")
+    assert not violations, (
+        "module-level empty collection outside store.py — land the "
+        f"artifact through algoritmos_etl_spark.store: {violations}"
+    )

@@ -618,9 +618,9 @@ def test_streaming_neardup_driver_query_leaves_no_orphan_dirs(spark):
     after_runs = set(_g.glob(f"{tmp}/streaming_neardup_run_*"))
     assert after_runs == before_runs, "leaked run dirs"
     # exactly one standing setup tree for this (session, sf_dir)
-    from algoritmos_etl_spark.driver_queries_ext import _STREAM_NEARDUP_SETUP
+    from algoritmos_etl_spark import store
 
-    keys = [k for k in _STREAM_NEARDUP_SETUP if k[1] == SF_DIR]
+    keys = [k for k in store._ENTRIES if k[1:] == ("streaming_neardup", SF_DIR)]
     assert len(keys) == 1
 
 
