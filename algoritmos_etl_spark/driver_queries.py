@@ -1742,7 +1742,7 @@ REGISTRY_ORDER = (
                              # canonical_selection + triplet_mining
     "corpus_curation",       # hash-green r5-r8; the curation gate is
                              # ALSO the label source of the in-window
-                             # quality family and the llm_pipeline test
+                             # quality family
     "sequence_packing",      # hash-green r5-r8; packing math exercised
                              # in-window via bpe_encode's counted arm
                              # (pack_sequences_counted shares

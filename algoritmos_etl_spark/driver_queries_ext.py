@@ -257,8 +257,8 @@ def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
 
 # The (doc_id, 3-shingle) inverted-index base feeds dedup_ngram_jaccard
 # AND dedup_minhash_lsh (signatures + verification) — the corpus is
-# shingled once per (session, sf_dir). At cluster scale this is the
-# written `ngram_write_index` table computed at ingest.
+# shingled once per (session, sf_dir). At cluster scale this is a
+# written shingle index computed at ingest.
 def _shingles(spark, sf_dir):
     # repartition before the checkpoint: AQE coalesces the shingle
     # table to ~2 partitions by BYTES, single-tasking the md5/banding
@@ -1158,10 +1158,11 @@ def _oracle_lsh_tables(
     n_tables: int = vectors.LSH_TABLES,
     planes_per_table: int = vectors.LSH_PLANES_PER_TABLE,
 ) -> str:
-    """DuckDB twin of vectors.lsh_table_buckets: the same integer-
-    quantized plane dots (floor(val·1e9) is binary-exact on both
-    engines; the ±1 components rebuild from the identical md5 family),
-    as flat CTEs — usable as `bucketed` via `SELECT ... FROM ({this})`.
+    """DuckDB twin of vectors.lsh_signatures with the vectors attached:
+    the same integer-quantized plane dots (floor(val·1e9) is
+    binary-exact on both engines; the ±1 components rebuild from the
+    identical md5 family), as flat CTEs — usable as `bucketed` via
+    `SELECT ... FROM ({this})`.
     """
     n_planes = n_tables * planes_per_table
     return f"""

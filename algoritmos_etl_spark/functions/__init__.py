@@ -1,8 +1,6 @@
 from .scalars import (  # noqa: F401
-    angle_degrees,
     cents,
     date_parts,
     date_to_unix,
     regression_line,
-    unix_to_date,
 )

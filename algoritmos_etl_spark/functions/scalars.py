@@ -54,11 +54,6 @@ def date_to_unix(date: Column) -> Column:
     return F.unix_timestamp(date.cast("timestamp"))
 
 
-def unix_to_date(ts_seconds: Column) -> Column:
-    """F1 inverse: unix seconds → DateType (UTC session timezone)."""
-    return F.to_date(F.timestamp_seconds(ts_seconds))
-
-
 def date_parts(df: DataFrame, date_col: str = "date") -> DataFrame:
     """F2: year/month/day extraction (the reference slices the ISO
     string; DateType makes these native)."""
@@ -79,13 +74,6 @@ def cents(price: Column) -> Column:
     the reference only uses cents as sort keys, where any consistent
     total order is equivalent — so we standardize on half-up."""
     return F.round(price * 100, 0).cast("long")
-
-
-def angle_degrees(cosine: Column) -> Column:
-    """F9: cosine similarity → angle in degrees (clamped to [-1, 1]
-    first — float noise above 1.0 would NaN the acos)."""
-    clamped = F.least(F.greatest(cosine, F.lit(-1.0)), F.lit(1.0))
-    return F.degrees(F.acos(clamped))
 
 
 def fixed6(col: Column) -> Column:

@@ -77,43 +77,6 @@ def contamination_stats(
     )
 
 
-def contamination_write_index(
-    benchmark: DataFrame, path: str, k: int = 3
-) -> None:
-    """Materialize the benchmark's distinct shingle set at ingest:
-    the standing decontamination index. Benchmarks change rarely and
-    are small, so the index is one parquet file a later scan
-    broadcasts; re-deriving it per corpus batch would re-shingle the
-    benchmark on every run."""
-    doc_shingles(benchmark, k).select("shingle").distinct().write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def contamination_against_index(
-    spark,
-    docs: DataFrame,
-    path: str,
-    k: int = 3,
-    min_overlap: float = 0.5,
-) -> DataFrame:
-    """Decontaminate a corpus batch against the standing benchmark
-    index written by `contamination_write_index` — the incremental
-    form: only the new batch is shingled; the benchmark side is a
-    broadcast parquet read. Result ≡ `contamination_stats` against the
-    original benchmark (pinned by test)."""
-    bench_sh = spark.read.parquet(path)
-    return contamination_stats(
-        docs,
-        benchmark=None,
-        k=k,
-        min_overlap=min_overlap,
-        benchmark_shingles=bench_sh.select(
-            F.lit(-1).cast("long").alias("doc_id"), "shingle"
-        ),
-    )
-
-
 def _pack_sort_key(doc_id: Column, salt: str = "pack:") -> Column:
     """Deterministic shuffle key: md5 over the salted doc id. Sorting
     by it is the engine-stable stand-in for 'shuffle the corpus'."""
@@ -216,7 +179,7 @@ def pack_sequences(
         "doc_id",
         # NULL text = zero tokens (occupies no space in the stream) —
         # without the coalesce a NULL doc gets all-NULL packing columns
-        # yet still counts in pack_stats n_docs
+        # yet still counts as a packed document
         F.coalesce(F.size(words_col(F.col("text"))), F.lit(0))
         .cast("long")
         .alias("n_tokens"),
@@ -249,24 +212,6 @@ def pack_sequences_counted(
         pack_first.alias("pack_first"),
         pack_last.alias("pack_last"),
         (pack_last - pack_first + 1).cast("long").alias("n_packs_spanned"),
-    )
-
-
-def pack_stats(packs: DataFrame, ctx_len: int = 2048) -> DataFrame:
-    """Aggregate packing diagnostics from `pack_sequences` output:
-    total windows, boundary-crossing docs, mean docs per window."""
-    total = F.coalesce(F.sum("n_tokens"), F.lit(0).cast("long"))
-    return packs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        total.alias("total_tokens"),
-        F.when(total > 0, F.floor((total - 1) / F.lit(ctx_len)) + 1)
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("n_windows"),
-        F.coalesce(
-            F.sum((F.col("n_packs_spanned") > 1).cast("long")),
-            F.lit(0).cast("long"),
-        ).alias("n_boundary_docs"),
     )
 
 
@@ -479,14 +424,35 @@ def nb_quality_scores(
     scoring share one materialization instead of re-exploding 100 TB.
     """
     toks, weights = _nb_train(docs, is_pos, n_buckets, scale)
-    return nb_score_with_weights(
-        docs, weights, n_buckets=n_buckets, toks=toks
+    scored = (
+        toks.join(F.broadcast(weights), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum("w_e6").alias("score_e6"),
+        )
+    )
+    return (
+        docs.select("doc_id")
+        .join(scored, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
+            "score_e6",
+            # floor(double-div): identical IEEE ops on both engines
+            # (score magnitudes << 2^53, so the division is exact
+            # enough for a stable floor), unlike DIV whose negative
+            # truncation direction differs across engines
+            F.floor(
+                F.col("score_e6").cast("double") / F.col("n_tokens")
+            ).cast("long").alias("per_token_e6"),
+        )
     )
 
 
 def _nb_train(docs, is_pos, n_buckets, scale):
-    """(labeled token table, weight table) — the shared training pass
-    behind `nb_quality_scores` and `nb_write_weights`."""
+    """(labeled token table, weight table): the training pass of
+    `nb_quality_scores`; its scoring reuses the token table."""
     from .text import curation_gate_col, token_hash, words_col
 
     if is_pos is None:
@@ -535,81 +501,6 @@ def _nb_train(docs, is_pos, n_buckets, scale):
     )
     return toks, weights
 
-
-def nb_score_with_weights(
-    docs: DataFrame,
-    weights: DataFrame,
-    n_buckets: int | None = None,
-    toks: DataFrame | None = None,
-) -> DataFrame:
-    """The scoring half of `nb_quality_scores` against a GIVEN
-    (bucket, w_e6) weight table — the train-offline / score-anywhere
-    split: a nightly job trains and persists weights
-    (`nb_write_weights`), and any batch or micro-batch scores against
-    them with one token explode + broadcast join + integer sum, no
-    training pass. Output schema identical to `nb_quality_scores`.
-
-    `n_buckets` defaults to the WEIGHT TABLE's own row count — the
-    grid is dense 0..B-1 by construction (`_nb_train` joins the full
-    bucket grid), so the count IS the bucket width. Inferring it here
-    closes the silent-misbucketing trap where weights trained at a
-    non-default width were scored at the default (every token lands
-    in the wrong bucket, scores wrong, no error)."""
-    from .text import token_hash, words_col
-
-    if toks is None:
-        if n_buckets is None:
-            n_buckets = weights.count()
-        pre = docs.select(
-            "doc_id", words_col(F.col("text")).alias("_w")
-        )
-        toks = pre.select(
-            "doc_id", F.explode("_w").alias("tok")
-        ).withColumn(
-            "bucket", F.pmod(token_hash(F.col("tok")), F.lit(n_buckets))
-        )
-    scored = (
-        toks.join(F.broadcast(weights), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum("w_e6").alias("score_e6"),
-        )
-    )
-    return (
-        docs.select("doc_id")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-            "score_e6",
-            # floor(double-div): identical IEEE ops on both engines
-            # (score magnitudes << 2^53, so the division is exact
-            # enough for a stable floor), unlike DIV whose negative
-            # truncation direction differs across engines
-            F.floor(
-                F.col("score_e6").cast("double") / F.col("n_tokens")
-            ).cast("long").alias("per_token_e6"),
-        )
-    )
-
-
-def nb_write_weights(
-    docs: DataFrame,
-    path: str,
-    is_pos: Column | None = None,
-    n_buckets: int = DSIR_BUCKETS,
-    scale: int = 10**6,
-) -> None:
-    """Train the NB quality classifier and persist its (bucket, w_e6)
-    weight table — the standing-model path (same division as the dedup
-    family's write_index functions): the training corpus is read once,
-    the B-row weight table lands as one parquet file, and every later
-    batch or STREAM scores against it via `nb_score_with_weights` /
-    `streaming.streams.streaming_quality_scores` without touching the
-    training data again."""
-    _toks, weights = _nb_train(docs, is_pos, n_buckets, scale)
-    weights.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def dsir_weights(
@@ -784,7 +675,7 @@ def quality_tiers(
     # — materialize once (lazy) or the whole NB train+score subtree
     # (token explode, weight broadcast, doc_id shuffle) executes twice,
     # no CSE across the crossJoin branches (r12 optimization round:
-    # plan went 40 Exchanges → 11, see plans/r12/quality_tiers_*.txt)
+    # plan went 40 Exchanges → 11)
     scored = nb_quality_scores(
         docs, is_pos=is_pos, n_buckets=n_buckets
     ).localCheckpoint(eager=False)

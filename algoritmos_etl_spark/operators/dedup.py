@@ -17,6 +17,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .text import normalized_text, words_col
 
@@ -141,7 +148,7 @@ def ngram_jaccard_pairs(
     (doc_id, shingle) relation for `docs` (the output of
     `doc_shingles(docs, k)`), so a pipeline that runs several
     shingle-based dedup passes over one corpus — or reads a written
-    `ngram_write_index` — shingles it exactly once.
+    shingle index — shingles it exactly once.
     """
     sh = shingles if shingles is not None else _shingle_index(docs, k)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -248,31 +255,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def ngram_candidate_count(
-    docs: DataFrame, k: int = 3, max_shingle_df: int | None = None
-) -> int:
-    """Distinct candidate pairs the (optionally df-capped) inverted
-    index join generates — the quantity a viral shingle blows up."""
-    sh = _shingle_index(docs, k)
-    if max_shingle_df is not None:
-        dfc = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(dfc, "shingle")
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    return (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .count()
     )
 
 
@@ -438,46 +420,35 @@ def minhash_lsh_dedup(
     return _verify_jaccard(candidates, sh, threshold)
 
 
-def exact_write_index(docs: DataFrame, path: str) -> None:
-    """Materialize the exact-dedup fingerprint index at ingest:
-    (doc_id, fingerprint) parquet. Fingerprints are pure md5 of the
-    normalized text, so appends never go stale."""
-    docs.select(
-        "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
-    ).write.mode("overwrite").parquet(f"{path}/fingerprints")
+# The minhash index's on-disk schema, per dataset: its two writers
+# (`minhash_write_index`, the streaming appender `_neardup_batch`)
+# project through it, and its reader (`minhash_lsh_incremental`) reads
+# with it instead of inferring — inference costs a footer-reading
+# driver job per micro-batch lookup (r13; ~0.1 s per read per batch).
+# `batch_id` (and `band` in bands/) are directory partitions.
+MINHASH_INDEX_SCHEMA = {
+    "bands": StructType([
+        StructField("doc_id", LongType()),
+        StructField("band_sig", StringType()),
+        StructField("batch_id", IntegerType()),
+        StructField("band", IntegerType()),
+    ]),
+    "shingles": StructType([
+        StructField("doc_id", LongType()),
+        StructField("shingle", StringType()),
+        StructField("batch_id", IntegerType()),
+    ]),
+}
 
 
-def exact_dedup_incremental(spark, new_docs: DataFrame, path: str) -> DataFrame:
-    """New docs annotated against the standing fingerprint index:
-    (doc_id, fingerprint, is_duplicate, dup_of) where dup_of is the
-    minimum doc_id already holding the fingerprint (in the index or
-    earlier in the batch). Hashing runs over |new| only; the index is
-    read, never recomputed — the daily-increment twin of `exact_dedup`.
-    """
-    new_fp = new_docs.select(
-        "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
-    )
-    old_fp = spark.read.parquet(f"{path}/fingerprints").select(
-        "doc_id", "fingerprint"
-    )
-    combined = old_fp.unionByName(new_fp)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("fingerprint")
-    keep = combined.select(
-        "fingerprint", F.min("doc_id").over(w).alias("dup_of")
-    ).distinct()
-    return (
-        new_fp.join(keep, "fingerprint", "left")
-        .select(
-            "doc_id",
-            "fingerprint",
-            (F.col("dup_of") < F.col("doc_id")).alias("is_duplicate"),
-            F.when(F.col("dup_of") < F.col("doc_id"), F.col("dup_of")).alias(
-                "dup_of"
-            ),
-        )
-    )
+def _minhash_index_rows(df: DataFrame, dataset: str) -> DataFrame:
+    """`df` cast to the `dataset`'s written columns in
+    `MINHASH_INDEX_SCHEMA` (every field but the `batch_id` directory)."""
+    return df.select(*[
+        F.col(f.name).cast(f.dataType)
+        for f in MINHASH_INDEX_SCHEMA[dataset].fields
+        if f.name != "batch_id"
+    ])
 
 
 def minhash_write_index(docs: DataFrame, path: str, k_shingle: int = 3) -> None:
@@ -504,10 +475,12 @@ def minhash_write_index(docs: DataFrame, path: str, k_shingle: int = 3) -> None:
     bands = minhash_bands(
         _with_base_hash(sh).groupBy("doc_id").agg(*_minhash_aggs())
     )
-    bands.write.mode("overwrite").partitionBy("band").parquet(
-        f"{path}/bands/batch_id=-1"
+    _minhash_index_rows(bands, "bands").write.mode("overwrite").partitionBy(
+        "band"
+    ).parquet(f"{path}/bands/batch_id=-1")
+    _minhash_index_rows(sh, "shingles").write.mode("overwrite").parquet(
+        f"{path}/shingles/batch_id=-1"
     )
-    sh.write.mode("overwrite").parquet(f"{path}/shingles/batch_id=-1")
 
 
 def minhash_lsh_incremental(
@@ -553,14 +526,9 @@ def minhash_lsh_incremental(
             _with_base_hash(sh_new).groupBy("doc_id").agg(*_minhash_aggs())
         ).localCheckpoint(eager=False)
     bands_new = bands_new.select("doc_id", "band", "band_sig")
-    # explicit schemas on the index reads: the layout is fixed by the
-    # two writers (minhash_write_index, the streaming appender), and
-    # per-micro-batch schema INFERENCE costs a driver job reading
-    # parquet footers on every lookup (r13; measured ~0.1 s per read
-    # per batch). Partition columns (batch_id, band) stay discovered.
-    bands_old = spark.read.schema(
-        "doc_id long, band_sig string, batch_id int, band int"
-    ).parquet(f"{path}/bands")
+    bands_old = spark.read.schema(MINHASH_INDEX_SCHEMA["bands"]).parquet(
+        f"{path}/bands"
+    )
     if max_batch_id_exclusive is not None:
         bands_old = bands_old.filter(
             F.col("batch_id") < max_batch_id_exclusive
@@ -592,73 +560,13 @@ def minhash_lsh_incremental(
         )
         .distinct()
     )
-    sh_old = spark.read.schema(
-        "doc_id long, shingle string, batch_id int"
-    ).parquet(f"{path}/shingles")
+    sh_old = spark.read.schema(MINHASH_INDEX_SCHEMA["shingles"]).parquet(
+        f"{path}/shingles"
+    )
     if max_batch_id_exclusive is not None:
         sh_old = sh_old.filter(F.col("batch_id") < max_batch_id_exclusive)
     sh_all = sh_old.select("doc_id", "shingle").unionByName(
         sh_new.select("doc_id", "shingle")
-    )
-    return _verify_jaccard(candidates, sh_all, threshold)
-
-
-def ngram_write_index(docs: DataFrame, path: str, k: int = 3) -> None:
-    """Materialize the n-gram inverted index at ingest: (doc_id,
-    shingle) posting lists under `shingles/batch_id=-1` (same layout
-    convention as `minhash_write_index` — streaming appenders land each
-    micro-batch in its own batch_id=N subdirectory, idempotent on
-    replay). Shingles are pure functions of the text, so index rows
-    never go stale; appends are just more rows.
-    """
-    doc_shingles(docs, k).write.mode("overwrite").parquet(
-        f"{path}/shingles/batch_id=-1"
-    )
-
-
-def ngram_jaccard_incremental(
-    spark,
-    new_docs: DataFrame,
-    path: str,
-    k: int = 3,
-    threshold: float = 0.2,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Exact-Jaccard near-dup pairs INVOLVING the new batch, against a
-    standing `ngram_write_index` — the incremental twin the other three
-    dedup families already have. Equals the full-batch
-    `ngram_jaccard_pairs` restricted to pairs with at least one new doc
-    (pinned by test): same df-cap candidate policy counted over corpus
-    ∪ increment, same exact full-set verification.
-
-    Cost shape: shingling runs over |new| only; the inverted-index
-    candidate join is (corpus ∪ new) ⋈ NEW on shingle, so it touches
-    only posting lists of shingles the increment actually contains —
-    the standing corpus is read, never re-shingled.
-    """
-    sh_new = _shingle_index(new_docs, k)
-    sh_old = spark.read.parquet(f"{path}/shingles").select("doc_id", "shingle")
-    sh_all = sh_old.unionByName(sh_new.select("doc_id", "shingle"))
-    joinable_all, joinable_new = sh_all, sh_new
-    if max_shingle_df is not None:
-        viral = (
-            sh_all.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("shingle")
-        )
-        joinable_all = sh_all.join(F.broadcast(viral), "shingle", "left_anti")
-        joinable_new = sh_new.join(F.broadcast(viral), "shingle", "left_anti")
-    a = joinable_all.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = joinable_new.select(F.col("doc_id").alias("id_b"), "shingle")
-    candidates = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("doc_a"),
-            F.greatest("id_a", "id_b").alias("doc_b"),
-        )
-        .distinct()
     )
     return _verify_jaccard(candidates, sh_all, threshold)
 
@@ -800,106 +708,6 @@ def simhash_neardup_pairs(
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
-    )
-
-
-def simhash_write_index(
-    docs: DataFrame,
-    path: str,
-    bits: int = SIMHASH_BITS,
-    chunks: int = SIMHASH_CHUNKS,
-) -> None:
-    """Materialize the SimHash chunk index at ingest (the MinHash
-    index's sibling): (doc_id, simhash, chunk, chunk_val) partitioned
-    by chunk, so an increment's banding join prunes to the touched
-    chunk partitions and verification xors the packed hashes straight
-    off the index — the corpus is never re-hashed."""
-    sh = simhash(docs, bits=bits, chunks=chunks)
-    exploded = sh.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[F.col(f"c{c}") for c in range(chunks)])
-        ).alias("chunk", "chunk_val"),
-    )
-    exploded.repartition("chunk").write.mode("overwrite").partitionBy(
-        "chunk"
-    ).parquet(f"{path}/chunks")
-
-
-def simhash_incremental(
-    spark,
-    new_docs: DataFrame,
-    path: str,
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    chunks: int = SIMHASH_CHUNKS,
-) -> DataFrame:
-    """SimHash near-dup pairs INVOLVING the new batch, against the
-    materialized chunk index plus the batch itself — equals the
-    full-batch `simhash_neardup_pairs` restricted to such pairs
-    (pinned by test). Signature votes run over |new| docs only."""
-    sh = simhash(new_docs, bits=bits, chunks=chunks)
-    new_exploded = sh.select(
-        "doc_id",
-        "simhash",
-        F.posexplode(
-            F.array(*[F.col(f"c{c}") for c in range(chunks)])
-        ).alias("chunk", "chunk_val"),
-    ).localCheckpoint(eager=False)
-    old_exploded = spark.read.parquet(f"{path}/chunks").select(
-        "doc_id", "simhash", "chunk", "chunk_val"
-    )
-    all_exploded = old_exploded.unionByName(new_exploded)
-    a = all_exploded.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"),
-        "chunk", "chunk_val",
-    )
-    b = new_exploded.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sh_b"),
-        "chunk", "chunk_val",
-    )
-    return (
-        a.join(b, ["chunk", "chunk_val"])
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.least("id_a", "id_b").alias("doc_a"),
-            F.greatest("id_a", "id_b").alias("doc_b"),
-            # hamming is symmetric in the two packed hashes, so no
-            # side-swap bookkeeping is needed past this projection
-            F.col("sh_a").bitwiseXOR(F.col("sh_b")).alias("shx"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("shx")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
-    )
-
-
-def simhash_candidate_count(
-    docs: DataFrame, bits: int = SIMHASH_BITS, chunks: int = SIMHASH_CHUNKS
-) -> int:
-    """Distinct candidate pairs the chunk-banding join generates BEFORE
-    hamming verification — the quantity that explodes when chunks are
-    too narrow (the scale diagnostic the 64-bit widening is pinned by)."""
-    sh = simhash(docs, bits=bits, chunks=chunks)
-    carr = F.array(*[F.col(f"c{c}") for c in range(chunks)])
-    exploded = (
-        sh.select("doc_id", carr.alias("carr"))
-        .select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(chunks - 1))).alias("chunk"),
-            F.element_at("carr", F.col("chunk") + 1).alias("chunk_val"),
-        )
-    )
-    a = exploded.select(F.col("doc_id").alias("doc_a"), "chunk", "chunk_val")
-    b = exploded.select(F.col("doc_id").alias("doc_b"), "chunk", "chunk_val")
-    return (
-        a.join(b, ["chunk", "chunk_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .count()
     )
 
 

@@ -79,11 +79,6 @@ def matches(col: str, pattern: str) -> Expectation:
     )
 
 
-def custom(name: str, predicate: Column) -> Expectation:
-    """Violation when `predicate` is not TRUE (null predicate fails)."""
-    return _rule(name, (~F.coalesce(predicate, F.lit(False))).cast("int"))
-
-
 @dataclass(frozen=True)
 class UniqueExpectation:
     name: str

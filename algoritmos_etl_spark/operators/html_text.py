@@ -2,26 +2,14 @@
 pretraining pipeline reaches for (the documents table starts at clean
 text; real crawls start at markup).
 
-Two tiers, mirroring the codec family's shape
-(`multimodal.decode_png` real path + quarantine contract):
-
-- `html_to_text` — the SCALE tier: a pure-JVM `regexp_replace` chain
-  (drop script/style blocks, drop comments, strip tags, decode the six
-  standard entities, collapse whitespace). One projection pass, no
-  shuffle, no Python; every step has a DuckDB twin (RE2 has no
-  backreferences, so script and style use separate patterns), which is
-  what lets the registered query carry a FULL value oracle. Contract:
-  well-formed-ish markup — a '<' inside a text node that never closes
-  would swallow text to the next '>' (the regex tier is a lexer, not a
-  parser; the parsed tier below is the robust path).
-- `html_to_text_parsed` — the ROBUST tier: stdlib `html.parser` inside
-  the Arrow-batched `mapInPandas` idiom (`text.text_quality`'s
-  pattern), emitting block-level text with a jusText-style boilerplate
-  gate: blocks whose LINK DENSITY (chars inside <a> / total chars)
-  exceeds `max_link_density`, or shorter than `min_chars`, are dropped
-  (nav bars, footers, tag clouds). Unparseable rows quarantine with
-  (ok=false, err) instead of failing the batch — the PNG/WAV codec
-  contract.
+`html_to_text` is a pure-JVM `regexp_replace` chain (drop script/style
+blocks, drop comments, strip tags, decode the six standard entities,
+collapse whitespace). One projection pass, no shuffle, no Python; every
+step has a DuckDB twin (RE2 has no backreferences, so script and style
+use separate patterns), which is what lets the registered query carry a
+FULL value oracle. Contract: well-formed-ish markup — a '<' inside a
+text node that never closes would swallow text to the next '>' (the
+chain is a lexer, not a parser).
 
 Reference scope note: the reference (`/root/reference/`) has no HTML
 ingestion — its source edge is the Yahoo JSON chart API
@@ -96,134 +84,11 @@ def html_to_text_sql(html_expr: str) -> str:
     return f"trim(regexp_replace({s}, '{_WS}', ' ', 'g'))"
 
 
-# --------------------------------------------------------- parsed tier
-
-_BLOCK_TAGS = {
-    "p", "div", "section", "article", "header", "footer", "nav",
-    "h1", "h2", "h3", "h4", "h5", "h6", "li", "ul", "ol", "table",
-    "tr", "td", "th", "br", "blockquote", "pre", "title",
-}
-_SKIP_TAGS = {"script", "style"}
-
-
-def _extract_blocks(html: str) -> list[tuple[str, int, int]]:
-    """Parse with stdlib html.parser into text blocks:
-    [(block_text, n_chars, n_link_chars)] — the DOM-free block model
-    jusText builds its heuristics on (Pomikálek 2011 §3)."""
-    from html.parser import HTMLParser
-
-    class _P(HTMLParser):
-        def __init__(self):
-            super().__init__(convert_charrefs=True)
-            self.blocks: list[list] = [["", 0, 0]]
-            self._skip = 0
-            self._link = 0
-
-        def _break(self):
-            if self.blocks[-1][1] > 0:
-                self.blocks.append(["", 0, 0])
-
-        def handle_starttag(self, tag, attrs):
-            if tag in _SKIP_TAGS:
-                self._skip += 1
-            elif tag == "a":
-                self._link += 1
-            if tag in _BLOCK_TAGS:
-                self._break()
-
-        def handle_endtag(self, tag):
-            if tag in _SKIP_TAGS:
-                self._skip = max(0, self._skip - 1)
-            elif tag == "a":
-                self._link = max(0, self._link - 1)
-            if tag in _BLOCK_TAGS:
-                self._break()
-
-        def handle_data(self, data):
-            if self._skip:
-                return
-            txt = " ".join(data.split())
-            if not txt:
-                return
-            b = self.blocks[-1]
-            b[0] = (b[0] + " " + txt).strip()
-            b[1] += len(txt)
-            if self._link:
-                b[2] += len(txt)
-
-    p = _P()
-    p.feed(html)
-    p.close()
-    return [(b[0], b[1], b[2]) for b in p.blocks if b[1] > 0]
-
-
-def html_to_text_parsed(
-    pages: DataFrame,
-    html_col: str = "html",
-    max_link_density: float = 0.5,
-    min_chars: int = 4,
-) -> DataFrame:
-    """Robust-tier extraction with jusText-style boilerplate removal.
-    Output: (doc_id, text, n_blocks_kept, n_blocks_dropped, ok, err);
-    unparseable rows quarantine (ok=false, text NULL) rather than
-    failing the batch. Arrow-batched; per-doc cost is linear in the
-    markup, so the stage scales as a map-only pass."""
-    import pandas as pd
-
-    out_schema = (
-        "doc_id long, text string, n_blocks_kept int, "
-        "n_blocks_dropped int, ok boolean, err string"
-    )
-
-    def extract(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, html in zip(pdf["doc_id"], pdf[html_col]):
-                # id conversion OUTSIDE the try: a NULL doc_id (NaN in
-                # the Arrow batch) must quarantine as id None — calling
-                # int() inside the except handler would re-raise and
-                # take the whole batch down with it
-                did = None if pd.isna(doc_id) else int(doc_id)
-                try:
-                    blocks = _extract_blocks(html or "")
-                    kept = [
-                        t
-                        for t, n, ln in blocks
-                        if n >= min_chars and ln / n <= max_link_density
-                    ]
-                    rows.append(
-                        (
-                            did,
-                            " ".join(kept),
-                            len(kept),
-                            len(blocks) - len(kept),
-                            True,
-                            None,
-                        )
-                    )
-                except Exception as exc:  # quarantine, never fail the batch
-                    rows.append(
-                        (did, None, 0, 0, False, repr(exc)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "text", "n_blocks_kept",
-                    "n_blocks_dropped", "ok", "err",
-                ],
-            )
-
-    return pages.select("doc_id", html_col).mapInPandas(
-        extract, schema=out_schema
-    )
-
-
 # ------------------------------------------------------------- fixture
 
 # the boilerplate shell every synthesized page shares — nav links and a
-# footer (high link density / short blocks: the parsed tier drops
-# them), a script and a style block (both tiers drop them), entities in
-# the title (both tiers decode them)
+# footer, a script and a style block (the chain drops both), entities
+# in the title (the chain decodes them)
 _HTML_PREFIX = (
     "<html><!-- synthesized fixture --><head>"
     "<title>Doc &amp; Page</title>"

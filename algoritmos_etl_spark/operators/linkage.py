@@ -86,31 +86,3 @@ def fuzzy_join(
     return cands.withColumn(
         "distance", F.levenshtein(F.col("left_name"), F.col("right_name"))
     ).filter(F.col("distance") <= max_distance)
-
-
-def fuzzy_name_pairs(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    max_distance: int = 2,
-) -> DataFrame:
-    """Self-linkage: all id pairs (id_a < id_b) within `max_distance`
-    edits under the same token-blocking contract as `fuzzy_join` —
-    catalog self-dedup. Quadratic in per-name multiplicity by nature
-    (every pair of records sharing a name IS a result row); run it on
-    the DISTINCT name catalog, then propagate to records by joining
-    back on the name, exactly like `dedup.canonical_selection`.
-    """
-    out = fuzzy_join(
-        df, df, id_col, name_col, id_col, name_col, max_distance
-    )
-    return (
-        out.filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            F.col("left_id").alias("id_a"),
-            F.col("right_id").alias("id_b"),
-            F.col("left_name").alias("name_a"),
-            F.col("right_name").alias("name_b"),
-            "distance",
-        )
-    )

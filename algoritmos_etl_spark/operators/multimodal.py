@@ -109,7 +109,7 @@ def decode_features(docs: DataFrame) -> DataFrame:
 
     The real pattern at scale: payload bytes arrive in Arrow buffers,
     Python touches each batch once, output is a narrow feature frame.
-    If a real codec is wanted, see `decode_image_real` (stubbed).
+    The real codecs are `decode_png` / `decode_jpeg` / `decode_wav`.
     """
     with_p = attach_payload(docs)
 
@@ -280,54 +280,6 @@ def decode_png(data: bytes) -> dict:
         "channel_means": ch_means,
         "dominant_channel": max(range(color_ch), key=lambda c: (ch_means[c], -c)),
     }
-
-
-def decode_image_real(docs: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Real image decode over a binary PNG column — the codec seam made
-    real, same Arrow-batched `mapInPandas` contract as `decode_features`.
-
-    With pillow present, real codecs for more formats slot in behind
-    the same signature; without it the stdlib PNG path above handles
-    the dominant training-corpus format. Undecodable rows survive as
-    (doc_id, error) instead of failing the batch — a 100 TB crawl
-    always contains corrupt payloads, and dropping the partition for
-    one of them is not an option.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                try:
-                    meta = decode_png(bytes(payload))
-                    rows.append(
-                        (
-                            doc_id, meta["width"], meta["height"],
-                            meta["channels"], meta["bit_depth"],
-                            meta["mean_intensity"], meta["dominant_channel"],
-                            None,
-                        )
-                    )
-                except Exception as exc:  # noqa: BLE001 — quarantine, don't fail the batch
-                    rows.append(
-                        (doc_id, None, None, None, None, None, None, str(exc))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "channels", "bit_depth",
-                    "mean_intensity", "dominant_channel", "error",
-                ],
-            )
-
-    return docs.select("doc_id", payload_col).mapInPandas(
-        decode,
-        schema=(
-            "doc_id bigint, width int, height int, channels int, "
-            "bit_depth int, mean_intensity double, dominant_channel int, "
-            "error string"
-        ),
-    )
 
 
 def sample_frames(docs: DataFrame, stride: int = 2) -> DataFrame:
@@ -731,9 +683,8 @@ def synthesize_wav_corpus(docs: DataFrame, rate: int = 8000) -> DataFrame:
 
 def audio_features(audio: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Real audio feature extraction over a binary WAV column — the
-    audio leg of the multimodal seam, same Arrow-batched quarantine
-    contract as `decode_image_real`: one pass, undecodable rows
-    survive as (doc_id, error)."""
+    audio leg of the multimodal seam, with an Arrow-batched quarantine
+    contract: one pass, undecodable rows survive as (doc_id, error)."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -33,9 +33,9 @@ def table_diff(
     `removed` = in left only. NULL-safe per-column comparison.
 
     Plan: ONE full-outer sort-merge join on the key — each side
-    shuffles once; on bucketed layouts (sources.compact.write_bucketed)
-    the exchanges vanish entirely, which is how a 100 TB nightly
-    drift-check stays affordable. All column comparisons are JVM
+    shuffles once; on tables bucketed by the key the exchanges vanish
+    entirely, which is how a 100 TB nightly drift-check stays
+    affordable. All column comparisons are JVM
     expressions on the joined row; unchanged keys are dropped by a
     filter, so the output is |diff|, not |table|.
 
@@ -177,41 +177,3 @@ def cdc_merge(
             *[F.col(f"_w.{c}").alias(c) for c in data_cols],
         )
     )
-
-
-def diff_as_changes(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: Sequence[str],
-    op_col: str = "op",
-) -> DataFrame:
-    """The diff as a CDC changeset: (key…, op, right-side attributes)
-    such that merging it onto `left` reproduces `right` exactly —
-    added/changed keys become upserts carrying the right-side row,
-    removed keys become delete tombstones (attributes NULL). This is
-    the replica-repair loop closed: `table_diff` finds the drift,
-    `diff_as_changes` ships it, `cdc_merge` converges the replica
-    (the convergence property is pinned in tests).
-
-    Plan: the diff's key set joins back to `right` for payloads — a
-    second key-partitioned join that reuses the diff's shuffle
-    partitioning; removed keys skip the join entirely (their payload
-    is NULL by definition).
-    """
-    d = table_diff(left, right, key_cols).select(*key_cols, "diff_type")
-    attr_cols = [c for c in right.columns if c not in set(key_cols)]
-    upserts = (
-        d.filter(F.col("diff_type") != "removed")
-        .join(right, list(key_cols))
-        .select(
-            *key_cols,
-            F.lit("U").alias(op_col),
-            *attr_cols,
-        )
-    )
-    deletes = d.filter(F.col("diff_type") == "removed").select(
-        *key_cols,
-        F.lit("D").alias(op_col),
-        *[F.lit(None).cast(right.schema[c].dataType).alias(c) for c in attr_cols],
-    )
-    return upserts.unionByName(deletes)

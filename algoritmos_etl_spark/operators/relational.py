@@ -166,44 +166,6 @@ def revenue_rollup(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     )
 
 
-def revenue_grouping_sets(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    sets: list[list[str]] | None = None,
-) -> DataFrame:
-    """Arbitrary GROUPING SETS over the joined fact: callers pick which
-    (order_year, priority, status) combinations to aggregate, and Spark
-    still plans ONE Expand + one partial-agg shuffle for all of them —
-    the generalization `revenue_rollup` is a special case of. CUBE is
-    `sets=` all 2^n subsets; the default here is the drill-across shape
-    (by year, by priority, by both, grand total).
-    """
-    if sets is None:
-        sets = [["order_year", "priority"], ["order_year"], ["priority"], []]
-    revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    joined = lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.year("o_orderdate").alias("order_year"),
-        F.col("o_orderpriority").alias("priority"),
-        revenue.alias("rev"),
-    )
-    rolled = joined.groupingSets(
-        [[F.col(c) for c in s] for s in sets], "order_year", "priority"
-    ).agg(
-        F.round(F.sum(F.col("rev").cast("decimal(30,10)")), 2)
-        .cast("double")
-        .alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-        F.grouping_id().alias("gid"),
-    )
-    return rolled.select(
-        F.coalesce("order_year", F.lit(-1)).alias("order_year"),
-        F.coalesce("priority", F.lit("ALL")).alias("priority"),
-        "revenue",
-        "n_lines",
-        "gid",
-    )
-
-
 def shipping_priority(
     lineitem: DataFrame,
     orders: DataFrame,
@@ -1213,9 +1175,9 @@ def product_profit(
     Plan shape this query exists to exercise: the suite's one
     deliberate FACT⋈FACT join — lineitem⋈orders on the order key to
     fetch the year (Q9's defining cost at scale; both sides shuffle on
-    l_orderkey/o_orderkey, which bucketed layouts would make
-    exchange-free, see sources/compact.bucketize_table). The part
-    filter broadcasts and prunes the fact BEFORE that shuffle (the
+    l_orderkey/o_orderkey, which a layout bucketed on the order key
+    would make exchange-free). The part filter broadcasts and prunes
+    the fact BEFORE that shuffle (the
     name-match survivors are a small fraction of parts), supplier →
     nation broadcasts, and the final rollup reduces map-side to the
     bounded (nation, year) grain.

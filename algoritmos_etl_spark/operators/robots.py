@@ -157,7 +157,7 @@ def robots_gate(
     # build side) and the result is broadcast anyway — materialize the
     # bounded resolved table once instead of re-running the rule parse
     # per reference (r12 optimization round: robots_gate's plan
-    # carried the parse subtree 4×, 42 Exchanges → see plans/r12/)
+    # carried the parse subtree 4×, 42 Exchanges)
     applicable = (
         named.unionByName(star.join(has_named, "host", "left_anti"))
         .select("host", "allow", "path", "plen", "rx")

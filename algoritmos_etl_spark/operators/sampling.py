@@ -48,36 +48,6 @@ def with_split(
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = "sample"
-) -> DataFrame:
-    """Keep ~`fraction` of rows, chosen by key hash — the same rows
-    every run, on every engine, at any partitioning."""
-    thresh = int(fraction * SPLIT_BUCKETS)
-    return df.filter(split_bucket(F.col(key), salt) < thresh)
-
-
-def stratified_sample(
-    df: DataFrame,
-    key: str,
-    strata_col: str,
-    fractions: dict[str, float],
-    default_fraction: float = 0.0,
-    salt: str = "strata",
-) -> DataFrame:
-    """Keep a per-stratum deterministic fraction of rows (e.g. 100% of
-    rare languages, 10% of English). Pure projection — the fraction map
-    compiles to a CASE over `strata_col`; no shuffle, no join."""
-    b = split_bucket(F.col(key), salt)
-    thr: Column = F.lit(int(default_fraction * SPLIT_BUCKETS))
-    expr = F.lit(None).cast("int")
-    for stratum, frac in fractions.items():
-        expr = F.when(
-            F.col(strata_col) == stratum, F.lit(int(frac * SPLIT_BUCKETS))
-        ).otherwise(expr)
-    return df.filter(b < F.coalesce(expr, thr))
-
-
 def balanced_sample(
     df: DataFrame,
     key: str,
@@ -265,49 +235,4 @@ def epoch_shards(
         .withColumn("shard", shard)
         .withColumn("pos", (F.row_number().over(w) - 1).cast("long"))
         .select("epoch", "shard", "pos", key)
-    )
-
-
-def write_epoch_shards(
-    df: DataFrame,
-    key: str,
-    path: str,
-    n_epochs: int = 2,
-    n_shards: int = 8,
-    salt: str = "epoch",
-) -> None:
-    """Materialize the `epoch_shards` serving order as a physical
-    layout: `path/epoch=E/shard=S/` directories, each shard written as
-    ONE file whose row order IS the serving order (the hash permutation
-    key, ascending) — what a sequential training data loader actually
-    reads, with no sort at load time.
-
-    Scale shape: one repartition on the (epoch, shard) grain (each task
-    owns exactly one output file), `sortWithinPartitions` orders rows
-    inside the task — the per-output-file sort, never a global one.
-    Payload columns ride along untouched; the assignment is the same
-    md5(salt:epoch:key) permutation as `epoch_shards`, so the written
-    layout and the computed (epoch, shard, pos) table agree row for
-    row (pinned in tests).
-    """
-    epochs = F.explode(
-        F.array(*[F.lit(e) for e in range(n_epochs)])
-    ).alias("epoch")
-    base = df.select("*", epochs)
-    okey = token_hash(
-        F.lit(salt), F.col("epoch").cast("string"), F.col(key).cast("string")
-    )
-    shard = F.pmod(okey, F.lit(n_shards)).cast("int")
-    (
-        base.withColumn("_okey", okey)
-        .withColumn("shard", shard)
-        .repartition(n_epochs * n_shards, "epoch", "shard")
-        # the partition columns LEAD the sort: FileFormatWriter demands
-        # rows ordered by its partition columns and would inject its own
-        # (unstable) sort otherwise, destroying the serving order
-        .sortWithinPartitions("epoch", "shard", "_okey", key)
-        .drop("_okey")
-        .write.partitionBy("epoch", "shard")
-        .mode("overwrite")
-        .parquet(path)
     )

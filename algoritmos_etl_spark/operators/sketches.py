@@ -50,16 +50,6 @@ BLOOM_BITS = 1 << 16
 BLOOM_HASHES = 3
 
 
-def cm_bucket(item: Column, d: int, width: int = CM_WIDTH) -> Column:
-    """Row-`d` counter index for `item`: hex digits [4d, 4d+4) of ONE
-    md5("cm:" + item), mod width — d ≤ 8 independent-enough hash rows
-    from a single digest (the Kirsch–Mitzenmacher trick), so the build
-    pays ONE md5 per item instead of depth. 16 bits per slice and the
-    power-of-two width divide evenly, so the modulo is bias-free; the
-    DuckDB oracle slices the same digest."""
-    return _cm_slice(F.md5(F.concat(F.lit("cm:"), item)), d, width)
-
-
 def _cm_slice(digest: Column, d: int, width: int) -> Column:
     assert d < 8, "_cm_slice: one md5 digest yields at most 8 16-bit rows"
     return F.pmod(

@@ -27,19 +27,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def heavy_hitters(df: DataFrame, key: str, min_share: float = 0.01) -> DataFrame:
-    """Keys holding ≥ `min_share` of all rows — the ones that will pin
-    a shuffle task. One aggregation + a scalar cross-join filter."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("n_rows"))
-    total = counts.agg(F.sum("n_rows").alias("_total"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .withColumn("share", F.col("n_rows") / F.col("_total"))
-        .filter(F.col("share") >= min_share)
-        .select(key, "n_rows", F.round("share", 6).alias("share"))
-    )
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -103,15 +103,6 @@ def sma(
     )
 
 
-def series_moments(df: DataFrame, value_col: str = "close") -> DataFrame:
-    """A1/A2: per-symbol mean and sample (n−1) standard deviation."""
-    return df.groupBy("symbol").agg(
-        F.avg(value_col).alias("mean"),
-        F.stddev_samp(value_col).alias("std_dev"),
-        F.count(value_col).alias("n"),
-    )
-
-
 def returns_bundle(df: DataFrame, price_col: str = "close") -> DataFrame:
     """W2/W2b/W3 in ONE window pass: per-symbol rows (first row dropped,
     reference returns length n−1) with all three return semantics as

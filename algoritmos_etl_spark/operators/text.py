@@ -231,36 +231,6 @@ def quality_rules(docs: DataFrame) -> DataFrame:
     )
 
 
-def quality_rules_keep(
-    docs: DataFrame, rules: tuple[str, ...] | None = None
-) -> DataFrame:
-    """(doc_id, n_failed, keep) — the rule pack as a GATE: keep iff
-    every selected rule passes. Same verdict expressions as
-    `quality_rules` (one shared builder), so gate and report cannot
-    drift; composes in front of curation exactly like
-    `curation_gate_col`. `rules` selects a subset by name (default
-    all) — the Dolma deployment shape, where each source ships its
-    own rule configuration (a code corpus waives the stop-word floor,
-    a books corpus waives the bullet ratio)."""
-    sig = _quality_signals(docs)
-    verdicts = _quality_verdicts(sig)
-    names = [n for n, _ in QUALITY_RULES]
-    if rules is not None:
-        unknown = set(rules) - set(names)
-        if unknown:
-            raise ValueError(f"unknown quality rules: {sorted(unknown)}")
-        names = [n for n in names if n in set(rules)]
-    n_failed = sum(
-        (F.when(verdicts[name][1], 0).otherwise(1) for name in names),
-        F.lit(0),
-    )
-    return sig.select(
-        "doc_id",
-        n_failed.cast("int").alias("n_failed"),
-        (n_failed == 0).alias("keep"),
-    )
-
-
 def quality_keep_expr(
     text: Column, rules: tuple[str, ...] | None = None
 ) -> Column:
@@ -348,8 +318,7 @@ def lang_id_trained(
     document, including the ones the 3-marker heuristic cannot reach
     (a Spanish doc that never says 'el la que' still reeks of Spanish
     trigrams). This replaces the 4-language marker floor as the
-    quality ceiling of the curation gate's language signal
-    (`plans.curation.curate_corpus_trained_lang` composes it).
+    quality ceiling of the curation gate's language signal.
 
     Exactness contract (the `corpus.nb_quality_scores` policy,
     multiclass): per-class bucket weights are 1e6 fixed-point BIGINTs

@@ -241,15 +241,6 @@ def _psl_rule_rows() -> list[tuple[str, bool, bool, bool]]:
     return [(k, f[0], f[1], f[2]) for k, f in sorted(acc.items())]
 
 
-def psl_rules_df(spark) -> DataFrame:
-    """The folded rule table as a (tiny, broadcastable) DataFrame."""
-    return spark.createDataFrame(
-        _psl_rule_rows(),
-        "suffix string, has_normal boolean,"
-        " has_wildcard boolean, has_exception boolean",
-    )
-
-
 def _psl_depth_sets() -> tuple[dict, dict, dict]:
     """`_psl_rule_rows` bucketed by (kind, label depth): three
     {depth: sorted suffix list} dicts (normal, wildcard, exception).
@@ -364,8 +355,8 @@ def with_registrable_domain_psl(
 
 
 def psl_rules_values_sql() -> str:
-    """The folded rule table as a DuckDB VALUES relation — the twin
-    of `psl_rules_df`, derived from the same constant."""
+    """The folded rule table as a DuckDB VALUES relation, derived from
+    the same constant as the Spark side."""
     rows = ", ".join(
         f"('{k}', {str(n).upper()}, {str(w).upper()}, {str(e).upper()})"
         for k, n, w, e in _psl_rule_rows()

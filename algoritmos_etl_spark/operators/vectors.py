@@ -23,12 +23,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-LSH_PLANES = 8
 # Multi-table widths for the scale path: 8 planes/table = 256 bucket
 # values per table (4 planes = 16 values meant each bucket held n/16 of
 # the corpus — the candidate join degenerated at scale); 16 tables
-# buy recall back (1 − (1 − p^8)^16). The recall/candidate-count curve
-# at these widths is pinned by tests vs the brute-force baseline.
+# buy recall back (1 − (1 − p^8)^16). The recall curve at these widths
+# is pinned by tests vs the brute-force baseline.
 LSH_TABLES = 16
 LSH_PLANES_PER_TABLE = 8
 
@@ -132,37 +131,6 @@ def _infer_dim(embeddings: DataFrame, col: str = "embedding") -> int:
     return 0 if row is None else row.d
 
 
-def _literal_plane_dot(vec: Column, plane_id: int, dim: int) -> Column:
-    """v · plane as a fold against a LITERAL component array — same
-    left-fold float path as before, zero per-row hashing."""
-    comps = F.array(*[F.lit(c) for c in _plane_literal(plane_id, dim)])
-    return F.aggregate(
-        F.zip_with(vec, comps, lambda x, c: x * c),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def lsh_buckets(
-    embeddings: DataFrame, n_planes: int = LSH_PLANES, dim: int | None = None
-) -> DataFrame:
-    """Random-hyperplane LSH bucket per vector: bit p = sign(v·plane_p).
-
-    All expression-level: fold the vector against driver-precomputed
-    ±1 literal components; pack sign bits into one integer bucket.
-    """
-    base = with_dvec(embeddings)
-    dim = dim or _infer_dim(embeddings)
-    bits = []
-    for p in range(n_planes):
-        dot_p = _literal_plane_dot(F.col("dvec"), p, dim)
-        bits.append(F.when(dot_p >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    return base.withColumn("bucket", bucket.cast("int"))
-
-
 def lsh_topk(
     embeddings: DataFrame, query_ids: list[int], k: int = 10,
     n_tables: int = LSH_TABLES, planes_per_table: int = LSH_PLANES_PER_TABLE,
@@ -252,7 +220,7 @@ def lsh_signatures(
     One table of many planes is over-selective for moderate cosine
     thresholds (recall p^planes decays fast); T independent tables of
     fewer planes recover recall 1−(1−p^b)^T while each table's buckets
-    stay small. Plane t·b+p seeds the same md5 family as `lsh_buckets`.
+    stay small. Plane t·b+p is `_plane_literal(t·b+p, dim)`.
 
     Plan shape: elements are QUANTIZED to integers with
     floor(val·1e9) — `floor` on a double is binary-exact on every
@@ -305,17 +273,6 @@ def lsh_signatures(
     )
 
 
-def lsh_table_buckets(
-    embeddings: DataFrame, n_tables: int = LSH_TABLES,
-    planes_per_table: int = LSH_PLANES_PER_TABLE, dim: int | None = None
-) -> DataFrame:
-    """`lsh_signatures` with the double vector attached — (vec_id,
-    dvec, tbl, sig) — for callers that want one joined view."""
-    base = with_dvec(embeddings)
-    sigs = lsh_signatures(embeddings, n_tables, planes_per_table, dim)
-    return base.join(sigs, "vec_id").select("vec_id", "dvec", "tbl", "sig")
-
-
 IVF_SCALE = 1_000_000  # component quantization for integer-exact dots
 
 
@@ -326,7 +283,7 @@ def _quantized_flat(df: DataFrame, id_col: str, vec_col: str = "dvec") -> DataFr
     Components are ≤ O(1) ⇒ |q| < 2^21; dots sum ≤ dim·2^42 < 2^53, so
     the integer is also exact as a double and the downstream
     cosine = dot / (sqrt(na)·sqrt(nb)) is a deterministic IEEE754 value
-    on every engine (the same rationale as `lsh_table_buckets`).
+    on every engine (the same rationale as `lsh_signatures`).
     """
     return df.select(
         F.col(id_col), F.posexplode(vec_col).alias("idx", "val")
@@ -566,180 +523,6 @@ def kmeans_cluster_profile(
     )
 
 
-def ivf_write_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    iters: int = 1,
-) -> None:
-    """Materialize the IVF index at ingest — the 100 TB shape the
-    `ivf_topk` docstring promises.
-
-    Two parquet datasets under `path`:
-      corpus/    — every (vec_id, embedding, centroid_id) row, written
-                   `partitionBy("centroid_id")` so a probe of p
-                   clusters is a partition-pruned scan reading p/C of
-                   the corpus;
-      centroids/ — the (centroid_id, idx, c) integer components the
-                   query path needs to rank clusters (tiny; broadcast).
-
-    Training/assignment run once here; queries never touch the
-    quantizer again.
-    """
-    base = with_dvec(embeddings)
-    flat = _quantized_flat(base, "vec_id").localCheckpoint(eager=False)
-    vec_norms = flat.groupBy("vec_id").agg(
-        F.sum(F.col("q") * F.col("q")).alias("n2")
-    )
-    cents = ivf_train(embeddings, n_centroids, iters).localCheckpoint(eager=False)
-    assign = _ivf_assign(flat, vec_norms, cents)
-    (
-        embeddings.join(assign, "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/corpus")
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-
-
-def ivf_append_index(spark, new_embeddings: DataFrame, path: str) -> dict:
-    """Append a new vector batch to a materialized `ivf_write_index`
-    WITHOUT retraining — the IVF maintenance story every standing ANN
-    deployment runs (FAISS `add` semantics): the coarse quantizer is
-    FROZEN at index-build time, each new vector is assigned to its
-    max-cosine existing centroid, and the batch lands as new files in
-    the touched centroid partitions. Existing files are never
-    rewritten, so concurrent probes keep reading a consistent index
-    (parquet append = new files only) and untouched partitions stay
-    byte-identical. Quantizer drift under heavy append is a REBUILD
-    decision (`ivf_write_index` again), not an append-path concern —
-    same division as the dedup family's standing indexes.
-
-    Contract: `new_embeddings` vec_ids must be new (the caller dedups
-    against the corpus — an exact-dedup fingerprint pass — before
-    appending; duplicate ids would double-count in probe reranks).
-    Returns {"appended": n, "centroids_touched": c}.
-
-    Scale shape: one broadcast join of the batch's quantized flat rows
-    against the tiny frozen centroid table + one (vec_id, centroid)
-    partial agg — cost is |batch|, never |corpus|.
-    """
-    cents = spark.read.parquet(f"{path}/centroids")
-    base = with_dvec(new_embeddings)
-    flat = _quantized_flat(base, "vec_id").localCheckpoint(eager=False)
-    vec_norms = flat.groupBy("vec_id").agg(
-        F.sum(F.col("q") * F.col("q")).alias("n2")
-    )
-    assign = _ivf_assign(flat, vec_norms, cents).localCheckpoint(
-        eager=False
-    )
-    (
-        new_embeddings.join(assign, "vec_id")
-        .write.mode("append")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/corpus")
-    )
-    stats = assign.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("centroid_id").alias("c"),
-    ).first()
-    return {"appended": int(stats["n"]), "centroids_touched": int(stats["c"])}
-
-
-def ivf_probe_topk(
-    spark,
-    path: str,
-    query_ids: list[int],
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """ANN top-k against a materialized `ivf_write_index` layout.
-
-    The probe side joins the tiny (query, centroid) probe table onto
-    the centroid-partitioned corpus with a broadcast join on the
-    PARTITION column — Spark's dynamic partition pruning turns that
-    into a scan of only the probed partitions (pinned by a plan test).
-    Exact cosine rerank then runs over just those members, so per-query
-    work is ~n·nprobe/C rows of IO and compute, not a corpus scan.
-    """
-    corpus = spark.read.parquet(f"{path}/corpus")
-    cents = spark.read.parquet(f"{path}/centroids")
-    cent_norms = cents.groupBy("centroid_id").agg(
-        F.sum(F.col("c") * F.col("c")).alias("c2")
-    )
-
-    queries = corpus.filter(F.col("vec_id").isin(query_ids)).select(
-        "vec_id", "embedding"
-    )
-    qbase = with_dvec(queries)
-    qflat = _quantized_flat(qbase, "vec_id").select(
-        F.col("vec_id").alias("query_id"), "idx", F.col("q").alias("qq")
-    ).localCheckpoint(eager=False)
-    qnorms = qflat.groupBy("query_id").agg(
-        F.sum(F.col("qq") * F.col("qq")).alias("qn2")
-    )
-
-    qdots = (
-        qflat.join(F.broadcast(cents), "idx")
-        .groupBy("query_id", "centroid_id")
-        .agg(F.sum(F.col("qq") * F.col("c")).alias("dot"))
-        .join(F.broadcast(cent_norms), "centroid_id")
-        .join(F.broadcast(qnorms), "query_id")
-    )
-    qcos = _int_cosine(F.col("dot"), F.col("qn2"), F.col("c2"))
-    wprobe = Window.partitionBy("query_id").orderBy(
-        qcos.desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qdots.withColumn("prank", F.row_number().over(wprobe))
-        .filter(F.col("prank") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-
-    # broadcast join on the partition column → dynamic partition
-    # pruning: only probed centroid_id partitions are read
-    members = corpus.join(F.broadcast(probes), "centroid_id").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    # dedupe before flattening: a member can sit in several queries'
-    # probe sets, and duplicate (vec_id, idx, q) rows would double-count
-    # every dot it participates in
-    mflat = _quantized_flat(
-        with_dvec(members.select("vec_id", "embedding").dropDuplicates(["vec_id"])),
-        "vec_id",
-    ).localCheckpoint(eager=False)
-    cand = members.select("query_id", "vec_id")
-    mnorms = mflat.groupBy("vec_id").agg(F.sum(F.col("q") * F.col("q")).alias("n2"))
-    pair_dots = (
-        cand.join(mflat, "vec_id")
-        .join(F.broadcast(qflat), ["query_id", "idx"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum(F.col("q") * F.col("qq")).alias("dot"))
-    )
-    scored = (
-        pair_dots.join(mnorms, "vec_id")
-        .join(F.broadcast(qnorms), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _int_cosine(F.col("dot"), F.col("qn2"), F.col("n2")).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cosine"), 6).alias("cosine"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
 # --------------------------------------------------------- product quantization
 
 PQ_SUBS = 8  # M: subspaces per vector
@@ -969,7 +752,7 @@ def pq_topk(
     original vectors are touched, so the per-query cost is m adds per
     corpus row over a 4-byte-per-row relation. This is the memory-
     bound regime PQ exists for; IVF composes on top by restricting the
-    scan to probed partitions (`ivf_write_index` layout).
+    scan to the probed clusters' members.
 
     Output ranks ascending approximate distance (`adist`, an exact
     BIGINT), ties → lowest neighbor_id; self excluded.
@@ -1001,137 +784,6 @@ def pq_topk(
     )
     adist = (
         codes.join(F.broadcast(dtab), ["sub", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pd2").alias("adist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adist.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("adist").cast("long").alias("adist"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
-
-
-def pq_write_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    m: int = PQ_SUBS,
-    ks: int = PQ_CODES,
-) -> None:
-    """Materialize the IVF×PQ index — the billion-scale ANN layout:
-    IVF partition pruning bounds WHICH rows a probe reads, PQ bounds
-    their WIDTH (m small codes instead of the vector).
-
-    Three parquet datasets under `path`:
-      centroids/ — IVF coarse quantizer (tiny; ranks probes),
-      codebooks/ — PQ sub-quantizer codewords (tiny; builds the
-                   per-query ADC lookup table),
-      codes/     — (vec_id, sub, code) partitioned by `centroid_id`,
-                   so a probe of p clusters is a partition-pruned scan
-                   of p/C of a 4-byte-per-vector relation.
-    Training and assignment run once here; queries never touch raw
-    corpus vectors again.
-    """
-    base = with_dvec(embeddings)
-    flat = _quantized_flat(base, "vec_id").localCheckpoint(eager=False)
-    vec_norms = flat.groupBy("vec_id").agg(
-        F.sum(F.col("q") * F.col("q")).alias("n2")
-    )
-    cents = ivf_train(embeddings, n_centroids, flat=flat).localCheckpoint(
-        eager=False
-    )
-    assign = _ivf_assign(flat, vec_norms, cents)
-    books = pq_train(embeddings, m, ks, flat=flat).localCheckpoint(eager=False)
-    codes = pq_encode(embeddings, books, m)
-    (
-        codes.join(assign, "vec_id")
-        .repartition("centroid_id")
-        .write.mode("overwrite")
-        .partitionBy("centroid_id")
-        .parquet(f"{path}/codes")
-    )
-    cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    books.write.mode("overwrite").parquet(f"{path}/codebooks")
-
-
-def pq_probe_topk(
-    spark,
-    path: str,
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    nprobe: int = 4,
-    m: int = PQ_SUBS,
-) -> DataFrame:
-    """ANN top-k against a materialized `pq_write_index` layout: rank
-    clusters with the stored coarse quantizer, then run the ADC scan
-    over ONLY the probed `centroid_id` partitions (broadcast join on
-    the partition column → dynamic partition pruning, same plan pin as
-    `ivf_probe_topk`) — per query the index IO is nprobe/C of a
-    4-byte-per-vector relation. `embeddings` supplies only the query
-    vectors (a tiny isin filter); corpus vectors are never read."""
-    cents = spark.read.parquet(f"{path}/centroids")
-    books = spark.read.parquet(f"{path}/codebooks")
-    codes = spark.read.parquet(f"{path}/codes")
-    dim = _infer_dim(embeddings)
-    dsub = dim // m
-
-    qbase = with_dvec(embeddings.filter(F.col("vec_id").isin(query_ids)))
-    qflat = _quantized_flat(qbase, "vec_id").select(
-        F.col("vec_id").alias("query_id"), "idx", F.col("q").alias("qq")
-    ).localCheckpoint(eager=False)
-    qnorms = qflat.groupBy("query_id").agg(
-        F.sum(F.col("qq") * F.col("qq")).alias("qn2")
-    )
-    cent_norms = cents.groupBy("centroid_id").agg(
-        F.sum(F.col("c") * F.col("c")).alias("c2")
-    )
-    qdots = (
-        qflat.join(F.broadcast(cents), "idx")
-        .groupBy("query_id", "centroid_id")
-        .agg(F.sum(F.col("qq") * F.col("c")).alias("dot"))
-        .join(F.broadcast(cent_norms), "centroid_id")
-        .join(F.broadcast(qnorms), "query_id")
-    )
-    qcos = _int_cosine(F.col("dot"), F.col("qn2"), F.col("c2"))
-    wprobe = Window.partitionBy("query_id").orderBy(
-        qcos.desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qdots.withColumn("prank", F.row_number().over(wprobe))
-        .filter(F.col("prank") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-
-    qsub = qflat.select(
-        "query_id",
-        F.expr(f"CAST(idx DIV {dsub} AS INT)").alias("sub"),
-        F.expr(f"CAST(idx % {dsub} AS INT)").alias("sidx"),
-        "qq",
-    )
-    dtab = (
-        qsub.join(F.broadcast(books), ["sub", "sidx"])
-        .groupBy("query_id", "sub", "code")
-        .agg(
-            F.sum(
-                (F.col("qq") - F.col("c")) * (F.col("qq") - F.col("c"))
-            ).alias("pd2")
-        )
-    )
-    # broadcast join on the partition column → only probed partitions
-    # of the code table are scanned
-    adist = (
-        codes.join(F.broadcast(probes), "centroid_id")
-        .join(F.broadcast(dtab), ["query_id", "sub", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("pd2").alias("adist"))
@@ -1243,26 +895,6 @@ def pca_project(
             f"pc{i}", F.round(_dot(F.col("_c"), axis), 6)
         )
     return out.drop("_c")
-
-
-def lsh_candidate_count(
-    embeddings: DataFrame, n_tables: int = LSH_TABLES,
-    planes_per_table: int = LSH_PLANES_PER_TABLE,
-) -> int:
-    """Distinct candidate pairs the multi-table banding join generates
-    BEFORE exact-cosine verification — the quantity that explodes when
-    signatures are too narrow (the scale diagnostic the widening is
-    pinned by; compare against C(n,2) for the all-pairs baseline)."""
-    bucketed = lsh_table_buckets(embeddings, n_tables, planes_per_table)
-    a = bucketed.select(F.col("vec_id").alias("vec_a"), "tbl", "sig")
-    b = bucketed.select(F.col("vec_id").alias("vec_b"), "tbl", "sig")
-    return (
-        a.join(b, ["tbl", "sig"])
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-        .count()
-    )
 
 
 def lsh_neardup_pairs(

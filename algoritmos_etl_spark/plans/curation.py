@@ -37,7 +37,6 @@ def curate_corpus(
     max_bucket_size: int | None = 100,
     max_dup_3gram_frac: float | None = None,
     shingles: DataFrame | None = None,
-    lang_pred: DataFrame | None = None,
 ) -> DataFrame:
     """Surviving documents with their quality features.
 
@@ -49,29 +48,17 @@ def curate_corpus(
     projection-only; the repetition gate adds one n-gram count shuffle
     over pre-dedup survivors — still upstream of the expensive stage.
 
-    `lang_pred` optionally replaces the row-local marker heuristic as
-    the language signal with a PRECOMPUTED (doc_id, pred_lang) table —
-    `text.lang_id_trained`'s output (see `curate_corpus_trained_lang`).
-    A trained gate is inherently two-pass (the model must see the
-    corpus before it can gate it), so this arm pays one corpus-sized
-    doc_id join the row-local heuristic avoids; everything downstream
-    is unchanged.
-
     `shingles` optionally supplies the corpus's materialized (doc_id,
-    shingle) relation (the standing `ngram_write_index` table at
-    cluster scale, the session shingle cache here): the dedup stage
-    then SEMI-JOINS it down to gate survivors instead of re-tokenizing
-    and re-hashing the surviving text — the survivor set is most of
-    the corpus, so skipping the second shingle pass matters at scale.
+    shingle) relation (a standing shingle index at cluster scale, the
+    session shingle cache here): the dedup stage then SEMI-JOINS it
+    down to gate survivors instead of re-tokenizing and re-hashing the
+    surviving text — the survivor set is most of the corpus, so
+    skipping the second shingle pass matters at scale.
     """
     # stats and language are both per-row projections of the same docs
     # — one fused select, not a doc_id join of two projections (a join
     # here would shuffle the whole corpus twice for nothing)
     stats = text.text_quality_gate(docs)
-    if lang_pred is not None:
-        stats = stats.drop("pred_lang").join(
-            lang_pred.select("doc_id", "pred_lang"), "doc_id"
-        )
     quality = stats.filter(
         (F.col("pred_lang") == keep_lang)
         & (F.col("n_words") >= min_words)
@@ -107,15 +94,3 @@ def curate_corpus(
         quality.join(drops, "doc_id", "left_anti")
         .select("doc_id", "n_words", "stopword_ratio", "pred_lang")
     )
-
-
-def curate_corpus_trained_lang(docs: DataFrame, **kwargs) -> DataFrame:
-    """`curate_corpus` with the TRAINED language gate: the
-    char-trigram NB prediction (`text.lang_id_trained` — distantly
-    supervised by the marker heuristic, then generalizing past it)
-    replaces the 4-marker floor as the gate's language signal. Docs
-    the heuristic leaves 'und' but whose trigrams are plainly
-    `keep_lang` now survive; marker-coincidence false positives in
-    other languages now drop."""
-    pred = text.lang_id_trained(docs).select("doc_id", "pred_lang")
-    return curate_corpus(docs, lang_pred=pred, **kwargs)

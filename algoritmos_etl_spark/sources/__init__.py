@@ -7,7 +7,6 @@ from .readers import (  # noqa: F401
     TABLE_NAMES,
     daily_bars,
     load_table,
-    load_tables,
     with_event_time,
 )
 from .wide_csv import read_wide_csv, string_null  # noqa: F401

@@ -42,10 +42,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def with_event_time(events: DataFrame) -> DataFrame:
     """Convert raw nanosecond `ts` (read as long) to TimestampType.
 

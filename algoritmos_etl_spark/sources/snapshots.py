@@ -2,18 +2,17 @@
 
 The versioned-read pattern of `streaming.mv.read_cdc_state`
 generalized to the WHOLE table-maintenance family (the mini-Iceberg
-the reference's flat CSV master lacks, and the layer the
-compaction/upsert/WAP ops in `sources.compact` need for true reader
-isolation):
+the reference's flat CSV master lacks, and the layer that gives
+compaction, upsert and write-audit-publish true reader isolation):
 
   <table>/data/c<version>-<nonce>/part-*.parquet   immutable data files
   <table>/_manifests/v=<version>.json              the commit pointer
 
 A commit writes NEW immutable data files first, then publishes ONE
 manifest file via a tmp-write + os.link (exclusive create) — the
-single-pointer atomic publish that `compact.write_audit_publish`'s
-two-rename dance cannot give. Readers resolve a manifest (newest, or
-any retained historical version) and read EXACTLY its file list, so:
+single-pointer atomic publish that a two-rename stage-and-swap cannot
+give. Readers resolve a manifest (newest, or any retained historical
+version) and read EXACTLY its file list, so:
 
 - a reader is ATOMIC against concurrent compaction/publish: the files
   a manifest names are never mutated, only superseded and eventually
@@ -508,8 +507,7 @@ def snapshot_compact(
     """Rewrite the current snapshot into `target_files` files and
     commit the result as a new version. Readers pinned at older
     versions keep their (still-present) files — snapshot isolation,
-    where `compact.compact_table`'s in-place overwrite would race
-    them."""
+    where an in-place overwrite would race them."""
     while True:
         versions = _versions(table_dir)
         if not versions:
@@ -539,9 +537,8 @@ def snapshot_upsert(
 ) -> int:
     """Keyed MERGE committed as a new version: update rows replace
     current rows with the same key (updates must be unique on
-    key_cols, the `compact.partition_upsert` contract). Unlike
-    partition_upsert this is key-safe under partition moves — the
-    whole current snapshot participates."""
+    key_cols). Unlike a partition-overwrite upsert this is key-safe
+    under partition moves — the whole current snapshot participates."""
     from pyspark.sql import functions as F
 
     while True:
@@ -591,10 +588,9 @@ def snapshot_publish(
 ) -> dict:
     """Write-Audit-Publish on the snapshot layer: stage data files,
     audit WHAT WAS WRITTEN, and publish with the ONE-rename manifest
-    commit — closing `compact.write_audit_publish`'s documented
-    two-rename window (readers here always resolve a complete
-    manifest; a failed audit publishes nothing and leaves no stage
-    dir to recover)."""
+    commit — no two-rename stage-and-swap window (readers here always
+    resolve a complete manifest; a failed audit publishes nothing and
+    leaves no stage dir to recover)."""
     from ..operators import expectations
 
     spark = df.sparkSession
@@ -643,7 +639,7 @@ def snapshot_delete(
     contract), touched-file discovery is one semi-join carrying
     `input_file_name`, and the rewrite cost is |touched files| — a
     10-file delete on a 100k-file table costs 10 files, the
-    `compact.partition_upsert` discipline at row grain. A delete that
+    partition-upsert discipline at row grain. A delete that
     touches nothing still publishes (op='delete', same files), so the
     audit trail records the attempt.
 
@@ -898,8 +894,7 @@ def snapshot_changes(
     `from_version` and `to_version` (default: newest). This is the
     Iceberg/Delta "read the changes since snapshot N" surface: a
     downstream consumer syncs from v_N to head by ONE diff instead of
-    reprocessing the table; `reconcile.diff_as_changes` over the same
-    two reads ships it as a mergeable CDC changeset.
+    reprocessing the table.
 
     Cost is |v_from| + |v_to| through one full-outer key join — both
     snapshots are plain file lists, so at 100 TB this is the same

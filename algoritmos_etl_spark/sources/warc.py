@@ -31,18 +31,12 @@ synthesizer, quarantine instead of task failure):
   (a chance magic inside compressed bytes fails the CRC-checked
   decompress and is skipped without minting extra rows, so the
   output is a pure function of the records, not the noise).
-- `read_warc_dir` — binds the parser to real files on disk via
-  Spark's `binaryFile` source (one row per .warc.gz, whole-file
-  content column) — the shape a 1000-executor cluster reads a crawl
-  bucket with. At 100 TB note: CommonCrawl files are ~1 GiB, so one
-  row per file is one Arrow batch per file; size
-  `spark.sql.files.maxPartitionBytes` accordingly or pre-split
-  archives — the sequential parser is per-file either way (WARC is a
-  tape format; record-level parallelism needs the member offsets
-  index, which is exactly what the cdx sidecar files carry in real
-  crawls — and `parse_warc_records_cdx` IS that path: explode the
-  index, slice members JVM-side, repartition to full parallelism,
-  parse each record independently).
+- `parse_warc_records_cdx` — record-level parallelism. WARC is a tape
+  format, so `parse_warc_records` is sequential per file (CommonCrawl
+  files are ~1 GiB: one Arrow batch per file). The member offsets
+  index, which the cdx sidecar files carry in real crawls, lets this
+  path explode the index, slice members JVM-side, repartition to full
+  parallelism and parse each record independently.
 
 Reference scope note: the reference (/root/reference) has no crawl
 ingestion — its source edge is a JSON chart API (etl/data_fetcher.py);
@@ -817,23 +811,6 @@ def parse_warc_records_cdx(files: DataFrame) -> DataFrame:
             )
 
     return members.mapInPandas(parse, schema=_PARSE_SCHEMA)
-
-
-def read_warc_dir(spark, path: str) -> DataFrame:
-    """Parse every *.warc.gz under `path` from disk: Spark `binaryFile`
-    source (one row per file: path + whole-file content) into
-    `parse_warc_records`. The real-cluster entry point — see the
-    module doc's 100 TB sizing note."""
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.warc.gz")
-        .load(path)
-        .select(
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("warc_file"),
-            "content",
-        )
-    )
-    return parse_warc_records(raw)
 
 
 def warc_extract_pages(parsed: DataFrame) -> DataFrame:

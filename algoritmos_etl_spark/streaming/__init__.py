@@ -3,7 +3,5 @@ from .streams import (  # noqa: F401
     run_to_memory_sink,
     session_stats,
     sliding_stats,
-    streaming_dedup,
     streaming_running_streaks,
-    tumbling_stats,
 )

@@ -7,7 +7,7 @@ same window *semantics* over an unbounded `events` stream, the north-star
 extension the reference never needed at 1759 rows but a 100 TB pipeline
 does:
 
-- tumbling / sliding event-time aggregation with watermarks (late data
+- sliding event-time aggregation with watermarks (late data
   is merged until the watermark passes, then the window finalizes),
 - session windows (30-min inactivity gap — same sessions the batch
   lag+cumsum query produces),
@@ -41,6 +41,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.readers import with_event_time
 
+
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` as an unbounded stream via the file source.
 
@@ -65,35 +66,6 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     return with_event_time(raw)
-
-
-def tumbling_stats(
-    events: DataFrame, duration: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Tumbling event-time windows per event_type: count + mean value."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # decimal-exact sum -> ONE double conversion -> divide, and NO
-            # in-query rounding: float partial-agg order differs per engine
-            # (half-ULP flips a rounded 6th decimal), and even on identical
-            # doubles Spark's BigDecimal round and DuckDB's numeric round
-            # disagree at shortest-repr ..5 boundaries. Identical doubles
-            # canonicalize identically downstream; rounding is display-edge.
-            (
-                F.sum(F.col("value").cast("decimal(30,10)")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("avg_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
 
 
 def sliding_stats(
@@ -203,41 +175,6 @@ def streaming_running_streaks(events: DataFrame) -> DataFrame:
     )
 
 
-def streaming_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Exact streaming dedup for at-least-once delivery: re-deliveries
-    of a key arriving within the watermark are dropped
-    (`dropDuplicatesWithinWatermark`); key state older than the
-    watermark is evicted, so state stays bounded by the watermark's
-    event-time span — the property that makes EXACT dedup feasible on
-    an unbounded stream (plain `dropDuplicates` on a stream accretes
-    state forever). Batch twin: `dropDuplicates(keys)` over the same
-    files — parity pinned in tests with injected duplicate deliveries
-    across micro-batches.
-    """
-    keys = keys or ["event_id"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def enrich_with_dimension(
-    events: DataFrame, dim: DataFrame, on: str = "user_id"
-) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against
-    the (small, broadcast) dimension snapshot — the standard pattern
-    for attaching slowly-changing reference data to an event stream
-    without any streaming state. Works UNCHANGED in batch mode (that
-    parity is pinned in tests); Spark re-plans the static side per
-    micro-batch, so a refreshed dimension table is picked up at the
-    next trigger. Left join: events with no dimension row survive with
-    NULL attributes rather than silently dropping."""
-    return events.join(F.broadcast(dim), on, "left")
-
-
 def _await_or_fail(query, timeout_sec: int) -> None:
     """Block until an availableNow stream drains, or fail LOUDLY.
     awaitTermination(timeout) returning False leaves the query still
@@ -316,14 +253,16 @@ def _neardup_batch(
         # write: without it every upstream task opens a writer per band
         # it touches (tasks × 16 tiny files per batch) — the file count
         # later lookups must list and open. After it, one file per band.
-        bands.repartition("band").write.mode("overwrite").partitionBy(
+        _dedup._minhash_index_rows(bands, "bands").repartition(
             "band"
-        ).parquet(f"{index_path}/bands/batch_id={batch_id}")
+        ).write.mode("overwrite").partitionBy("band").parquet(
+            f"{index_path}/bands/batch_id={batch_id}"
+        )
 
     def _w_sh() -> None:
-        sh.write.mode("overwrite").parquet(
-            f"{index_path}/shingles/batch_id={batch_id}"
-        )
+        _dedup._minhash_index_rows(sh, "shingles").write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}/shingles/batch_id={batch_id}")
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -635,61 +574,3 @@ def attribution_join_outer(
         ).alias("lag_us"),
         "purchase_value",
     )
-
-
-def streaming_quality_scores(
-    docs_stream: DataFrame,
-    weights_path: str,
-    out_path: str,
-    checkpoint: str,
-    timeout_sec: int = 300,
-):
-    """Score a document STREAM against the frozen NB quality weights
-    persisted by `corpus.nb_write_weights` — the train-offline /
-    score-online split every production curation pipeline runs (the
-    CCNet classifier is trained nightly; ingestion scores each batch
-    as it lands). Per micro-batch: one token explode + broadcast join
-    of the B-row weight table + integer sum per doc, appended to
-    `out_path/batch_id=N`.
-
-    `foreachBatch` is the right boundary: scoring is a stateless batch
-    transformation (no streaming state, no watermark needed — the
-    model is FROZEN, so scores are pure per-doc functions), and the
-    per-batch-subdirectory overwrite makes replays idempotent (a
-    re-run batch rewrites its own directory with identical content —
-    integer scores, so bit-identical). Stream output ≡ batch
-    `nb_score_with_weights` over the same rows, pinned in tests.
-    """
-    from ..operators.corpus import nb_score_with_weights
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint(eager=False)
-        if not batch_df.take(1):
-            return
-        weights = spark.read.parquet(weights_path)
-        # the weight grid is dense by construction, so its row count IS
-        # n_buckets — derived from the SAME DataFrame this batch scores
-        # with, so a mid-stream weight rewrite at a different width can
-        # never mis-bucket (the count is one job over a small
-        # broadcastable table the batch reads anyway)
-        scored = nb_score_with_weights(
-            batch_df, weights, n_buckets=weights.count()
-        )
-        scored.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
-
-    query = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        query.stop()
-        raise TimeoutError(
-            f"streaming_quality_scores: availableNow run exceeded "
-            f"{timeout_sec}s; scores at {out_path} are incomplete"
-        )
-    return query

@@ -18,9 +18,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def tables(spark):
-    from algoritmos_etl_spark.sources import load_tables
+    from algoritmos_etl_spark.sources import TABLE_NAMES, load_table
 
-    return load_tables(spark, SF_DIR)
+    return {name: load_table(spark, SF_DIR, name) for name in TABLE_NAMES}
 
 
 @pytest.fixture(scope="session")

@@ -38,17 +38,6 @@ class TestContamination:
         assert 4 not in out  # no shingles -> no row
         assert out[5]["contaminated"]  # 5/6 shingles shared
 
-    def test_written_index_equals_inline(self, docs, tmp_path):
-        bench = docs.filter(F.col("doc_id") == 0)
-        rest = docs.filter(F.col("doc_id") != 0)
-        path = str(tmp_path / "bench_idx")
-        corpus.contamination_write_index(bench, path)
-        spark = docs.sparkSession
-        inc = corpus.contamination_against_index(spark, rest, path, k=3)
-        full = corpus.contamination_stats(rest, bench, k=3)
-        assert sorted(map(tuple, inc.collect())) == sorted(
-            map(tuple, full.collect())
-        )
 
     def test_precomputed_shingles_equal(self, docs):
         bench = docs.filter(F.col("doc_id") == 0)
@@ -119,17 +108,6 @@ class TestPacking:
         assert got[2]["token_start"] is not None
         assert got[2]["n_packs_spanned"] == 1
         assert sum(r["n_tokens"] for r in got.values()) == 5
-
-    def test_pack_stats(self, spark):
-        docs = spark.createDataFrame(
-            [(i, " ".join(["w"] * 10)) for i in range(10)], ["doc_id", "text"]
-        )
-        s = corpus.pack_stats(corpus.pack_sequences(docs, 16), 16).collect()[0]
-        assert s["n_docs"] == 10
-        assert s["total_tokens"] == 100
-        assert s["n_windows"] == 7  # ceil(100/16)
-        # with 10-token docs in 16-token windows most docs cross a boundary
-        assert s["n_boundary_docs"] >= 5
 
 
 class TestMixture:
@@ -236,73 +214,6 @@ class TestPackingProperties:
             if r["doc_id"] < 50
         ]
         assert o1 == o2
-
-
-class TestLLMPipeline:
-    def test_end_to_end_composition(self, spark):
-        from algoritmos_etl_spark.plans.llm_pipeline import (
-            prepare_training_corpus,
-        )
-        from algoritmos_etl_spark.sources import load_table
-
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        bench = docs.filter(F.col("doc_id") % 10 == 0)
-        corpus_side = docs.filter(F.col("doc_id") % 10 != 0)
-        out = prepare_training_corpus(
-            corpus_side, bench, ctx_len=64, contamination_tau=0.5
-        )
-        tagged = out["documents"].cache()
-        packed = out["train_packed"]
-        n_kept = tagged.count()
-        assert 0 < n_kept < corpus_side.count()
-        # split covers every surviving doc, values from the fixed set
-        splits = {r["split"] for r in tagged.select("split").distinct().collect()}
-        assert splits <= {"train", "valid", "test"}
-        # no near-exact copies of benchmark docs survive: every kept doc
-        # is below the contamination threshold by construction
-        from algoritmos_etl_spark.operators.corpus import contamination_stats
-
-        resid = (
-            contamination_stats(tagged, bench, min_overlap=0.5)
-            .filter(F.col("contaminated"))
-            .count()
-        )
-        assert resid == 0
-        # packing covers exactly the train split
-        n_train = tagged.filter(F.col("split") == "train").count()
-        assert packed.count() == n_train
-        total_tokens = packed.agg(F.sum("n_tokens")).collect()[0][0]
-        max_pack = packed.agg(F.max("pack_last")).collect()[0][0]
-        assert max_pack == (total_tokens - 1) // 64
-        tagged.unpersist()
-
-    def test_composition_with_passage_scrub(self, spark):
-        """scrub_k wires the ExactSubstr action stage between curation
-        and decontamination: surviving docs carry the scrubbed text
-        forward, and no duplicated passage reaches the split stage."""
-        from algoritmos_etl_spark.operators.dedup import duplicate_passages
-        from algoritmos_etl_spark.plans.llm_pipeline import (
-            prepare_training_corpus,
-        )
-        from algoritmos_etl_spark.sources import load_table
-
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        bench = docs.filter(F.col("doc_id") % 10 == 0)
-        corpus_side = docs.filter(F.col("doc_id") % 10 != 0)
-        out = prepare_training_corpus(
-            corpus_side, bench, ctx_len=64, contamination_tau=0.5,
-            scrub_k=8,
-        )
-        tagged = out["documents"].cache()
-        assert tagged.count() > 0
-        assert "text" in tagged.columns
-        # the surviving corpus has no residual duplicated passage of
-        # the scrub grain (the scrub ran corpus-wide on survivors)
-        resid = duplicate_passages(
-            tagged.select("doc_id", "text"), k=8, min_count=2
-        ).count()
-        assert resid == 0
-        tagged.unpersist()
 
 
 class TestEdges:
@@ -459,116 +370,6 @@ class TestNBQualityScores:
         )
         out = corpus.nb_quality_scores(docs, is_pos=F.lit(False)).collect()
         assert all(r.score_e6 is not None for r in out)
-
-
-class TestStandingQualityModel:
-    def test_write_weights_then_score_equals_inline(self, spark, tmp_path):
-        """Train-offline/score-anywhere: persisted weights + the
-        scoring half reproduce nb_quality_scores exactly, including on
-        UNSEEN documents (every bucket has a weight, so OOV text
-        scores finitely)."""
-        from algoritmos_etl_spark.sources.readers import load_table
-
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        w_path = str(tmp_path / "weights")
-        corpus.nb_write_weights(docs, w_path)
-        weights = spark.read.parquet(w_path)
-        assert weights.count() == corpus.DSIR_BUCKETS
-        got = {
-            r.doc_id: (r.n_tokens, r.score_e6, r.per_token_e6)
-            for r in corpus.nb_score_with_weights(docs, weights).collect()
-        }
-        want = {
-            r.doc_id: (r.n_tokens, r.score_e6, r.per_token_e6)
-            for r in corpus.nb_quality_scores(docs).collect()
-        }
-        assert got == want
-        # unseen docs score finitely against the frozen model
-        new = spark.createDataFrame(
-            [(9001, "totally unseen zebra text crossing the gate"),
-             (9002, "")],
-            "doc_id long, text string",
-        )
-        out = {r.doc_id: r for r in
-               corpus.nb_score_with_weights(new, weights).collect()}
-        assert out[9001].score_e6 is not None
-        assert out[9002].n_tokens == 0 and out[9002].score_e6 is None
-
-    def test_bucket_width_is_inferred_from_the_weight_table(
-        self, spark, tmp_path
-    ):
-        """ADVICE r8: weights trained at a NON-default width must score
-        identically whether or not the caller repeats the width — the
-        dense 0..B-1 grid's row count is the width, so the scorer
-        infers it instead of silently misbucketing at the default."""
-        from algoritmos_etl_spark.sources.readers import load_table
-
-        docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-        w_path = str(tmp_path / "w64")
-        corpus.nb_write_weights(docs, w_path, n_buckets=64)
-        weights = spark.read.parquet(w_path)
-        assert weights.count() == 64
-        inferred = {
-            r.doc_id: (r.n_tokens, r.score_e6)
-            for r in corpus.nb_score_with_weights(docs, weights).collect()
-        }
-        explicit = {
-            r.doc_id: (r.n_tokens, r.score_e6)
-            for r in corpus.nb_score_with_weights(
-                docs, weights, n_buckets=64
-            ).collect()
-        }
-        assert inferred == explicit
-        # and they genuinely differ from a default-width scoring (the
-        # bug the inference closes)
-        want_default = {
-            r.doc_id: (r.n_tokens, r.score_e6)
-            for r in corpus.nb_score_with_weights(
-                docs, weights, n_buckets=corpus.DSIR_BUCKETS
-            ).collect()
-        }
-        assert inferred != want_default
-
-    def test_streaming_scores_equal_batch(self, spark, tmp_path):
-        """Stream ≡ batch: a 2-micro-batch file stream scored against
-        the frozen weights equals one-shot nb_score_with_weights over
-        the union of both batches."""
-        from algoritmos_etl_spark.streaming.streams import (
-            streaming_quality_scores,
-        )
-
-        docs = spark.createDataFrame(
-            [(i, f"the quick brown fox number {i} jumps " * (1 + i % 3))
-             for i in range(20)],
-            "doc_id long, text string",
-        )
-        w_path = str(tmp_path / "weights")
-        corpus.nb_write_weights(docs, w_path)
-        src = tmp_path / "src"
-        for b in (0, 1):
-            docs.filter(F.col("doc_id") % 2 == b).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(src / f"b{b}"))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(str(src / "b*"))
-        )
-        streaming_quality_scores(
-            stream, w_path, str(tmp_path / "scores"),
-            checkpoint=str(tmp_path / "ck"),
-        )
-        got = {
-            r.doc_id: (r.n_tokens, r.score_e6)
-            for r in spark.read.parquet(str(tmp_path / "scores")).collect()
-        }
-        weights = spark.read.parquet(w_path)
-        want = {
-            r.doc_id: (r.n_tokens, r.score_e6)
-            for r in corpus.nb_score_with_weights(docs, weights).collect()
-        }
-        assert got == want
 
 
 class TestMixtureSample:

@@ -9,25 +9,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from algoritmos_etl_spark.functions import (
-    angle_degrees,
     cents,
     date_parts,
     date_to_unix,
     regression_line,
-    unix_to_date,
 )
 
 
-def test_date_unix_roundtrip(spark):
+def test_date_to_unix_is_utc_midnight(spark):
     df = spark.createDataFrame([("2024-03-01",)], "d string").select(
         F.to_date("d").alias("date")
     )
-    row = df.select(
-        date_to_unix(F.col("date")).alias("ts"),
-        unix_to_date(date_to_unix(F.col("date"))).alias("back"),
-    ).first()
+    row = df.select(date_to_unix(F.col("date")).alias("ts")).first()
     assert row.ts == 1709251200  # 2024-03-01T00:00:00Z
-    assert str(row.back) == "2024-03-01"
 
 
 def test_date_parts_and_cents(spark):
@@ -38,16 +32,6 @@ def test_date_parts_and_cents(spark):
         "year", "month", "day", cents(F.col("close")).alias("c")
     ).first()
     assert (row.year, row.month, row.day, row.c) == (2024, 12, 31, 774)
-
-
-def test_angle_degrees_clamps(spark):
-    df = spark.createDataFrame(
-        [(1.0000000001,), (0.5,), (-1.0,)], "cos double"
-    )
-    rows = df.select(angle_degrees(F.col("cos")).alias("a")).collect()
-    assert rows[0].a == pytest.approx(0.0)
-    assert rows[1].a == pytest.approx(60.0)
-    assert rows[2].a == pytest.approx(180.0)
 
 
 def test_regression_line_exact(spark):

@@ -40,30 +40,6 @@ def test_returns_bundle_matches_single_builders(bars):
     assert _rows(bundle_omit, "symbol", "date") == _rows(omit, "symbol", "date")
 
 
-def test_series_stats_matches_moments_plus_volatility(bars):
-    from algoritmos_etl_spark.operators import volatility
-
-    fused = technical.series_stats(bars)
-    moments = technical.series_moments(bars)
-    vols = volatility.historical_volatility(bars)
-    ref = moments.join(vols, "symbol")
-    got = _rows(
-        fused.select("symbol", "mean", "std_dev", "n", "volatility", "n_returns"),
-        "symbol",
-    )
-    want = _rows(
-        ref.select("symbol", "mean", "std_dev", "n", "volatility", "n_returns"),
-        "symbol",
-    )
-    for g, w in zip(got, want):
-        assert g[0] == w[0] and g[3] == w[3] and g[5] == w[5]
-        for gi, wi in zip(g[1:3] + g[4:5], w[1:3] + w[4:5]):
-            assert abs(gi - wi) < 1e-9
-    # min/max are new columns; sanity: min <= mean <= max
-    for r in fused.collect():
-        assert r["min_close"] <= r["mean"] <= r["max_close"]
-
-
 def test_rolling_features_matches_sma_and_gap_windows(bars):
     from algoritmos_etl_spark.operators import patterns
 

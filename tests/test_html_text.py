@@ -49,71 +49,22 @@ def test_scale_tier_script_case_and_multiline(spark):
     assert out.text == "kept"
 
 
-def test_parsed_tier_drops_boilerplate_blocks(spark):
-    html = (
-        "<html><head><title>My Title</title>"
-        "<script>var x = 1;</script></head><body>"
-        '<nav><a href="/a">Home</a> <a href="/b">About</a></nav>'
-        "<p>This paragraph carries the actual long-form content of the "
-        "page and has no links at all.</p>"
-        '<p>Mixed: <a href="/x">tiny link</a> inside a long enough '
-        "sentence that stays mostly plain text so it must be kept.</p>"
-        '<div class="footer"><a href="/terms">Terms</a></div>'
-        "</body></html>"
-    )
-    out = html_text.html_to_text_parsed(_pages(spark, [(0, html)])).collect()[0]
-    assert out.ok
-    assert "actual long-form content" in out.text
-    assert "stays mostly plain text" in out.text
-    # nav and footer are pure links -> dropped by link density
-    assert "Home" not in out.text and "Terms" not in out.text
-    assert out.n_blocks_dropped >= 2
-    # title is a kept short-ish block by default (min_chars=4)
-    assert "My Title" in out.text
-
-
-def test_parsed_tier_handles_malformed_html_without_failing(spark):
-    rows = [
-        (0, "<p>unclosed <b>bold <p>next block"),
-        (1, "<a href='x'>only a link</a>"),
-        (2, None),
-    ]
-    out = {
-        r.doc_id: r
-        for r in html_text.html_to_text_parsed(_pages(spark, rows)).collect()
-    }
-    assert out[0].ok and "unclosed bold" in out[0].text
-    assert out[1].ok and out[1].text == ""  # all-link page -> boilerplate
-    assert out[2].ok and out[2].text == ""
-
-
-def test_fixture_tiers_agree_on_body_content(spark):
-    """On the synthesized corpus, the parsed tier's kept text must
-    appear inside the regex tier's text (the regex tier keeps
-    everything outside script/style; the parsed tier additionally
-    drops link-dense shell blocks)."""
+def test_fixture_body_survives_extraction(spark):
+    """On the synthesized corpus, the document body survives extraction
+    verbatim (modulo whitespace collapse), the nav shell is kept, and
+    script/style never leak."""
     docs = load_table(spark, SF_DIR, "documents").limit(20)
-    pages = html_text.synthesize_html_corpus(docs).cache()
+    pages = html_text.synthesize_html_corpus(docs)
     regex_out = {
         r.doc_id: r.text for r in html_text.html_to_text(pages).collect()
     }
-    parsed_out = {
-        r.doc_id: r for r in html_text.html_to_text_parsed(pages).collect()
-    }
     body = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
-    for d, r in parsed_out.items():
-        assert r.ok
-        # nav/footer dropped only in the parsed tier
-        assert "Home" not in r.text and "Terms" not in r.text
-        assert "Home" in regex_out[d]
-        # the document body survives BOTH tiers verbatim (modulo
-        # whitespace collapse)
+    assert set(regex_out) == set(body)
+    for d, t in regex_out.items():
+        assert "Home" in t
         collapsed = " ".join((body[d] or "").split())
         if collapsed:
-            assert collapsed in regex_out[d]
-            assert collapsed in r.text
-    # script/style never leak in either tier
-    for t in list(regex_out.values()) + [r.text for r in parsed_out.values()]:
+            assert collapsed in t
         assert "var x" not in t and "color: red" not in t
 
 
@@ -125,9 +76,7 @@ def test_extraction_feeds_curation(spark):
 
     docs = load_table(spark, SF_DIR, "documents").limit(30)
     pages = html_text.synthesize_html_corpus(docs)
-    extracted = html_text.html_to_text_parsed(pages).filter("ok").select(
-        "doc_id", "text"
-    )
+    extracted = html_text.html_to_text(pages).select("doc_id", "text")
     gated = text_ops.text_quality_gate(extracted)
     rows = gated.collect()
     assert len(rows) == 30

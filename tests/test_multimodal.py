@@ -73,15 +73,6 @@ def test_frame_sampling_shape(docs):
         assert r.n == (meta[r.doc_id] + 1) // 2
 
 
-def test_real_decode_quarantines_fake_payloads(docs):
-    """The deterministic fake payloads are not PNGs — the real decoder
-    must quarantine every row (doc_id + error) instead of raising."""
-    with_p = multimodal.attach_payload(docs.limit(5))
-    out = multimodal.decode_image_real(with_p).collect()
-    assert len(out) == 5
-    assert all(r.error is not None and r.width is None for r in out)
-
-
 # ---------------------------------------------------------------- real codec
 
 def _png_bytes(width, height, pixels, color_type, filters=None):
@@ -176,25 +167,6 @@ def test_decode_png_gray_and_alpha():
     color = [rgba[i] for i in range(len(rgba)) if i % 4 != 3]
     assert meta["channels"] == 4
     assert meta["mean_intensity"] == sum(color) / len(color)
-
-
-def test_decode_image_real_end_to_end(spark):
-    """Real PNG bytes through the Arrow-batched mapInPandas contract:
-    good rows decode, corrupt rows are quarantined with an error."""
-    from algoritmos_etl_spark.operators.multimodal import decode_image_real
-
-    pngs = [
-        _png_bytes(3, 2, bytes(range(18)), color_type=2, filters=[4, 3]),
-        _png_bytes(2, 2, bytes([10, 20, 30, 40]), color_type=0),
-    ]
-    rows = [(0, bytearray(pngs[0])), (1, bytearray(pngs[1])), (2, bytearray(b"not a png"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r.doc_id: r for r in decode_image_real(df).collect()}
-    assert out[0].width == 3 and out[0].height == 2 and out[0].channels == 3
-    assert out[0].mean_intensity == sum(range(18)) / 18
-    assert out[0].error is None
-    assert out[1].channels == 1 and out[1].mean_intensity == 25.0
-    assert out[2].width is None and "signature" in out[2].error
 
 
 # ------------------------------------------------- perceptual image dedup

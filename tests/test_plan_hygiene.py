@@ -162,12 +162,6 @@ _COLLECT_BOUNDED = {
         "the copy-on-write delete's touched-file list (bounded by the "
         "delete batch's file spread)",
     ),
-    "sources/compact.py": (
-        2,
-        "touched-partition list (bounded by the update batch's own "
-        "partition spread, pushed as static partition pruning) and the "
-        "WAP gate's one-row-per-rule expectation report",
-    ),
     "plans/etl_pipeline.py": (
         1,
         "wide-CSV export symbol list (distinct symbols, "
@@ -258,4 +252,237 @@ def test_no_module_level_memo_outside_store():
     assert not violations, (
         "module-level empty collection outside store.py — land the "
         f"artifact through algoritmos_etl_spark.store: {violations}"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Static reachability gate: every package function or class must be
+# reachable from a real caller — a registered builder or oracle, the
+# serving/report edges, the driver entry, bench.py, tools/ or the
+# benchmark — or sit on the allowlist below with its reason. A copy
+# that only tests call is review time, Tier-1 minutes and README lines
+# spent on a capability nothing runs. References resolve through each
+# file's imports (name-based within a module), so a call through an
+# alias, a re-export or a relative import still counts.
+# ---------------------------------------------------------------------------
+
+_REPO = os.path.dirname(_PKG)
+_TEST_REF = "test reference: the comparison side of a test of a live operator"
+_FUSED_REF = (
+    "test reference: single-semantic builder that tests/test_fused.py "
+    "compares with the live fused operator"
+)
+_STREAM_HARNESS = (
+    "stream-test harness: drives the stream==batch parity tests of the "
+    "live sliding_stats and session_stats"
+)
+_DISK_STATE = (
+    "disk-state maintenance and recovery, the target of the "
+    "kill-and-resume harness (ROADMAP item 5)"
+)
+_INGEST = (
+    "reference ingest surface: the paper's data_fetcher, etl_pipeline "
+    "and wide-CSV stages"
+)
+_TEST_ONLY_OK = {
+    "operators.patterns._windowed_streak_hist_naive": _TEST_REF,
+    "operators.vectors.cosine_neardup_pairs": (
+        "test reference: the brute-force recall baseline of the LSH tests"
+    ),
+    "operators.bpe.bpe_decode_bytes": (
+        "test reference: inverts the live byte-level BPE encoder"
+    ),
+    "operators.technical.simple_returns": _FUSED_REF,
+    "operators.technical.sma": _FUSED_REF,
+    "operators.technical.series_stats": (
+        "test reference: the library builder the live risk_classification "
+        "profile is compared with"
+    ),
+    "operators.text.text_stats": _FUSED_REF,
+    "operators.text.token_counts": _FUSED_REF,
+    "operators.text.pii_stats": _FUSED_REF,
+    "operators.multimodal.payload_stats": _FUSED_REF,
+    "operators.multimodal.decode_features": _FUSED_REF,
+    "operators.dedup.exact_dedup": _FUSED_REF,
+    "operators.dedup.positional_token_shingles": (
+        "test reference: the string-first form the live hash-first "
+        "exact_repeat_runs_tokens is compared with"
+    ),
+    "streaming.streams.read_event_stream": _STREAM_HARNESS,
+    "streaming.streams.run_to_memory_sink": _STREAM_HARNESS,
+    "streaming.streams.streaming_running_streaks": _DISK_STATE,
+    "sources.snapshots.snapshot_publish": _DISK_STATE,
+    "sources.snapshots.snapshot_vacuum": _DISK_STATE,
+    "streaming.mv.compact_agg_mv": _DISK_STATE,
+    "streaming.mv.compact_distinct_mv": _DISK_STATE,
+    "streaming.mv.compact_sketch_mv": _DISK_STATE,
+    "streaming.mv.vacuum_agg_mv": _DISK_STATE,
+    "streaming.mv.vacuum_cdc_state": _DISK_STATE,
+    "plans.etl_pipeline.run_etl": _INGEST,
+    "operators.cleaning.missing_value_summary": _INGEST,
+    "operators.cleaning.drop_empty_symbols": _INGEST,
+    "sources.json_source.urllib_fetch": _INGEST,
+    "sources.json_source.fetch_with_retry": _INGEST,
+    "sources.json_source.fetch_multiple": _INGEST,
+    "sources.json_source.assert_min_success": _INGEST,
+    "sources.json_source.parse_chart_payloads": _INGEST,
+    "sources.json_source.read_chart_payloads": _INGEST,
+    "sources.wide_csv.read_wide_csv": _INGEST,
+    "sources.wide_csv.string_null": _INGEST,
+}
+_EDGE_ROOTS = ("serve", "report", "pdf_report")
+
+
+def _dotted(path: str) -> str:
+    rel = os.path.relpath(path, _REPO)[: -len(".py")].replace(os.sep, ".")
+    return rel[: -len(".__init__")] if rel.endswith(".__init__") else rel
+
+
+def _import_aliases(tree, mod: str, is_pkg: bool) -> dict:
+    """Every name a file's imports bind (at any depth) → dotted target."""
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                out[a.asname or a.name.split(".")[0]] = (
+                    a.name if a.asname else a.name.split(".")[0]
+                )
+        elif isinstance(node, ast.ImportFrom):
+            src = node.module or ""
+            if node.level:
+                base = mod.split(".")[: None if is_pkg else -1]
+                base = base[: len(base) - node.level + 1]
+                src = ".".join(base + ([node.module] if node.module else []))
+            for a in node.names:
+                out[a.asname or a.name] = f"{src}.{a.name}"
+    return out
+
+
+def _reachability():
+    """({package unit: def node}, units reached from the roots, units
+    reached from the roots plus the allowlist)."""
+    paths = [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(_PKG)
+        for f in files
+        if f.endswith(".py")
+    ]
+    scripts = [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for sub in ("tools", "perfbench"):  # perfbench/tests/ is not listed
+        d = os.path.join(_REPO, sub)
+        scripts += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".py")]
+    files = {}  # dotted module → (tree, aliases, top-level defs)
+    for path in paths + scripts:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        mod = _dotted(path)
+        defs = {
+            n.name: n
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        is_pkg = path.endswith("__init__.py")
+        files[mod] = (tree, _import_aliases(tree, mod, is_pkg), defs)
+    pkg = os.path.basename(_PKG)
+    units = {
+        f"{m}.{n}": node
+        for m, (_t, _a, defs) in files.items()
+        if m.split(".")[0] == pkg
+        for n, node in defs.items()
+    }
+
+    def resolve(dotted: str, depth: int = 0):
+        parts = dotted.split(".")
+        for i in range(len(parts) - 1, 0, -1):
+            mod = ".".join(parts[:i])
+            if mod not in files:
+                continue
+            unit = f"{mod}.{parts[i]}"
+            if unit in units:
+                return unit
+            aliases = files[mod][1]  # a re-export: follow it
+            if parts[i] in aliases and depth < 8:
+                target = ".".join([aliases[parts[i]]] + parts[i + 1:])
+                return resolve(target, depth + 1)
+            return None
+        return None
+
+    def refs(nodes, mod: str) -> set:
+        _tree, aliases, defs = files[mod]
+        out = set()
+        for top in nodes:
+            for node in ast.walk(top):
+                chain = []
+                while isinstance(node, ast.Attribute):
+                    chain.append(node.attr)
+                    node = node.value
+                if not isinstance(node, ast.Name):
+                    continue
+                chain = [node.id] + chain[::-1]
+                if node.id in defs and f"{mod}.{node.id}" in units:
+                    out.add(f"{mod}.{node.id}")
+                elif node.id in aliases:
+                    unit = resolve(".".join([aliases[node.id]] + chain[1:]))
+                    if unit:
+                        out.add(unit)
+        return out
+
+    edges, roots = {}, set()
+    edge_modules = {f"{pkg}.{m}" for m in _EDGE_ROOTS}
+    for mod, (tree, _aliases, defs) in files.items():
+        module_code = [
+            n
+            for n in tree.body
+            if not isinstance(n, (ast.Import, ast.ImportFrom))
+            and n not in defs.values()
+        ]
+        decorators = [d for n in defs.values() for d in n.decorator_list]
+        roots |= refs(module_code + decorators, mod)
+        for name, node in defs.items():
+            unit = f"{mod}.{name}"
+            inner = refs([node], mod) - {unit}
+            if unit not in units:  # a script's function
+                roots |= inner
+                continue
+            edges[unit] = inner
+            if mod in edge_modules:
+                roots.add(unit)
+    for spec in REGISTRY.values():
+        qual = spec.build.__qualname__.split(".<locals>")[0]
+        roots.add(f"{spec.build.__module__}.{qual}")
+
+    def closure(start) -> set:
+        seen, stack = set(), list(start)
+        while stack:
+            u = stack.pop()
+            if u in units and u not in seen:
+                seen.add(u)
+                stack.extend(edges.get(u, ()))
+        return seen
+
+    allowed = {f"{pkg}.{name}" for name in _TEST_ONLY_OK}
+    return units, closure(roots), closure(roots | allowed)
+
+
+def test_no_test_only_package_functions():
+    units, live, covered = _reachability()
+    pkg = os.path.basename(_PKG)
+    unreached = sorted(set(units) - covered)
+    assert not unreached, (
+        "package functions no registered query, serving edge, tool or "
+        "benchmark reaches (only tests do, or nothing) — delete them, or "
+        "add a test reference to _TEST_ONLY_OK with its reason: "
+        + ", ".join(
+            f"{u[len(pkg) + 1:]} "
+            f"({units[u].end_lineno - units[u].lineno + 1} lines)"
+            for u in unreached
+        )
+    )
+    stale = sorted(
+        name
+        for name in _TEST_ONLY_OK
+        if f"{pkg}.{name}" not in units or f"{pkg}.{name}" in live
+    )
+    assert not stale, (
+        f"_TEST_ONLY_OK entries that are gone or now have a real caller: {stale}"
     )

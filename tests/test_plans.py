@@ -153,32 +153,6 @@ def test_hot_path_stays_in_codegen(tables):
     assert "*(" in final_plan, final_plan
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Two tables bucketed on the same key join WITHOUT a shuffle: the
-    bucketed scan is the distribution. This is the pay-the-shuffle-once
-    layout for recurring big-to-big joins at scale."""
-    from algoritmos_etl_spark.sources.bucketed import read_table, write_bucketed
-    from algoritmos_etl_spark.sources.readers import load_table
-    from algoritmos_etl_spark.operators import text
-
-    # spark.sql.warehouse.dir is static — tables land in the session's
-    # default warehouse; dropped below (dir is gitignored)
-    docs = load_table(spark, SF_DIR, "documents")
-    write_bucketed(docs, "b_docs", ["doc_id"], n_buckets=8)
-    write_bucketed(text.text_stats(docs), "b_stats", ["doc_id"], n_buckets=8)
-
-    joined = read_table(spark, "b_docs").join(
-        read_table(spark, "b_stats").hint("merge"), "doc_id"
-    )
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    # and it is the same result as the plain join
-    plain = docs.join(text.text_stats(docs), "doc_id")
-    assert joined.count() == plain.count()
-    spark.sql("DROP TABLE IF EXISTS b_docs")
-    spark.sql("DROP TABLE IF EXISTS b_stats")
-
-
 def test_decontamination_broadcasts_benchmark_set(spark):
     """The benchmark shingle set must reach the corpus side as a
     BroadcastHashJoin — a shuffled join here would re-shard the whole
@@ -243,26 +217,6 @@ def test_behavioral_no_global_window(tables):
     ):
         plan = _plan(q)
         assert "Window" not in plan, plan  # per-user state via agg, not windows
-
-
-def test_grouping_sets_matches_rollup_and_single_expand(tables):
-    # rollup == groupingSets([[y,p],[y],[]]) — same Expand-based plan
-    gs = relational.revenue_grouping_sets(
-        tables["lineitem"], tables["orders"],
-        sets=[["order_year", "priority"], ["order_year"], []],
-    )
-    ru = relational.revenue_rollup(tables["lineitem"], tables["orders"])
-    assert gs.count() == ru.count()
-    assert (
-        sorted(map(tuple, gs.collect())) == sorted(map(tuple, ru.collect()))
-    )
-    assert _plan(gs).count("Expand") >= 1
-    # CUBE shape adds the priority-only level on the same single pass
-    # (plan-string Expand counts vary with AQE re-prints; just pin that
-    # the extra grouping set did not add a second aggregation pass)
-    cube = relational.revenue_grouping_sets(tables["lineitem"], tables["orders"])
-    assert cube.count() > ru.count()
-    assert _plan(cube).count("Expand") >= 1
 
 
 def test_min_cost_supplier_broadcast_dims_single_shuffle(tables):

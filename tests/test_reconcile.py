@@ -138,15 +138,6 @@ def test_fuzzy_join_blocked_recall_vs_brute_force(spark):
     assert (3, 100) in {(r.id, r.cid) for r in brute.collect()}
 
 
-def test_fuzzy_name_pairs_self_dedup(spark):
-    df = spark.createDataFrame(
-        [(1, "hot rod"), (2, "hot rodd"), (3, "cold gear")],
-        "id long, name string",
-    )
-    rows = linkage.fuzzy_name_pairs(df, "id", "name").collect()
-    assert [(r.id_a, r.id_b, r.distance) for r in rows] == [(1, 2, 1)]
-
-
 def test_cdc_merge_incremental_equals_oneshot_property(spark):
     """The invariant streaming_cdc_state rides on, as a property test:
     for ANY split of a change stream into two batches (including
@@ -190,45 +181,6 @@ def test_cdc_merge_incremental_equals_oneshot_property(spark):
             for r in merge(merge(empty, b1), b2).collect()
         }
         assert stepped == oneshot, f"split seed {seed} diverged"
-
-
-def test_diff_as_changes_converges_replica(spark):
-    """Convergence property: cdc_merge(left, diff_as_changes(left,
-    right)) == right for random keyed snapshots — the replica-repair
-    loop closed end to end."""
-    import random
-
-    rnd = random.Random(11)
-    schema = "k long, s string, v double"
-
-    def snap(seed):
-        r = random.Random(seed)
-        return spark.createDataFrame(
-            [
-                (k, r.choice(["a", "b", "c", None]),
-                 r.choice([1.0, 2.0, None]))
-                for k in range(12)
-                if r.random() < 0.8
-            ],
-            schema,
-        )
-
-    for seed in range(3):
-        left, right = snap(seed), snap(seed + 100)
-        changes = reconcile.diff_as_changes(left, right, ["k"])
-        # synthetic ordering: every change newer than the snapshot
-        applied = reconcile.cdc_merge(
-            left.withColumn("ts", F.lit(0)),
-            changes.withColumn("ts", F.lit(1)),
-            key_cols=["k"],
-            ts_col="ts",
-            op_col="op",
-        ).drop("ts")
-        got = sorted(map(tuple, applied.collect()))
-        want = sorted(map(tuple, right.collect()))
-        assert got == want, f"seed {seed} did not converge"
-        # and a second repair round finds zero drift
-        assert reconcile.table_diff(applied, right, ["k"]).count() == 0
 
 
 def test_fuzzy_join_block_cap_drops_stopword_blocks(spark):

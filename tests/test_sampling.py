@@ -58,31 +58,6 @@ def test_stride_sample_matches_slice_semantics(spark):
     assert sorted(by_sym[2]) == [float(i) for i in range(7)]
 
 
-def test_deterministic_sample_fraction(spark):
-    docs = load_table(spark, SF_DIR, "documents")
-    n = docs.count()
-    sampled = sampling.deterministic_sample(docs, "doc_id", 0.3)
-    k = sampled.count()
-    assert 0.2 < k / n < 0.4
-    assert sampled.exceptAll(sampling.deterministic_sample(docs, "doc_id", 0.3)).isEmpty()
-
-
-def test_stratified_sample_per_stratum_fractions(spark):
-    rows = [(i, "en" if i % 2 == 0 else "rare") for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = sampling.stratified_sample(
-        df, key="doc_id", strata_col="lang", fractions={"en": 0.1, "rare": 1.0}
-    )
-    by_lang = {r["lang"]: r["n"] for r in out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert by_lang["rare"] == 1000            # kept whole
-    assert 50 < by_lang.get("en", 0) < 200    # ~10% of 1000
-    # unknown strata default to dropped
-    extra = spark.createDataFrame([(99999, "xx")], "doc_id long, lang string")
-    assert sampling.stratified_sample(
-        extra, key="doc_id", strata_col="lang", fractions={"en": 0.1}
-    ).isEmpty()
-
-
 def test_balanced_sample_caps_dominant_stratum(spark):
     rows = [(i, "en" if i < 1800 else "de") for i in range(2000)]
     df = spark.createDataFrame(rows, "doc_id long, lang string")
@@ -220,34 +195,6 @@ def test_pps_sample_matches_python_reference(spark):
         for r in sampling.pps_sample(df, "doc_id", "w", k=17).collect()
     }
     assert got == _pps_reference(rows, k=17)
-
-
-def test_write_epoch_shards_layout_matches_computed_order(spark, tmp_path):
-    """The physical writer and the computed (epoch, shard, pos) table
-    must agree: every epoch=E/shard=S file holds exactly that shard's
-    docs IN SERVING ORDER (file row order == pos order)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "n_chars")
-    path = str(tmp_path / "shards")
-    sampling.write_epoch_shards(docs, "doc_id", path, n_epochs=2, n_shards=4)
-    computed = {}
-    for r in sampling.epoch_shards(
-        docs, "doc_id", n_epochs=2, n_shards=4
-    ).collect():
-        computed.setdefault((r.epoch, r.shard), []).append((r.pos, r.doc_id))
-    for (e, sh), rows in computed.items():
-        files = glob.glob(f"{path}/epoch={e}/shard={sh}/*.parquet")
-        assert len(files) == 1  # one file per shard — one task owned it
-        on_disk = pq.read_table(files[0], columns=["doc_id"])
-        got = [v.as_py() for v in on_disk["doc_id"]]
-        want = [d for _, d in sorted(rows)]
-        assert got == want, (e, sh)
-    # payload columns ride along
-    any_file = glob.glob(f"{path}/epoch=0/shard=0/*.parquet")[0]
-    assert "n_chars" in pq.read_schema(any_file).names
 
 
 def test_epoch_shards_matches_python_reference(spark):

@@ -104,23 +104,3 @@ def test_registered_bloom_query_matches_plain_join(spark):
     )
     key = lambda r: r.p_brand  # noqa: E731
     assert sorted(got, key=key) == sorted(plain, key=key)
-
-
-def test_cm_bucket_matches_grid_slicing(spark):
-    """The public per-item bucket helper must agree with the grid the
-    build path produces (both slice the same digest) — pins the two
-    code paths together so neither drifts."""
-    items = spark.createDataFrame([("x",), ("bolt",)], "word string")
-    for word in ("x", "bolt"):
-        one = items.filter(F.col("word") == word)
-        direct = one.select(
-            *[
-                sketches.cm_bucket(F.col("word"), d).alias(f"b{d}")
-                for d in range(4)
-            ]
-        ).collect()[0]
-        cells = {
-            r.d: r.bucket
-            for r in sketches.count_min_build(one, "word").collect()
-        }
-        assert {d: direct[f"b{d}"] for d in range(4)} == cells

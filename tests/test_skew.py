@@ -53,10 +53,3 @@ def test_salted_join_rejects_right_full(spark):
     for how in ("right", "full", "outer", "full_outer"):
         with pytest.raises(ValueError):
             skew.salted_join(big, dim, on="k", how=how)
-
-
-def test_heavy_hitters_finds_hot_key(spark):
-    big, _ = _skewed(spark)
-    hh = skew.heavy_hitters(big, "k", min_share=0.5).collect()
-    assert len(hh) == 1 and hh[0].k == "hot"
-    assert hh[0].n_rows == 5000

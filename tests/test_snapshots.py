@@ -132,14 +132,9 @@ def test_snapshot_publish_single_pointer_wap(spark, tmp_path):
 
 def test_snapshot_changes_between_versions(spark, tmp_path):
     """Time travel x keyed diff: changes between two retained versions
-    cover added / removed / changed; syncing v_from with the
-    diff-as-changes reproduces v_to; a vacuumed from_version fails
+    cover added / removed / changed; a vacuumed from_version fails
     loudly instead of diffing against the wrong snapshot."""
     import pytest as _pt
-
-    from algoritmos_etl_spark.operators.reconcile import (
-        cdc_merge, diff_as_changes,
-    )
 
     t = str(tmp_path / "t")
     snap.snapshot_commit(
@@ -158,22 +153,6 @@ def test_snapshot_changes_between_versions(spark, tmp_path):
         2: ("changed", "v"),
         3: ("removed", None),
         4: ("added", None),
-    }
-    # consumer sync: v1 + changeset == v2
-    v1 = snap.read_as_of(spark, t, 1)
-    v2 = snap.read_as_of(spark, t, 2)
-    changes = diff_as_changes(v1, v2, key_cols=["k"]).withColumn(
-        "ts", F.lit(1)
-    )
-    merged = cdc_merge(
-        v1.withColumn("op", F.lit("U")).withColumn("ts", F.lit(0)),
-        changes,
-        key_cols=["k"],
-        ts_col="ts",
-        op_col="op",
-    )
-    assert {(r.k, r.v) for r in merged.select("k", "v").collect()} == {
-        (r.k, r.v) for r in v2.collect()
     }
     # vacuumed from_version: loud failure
     snap.snapshot_commit(_df(spark, [(9, 9.0)]), t, mode="overwrite")

@@ -21,7 +21,6 @@ from algoritmos_etl_spark.streaming import (
     session_stats,
     sliding_stats,
     streaming_running_streaks,
-    tumbling_stats,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -34,16 +33,6 @@ def batch_events(spark):
 
 def _rows(df, *order_cols):
     return [tuple(r) for r in df.orderBy(*order_cols).collect()]
-
-
-def test_tumbling_parity(spark, batch_events):
-    streamed = run_to_memory_sink(
-        tumbling_stats(read_event_stream(spark, SF_DIR)), "t_tumbling"
-    )
-    batch = tumbling_stats(batch_events)
-    assert _rows(streamed, "window_start", "event_type") == _rows(
-        batch, "window_start", "event_type"
-    )
 
 
 def test_sliding_parity_and_overlap(spark, batch_events):
@@ -223,41 +212,6 @@ def test_checkpoint_restart_recovers_state_exactly_once(spark, batch_events, tmp
     assert _rows(out, "user_id", "event_id") == _rows(single, "user_id", "event_id")
 
 
-def test_streaming_dedup_drops_redeliveries(spark, batch_events, tmp_path):
-    """At-least-once delivery: re-deliver a sample of events in a later
-    file; dropDuplicatesWithinWatermark must drop every re-delivery that
-    arrives inside the watermark, reproducing the batch distinct."""
-    from algoritmos_etl_spark.streaming import streaming_dedup
-    import time as _time
-
-    src = tmp_path / "redelivered"
-    first = batch_events
-    dups = batch_events.sample(0.3, seed=7)
-    first.coalesce(1).write.mode("overwrite").parquet(str(src / "b1"))
-    _time.sleep(1.1)
-    dups.coalesce(1).write.mode("overwrite").parquet(str(src / "b2"))
-
-    stream = (
-        spark.readStream.schema(
-            "event_id bigint, ts timestamp, user_id bigint, "
-            "event_type string, value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)  # re-deliveries in a LATER micro-batch
-        .option("recursiveFileLookup", True)
-        .parquet(str(src))
-    )
-    # watermark wider than the data's time span: no state eviction, so
-    # every re-delivery is inside the dedup horizon
-    streamed = run_to_memory_sink(
-        streaming_dedup(stream, watermark="3650 days"), "t_dedup"
-    )
-    assert streamed.count() == batch_events.count()
-    assert streamed.select("event_id").distinct().count() == streamed.count()
-    assert _rows(streamed.select("event_id", "user_id"), "event_id") == _rows(
-        batch_events.select("event_id", "user_id"), "event_id"
-    )
-
-
 def test_streaming_neardup_against_index(tables, spark, tmp_path):
     """foreachBatch near-dup: micro-batches dedup against the standing
     LSH index then append themselves to it. The union of emitted pairs
@@ -366,30 +320,6 @@ def test_neardup_replay_is_idempotent(tables, spark, tmp_path):
         )
     )
     assert unguarded != first
-
-
-def test_stream_static_enrichment_matches_batch(spark, batch_events):
-    """Stream-static broadcast join: the streamed enrichment must equal
-    the same join run in batch, including events with no dim row."""
-    from algoritmos_etl_spark.streaming.streams import enrich_with_dimension
-
-    dim = spark.createDataFrame(
-        [(u, f"seg{u % 3}") for u in range(0, 50, 2)],  # odd users missing
-        "user_id long, segment string",
-    )
-    out_cols = ["event_id", "user_id", "segment"]
-    streamed = run_to_memory_sink(
-        enrich_with_dimension(
-            read_event_stream(spark, SF_DIR), dim
-        ).select(*out_cols),
-        "t_enrich",
-    )
-    batch = enrich_with_dimension(batch_events, dim).select(*out_cols)
-    assert sorted(map(tuple, streamed.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-    # left semantics: un-dimensioned events survive with NULL segment
-    assert batch.filter(F.col("segment").isNull()).count() > 0
 
 
 def test_attribution_join_stream_equals_batch(spark, batch_events):

@@ -58,15 +58,6 @@ def test_sma_warmup_and_values(f5, w):
         assert v == pytest.approx(sum(PRICES[i:i + w]) / w)
 
 
-def test_series_moments(f5):
-    row = technical.series_moments(f5).collect()[0]
-    n = len(PRICES)
-    mean = sum(PRICES) / n
-    var = sum((p - mean) ** 2 for p in PRICES) / (n - 1)
-    assert row["mean"] == pytest.approx(mean)
-    assert row["std_dev"] == pytest.approx(math.sqrt(var))
-
-
 def test_rolling_zscore_naive_parity_and_guards(spark):
     """rolling_zscore vs a pure-Python trailing-window recompute, plus
     the two guards: warm-up rows excluded, zero-variance windows

@@ -301,26 +301,6 @@ def test_lang_id_trained_accuracy_beats_heuristic(spark, lang_docs):
     assert acc(heur) < acc(trained)  # 'und' on all four held-out docs
 
 
-def test_curation_trained_lang_gate(spark, lang_docs):
-    from algoritmos_etl_spark.plans import curation
-
-    kw = dict(
-        min_words=5, min_stopword_ratio=0.0, max_stopword_ratio=1.0,
-        neardup_threshold=0.99,
-    )
-    plain = {r["doc_id"] for r in curation.curate_corpus(
-        lang_docs, **kw).collect()}
-    trained = {r["doc_id"] for r in curation.curate_corpus_trained_lang(
-        lang_docs, **kw).collect()}
-    # the marker-free English doc 101 passes ONLY the trained gate
-    assert 101 not in plain
-    assert 101 in trained
-    # marker-rich English seeds pass both; non-English drops from both
-    assert 1 in plain and 1 in trained
-    for i in (2, 3, 4, 102, 103, 104, 200, 201):
-        assert i not in trained, i
-
-
 # ---------------------------------------- Gopher/Dolma rule pack (r11)
 
 
@@ -374,47 +354,3 @@ def test_quality_rules_values_are_the_raw_signals(spark):
     assert rules["bullet_line_ratio"][0] == 1
     assert rules["ellipsis_line_ratio"][0] == 1
     assert rules["stopword_floor"][0] == 4  # the, be, to, of
-
-
-def test_quality_rules_keep_agrees_with_long_format(spark):
-    rows = [
-        (0, " ".join(["the be to of and that have with"]
-                     + [f"word{i}" for i in range(60)])),
-        (1, "tiny"),
-        (2, "\n".join("- bullet" for _ in range(5))),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    keep = {r["doc_id"]: (r["n_failed"], r["keep"])
-            for r in text.quality_rules_keep(df).collect()}
-    long = text.quality_rules(df).collect()
-    failed = {}
-    for r in long:
-        failed.setdefault(r["doc_id"], 0)
-        failed[r["doc_id"]] += 0 if r["passed"] else 1
-    for d, (n_failed, k) in keep.items():
-        assert failed.get(d, 0) == n_failed, d
-        assert k == (n_failed == 0), d
-    assert keep[0] == (0, True)
-    assert not keep[1][1] and not keep[2][1]
-
-
-def test_quality_rules_gate_swaps_into_curation(spark):
-    """The rule pack composes as curation's quality gate: survivors
-    of the swap are exactly the docs the gate keeps that also pass
-    the language gate."""
-    from algoritmos_etl_spark.plans.curation import curate_corpus
-
-    rows = [
-        (i, " ".join(["the be to of and that have with it is"]
-                     + [f"word{i}x{j}" for j in range(55)]))
-        for i in range(6)
-    ] + [(6, "tiny doc"), (7, "\n".join("- b" for _ in range(9)))]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    keep = text.quality_rules_keep(docs)
-    gated = docs.join(keep.filter("keep").select("doc_id"), "doc_id")
-    curated = curate_corpus(
-        gated, min_words=1, min_stopword_ratio=0.0, max_stopword_ratio=1.0
-    )
-    got = {r["doc_id"] for r in curated.select("doc_id").collect()}
-    assert got == set(range(6))

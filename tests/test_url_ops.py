@@ -241,33 +241,6 @@ def test_crawl_to_corpus_composition(spark):
     assert len({r["doc_id"] for r in out}) == 20
 
 
-def test_quality_rules_keep_subset_param(spark):
-    df = spark.createDataFrame(
-        [(0, " ".join(f"word{j}" for j in range(60)))],
-        "doc_id long, text string",
-    )
-    # full pack fails (no gopher stop words), the waived subset keeps
-    assert not text_quality_keep_all(df)
-    kept = text_rules_keep(df, ("word_count", "alpha_word_ratio"))
-    assert kept
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown quality rules"):
-        text_rules_keep(df, ("no_such_rule",))
-
-
-def text_rules_keep(df, rules):
-    from algoritmos_etl_spark.operators.text import quality_rules_keep
-
-    return [r for r in quality_rules_keep(df, rules=rules).collect() if r["keep"]]
-
-
-def text_quality_keep_all(df):
-    from algoritmos_etl_spark.operators.text import quality_rules_keep
-
-    return [r for r in quality_rules_keep(df).collect() if r["keep"]]
-
-
 # -------------------------------------- Public-Suffix-List grain
 
 

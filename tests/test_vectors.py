@@ -107,6 +107,21 @@ def test_lsh_neardup_bucket_cap(emb):
     assert uncapped == base
 
 
+def _lsh_candidate_count(emb, n_tables, planes):
+    """Distinct vector pairs sharing a (table, signature) bucket: the
+    candidates the banding join generates before cosine verification."""
+    sigs = vectors.lsh_signatures(emb, n_tables, planes)
+    a = sigs.withColumnRenamed("vec_id", "vec_a")
+    b = sigs.withColumnRenamed("vec_id", "vec_b")
+    return (
+        a.join(b, ["tbl", "sig"])
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b")
+        .distinct()
+        .count()
+    )
+
+
 def test_lsh_width_tradeoff_curve(emb):
     """Pins the recall/candidate-count curve at the narrow (4×4) and
     wide (16×8) operating points: widening must cut the candidate set
@@ -121,7 +136,7 @@ def test_lsh_width_tradeoff_curve(emb):
     n = emb.count()
     all_pairs = n * (n - 1) // 2
     for n_tables, planes in [(4, 4), (16, 8)]:
-        cand = vectors.lsh_candidate_count(emb, n_tables, planes)
+        cand = _lsh_candidate_count(emb, n_tables, planes)
         got = {
             (r.vec_a, r.vec_b)
             for r in vectors.lsh_neardup_pairs(emb, 0.4, n_tables, planes).collect()
@@ -137,17 +152,6 @@ def test_lsh_width_tradeoff_curve(emb):
             # the widening's whole point: far fewer candidate pairs
             assert cand * 2 <= cand_narrow, (cand, cand_narrow)
             assert cand <= all_pairs // 10
-
-
-def test_multi_table_buckets_shape(emb):
-    b = vectors.lsh_table_buckets(emb, n_tables=4, planes_per_table=4)
-    n = emb.count()
-    assert b.count() == 4 * n
-    rng = b.agg(
-        F.min("sig").alias("lo"), F.max("sig").alias("hi"),
-        F.count_distinct("tbl").alias("t"),
-    ).first()
-    assert rng.t == 4 and 0 <= rng.lo and rng.hi <= 15
 
 
 def test_ivf_topk_recall_vs_bruteforce(emb):
@@ -204,27 +208,6 @@ def test_ivf_assignment_partitions_corpus(emb):
         F.count(F.lit(1)).alias("c")).collect()]
     assert sum(sizes) == n
     assert max(sizes) < n, "IVF assignment degenerated to one cluster"
-
-
-def test_ivf_written_index_probe_matches_inline(emb, spark, tmp_path):
-    """ivf_write_index + ivf_probe_topk ≡ the inline ivf_topk (same
-    deterministic quantizer), and the probe's corpus scan is dynamic-
-    partition-pruned on centroid_id, not a full read."""
-    path = str(tmp_path / "ivf_index")
-    vectors.ivf_write_index(emb, path, n_centroids=8, iters=1)
-    got = vectors.ivf_probe_topk(spark, path, [0, 1, 2], k=10, nprobe=3)
-    want = vectors.ivf_topk(emb, [0, 1, 2], k=10, n_centroids=8, nprobe=3)
-    as_rows = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.cosine, r.rank) for r in df.collect()
-    )
-    assert as_rows(got) == as_rows(want)
-    # the partitioned layout exists and the probe plan prunes on it
-    import os
-
-    parts = [p for p in os.listdir(f"{path}/corpus") if p.startswith("centroid_id=")]
-    assert len(parts) >= 2
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
 def test_lsh_neardup_empty_and_single(spark):
@@ -493,98 +476,3 @@ def test_pca_variance_concentrates(emb):
     _, _, ratio = vectors.pca_fit(emb, k=8)
     assert all(ratio[i] >= ratio[i + 1] - 1e-12 for i in range(len(ratio) - 1))
     assert 0 < ratio.sum() <= 1.0 + 1e-9
-
-
-def test_pq_written_index_exhaustive_probe_equals_full_scan(emb, spark, tmp_path):
-    """pq_write_index + pq_probe_topk with nprobe = C ≡ the inline
-    full-scan pq_topk (every partition probed), and the probe plan is
-    dynamic-partition-pruned on centroid_id."""
-    import os
-
-    path = str(tmp_path / "pq_index")
-    vectors.pq_write_index(emb, path, n_centroids=8)
-    got = vectors.pq_probe_topk(spark, path, emb, [0, 1, 2], k=10, nprobe=8)
-    want = vectors.pq_topk(emb, [0, 1, 2], k=10)
-    as_rows = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.adist, r.rank) for r in df.collect()
-    )
-    assert as_rows(got) == as_rows(want)
-    parts = [
-        p for p in os.listdir(f"{path}/codes") if p.startswith("centroid_id=")
-    ]
-    assert len(parts) >= 2
-    # selective probe: plan prunes partitions, results stay well-formed
-    sel = vectors.pq_probe_topk(spark, path, emb, [0, 1, 2], k=10, nprobe=2)
-    plan = sel._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
-    rows = sel.collect()
-    assert rows and all(r.rank <= 10 and r.neighbor_id != r.query_id for r in rows)
-    # every probed pair carries the same ADC distance the full scan
-    # assigns it — probing restricts candidates, never rescores them
-    full_all = {
-        (r.query_id, r.neighbor_id): r.adist
-        for r in vectors.pq_topk(emb, [0, 1, 2], k=10**6).collect()
-    }
-    for r in rows:
-        assert full_all[(r.query_id, r.neighbor_id)] == r.adist
-
-
-def test_ivf_append_index_frozen_quantizer_and_probe_parity(
-    emb, spark, tmp_path
-):
-    """FAISS-add semantics: build the index on HALF the corpus, append
-    the other half under the frozen quantizer. (1) Probes of the
-    appended index equal the inline ivf_topk over the FULL corpus with
-    those same frozen centroids; (2) existing index files are never
-    rewritten (append = new files only, concurrent readers stay
-    consistent); (3) appended assignments equal a reference
-    re-assignment under the frozen centroids."""
-    import glob
-    import os
-
-    from pyspark.sql import functions as F
-
-    path = str(tmp_path / "ivf_index")
-    base = emb.filter(F.col("vec_id") % 2 == 0)
-    newb = emb.filter(F.col("vec_id") % 2 == 1)
-    vectors.ivf_write_index(base, path, n_centroids=8, iters=1)
-    before = {
-        p: os.path.getmtime(p)
-        for p in glob.glob(f"{path}/corpus/centroid_id=*/*.parquet")
-    }
-    rep = vectors.ivf_append_index(spark, newb, path)
-    assert rep["appended"] == newb.count()
-    assert 1 <= rep["centroids_touched"] <= 8
-    # old files intact, byte-for-byte untouched
-    for p, mt in before.items():
-        assert os.path.exists(p) and os.path.getmtime(p) == mt, p
-    # corpus now holds everything exactly once
-    corpus = spark.read.parquet(f"{path}/corpus")
-    assert corpus.count() == emb.count()
-    assert corpus.select("vec_id").distinct().count() == emb.count()
-    # appended assignments == reference assignment under frozen cents
-    cents = spark.read.parquet(f"{path}/centroids")
-    flat = vectors._quantized_flat(vectors.with_dvec(newb), "vec_id")
-    norms = flat.groupBy("vec_id").agg(
-        F.sum(F.col("q") * F.col("q")).alias("n2")
-    )
-    want_assign = {
-        r.vec_id: r.centroid_id
-        for r in vectors._ivf_assign(flat, norms, cents).collect()
-    }
-    got_assign = {
-        r.vec_id: r.centroid_id
-        for r in corpus.filter(F.col("vec_id") % 2 == 1)
-        .select("vec_id", "centroid_id")
-        .collect()
-    }
-    assert got_assign == want_assign
-    # probe parity vs inline ivf_topk with the SAME frozen centroids
-    got = vectors.ivf_probe_topk(spark, path, [0, 1, 2], k=10, nprobe=3)
-    want = vectors.ivf_topk(
-        emb, [0, 1, 2], k=10, nprobe=3, cents=cents
-    )
-    as_rows = lambda df: sorted(
-        (r.query_id, r.neighbor_id, r.cosine, r.rank) for r in df.collect()
-    )
-    assert as_rows(got) == as_rows(want)

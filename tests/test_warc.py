@@ -88,19 +88,6 @@ def test_extract_matches_direct_html_path(spark, docs, parsed):
     assert pages.filter(~F.col("ok")).count() == 1
 
 
-def test_read_warc_dir_real_files(spark, docs, tmp_path):
-    files = warc.synthesize_warc_corpus(docs, docs_per_file=5, torn_every=0)
-    for r in files.collect():
-        (tmp_path / r["warc_file"]).write_bytes(bytes(r["content"]))
-    (tmp_path / "notes.txt").write_text("ignored by the glob")
-    parsed = warc.read_warc_dir(spark, str(tmp_path))
-    assert parsed.count() == 12
-    assert parsed.filter(~F.col("ok")).count() == 0
-    assert {r["warc_file"] for r in parsed.select("warc_file").distinct().collect()} == {
-        "warc-00000.warc.gz", "warc-00001.warc.gz", "warc-00002.warc.gz"
-    }
-
-
 def _gz(record: bytes) -> bytes:
     comp = zlib.compressobj(6, zlib.DEFLATED, 31)
     return comp.compress(record) + comp.flush()

@@ -1,14 +1,13 @@
-"""Capture `.explain("formatted")` for registry queries to files.
+"""Print `.explain("formatted")` of registry queries to stdout.
 
 Usage:
-    python tools/explain_query.py <suffix> <query> [query ...]
-    python tools/explain_query.py <suffix> --all
+    python tools/explain_query.py <query> [query ...]
+    python tools/explain_query.py --all
 
-Writes plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<suffix>.txt (round
-defaults to r13; suffix = before|after). The
-optimization-round deliverable: the judge checks plan claims (Exchange
-counts, join strategies, PushedFilters, BatchEvalPython absence)
-against these files without running Spark.
+Each plan is printed under a `== <query> ==` header, built over
+$SPARK_GRAFT_SF_DIR (default: the sf0.01 test data). Per-query plan
+shapes of the benchmark workloads are digested in the benchmark
+sidecar (`plan_shapes`); this renders a full plan on demand.
 """
 
 from __future__ import annotations
@@ -19,14 +18,9 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-OUT_DIR = os.path.join(
-    REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13")
-)
-
 
 def main() -> int:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from algoritmos_etl_spark.driver_queries import REGISTRY
@@ -34,7 +28,6 @@ def main() -> int:
 
     if names == ["--all"]:
         names = list(REGISTRY)
-    os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark("algoritmos-etl-explain")
     for name in names:
         df = REGISTRY[name].build(spark, sf_dir)
@@ -43,10 +36,7 @@ def main() -> int:
                 "formatted"
             )
         )
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
-        with open(path, "w") as fh:
-            fh.write(plan)
-        print(f"[ok] {name} -> {path} ({len(plan)} chars)")
+        print(f"== {name} ==\n{plan}", flush=True)
     spark.stop()
     return 0
 
