@@ -21,13 +21,12 @@ from .driver_queries import (
     r6,
     session_bars,
 )
-from .operators import cleaning, dedup, relational, text, vectors
+from .operators import cleaning, dedup, graph, relational, text, vectors
 from .sources.readers import ORACLE_BARS_CTE, load_table
 
 # DuckDB fragments mirroring text.words_col / normalized_text / token_hash
 _W = "list_filter(string_split(trim(text), ' '), x -> x <> '')"
 _NORM = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-_NORM_W = "list_filter(string_split(" + _NORM + ", ' '), x -> x <> '')"
 
 
 def _h(expr: str) -> str:
@@ -4216,16 +4215,18 @@ def q_streaming_cdc_state(spark, sf_dir):
         shutil.rmtree(run_dir, ignore_errors=True)
 
 
-def _pagerank_loop_cte(iters: int = 10) -> str:
-    """DuckDB twin of `graph.pagerank`'s ENTIRE fixed-point loop as a
-    WITH-fragment chain: consumes relation `e` (u, v, w — the
-    aggregated positive-weight edge list), yields `ow`/`ej`/`nodes`/
-    `pr0`..`pr{iters}`. Ranks are int64 1e12 fixed point,
+def _pagerank_loop_cte(iters: int) -> str:
+    """DuckDB twin of `graph.pagerank`'s fixed point as a WITH-fragment
+    chain: consumes relation `e` (u, v, w — the aggregated
+    positive-weight edge list), yields `ow`/`ej`/`nodes`/
+    `pr0`..`pr{iters}`, one CTE per round where the engine runs every
+    round in one numpy task. Ranks are int64 1e12 fixed point,
     contributions use the overflow-safe floor(r·w/wu) decomposition,
-    damping is integer 15/85 percent — bit-identical on any
-    engine/partitioning, so iterative graph algorithms carry full
-    value-hash oracles (shared by `textrank_keywords` on the word
-    graph and `host_pagerank` on the domain graph)."""
+    damping is integer 15/85 percent — bit-identical on any engine,
+    so iterative graph algorithms carry full value-hash oracles
+    (shared by `textrank_keywords` on the word graph and
+    `host_pagerank` on the domain graph; both pass
+    `graph.ITERATIONS`)."""
     parts = [
         "ow AS (SELECT u, CAST(sum(w) AS BIGINT) AS wu FROM e GROUP BY 1)",
         "ej AS (SELECT e.u, e.v, e.w, ow.wu FROM e JOIN ow ON ow.u = e.u)",
@@ -4251,12 +4252,12 @@ def _pagerank_loop_cte(iters: int = 10) -> str:
 
 @register(
     "textrank_keywords",
-    # The ENTIRE 10-iteration fixed point is reproduced in SQL
-    # (_pagerank_loop_cte): ranks are int64 fixed-point (1e12),
-    # contributions use the overflow-safe floor(r*w/wu) decomposition,
-    # damping is integer 15/85 percent — bit-identical on any
-    # engine/partitioning, so even the iterative graph algorithm
-    # carries a full value-hash oracle.
+    # The ENTIRE fixed point is reproduced in SQL (_pagerank_loop_cte):
+    # ranks are int64 fixed-point (1e12), contributions use the
+    # overflow-safe floor(r*w/wu) decomposition, damping is integer
+    # 15/85 percent — bit-identical on any engine/partitioning, so
+    # even the iterative graph algorithm carries a full value-hash
+    # oracle.
     f"""WITH w AS (SELECT doc_id, {_W} AS ws FROM documents),
     i AS (SELECT ws, unnest(range(1, len(ws))) AS i FROM w WHERE len(ws) >= 2),
     b AS (SELECT ws[i] AS w1, ws[i + 1] AS w2 FROM i),
@@ -4267,22 +4268,20 @@ def _pagerank_loop_cte(iters: int = 10) -> str:
             UNION ALL SELECT w2 AS u, w1 AS v, n FROM p
         ) GROUP BY 1, 2
     ),
-    {_pagerank_loop_cte(10)},
+    {_pagerank_loop_cte(graph.ITERATIONS)},
     deg AS (SELECT u AS node, count(DISTINCT v) AS n_edges FROM e GROUP BY 1)
-    SELECT p10.node AS word, p10.r AS rank_e12,
+    SELECT rk.node AS word, rk.r AS rank_e12,
            CAST(deg.n_edges AS BIGINT) AS n_edges
-    FROM pr10 p10 JOIN deg ON deg.node = p10.node
+    FROM pr{graph.ITERATIONS} rk JOIN deg ON deg.node = rk.node
     ORDER BY rank_e12 DESC, word ASC LIMIT 25""",
     "TextRank keyword ranking (Mihalcea 2004): integer-exact weighted "
     "PageRank over the word co-occurrence graph — the corpus feeds ONE "
-    "bigram partial-agg shuffle, then 10 fixed-point iterations run on "
-    "the bounded VOCABULARY graph (joins + partial aggs, lazy-checkpoint "
-    "lineage truncation per round, the BPE pattern); top-k by rank plans "
-    "TakeOrderedAndProject (M8)",
+    "bigram partial-agg shuffle onto the bounded VOCABULARY graph, then "
+    f"all {graph.ITERATIONS} fixed-point iterations run in one "
+    "single-group Arrow task (numpy, exact int64 with overflow checks); "
+    "top-k by rank plans TakeOrderedAndProject (M8)",
 )
 def q_textrank_keywords(spark, sf_dir):
-    from .operators import graph
-
     return graph.textrank_keywords(
         load_table(spark, sf_dir, "documents"), top_k=25
     )
@@ -6911,13 +6910,13 @@ def _oracle_host_pagerank() -> str:
     surv AS (SELECT doc_id FROM ranked WHERE rn = 1),
     {link_targets_sql('surv')},
     e AS (SELECT u, v, w FROM link_edges),
-    {_pagerank_loop_cte(10)},
+    {_pagerank_loop_cte(graph.ITERATIONS)},
     outd AS (SELECT u AS node, count(DISTINCT v) AS n FROM e GROUP BY 1),
     ind AS (SELECT v AS node, count(DISTINCT u) AS n FROM e GROUP BY 1)
     SELECT p.node AS domain, p.r AS rank_e12,
            CAST(coalesce(outd.n, 0) AS BIGINT) AS n_out,
            CAST(coalesce(ind.n, 0) AS BIGINT) AS n_in
-    FROM pr10 p
+    FROM pr{graph.ITERATIONS} p
     LEFT JOIN outd ON outd.node = p.node
     LEFT JOIN ind ON ind.node = p.node
     ORDER BY rank_e12 DESC, domain ASC"""
@@ -6931,10 +6930,10 @@ def _oracle_host_pagerank() -> str:
     # grain), then the outlink fixture's integer edge twin
     # (`warc.link_targets_sql` — mailto/relative/self-edge arms
     # excluded by the same arithmetic the HTML footer was built from)
-    # and the ENTIRE 10-iteration integer fixed point
-    # (`_pagerank_loop_cte`, shared with textrank_keywords). A defect
-    # in href extraction, link resolution, the PSL domain grain, edge
-    # aggregation, or any PageRank iteration breaks this one hash.
+    # and the ENTIRE integer fixed point (`_pagerank_loop_cte`,
+    # shared with textrank_keywords). A defect in href extraction,
+    # link resolution, the PSL domain grain, edge aggregation, or any
+    # PageRank iteration breaks this one hash.
     _oracle_host_pagerank(),
     "Host-graph PageRank as a curation prior (RefinedWeb shape): "
     "parse the outlink WARC fixture, URL-dedup keep-first, harvest "
@@ -6943,9 +6942,10 @@ def _oracle_host_pagerank() -> str:
     "non-navigation arms), roll endpoints to the PSL registrable-"
     "domain grain (broadcast longest-suffix match), drop domain "
     "self-edges, ONE partial-agg shuffle onto the bounded (src,dst) "
-    "pair grain, then 10 integer fixed-point iterations on the "
-    "bounded domain graph — 100 TB of HTML feeds one shuffle before "
-    "the loop. Output: (domain, rank_e12, n_out, n_in); external "
+    f"pair grain, then all {graph.ITERATIONS} integer fixed-point "
+    "iterations in one single-group Arrow task on the bounded domain "
+    "graph — 100 TB of HTML feeds one shuffle before the loop. "
+    "Output: (domain, rank_e12, n_out, n_in); external "
     "domains the crawl never fetched receive rank and emit none",
 )
 def q_host_pagerank(spark, sf_dir):

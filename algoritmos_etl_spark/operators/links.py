@@ -15,8 +15,8 @@ domain count but in practice by the link structure (~edges of the
 host graph: billions of rows from 100 TB of pages, trivially
 shuffled); the fixed-point loop then runs on the BOUNDED domain
 graph, exactly like `textrank_keywords` runs on the vocabulary graph
-— 100 TB of HTML feeds one partial-agg shuffle, and the 10 iterations
-cost 10 bounded shuffles on the domain key.
+— 100 TB of HTML feeds one partial-agg shuffle, and all the
+iterations run in one Arrow task over the domain edge list.
 
 Reference scope note: the reference (/root/reference) has no link or
 graph surface; this module is extension surface for the 100 TB
@@ -69,16 +69,12 @@ def link_target_host_col(href: Column, page_host: Column) -> Column:
     )
 
 
-def host_link_edges(
-    pages: DataFrame,
-    url_col: str = "url_norm",
-    html_col: str = "html",
-) -> DataFrame:
+def host_link_edges(pages: DataFrame) -> DataFrame:
     """(u, v, w) — the registrable-domain link graph of `pages`
-    (already URL-deduped rows exposing a normalized URL and the raw
-    HTML): u links to v with weight w = number of anchors. Self-edges
-    at the domain grain (site navigation — the overwhelming majority
-    of real links) are dropped; domains come from the PSL
+    (already URL-deduped rows exposing the normalized `url_norm` and
+    the raw `html`): u links to v with weight w = number of anchors.
+    Self-edges at the domain grain (site navigation — the overwhelming
+    majority of real links) are dropped; domains come from the PSL
     longest-suffix match (broadcast joins, map-only). One shuffle:
     the partial-agg count onto the (u, v) pair grain."""
     # the page host's PSL domain is computed at PAGE grain, BEFORE the
@@ -88,8 +84,8 @@ def host_link_edges(
     # below the Generate overflowed it and fell back to interpreted
     # eval — measured 3x slower on the edge-build stage)
     hosted = pages.select(
-        url_host_col(F.col(url_col)).alias("_page_host"),
-        F.col(html_col).alias("_html"),
+        url_host_col(F.col("url_norm")).alias("_page_host"),
+        F.col("html").alias("_html"),
     )
     src = with_registrable_domain_psl(hosted, "_page_host", out_col="u")
     # resolve every href INSIDE one array transform at page grain:
@@ -116,57 +112,19 @@ def host_link_edges(
     )
 
 
-def host_pagerank(
-    pages: DataFrame,
-    iterations: int = 10,
-    url_col: str = "url_norm",
-    html_col: str = "html",
-) -> DataFrame:
+def host_pagerank(pages: DataFrame) -> DataFrame:
     """Domain-grain PageRank over the crawl's link graph — the
     RefinedWeb-style quality prior: (domain, rank_e12, n_out, n_in)
     with rank in the engine's 1e12 integer fixed point (bit-identical
     on any engine/partitioning — `graph.pagerank`'s contract, so the
     iterative algorithm carries a full value-hash oracle). n_out /
-    n_in are distinct linked-domain degrees; external domains the
-    crawl never fetched appear with n_out = 0 (they receive rank,
-    emit none — the simple dangling convention)."""
-    # the domain-grain edge list is BOUNDED (the host graph, not the
-    # corpus); checkpoint it EAGERLY so the rank loop and the two
-    # degree rollups share one materialization — with a lazy
-    # checkpoint, the three branches of the final join race to
-    # compute the unmaterialized block inside one job and each pays
-    # the full crawl-parse subtree (measured 18 s -> ~5 s at sf0.01)
-    edges = host_link_edges(
-        pages, url_col=url_col, html_col=html_col
-    ).localCheckpoint()
-    ranks = pagerank(edges, iterations=iterations)
-    # both degree rollups in ONE partial-agg shuffle (r12 optimization
-    # round): `edges` rows are distinct (u, v) pairs by construction
-    # (host_link_edges groups on the pair), so each distinct-degree is
-    # a plain row count — the union doubles the map-side rows of the
-    # BOUNDED edge table but replaces two groupBy shuffles + two left
-    # joins with one of each, with no Expand/distinct machinery
-    deg = (
-        edges.select(F.col("u").alias("node"), F.lit(True).alias("_out"))
-        .unionByName(
-            edges.select(
-                F.col("v").alias("node"), F.lit(False).alias("_out")
-            )
-        )
-        .groupBy("node")
-        .agg(
-            F.sum(F.when(F.col("_out"), 1).otherwise(0)).alias("n_out"),
-            F.sum(F.when(F.col("_out"), 0).otherwise(1)).alias("n_in"),
-        )
-    )
+    n_in are distinct linked-domain degrees, counted by the same
+    single-task fixed point that ranks; external domains the crawl
+    never fetched appear with n_out = 0 (they receive rank, emit none
+    — the simple dangling convention)."""
     return (
-        ranks.join(deg, "node", "left")
-        .select(
-            F.col("node").alias("domain"),
-            "rank_e12",
-            F.coalesce("n_out", F.lit(0)).cast("long").alias("n_out"),
-            F.coalesce("n_in", F.lit(0)).cast("long").alias("n_in"),
-        )
+        pagerank(host_link_edges(pages))
+        .withColumnRenamed("node", "domain")
         .orderBy(F.col("rank_e12").desc(), F.col("domain").asc())
     )
 

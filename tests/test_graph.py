@@ -7,9 +7,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from algoritmos_etl_spark.operators import graph
+from conftest import SF_DIR
 
 
-def _py_pagerank(edges, iterations=10):
+def _py_pagerank(edges, iterations=graph.ITERATIONS):
     """Reference: same integer fixed-point recurrence, plain dicts."""
     from collections import defaultdict
 
@@ -39,10 +40,19 @@ def test_pagerank_matches_python_reference(spark):
         ("f", "f2", 1), ("f2", "f", 1),     # separate component
     ]
     df = spark.createDataFrame(edges, "u string, v string, w long")
-    got = {r.node: r.rank_e12 for r in graph.pagerank(df).collect()}
+    rows = graph.pagerank(df).collect()
+    got = {r.node: r.rank_e12 for r in rows}
     assert got == _py_pagerank(edges)
     # the hub must outrank leaves
     assert got["a"] > got["c"] and got["a"] > got["f"]
+    # degrees are distinct-neighbour counts over the aggregated edges
+    out_nb, in_nb = {n: set() for n in got}, {n: set() for n in got}
+    for u, v, _w in edges:
+        out_nb[u].add(v)
+        in_nb[v].add(u)
+    assert {r.node: (r.n_out, r.n_in) for r in rows} == {
+        n: (len(out_nb[n]), len(in_nb[n])) for n in got
+    }
 
 
 def test_pagerank_symmetric_cycle_is_uniform(spark):
@@ -83,6 +93,77 @@ def test_pagerank_nonpositive_weights_dropped_not_divide_by_zero(spark):
         [("a", "b", 2), ("b", "a", 2), ("c", "a", 1), ("a", "c", 1)]
     )
     assert "z" not in got and "y" not in got
+
+
+def test_pagerank_null_endpoint_edges_dropped(spark):
+    df = spark.createDataFrame(
+        [("a", "b", 1), ("b", "a", 1), ("a", None, 5), (None, "b", 5)],
+        "u string, v string, w long",
+    )
+    got = {r.node: r.rank_e12 for r in graph.pagerank(df).collect()}
+    assert got == _py_pagerank([("a", "b", 1), ("b", "a", 1)])
+
+
+@pytest.mark.parametrize(
+    "w_ac",
+    [
+        2**62 - 1,  # wu(a) = 2^63 - 1 fits; (r mod wu)·w does not
+        2**62,  # the out-weight sum wu(a) itself overflows
+    ],
+    ids=["product", "out_weight_sum"],
+)
+def test_pagerank_int64_overflow_raises(spark, w_ac):
+    """An int64 overflow anywhere in the loop raises ARITHMETIC_OVERFLOW
+    (Spark's ANSI error class); it never hands back wrapped ranks."""
+    df = spark.createDataFrame(
+        [("a", "b", 2**62), ("a", "c", w_ac), ("b", "a", 1), ("c", "a", 1)],
+        "u string, v string, w long",
+    )
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        graph.pagerank(df).collect()
+
+
+def test_pagerank_empty_edge_list(spark):
+    df = spark.createDataFrame([], "u string, v string, w long")
+    out = graph.pagerank(df)
+    assert out.columns == ["node", "rank_e12", "n_out", "n_in"]
+    assert out.collect() == []
+
+
+def _jobs_of(spark, group: str, fn):
+    """(fn's result, number of Spark jobs fn launched), read from the
+    status tracker through a job group of fn's own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", ["textrank_keywords", "host_pagerank"])
+def test_graph_query_construction_is_constant(spark, name):
+    """Building a PageRank query launches no more jobs than loading its
+    input table does (the loop runs at collect, in one Arrow task), and
+    its plan holds exactly one FlatMapGroupsInPandas."""
+    from algoritmos_etl_spark.driver_queries import REGISTRY
+    from algoritmos_etl_spark.sources import load_table
+
+    build = REGISTRY[name].build
+    build(spark, SF_DIR)  # land the session artifacts the query reads
+    df, jobs = _jobs_of(
+        spark, f"graph-build-{name}", lambda: build(spark, SF_DIR)
+    )
+    _, load_jobs = _jobs_of(
+        spark,
+        f"graph-load-{name}",
+        lambda: load_table(spark, SF_DIR, "documents"),
+    )
+    assert jobs <= load_jobs, f"{name}: build() ran {jobs} jobs"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_textrank_keywords_shape(spark, tables):

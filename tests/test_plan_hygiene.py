@@ -255,6 +255,31 @@ def test_no_module_level_memo_outside_store():
     )
 
 
+# A `.cache()`/`.persist()` is a second session-cache idiom, and Spark
+# substitutes the cached plan into every later plan over the same
+# input: a `store.blocks` landing of that plan would inherit the
+# cache's uncoalesced partition layout.
+_CACHE_CALL = re.compile(r"\.(cache|persist)\(")
+
+
+def test_no_cache_or_persist_in_package():
+    violations = []
+    for root, _dirs, files in os.walk(_PKG):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(root, fname)
+            rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
+            with open(path) as fh:
+                for lineno, line in enumerate(fh, 1):
+                    if _CACHE_CALL.search(line):
+                        violations.append(f"{rel}:{lineno}")
+    assert not violations, (
+        "DataFrame cache()/persist() in the package — land the artifact "
+        f"through algoritmos_etl_spark.store instead: {violations}"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Static reachability gate: every package function or class must be
 # reachable from a real caller — a registered builder or oracle, the
