@@ -692,18 +692,6 @@ def q_pair_metrics(spark, sf_dir):
     )
 
 
-# Emission knobs for the REGISTERED heatmap: τ on |corr| and per-symbol
-# kNN sparsification, both applied inside the block task. Since r9 BOTH
-# decisions are made on the 4-decimal EMISSION grain (round(corr, 4)):
-# the sf1 sweep showed the raw rank-boundary gap shrinking below the
-# ~1e-9 one-pass/streaming corr divergence (2-pair rowcount mismatch at
-# 10x), and on the quantized grain a boundary is either an exact tie
-# (broken by partner id) or >= 1e-4 — decidable identically by any
-# engine at any scale.
-HEATMAP_MIN_ABS_CORR = 0.25
-HEATMAP_TOP_K = 10
-
-
 @register(
     "correlation_heatmap",
     f"""WITH {ORACLE_BARS_CTE},
@@ -725,7 +713,7 @@ HEATMAP_TOP_K = 10
         FROM rets a JOIN rets b ON a.date = b.date AND a.symbol < b.symbol
         GROUP BY a.symbol, b.symbol
         HAVING abs(floor(coalesce(corr(a.ret, b.ret), 0.0) * 10000 + 0.5))
-               >= {HEATMAP_MIN_ABS_CORR} * 10000
+               >= {similarity.HEATMAP_MIN_ABS_CORR} * 10000
     ),
     directed AS (
         SELECT psym_a AS sym, psym_b AS other, pearson, n_points FROM pairs
@@ -742,22 +730,19 @@ HEATMAP_TOP_K = 10
     SELECT least(sym, other) AS sym_a, greatest(sym, other) AS sym_b,
            floor(max(pearson) * 10000 + 0.5) / 10000.0 AS pearson,
            CAST(max(n_points) AS BIGINT) AS n_points
-    FROM ranked WHERE r <= {HEATMAP_TOP_K}
+    FROM ranked WHERE r <= {similarity.HEATMAP_TOP_K}
     GROUP BY 1, 2""",
     "J5 all-pairs Pearson heatmap (app.py:322-353), REGISTERED as its 100×-"
-    "safe emission: blocked-matrix plan (B(B+1)/2 BLAS tasks, no shuffled "
-    "pair rows) with |corr| ≥ τ and per-symbol top-k kNN sparsification "
+    "safe emission: blocked-matrix plan (one returns pass, one pack, "
+    "B(B+1)/2 block-pair BLAS steps dealt round-robin, no shuffled pair "
+    "rows) with |corr| ≥ τ and per-symbol top-k kNN sparsification "
     "applied INSIDE the block task, so output is linear in symbols instead "
-    "of k² pair rows. Full-emission and date-join variants live on as "
-    "library paths with tests pinning their equality; pinned at 4 decimals "
-    "(one-pass matrix stats vs streaming corr ~1e-9)",
+    "of k² pair rows. Tests pin it to the date-join heatmap's τ/top-k "
+    "selection; pinned at 4 decimals (one-pass matrix stats vs streaming "
+    "corr ~1e-9)",
 )
 def q_heatmap(spark, sf_dir):
-    out = similarity.correlation_heatmap_blocked(
-        session_bars(spark, sf_dir),
-        min_abs_corr=HEATMAP_MIN_ABS_CORR,
-        top_k_per_symbol=HEATMAP_TOP_K,
-    )
+    out = similarity.correlation_heatmap_blocked(session_bars(spark, sf_dir))
     return out.select(
         "sym_a",
         "sym_b",

@@ -19,7 +19,9 @@ Scale design:
   date, partial aggs map-side. For the all-pairs heatmap the join
   explodes each date across symbol pairs; with k symbols and n days
   that's O(n·k²) rows streamed through one aggregation — distributed,
-  no driver materialization.
+  no driver materialization. The registered heatmap instead runs
+  blocked matrix products over packed per-block returns and emits a
+  τ/top-k sparsified pair set (`correlation_heatmap_blocked`).
 - DTW is inherently per-pair DP: series are gathered with
   `collect_list` (bounded: one row per trading day per symbol), pairs
   formed by a broadcast-able self-join, DP executed in an Arrow-batched
@@ -132,36 +134,21 @@ def per_symbol_returns(bars: DataFrame) -> DataFrame:
     )
 
 
-def correlation_heatmap(bars: DataFrame, salt_buckets: int = 1) -> DataFrame:
+def correlation_heatmap(bars: DataFrame) -> DataFrame:
     """J5: Pearson correlation for every unordered symbol pair (a < b).
 
     Upper triangle only — the reference's symmetry optimization
     (`app.py:344-346`) kept as a query-shape choice; mirror at the edge
     if a full matrix is needed. Returns are joined on date so only
-    co-traded days feed each pair's correlation.
-
-    The date join's key cardinality is the number of TRADING DAYS, so
-    the join parallelizes into at most #dates expansion tasks. On real
-    corpora (years → thousands of days) that exceeds any executor
-    count and no salting is needed — but when cores >> days (wide
-    cluster, short window), set `salt_buckets` ≈ cores/days: the
-    a-side carries pmod(sym_a, G), the b-side replicates once per
-    bucket (|returns| × G rows — trivial next to the join output) and
-    every date splits into G balanced tasks. Default 1 (off): salting
-    replicates b-side sort cost, a measured net loss whenever the date
-    count already covers the cores (local[32] on the 30-day corpus:
-    596 s unsalted vs 820 s salted at 10x).
+    co-traded days feed each pair's correlation. The date join shuffles
+    O(pairs × shared days) rows: the small-corpus path (`/api/heatmap`,
+    the DTW prefilter) and the reference `correlation_heatmap_blocked`
+    is tested against.
     """
     rets = per_symbol_returns(bars)
-    a = rets.select(
-        F.col("symbol").alias("sym_a"), "date", F.col("ret").alias("ret_a")
-    ).withColumn("_g", F.pmod(F.col("sym_a"), F.lit(salt_buckets)))
-    b = rets.select(
-        F.col("symbol").alias("sym_b"), "date", F.col("ret").alias("ret_b")
-    ).withColumn(
-        "_g", F.explode(F.array(*[F.lit(g) for g in range(salt_buckets)]))
-    )
-    joined = a.join(b, ["date", "_g"]).filter(F.col("sym_a") < F.col("sym_b"))
+    a = rets.select(F.col("symbol").alias("sym_a"), "date", F.col("ret").alias("ret_a"))
+    b = rets.select(F.col("symbol").alias("sym_b"), "date", F.col("ret").alias("ret_b"))
+    joined = a.join(b, "date").filter(F.col("sym_a") < F.col("sym_b"))
     return (
         joined.groupBy("sym_a", "sym_b")
         .agg(
@@ -177,171 +164,143 @@ def correlation_heatmap(bars: DataFrame, salt_buckets: int = 1) -> DataFrame:
     )
 
 
-def correlation_heatmap_blocked(
-    bars: DataFrame,
-    n_blocks: int | None = None,
-    max_block_symbols: int = 1500,
-    min_abs_corr: float | None = None,
-    top_k_per_symbol: int | None = None,
-) -> DataFrame:
-    """J5 at scale: the SAME pairwise-correlation semantics as
-    `correlation_heatmap` (per-pair stats over co-traded return days
-    only), computed as blocked matrix products instead of a date-join.
+# Emission of the blocked heatmap, read by the registered query and its
+# DuckDB oracle: keep a pair iff |corr| >= τ and it is in either
+# endpoint's top-k by (corr desc, partner asc). Both decisions are made
+# on the 4-decimal grain floor(corr·1e4 + 0.5), pure IEEE ops that are
+# bit-identical in NumPy, Spark and DuckDB: the raw rank-boundary gap
+# at the 10× corpus shrank below the ~1e-9 one-pass/streaming corr
+# divergence, while on the grain a boundary is an exact tie (broken by
+# partner id) or ≥ 1e-4 apart.
+HEATMAP_MIN_ABS_CORR = 0.25
+HEATMAP_TOP_K = 10
+# Block sizing: per-task memory is O(s² + s·D) for s symbols per block
+# (six s×s statistic matrices per block pair), so the block count grows
+# with the symbol count (45k symbols at B=8 once took ~1.5 GB per task).
+_BLOCK_SYMBOLS = 1500
+_MIN_BLOCKS = 8
 
-    The relational heatmap shuffles O(pairs × shared-days) rows — at
-    10× symbols that is 100× pairs and it dominates the whole bench
-    suite. Here each of B symbol blocks packs its returns into a dense
-    (k_b × D) matrix + presence mask (D = calendar days, bounded);
-    every block PAIR is one Arrow task computing the six per-pair
-    sufficient statistics (n, Σx, Σy, Σxy, Σx², Σy²) as NumPy/BLAS
-    matmuls of masked matrices — O(k² · D) FLOPs with no shuffled pair
-    rows at all. Work distributes over B(B+1)/2 independent tasks.
 
-    Emission control — the 100× story. The compute is inherently
-    O(k²·D) dense FLOPs, but EMITTING all k² pairs is the residual
-    scale-killer (30× symbols = 900× result rows); both knobs filter
-    INSIDE the block task before any row exists:
-    - `min_abs_corr`: drop pairs with |corr| < τ (constant-factor cut);
-    - `top_k_per_symbol`: kNN-sparsify the correlation graph — keep a
-      pair iff it is in EITHER endpoint's top-k by (corr desc, id asc).
-      Blocks emit per-symbol partial top-k (≤ k rows per symbol per
-      block pair, the classic distributed-top-k shape), a final window
-      picks the global top-k, and output is linear in symbols (k·K
-      unordered pairs) at ANY scale.
+def _on_days(x, m, days, own):
+    """Widen a block's (k × |own|) returns and mask onto the `days` axis."""
+    import numpy as np
 
-    Fully lazy: constructing the returned DataFrame launches ZERO Spark
-    jobs. The calendar column index and the day/symbol counts are
-    computed INSIDE the job — distinct dates get a dense rank (bounded
-    |trading days| set, deliberate single-partition window) joined back
-    onto the returns, and a broadcast one-row meta aggregate supplies
-    D and (when `n_blocks` is None) the block count as plan expressions
-    (per-task memory is O((k/B)²+(k/B)·D), so B must grow with the
-    symbol count). Float caveat: the one-pass formula here and the
-    two-pass streaming `corr` agree to ~1e-9 on return-scale data;
-    callers comparing across engines should round (the registered query
-    pins 4 decimals) and keep thresholds ≳1e-6 away from the data's
-    corr values (pinned for the registered τ/k by a margin test).
+    cols = np.searchsorted(days, own)
+    wx = np.zeros((x.shape[0], len(days)))
+    wm = np.zeros_like(wx)
+    wx[:, cols] = x
+    wm[:, cols] = m
+    return wx, wm
+
+
+def correlation_heatmap_blocked(bars: DataFrame) -> DataFrame:
+    """J5 at scale: `correlation_heatmap`'s per-pair statistics over
+    co-traded return days, computed as blocked matrix products and
+    emitted sparsified (`HEATMAP_MIN_ABS_CORR`, `HEATMAP_TOP_K`).
+
+    Plan, with the returns window and the pack each run once:
+    - B blocks by pmod(symbol, B), B = max(_MIN_BLOCKS, ⌈symbols /
+      _BLOCK_SYMBOLS⌉) from one broadcast row. The symbols are counted
+      on the bars with one HyperLogLog aggregate (one stage, ~2 % error),
+      so sizing needs no second returns pass and no distinct shuffle.
+      B only sizes blocks; it never changes the result.
+    - `pack` turns each block's returns into a dense (k_b × D_b) matrix
+      plus presence mask over the block's own sorted trading days
+      (`unix_date`), shipped as packed bytes (zero-copy on both sides
+      of Arrow).
+    - The B(B+1)/2 block-pair ids come from the same broadcast row and
+      are dealt round-robin over `defaultParallelism` partitions, then
+      joined to the packed blocks twice through one reused broadcast.
+      Each pair row is one matmul step in NumPy: the six sufficient
+      statistics (n, Σx, Σy, Σxy, Σx², Σy²) over the union of the two
+      day axes, τ, then a per-symbol partial top-k. A global top-k
+      partner is necessarily in its block-pair partial, so a final
+      window picks the global top-k and the output is linear in symbols.
+
+    Round-robin over a single-partition pair list gives every BLAS task
+    ⌊P/n⌋ or ⌈P/n⌉ pairs of equal cost, and B is raised until P ≥ n, so
+    no Python task gets an empty partition and no core idles. AQE does
+    not coalesce a numbered repartition: coalescing by bytes starved
+    this stage 15-wide on 32 cores at the 100× corpus, since block rows
+    are small in bytes and heavy in compute. Only pair ids are
+    shuffled; block bytes travel in the broadcast (≈ the packed returns
+    matrix, fine into the hundreds of MB).
+
+    Fully lazy: constructing the DataFrame launches zero Spark jobs.
+    Float caveat: the one-pass formula and a two-pass streaming `corr`
+    agree to ~1e-9, which the emission grain absorbs.
     """
     import numpy as np
 
-    rets = per_symbol_returns(bars)
-    # one broadcast row: D (matrix width) and the symbol count that
-    # sizes B when the caller didn't pin it. Per-task memory is
-    # O((k/B)² + (k/B)·D): the six sufficient-statistic matrices of a
-    # block PAIR are (k/B)² doubles each, so B must grow with the
-    # symbol count or a 30x corpus OOMs the executor (observed: 45k
-    # symbols at B=8 → 5.6k×5.6k×6 matrices ≈ 1.5 GB per task × one
-    # per core). Bounding block size keeps per-task footprint ~100 MB
-    # at any scale; task count grows B(B+1)/2, which is what a cluster
-    # wants anyway.
-    meta = rets.agg(
-        F.count_distinct(F.col("date")).cast("int").alias("_ndays"),
-        F.count_distinct(F.col("symbol")).alias("_nsyms"),
+    k, tau_q = HEATMAP_TOP_K, HEATMAP_MIN_ABS_CORR * 10000.0
+    n_par = bars.sparkSession.sparkContext.defaultParallelism
+    min_blocks = _MIN_BLOCKS
+    while min_blocks * (min_blocks + 1) // 2 < n_par:
+        min_blocks += 1
+    meta = bars.filter(_valid_price("close")).agg(
+        F.greatest(
+            F.lit(min_blocks),
+            F.ceil(F.approx_count_distinct("symbol") / F.lit(_BLOCK_SYMBOLS)).cast("int"),
+        ).alias("n_blocks")
     )
-    date_idx = rets.select("date").distinct().select(
-        "date",
-        (
-            F.row_number().over(
-                Window.partitionBy(one_partition(F.col("date"))).orderBy("date")
-            )
-            - 1
-        ).alias("_didx"),
-    )
-    block_expr = (
-        F.lit(n_blocks)
-        if n_blocks is not None
-        else F.greatest(
-            F.lit(8),
-            F.ceil(F.col("_nsyms") / F.lit(max_block_symbols)).cast("int"),
-        )
-    )
-    indexed = (
-        rets.join(date_idx, "date")
-        .crossJoin(F.broadcast(meta))
-        .withColumn("block", F.pmod(F.col("symbol"), block_expr))
+    keyed = per_symbol_returns(bars).crossJoin(F.broadcast(meta)).select(
+        F.pmod(F.col("symbol"), F.col("n_blocks")).cast("int").alias("block"),
+        "symbol",
+        F.unix_date("date").alias("day"),
+        "ret",
     )
 
-    # matrices travel as PACKED BYTES, not array<double>: a block row
-    # is ~(k/B)·D·8 bytes and crosses the join B times, so per-element
-    # list boxing (array<double> → Python list → np.asarray) dominated
-    # the task time at the 30× corpus; tobytes/frombuffer is zero-copy
-    # on both sides of Arrow
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        n_days = int(pdf["_ndays"].iloc[0])
-        syms = np.sort(pdf["symbol"].unique())
-        srow = {s: i for i, s in enumerate(syms)}
-        x = np.zeros((len(syms), n_days))
-        m = np.zeros((len(syms), n_days))
-        rows = pdf["symbol"].map(srow).to_numpy()
-        cols = pdf["_didx"].to_numpy()
+        syms, rows = np.unique(pdf["symbol"].to_numpy(), return_inverse=True)
+        days, cols = np.unique(pdf["day"].to_numpy(), return_inverse=True)
+        x = np.zeros((len(syms), len(days)))
+        m = np.zeros_like(x)
         x[rows, cols] = pdf["ret"].to_numpy()
         m[rows, cols] = 1.0
         return pd.DataFrame(
             {
                 "block": [int(pdf["block"].iloc[0])],
-                "ndays": [n_days],
-                "syms": [np.asarray(syms, "int64").tobytes()],
+                "syms": [syms.astype("int64").tobytes()],
+                "days": [days.astype("int32").tobytes()],
                 "x": [x.tobytes()],
                 "m": [m.tobytes()],
             }
         )
 
-    blocks = indexed.groupBy("block").applyInPandas(
-        pack,
-        schema="block int, ndays int, syms binary, x binary, m binary",
+    blocks = keyed.groupBy("block").applyInPandas(
+        pack, schema="block int, syms binary, days binary, x binary, m binary"
     )
-    # The BLAS stage's parallelism is the a-side partition count of the
-    # broadcast-NL join: block rows are small in BYTES (~MB) but huge
-    # in downstream COMPUTE, so AQE's size-based partition coalescing
-    # starves the stage (measured 15-wide on 32 cores at the 100×
-    # corpus, with a straggler). An explicit-numPartitions repartition
-    # is exempt from AQE coalescing and hash-averages the triangle
-    # skew (block i pairs with B−i partners) across cores; it only
-    # moves the B block rows, not pair rows. The b-side is broadcast
-    # explicitly — at B blocks that is B×(k/B)×D×16 bytes ≈ the packed
-    # returns matrix itself, fine into the hundreds of MB; a corpus
-    # wide enough to break the broadcast is already an O(B²) all-pairs
-    # job that belongs on the kNN/thresholded emission path anyway.
-    # 3× oversubscription: ~1 block per partition at B ≈ 3·cores, so
-    # the tail is one block's pair list, not a hash-unlucky clump.
-    # No materialization of the packed blocks, DELIBERATELY: a lazy
-    # localCheckpoint of an applyInPandas plan launches jobs at
-    # CONSTRUCTION time (breaking the zero-jobs-until-action contract
-    # test_plans pins), and Dataset persist() parks the multi-GB block
-    # cache in the CacheManager until session end. The b-side therefore
-    # recomputes the scan+pack subtree — measured immaterial next to
-    # the BLAS stage (30×: 38.5 s here vs 39.8 s with an eager-ish
-    # checkpoint; 100×: 214.6 s vs 231 s), because pack is one linear
-    # pass while the pair stage is O(B²) matmuls.
-    n_par = 3 * bars.sparkSession.sparkContext.defaultParallelism
-    packed = blocks.repartition(n_par, "block")
-    # Rename-only projections of the same column set keep the two
-    # exchange subtrees canonically equal, which leaves Catalyst the
-    # OPTION of exchange reuse (observed plans don't take it today —
-    # the b-side sits under a BroadcastExchange — but a narrower b-side
-    # projection would foreclose it for free ndb bytes saved).
-    a = packed.select(
-        F.col("block").alias("ba"), F.col("ndays").alias("nd"),
-        F.col("syms").alias("sa"),
-        F.col("x").alias("xa"), F.col("m").alias("ma"),
+    last = F.col("n_blocks") - 1
+    pairs = (
+        meta.select(F.explode(F.sequence(F.lit(0), last)).alias("ba"), "n_blocks")
+        .select("ba", F.explode(F.sequence("ba", last)).alias("bb"))
+        .repartition(n_par)
     )
-    b = packed.select(
-        F.col("block").alias("bb"), F.col("ndays").alias("ndb"),
-        F.col("syms").alias("sb"),
-        F.col("x").alias("xb"), F.col("m").alias("mb"),
+
+    # rename-only projections keep both broadcast subtrees canonically
+    # equal, so the second is a reused exchange and pack runs once
+    def side(s: str) -> DataFrame:
+        return F.broadcast(blocks.select([F.col(c).alias(c + s) for c in blocks.columns]))
+
+    joined = pairs.join(side("_a"), F.col("ba") == F.col("block_a")).join(
+        side("_b"), F.col("bb") == F.col("block_b")
     )
-    joined = a.join(F.broadcast(b), F.col("ba") <= F.col("bb"))
 
     def corr_blocks(batches):
         for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                n_days = int(row.nd)
-                sa = np.frombuffer(row.sa, "int64")
-                sb = np.frombuffer(row.sb, "int64")
-                xa = np.frombuffer(row.xa).reshape(len(sa), n_days)
-                ma = np.frombuffer(row.ma).reshape(len(sa), n_days)
-                xb = np.frombuffer(row.xb).reshape(len(sb), n_days)
-                mb = np.frombuffer(row.mb).reshape(len(sb), n_days)
+            for r in pdf.itertuples(index=False):
+                sa = np.frombuffer(r.syms_a, "int64")
+                sb = np.frombuffer(r.syms_b, "int64")
+                da = np.frombuffer(r.days_a, "int32")
+                db = np.frombuffer(r.days_b, "int32")
+                xa = np.frombuffer(r.x_a).reshape(len(sa), len(da))
+                ma = np.frombuffer(r.m_a).reshape(len(sa), len(da))
+                xb = np.frombuffer(r.x_b).reshape(len(sb), len(db))
+                mb = np.frombuffer(r.m_b).reshape(len(sb), len(db))
+                if not np.array_equal(da, db):
+                    days = np.union1d(da, db)
+                    xa, ma = _on_days(xa, ma, days, da)
+                    xb, mb = _on_days(xb, mb, days, db)
                 n = ma @ mb.T
                 sx = xa @ mb.T
                 sy = ma @ xb.T
@@ -349,99 +308,48 @@ def correlation_heatmap_blocked(
                 sxx = (xa * xa) @ mb.T
                 syy = ma @ (xb * xb).T
                 with np.errstate(invalid="ignore", divide="ignore"):
-                    cov = sxy - sx * sy / np.where(n > 0, n, 1)
-                    vx = sxx - sx * sx / np.where(n > 0, n, 1)
-                    vy = syy - sy * sy / np.where(n > 0, n, 1)
-                    denom = np.sqrt(vx * vy)
+                    nn = np.where(n > 0, n, 1)
+                    cov = sxy - sx * sy / nn
+                    denom = np.sqrt((sxx - sx * sx / nn) * (syy - sy * sy / nn))
                     corr = np.where(denom > 0, cov / np.where(denom > 0, denom, 1), 0.0)
                 ia, jb = np.nonzero(n > 0)
-                if row.ba == row.bb:
-                    keep = sa[ia] < sb[jb]
-                else:
-                    keep = np.ones(len(ia), dtype=bool)
-                if min_abs_corr is not None:
-                    # threshold on the 4-decimal EMISSION grain (same
-                    # quantization as the ranking below): the raw
-                    # one-pass corr differs from a streaming corr by
-                    # ~1e-9, so any comparison that decides emission
-                    # must happen on a grain both engines agree on.
-                    # The quantizer is floor(p*1e4 + 0.5) — pure IEEE
-                    # ops, BIT-IDENTICAL in numpy, Spark, and DuckDB.
-                    # np.round (half-even on the binary double) vs
-                    # Spark F.round (HALF_UP on the shortest decimal
-                    # repr) vs DuckDB round are THREE implementations
-                    # that disagree on exact .xxxx5 doubles; one shared
-                    # formula removes that divergence class entirely.
-                    keep &= (
-                        np.abs(
-                            np.floor(
-                                np.nan_to_num(corr[ia, jb]) * 10000.0 + 0.5
-                            )
-                        )
-                        >= min_abs_corr * 10000.0
-                    )
-                ia, jb = ia[keep], jb[keep]
                 pear = np.nan_to_num(corr[ia, jb])
+                pq = np.floor(pear * 10000.0 + 0.5)
+                keep = np.abs(pq) >= tau_q
+                if r.ba == r.bb:
+                    keep &= sa[ia] < sb[jb]
+                ia, jb, pear, pq = ia[keep], jb[keep], pear[keep], pq[keep]
                 npts = n[ia, jb].astype(np.int64)
-                if top_k_per_symbol is None:
-                    lo = np.minimum(sa[ia], sb[jb])
-                    hi = np.maximum(sa[ia], sb[jb])
-                    yield pd.DataFrame(
-                        {
-                            "sym_a": lo,
-                            "sym_b": hi,
-                            "pearson": pear,
-                            "n_points": npts,
-                        }
-                    )
-                    continue
-                # per-symbol PARTIAL top-k within this block pair: emit
-                # both directions, sort by the global order (QUANTIZED
-                # corr desc, partner asc), keep k per symbol — any
-                # global top-k partner is necessarily in its block-pair
-                # partial. Ranking on the 4-decimal emission grain
-                # (r9): at the 10x corpus the raw rank-boundary gap
-                # shrank below the ~1e-9 one-pass/streaming corr
-                # divergence and engines disagreed on which pair made
-                # a symbol's top-k; on the quantized grain the gap is
-                # either exactly 0 (tie, broken by partner id) or
-                # >= 1e-4 — decidable by any engine.
-                part = pd.DataFrame(
+                # both directions, ordered by (sym, corr desc, partner
+                # asc) on the emission grain; keep each sym's first k
+                sym = np.concatenate([sa[ia], sb[jb]])
+                other = np.concatenate([sb[jb], sa[ia]])
+                order = np.lexsort((other, -np.concatenate([pq, pq]), sym))
+                s = sym[order]
+                pos = np.arange(len(s))
+                starts = np.ones(len(s), dtype=bool)
+                starts[1:] = s[1:] != s[:-1]
+                rank = pos - np.maximum.accumulate(np.where(starts, pos, 0))
+                top = order[rank < k]
+                yield pd.DataFrame(
                     {
-                        "sym": np.concatenate([sa[ia], sb[jb]]),
-                        "other": np.concatenate([sb[jb], sa[ia]]),
-                        "pearson": np.concatenate([pear, pear]),
-                        "n_points": np.concatenate([npts, npts]),
+                        "sym": sym[top],
+                        "other": other[top],
+                        "pearson": np.concatenate([pear, pear])[top],
+                        "n_points": np.concatenate([npts, npts])[top],
                     }
                 )
-                part["_pq"] = np.floor(part["pearson"] * 10000.0 + 0.5)
-                part = part.sort_values(
-                    ["sym", "_pq", "other"], ascending=[True, False, True]
-                )
-                yield part.groupby("sym", sort=False).head(
-                    top_k_per_symbol
-                ).drop(columns="_pq")
 
-    if top_k_per_symbol is None:
-        return joined.mapInPandas(
-            corr_blocks,
-            schema="sym_a long, sym_b long, pearson double, n_points long",
-        )
     directed = joined.mapInPandas(
-        corr_blocks,
-        schema="sym long, other long, pearson double, n_points long",
+        corr_blocks, schema="sym long, other long, pearson double, n_points long"
     )
-    # final rank on the same quantized grain as the block partials —
-    # the shared floor(p*1e4 + 0.5) quantizer, see the note inside
-    # corr_blocks (F.round would be a DIFFERENT rounding than the
-    # numpy partial's on exact .xxxx5 doubles)
     w = Window.partitionBy("sym").orderBy(
         F.floor(F.col("pearson") * 10000 + F.lit(0.5)).desc(),
         F.col("other").asc(),
     )
     survivors = (
         directed.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= top_k_per_symbol)
+        .filter(F.col("_r") <= k)
         .drop("_r")
     )
     # a pair kept from both endpoints appears twice (identical stats):

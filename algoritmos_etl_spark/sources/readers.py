@@ -10,9 +10,9 @@ splittable, predicate-pushdown-able — which is what you want at 100 TB.
 Scale notes:
 - Explicit schemas everywhere: schema inference is an extra full pass at
   cluster scale and non-deterministic under schema drift.
-- `events.parquet` carries TIMESTAMP(NANOS) which Spark's parquet reader
-  rejects; we read it as raw nanos (``nanosAsLong``) and convert to
-  microsecond TimestampType in one JVM-side expression — no Python.
+- `events.parquet` may carry TIMESTAMP(NANOS), which Spark's parquet
+  reader rejects; we read it as raw nanos (``nanosAsLong``) and convert
+  to microsecond TimestampType in one JVM-side expression — no Python.
 """
 
 from __future__ import annotations
@@ -20,26 +20,60 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# The fixture tables' schemas (TESTDATA.md), equal to what Spark infers
+# from the parquet footers at every scale (pinned by
+# `test_sources.py::test_pinned_schemas_match_inferred`). Reading with
+# them skips the footer-inference job `spark.read.parquet` runs per call.
+SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+    "event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+TABLE_NAMES = tuple(SCHEMAS)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table; `events` gets its nanos→µs timestamp repair."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Load one test table with its pinned schema; `events` gets its
+    nanos→µs timestamp repair."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = SCHEMAS[name]
+    if name == "events" and _stores_nanos(spark, path, "ts"):
+        schema = schema.replace("ts timestamp_ntz", "ts bigint")
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
         df = with_event_time(df)
     return df
+
+
+def _stores_nanos(spark: SparkSession, path: str, column: str) -> bool:
+    """Whether `column` is TIMESTAMP(NANOS), which `nanosAsLong` reads as
+    bigint. One testdata generation stores `events.ts` that way, another
+    as µs. Reads the footer through the JVM's parquet reader: no Spark
+    job and no Python parquet import."""
+    jvm = spark._jvm
+    hadoop_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsc.hadoopConfiguration()
+    )
+    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(hadoop_file)
+    try:
+        field = reader.getFooter().getFileMetaData().getSchema().getType(column)
+    finally:
+        reader.close()
+    return "NANOS" in str(field.getLogicalTypeAnnotation())
 
 
 def with_event_time(events: DataFrame) -> DataFrame:

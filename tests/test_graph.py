@@ -166,6 +166,17 @@ def test_graph_query_construction_is_constant(spark, name):
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
+def test_textrank_warm_build_launches_no_jobs(spark):
+    """With the input read through a pinned schema (no footer-inference
+    job), a warm build of the registered query is pure construction."""
+    from algoritmos_etl_spark.driver_queries import REGISTRY
+
+    build = REGISTRY["textrank_keywords"].build
+    build(spark, SF_DIR)
+    _, jobs = _jobs_of(spark, "textrank-warm-build", lambda: build(spark, SF_DIR))
+    assert jobs == 0
+
+
 def test_textrank_keywords_shape(spark, tables):
     out = graph.textrank_keywords(tables["documents"], top_k=10).collect()
     assert len(out) == 10

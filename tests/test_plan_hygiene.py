@@ -28,7 +28,7 @@ CROSS_OK = {
     "risk_summary": "per-symbol rows × 1-row percentile thresholds",
     "dtw_report": "array-packed series rows capped at 100 symbols (distance "
     "arm) + two single-series rows for one pair (path arm)",
-    "correlation_heatmap": "B(B+1)/2 block-pair rows, B bounded by symbol target",
+    "correlation_heatmap": "returns × the 1-row block-count broadcast",
     "align_to_calendar": "calendar × symbol dimension grid (both bounded dims)",
     "interpolated_bars": "same calendar × symbol dimension grid",
     "price_quantiles": "4-quantile literal array exploded against the "

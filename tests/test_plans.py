@@ -10,7 +10,11 @@ executors — so it gets its own tests.
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from pyspark.sql import functions as F
 
@@ -107,12 +111,87 @@ def test_heatmap_construction_launches_no_jobs(spark):
     bars = daily_bars(load_table(spark, SF_DIR, "events"))
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    df = similarity.correlation_heatmap_blocked(
-        bars, min_abs_corr=0.25, top_k_per_symbol=10
-    )
+    df = similarity.correlation_heatmap_blocked(bars)
     assert df.columns == ["sym_a", "sym_b", "pearson", "n_points"]
     after = set(tracker.getJobIdsForGroup(None))
     assert after == before, "heatmap construction launched Spark jobs"
+
+
+def _no_ids(plan: str) -> str:
+    return re.sub(r"#\d+|plan_id=\d+", "", plan)
+
+
+def test_heatmap_plan_is_stable_and_shares_returns_and_pack(spark):
+    """Two builds of the registered heatmap plan identically (a
+    multi-distinct aggregate's Expand would order its projections by
+    expression id), and the executed plan runs the per-symbol returns
+    window and the pack once each: every other consumer reads a reused
+    exchange."""
+    from algoritmos_etl_spark.driver_queries import REGISTRY
+
+    build = REGISTRY["correlation_heatmap"].build
+    first, second = build(spark, SF_DIR), build(spark, SF_DIR)
+    assert _no_ids(_plan(first)) == _no_ids(_plan(second))
+    second.collect()
+    final = _plan(second)
+    assert "isFinalPlan=true" in final
+    final = final.split("== Initial Plan ==")[0]
+    returns_windows = re.findall(r"Window \[.*windowspecdefinition\(symbol#", final)
+    assert len(returns_windows) == 1, final
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+
+
+def _python_stage_task_reads(spark, group: str) -> dict[int, list[int]]:
+    """Shuffle records read by each task of every stage of the job group
+    that runs a Python operator, from the status store's stage graph."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    out = {}
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            try:
+                data = store.lastStageAttempt(stage)
+            except Py4JJavaError:  # a skipped stage: the store evicts those first
+                continue
+            if data.status().toString() == "SKIPPED":
+                continue
+            names, todo = [], [store.operationGraphForStage(stage).rootCluster()]
+            while todo:
+                cluster = todo.pop()
+                names.append(cluster.name())
+                kids = cluster.childClusters()
+                todo.extend(kids.apply(i) for i in range(kids.size()))
+            if not any("Pandas" in n or "Python" in n or "Arrow" in n for n in names):
+                continue
+            tasks = store.taskList(stage, data.attemptId(), 10_000)
+            out[stage] = [
+                tasks.apply(i).taskMetrics().get().shuffleReadMetrics().recordsRead()
+                for i in range(tasks.size())
+            ]
+    return out
+
+
+def test_heatmap_python_tasks_never_read_empty_partitions(spark):
+    """No Python stage of a warm heatmap collect at sf0.01 runs a task
+    over an empty partition (each such task still pays a Python worker
+    round trip): the pack reads an AQE-coalesced shuffle and the BLAS
+    side deals its block pairs round-robin."""
+    from algoritmos_etl_spark.driver_queries import REGISTRY
+
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    build = REGISTRY["correlation_heatmap"].build
+    build(spark, sf01).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("heatmap-warm", "heatmap-warm")
+    try:
+        build(spark, sf01).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    reads = _python_stage_task_reads(spark, "heatmap-warm")
+    assert all(n > 0 for tasks in reads.values() for n in tasks), reads
+    assert len(reads) == 2, reads  # pack, BLAS
 
 
 def test_filter_pushdown_reaches_scan(tables):

@@ -9,6 +9,7 @@ tested through `dtw_pairs(use_returns=False)` and a direct agg.
 
 import datetime
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -165,22 +166,54 @@ def test_aligned_pairs_bounded_for_global_window(bars):
     assert aligned.count() <= bars.select("date").distinct().count()
 
 
-def test_blocked_heatmap_matches_relational(bars):
-    """The blocked-matrix heatmap must reproduce the date-join heatmap
-    exactly: same pair set, same n_points, pearson to 1e-6."""
+def _relational_emission(bars):
+    """The registered heatmap's emission, selected in Python from the
+    date-join heatmap: |corr| >= τ, then keep a pair iff it is in either
+    endpoint's top-k by (corr desc, partner asc). Both decisions on the
+    4-decimal grain, as in the blocked plan. Returns (selection, all
+    relational pairs)."""
+    from collections import defaultdict
+
+    tau, k = similarity.HEATMAP_MIN_ABS_CORR, similarity.HEATMAP_TOP_K
     rel = {
         (r.sym_a, r.sym_b): (r.pearson, r.n_points)
         for r in similarity.correlation_heatmap(bars).collect()
     }
+    neighbors = defaultdict(list)
+    for (a, b), (p, n) in rel.items():
+        pq = math.floor(p * 10000.0 + 0.5)
+        if abs(pq) >= tau * 10000.0:
+            neighbors[a].append((pq, b))
+            neighbors[b].append((pq, a))
+    expected = set()
+    for s, lst in neighbors.items():
+        lst.sort(key=lambda t: (-t[0], t[1]))
+        for p, o in lst[:k]:
+            expected.add((min(s, o), max(s, o)))
+    return expected, rel
+
+
+def _assert_blocked_equals_relational(bars):
+    expected, rel = _relational_emission(bars)
     blk = {
         (r.sym_a, r.sym_b): (r.pearson, r.n_points)
-        for r in similarity.correlation_heatmap_blocked(bars, n_blocks=4).collect()
+        for r in similarity.correlation_heatmap_blocked(bars).collect()
     }
-    assert blk.keys() == rel.keys()
-    for pair, (p_rel, n_rel) in rel.items():
-        p_blk, n_blk = blk[pair]
+    assert expected, "fixture selects no pair: the comparison is vacuous"
+    assert set(blk) == expected
+    for pair, (p_blk, n_blk) in blk.items():
+        p_rel, n_rel = rel[pair]
         assert n_blk == n_rel, pair
         assert p_blk == pytest.approx(p_rel, abs=1e-6), pair
+    return blk, rel
+
+
+def test_blocked_heatmap_matches_relational(bars):
+    """The blocked-matrix heatmap reproduces the date-join heatmap's
+    τ/top-k selection: same pair set, same n_points, pearson to 1e-6.
+    At sf0.001 each block trades on its own set of days, so the pair
+    tasks align differing day axes."""
+    _assert_blocked_equals_relational(bars)
 
 
 def test_heatmap_matches_pairwise_corr(bars):
@@ -201,57 +234,43 @@ def test_heatmap_matches_pairwise_corr(bars):
     assert some["pearson"] == pytest.approx(expect if expect is not None else 0.0, abs=1e-9)
 
 
-def test_heatmap_salted_equals_unsalted(bars):
-    """salt_buckets only re-partitions the pair expansion — the result
-    set must be identical to the unsalted join."""
-    base = similarity.correlation_heatmap(bars)
-    salted = similarity.correlation_heatmap(bars, salt_buckets=5)
-    assert base.exceptAll(salted).isEmpty()
-    assert salted.exceptAll(base).isEmpty()
+def test_blocked_heatmap_sparsified_emission(spark):
+    """At sf0.01 (150 symbols) the top-k cut binds: the emission is the
+    relational τ/top-k selection, strictly fewer pairs than pass τ."""
+    from algoritmos_etl_spark.driver_queries import session_bars
+
+    from conftest import SF_DIR
+
+    bars01 = session_bars(spark, os.path.join(os.path.dirname(SF_DIR), "sf0.01"))
+    blk, rel = _assert_blocked_equals_relational(bars01)
+    tau = similarity.HEATMAP_MIN_ABS_CORR
+    over_tau = sum(abs(math.floor(p * 1e4 + 0.5)) >= tau * 1e4 for p, _ in rel.values())
+    assert len(blk) < over_tau
+    per_sym = {}
+    for a, b in blk:
+        per_sym[a] = per_sym.get(a, 0) + 1
+        per_sym[b] = per_sym.get(b, 0) + 1
+    assert max(per_sym.values()) > similarity.HEATMAP_TOP_K  # kept from the other end
 
 
-def test_blocked_heatmap_sparsified_emission(bars):
-    """min_abs_corr + top_k_per_symbol must equal the same selection
-    computed from the FULL heatmap: |corr| >= τ, then keep a pair iff
-    it is in either endpoint's top-k by (corr desc, partner asc)."""
-    from collections import defaultdict
+def test_blocked_heatmap_calendar_gaps(spark):
+    """Symbols whose blocks trade on different days (each block skips
+    its own days, each symbol a few more) give the relational pairs."""
+    import random
 
-    from algoritmos_etl_spark.driver_queries import (
-        HEATMAP_MIN_ABS_CORR,
-        HEATMAP_TOP_K,
-    )
-
-    tau, k = HEATMAP_MIN_ABS_CORR, HEATMAP_TOP_K
-    full = {
-        (r.sym_a, r.sym_b): (r.pearson, r.n_points)
-        for r in similarity.correlation_heatmap_blocked(bars, n_blocks=4).collect()
-    }
-    # the r9 determinism contract: BOTH emission decisions are made on
-    # the 4-decimal quantized grain (a raw-corr rank boundary shrank
-    # below the ~1e-9 cross-engine divergence at the 10x corpus), so
-    # the reference selection quantizes identically
-    neighbors = defaultdict(list)
-    for (a, b), (p, n) in full.items():
-        pq = round(p, 4)
-        if abs(pq) >= tau:
-            neighbors[a].append((pq, b))
-            neighbors[b].append((pq, a))
-    expected = set()
-    for s, lst in neighbors.items():
-        lst.sort(key=lambda t: (-t[0], t[1]))
-        for p, o in lst[:k]:
-            expected.add((min(s, o), max(s, o)))
-
-    sparse = {
-        (r.sym_a, r.sym_b): (r.pearson, r.n_points)
-        for r in similarity.correlation_heatmap_blocked(
-            bars, n_blocks=4, min_abs_corr=tau, top_k_per_symbol=k
-        ).collect()
-    }
-    assert set(sparse) == expected
-    for pair, (p, n) in sparse.items():
-        assert p == pytest.approx(full[pair][0], abs=1e-9), pair
-        assert n == full[pair][1], pair
+    rng = random.Random(7)
+    n_days, n_syms = 40, 24
+    market = [rng.gauss(0, 0.02) for _ in range(n_days)]
+    rows = []
+    for sym in range(n_syms):
+        beta, price = rng.uniform(-1.5, 1.5), 100.0
+        for d in range(n_days):
+            price *= math.exp(beta * market[d] + rng.gauss(0, 0.01))
+            if d % 8 == sym % 8 or rng.random() < 0.1:
+                continue  # the block's own gap day, or a symbol gap
+            rows.append((sym, datetime.date(2024, 1, 1) + datetime.timedelta(d), price))
+    bars = spark.createDataFrame(rows, "symbol long, date date, close double")
+    _assert_blocked_equals_relational(bars)
 
 
 def test_dtw_batch_kernel_matches_per_pair():
