@@ -28,6 +28,7 @@ from . import store
 from .functions.scalars import fixed6, one_partition
 from .sources.readers import ORACLE_BARS_CTE, daily_bars, load_table
 from .operators import cleaning, patterns, relational, similarity, sorting, technical, volatility
+from .operators.similarity import HEATMAP_MIN_ABS_CORR, HEATMAP_TOP_K
 
 SQRT252 = math.sqrt(252.0)
 
@@ -713,7 +714,7 @@ def q_pair_metrics(spark, sf_dir):
         FROM rets a JOIN rets b ON a.date = b.date AND a.symbol < b.symbol
         GROUP BY a.symbol, b.symbol
         HAVING abs(floor(coalesce(corr(a.ret, b.ret), 0.0) * 10000 + 0.5))
-               >= {similarity.HEATMAP_MIN_ABS_CORR} * 10000
+               >= {HEATMAP_MIN_ABS_CORR} * 10000
     ),
     directed AS (
         SELECT psym_a AS sym, psym_b AS other, pearson, n_points FROM pairs
@@ -730,7 +731,7 @@ def q_pair_metrics(spark, sf_dir):
     SELECT least(sym, other) AS sym_a, greatest(sym, other) AS sym_b,
            floor(max(pearson) * 10000 + 0.5) / 10000.0 AS pearson,
            CAST(max(n_points) AS BIGINT) AS n_points
-    FROM ranked WHERE r <= {similarity.HEATMAP_TOP_K}
+    FROM ranked WHERE r <= {HEATMAP_TOP_K}
     GROUP BY 1, 2""",
     "J5 all-pairs Pearson heatmap (app.py:322-353), REGISTERED as its 100×-"
     "safe emission: blocked-matrix plan (one returns pass, one pack, "

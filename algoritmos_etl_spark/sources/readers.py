@@ -8,8 +8,8 @@ DataFrame (SURVEY.md §7.1) and the storage format is parquet — columnar,
 splittable, predicate-pushdown-able — which is what you want at 100 TB.
 
 Scale notes:
-- Explicit schemas everywhere: schema inference is an extra full pass at
-  cluster scale and non-deterministic under schema drift.
+- Explicit schemas for every fixed-layout table: schema inference is an
+  extra pass at cluster scale and non-deterministic under schema drift.
 - `events.parquet` may carry TIMESTAMP(NANOS), which Spark's parquet
   reader rejects; we read it as raw nanos (``nanosAsLong``) and convert
   to microsecond TimestampType in one JVM-side expression — no Python.
@@ -20,10 +20,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# The fixture tables' schemas (TESTDATA.md), equal to what Spark infers
-# from the parquet footers at every scale (pinned by
+# The fixture tables' schemas, equal to what Spark infers from the
+# parquet footers at every scale (pinned by
 # `test_sources.py::test_pinned_schemas_match_inferred`). Reading with
 # them skips the footer-inference job `spark.read.parquet` runs per call.
+# `events` is left to inference: its `ts` is TIMESTAMP(NANOS) in some
+# testdata generations and µs in others, and `nanosAsLong` inference
+# reads either; the bars-based queries load it once per session
+# (`session_bars`), so its footer read is not on their warm path.
 SCHEMAS = {
     "region": "r_regionkey int, r_name string",
     "nation": "n_nationkey int, n_name string, n_regionkey int",
@@ -38,42 +42,19 @@ SCHEMAS = {
     "l_linenumber int, l_quantity double, l_extendedprice double, "
     "l_discount double, l_tax double, l_returnflag string, "
     "l_linestatus string, l_shipdate timestamp_ntz",
-    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
-    "event_type string, value double, props string",
     "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
     "embeddings": "vec_id bigint, embedding array<float>, label int",
 }
-TABLE_NAMES = tuple(SCHEMAS)
+TABLE_NAMES = (*SCHEMAS, "events")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table with its pinned schema; `events` gets its
-    nanos→µs timestamp repair."""
+    """Load one test table with its pinned schema; `events` is inferred
+    and gets its nanos→µs timestamp repair."""
     path = f"{sf_dir}/{name}.parquet"
-    schema = SCHEMAS[name]
-    if name == "events" and _stores_nanos(spark, path, "ts"):
-        schema = schema.replace("ts timestamp_ntz", "ts bigint")
-    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        df = with_event_time(df)
-    return df
-
-
-def _stores_nanos(spark: SparkSession, path: str, column: str) -> bool:
-    """Whether `column` is TIMESTAMP(NANOS), which `nanosAsLong` reads as
-    bigint. One testdata generation stores `events.ts` that way, another
-    as µs. Reads the footer through the JVM's parquet reader: no Spark
-    job and no Python parquet import."""
-    jvm = spark._jvm
-    hadoop_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        jvm.org.apache.hadoop.fs.Path(path), spark._jsc.hadoopConfiguration()
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(hadoop_file)
-    try:
-        field = reader.getFooter().getFileMetaData().getSchema().getType(column)
-    finally:
-        reader.close()
-    return "NANOS" in str(field.getLogicalTypeAnnotation())
+        return with_event_time(spark.read.parquet(path))
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def with_event_time(events: DataFrame) -> DataFrame:
