@@ -392,7 +392,7 @@ def q_risk(spark, sf_dir):
     # The profile's branches (volatility, moments, pattern scalars) all
     # derive from ONE lag/row_number pass over bars: composing the
     # library builders (analyze_portfolio_risk + series_stats +
-    # streak_stats + gap_stats) costs ~6 full window passes over the
+    # pattern_stats) costs several full window passes over the
     # row grain — measured 41 s vs 11 s for this shared-flags plan on
     # the 30× corpus. The flags relation is checkpointed once; the two
     # remaining window passes run over its narrow filtered subsets, and

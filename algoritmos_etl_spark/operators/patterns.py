@@ -16,6 +16,9 @@ Semantics pinned from the reference:
   histogram (no windows) is pure SQL via the difference-of-row-numbers
   run-length encoding and is the oracle-checkable variant.
 - W6's per-window gap count is a plain bounded-frame sum — pure built-ins.
+- The W5/W6 scalars (`pattern_stats`) take one lag/row_number window
+  pass and one groupBy: the longest up-run is a running max of break
+  positions, the window gap maximum a bounded-frame sum.
 """
 
 from __future__ import annotations
@@ -37,17 +40,6 @@ def up_flags(bars: DataFrame) -> DataFrame:
         .withColumn("_rn", F.row_number().over(_series_w()))
         .filter(F.col("_rn") > 1)
         .select("symbol", "date", "up", (F.col("_rn") - 1).alias("pos"))
-    )
-
-
-def gap_flags(bars: DataFrame) -> DataFrame:
-    """Binarize gap-ups: open[i] > high[i-1] (rows i ≥ 1)."""
-    prev_high = F.lag("high").over(_series_w())
-    return (
-        bars.withColumn("gap", (F.col("open") > prev_high).cast("int"))
-        .withColumn("_rn", F.row_number().over(_series_w()))
-        .filter(F.col("_rn") > 1)
-        .select("symbol", "date", "gap", (F.col("_rn") - 1).alias("pos"))
     )
 
 
@@ -225,63 +217,55 @@ def windowed_streak_histogram(bars: DataFrame, window_size: int) -> DataFrame:
     )
 
 
-def streak_stats(bars: DataFrame, window_size: int) -> DataFrame:
-    """W5 scalar outputs: max_streak, total_ups, total_windows.
+def pattern_stats(bars: DataFrame, window_size: int) -> DataFrame:
+    """W5 + W6/A6 scalars per symbol (total_ups, total_windows,
+    max_streak, total_gaps, gap_dates, max_gaps_in_window) from one
+    window pass and one groupBy; a one-row symbol has no flags, no row.
 
-    `max_streak` (max run seen inside any window) equals
-    min(global max run, window_size) because every run ≤ w fits wholly
-    in some window and longer runs are truncated to w — derivable
-    without the windowed UDF.
+    `max_streak` (max run seen inside any window) is min(longest up-run,
+    w): every run ≤ w fits wholly in some window and longer runs are
+    truncated to w. The up-run ending at a row is `rn` minus the running
+    max of the last break (up not 1, the first row included).
+    `max_gaps_in_window` maxes the trailing w-flag gap sum over the rows
+    that close a full window (rn ≥ w+1); null if none does.
     """
-    ups = up_flags(bars)
-    totals = ups.groupBy("symbol").agg(
-        F.sum("up").alias("total_ups"),
-        F.greatest(
-            F.count(F.lit(1)) - F.lit(window_size - 1), F.lit(0)
-        ).alias("total_windows"),
+    w = _series_w()
+    flags = bars.select(
+        "symbol",
+        "date",
+        (F.col("close") > F.lag("close").over(w)).cast("int").alias("up"),
+        (F.col("open") > F.lag("high").over(w)).cast("int").alias("gap"),
+        F.row_number().over(w).alias("rn"),
     )
-    run_max = (
-        global_streak_histogram(bars)
-        .groupBy("symbol")
-        .agg(F.max("streak_length").alias("max_run"))
-    )
-    return (
-        totals.join(run_max, "symbol", "left")
-        .withColumn(
-            "max_streak",
-            F.when(F.col("total_windows") == 0, F.lit(0)).otherwise(
-                F.coalesce(F.least(F.col("max_run"), F.lit(window_size)), F.lit(0))
-            ),
+    last_break = F.max(F.when(F.coalesce("up", F.lit(0)) != 1, F.col("rn")))
+    gap_sum = F.sum("gap").over(w.rowsBetween(-(window_size - 1), 0))
+    per_symbol = (
+        flags.select(
+            "*",
+            (F.col("rn") - last_break.over(w.rowsBetween(Window.unboundedPreceding, 0)))
+            .alias("run"),
+            F.when(F.col("rn") > window_size, gap_sum).alias("window_gaps"),
         )
-        .select("symbol", "total_ups", "total_windows", "max_streak")
-    )
-
-
-def gap_up_windows(bars: DataFrame, window_size: int) -> DataFrame:
-    """W6: per-window trailing gap counts (rows where a full window exists)."""
-    gaps = gap_flags(bars)
-    w = Window.partitionBy("symbol").orderBy("pos")
-    frame = w.rowsBetween(-(window_size - 1), 0)
-    return (
-        gaps.withColumn("gaps_in_window", F.sum("gap").over(frame))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") >= window_size)
-        .select("symbol", "date", "gaps_in_window")
-    )
-
-
-def gap_stats(bars: DataFrame, window_size: int) -> DataFrame:
-    """W6/A6 scalars: total gaps, gap dates, max gaps in any window."""
-    gaps = gap_flags(bars)
-    totals = gaps.groupBy("symbol").agg(
-        F.sum("gap").alias("total_gaps"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("gap") == 1, F.col("date")))
-        ).alias("gap_dates"),
-    )
-    per_window = (
-        gap_up_windows(bars, window_size)
         .groupBy("symbol")
-        .agg(F.max("gaps_in_window").alias("max_gaps_in_window"))
+        .agg(
+            F.count(F.when(F.col("rn") > 1, 1)).alias("n_flags"),
+            F.sum("up").alias("total_ups"),
+            F.max("run").alias("max_run"),
+            F.sum("gap").alias("total_gaps"),
+            F.sort_array(F.collect_list(F.when(F.col("gap") == 1, F.col("date"))))
+            .alias("gap_dates"),
+            F.max("window_gaps").alias("max_gaps_in_window"),
+        )
     )
-    return totals.join(per_window, "symbol", "left")
+    windows = F.greatest(F.col("n_flags") - F.lit(window_size - 1), F.lit(0))
+    return per_symbol.filter(F.col("n_flags") > 0).select(
+        "symbol",
+        "total_ups",
+        windows.alias("total_windows"),
+        F.when(windows == 0, F.lit(0))
+        .otherwise(F.least("max_run", F.lit(window_size)))
+        .alias("max_streak"),
+        "total_gaps",
+        "gap_dates",
+        "max_gaps_in_window",
+    )

@@ -15,14 +15,18 @@ returns over the *aligned* sequence — returns are between consecutive
 aligned positions, not consecutive calendar days.
 
 Scale design:
-- Pair metrics are grouped aggregates over a date-equi-join — shuffle on
-  date, partial aggs map-side. For the all-pairs heatmap the join
-  explodes each date across symbol pairs; with k symbols and n days
-  that's O(n·k²) rows streamed through one aggregation — distributed,
-  no driver materialization. The registered heatmap instead runs
-  blocked matrix products over packed per-block returns and emits a
-  τ/top-k sparsified pair set (`correlation_heatmap_blocked`).
-- DTW is inherently per-pair DP: series are gathered with
+- One pair's bundle (`pair_metrics`, `compare_two_assets`) is bounded by
+  the calendar: its valid closes are gathered into one partition by one
+  job and a single Arrow task aligns them and computes every metric,
+  DTW included. A per-pair request pays one job, not a plan of window
+  exchanges and joins.
+- The all-pairs heatmap joins returns on date, which explodes each date
+  across symbol pairs; with k symbols and n days that's O(n·k²) rows
+  streamed through one aggregation — distributed, no driver
+  materialization. The registered heatmap instead runs blocked matrix
+  products over packed per-block returns and emits a τ/top-k
+  sparsified pair set (`correlation_heatmap_blocked`).
+- All-pairs DTW (`dtw_pairs`) is per-pair DP: series are gathered with
   `collect_list` (bounded: one row per trading day per symbol), pairs
   formed by a broadcast-able self-join, DP executed in an Arrow-batched
   `applyInPandas`. The Sakoe-Chiba band (w = max(n,m)//4, min 10,
@@ -32,12 +36,12 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from algoritmos_etl_spark.functions.scalars import one_partition
 
 
 def _valid_price(col: str) -> F.Column:
@@ -55,63 +59,96 @@ def aligned_pairs(bars: DataFrame, sym_a, sym_b) -> DataFrame:
     return a.join(b, "date")
 
 
-def aligned_returns(pairs: DataFrame) -> DataFrame:
-    """0.0-fill (W2) log returns over the aligned two-column sequence.
+def _pair_stats(ra, rb) -> dict:
+    """X3 minus DTW over two aligned return vectors, in date order.
 
-    The input is ONE symbol pair's aligned dates (one row per trading
-    day), bounded at any data scale, so a single-partition window is
-    fine — partitioning by a pair-constant makes that explicit in the
-    plan (non-empty partitionSpec ⇒ no `WindowExec: No Partition
-    Defined` warning; physically identical single partition)."""
-    w = Window.partitionBy(one_partition(F.col("date"))).orderBy("date")
-    out = pairs
-    for side in ("a", "b"):
-        cur, prev = F.col(f"close_{side}"), F.lag(f"close_{side}").over(w)
-        valid = prev.isNotNull() & (prev > 0) & (cur > 0)
-        out = out.withColumn(
-            f"ret_{side}", F.when(valid, F.log(cur / prev)).otherwise(F.lit(0.0))
-        )
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") > 1)
-        .drop("_rn")
+    Replays Spark's `sum`, `stddev_samp` and `covar_samp` arithmetic in
+    row order (running sums, one-pass mean/co-moment updates), so a
+    constant series has exactly zero variance, as in SQL. Degenerate
+    results: euclidean null on no points; pearson 0.0 below two points
+    or on zero variance (`similarity.py:188-190`); cosine 0.0 on a zero
+    norm (`similarity.py:425-428`). NumPy's `log` may differ from the
+    JVM's in the last bit, far below the oracle's 6-decimal grain.
+    """
+    n = 0
+    mean_a = mean_b = m2_a = m2_b = ck = s_dd = s_ab = s_aa = s_bb = 0.0
+    for x, y in zip(ra.tolist(), rb.tolist()):
+        n += 1
+        dx, dy = x - mean_a, y - mean_b
+        mean_a += dx / n
+        mean_b += dy / n
+        m2_a += dx * (dx - dx / n)
+        m2_b += dy * (dy - dy / n)
+        ck += dx * (y - mean_b)
+        s_dd += (x - y) * (x - y)
+        s_ab += x * y
+        s_aa += x * x
+        s_bb += y * y
+    sd = math.sqrt(m2_a / (n - 1)) * math.sqrt(m2_b / (n - 1)) if n > 1 else 0.0
+    norms = math.sqrt(s_aa) * math.sqrt(s_bb)
+    return {
+        "euclidean": math.sqrt(s_dd) if n else None,
+        "pearson": ck / (n - 1) / sd if sd else 0.0,
+        "cosine": s_ab / norms if norms else 0.0,
+        "n_points": n,
+    }
+
+
+def _pair_bundle(bars: DataFrame, sym_a, sym_b, with_dtw: bool) -> DataFrame:
+    """One row of pair metrics from one job and one Arrow task.
+
+    The pair's valid closes are gathered in one partition (`coalesce(1)`:
+    the single-group aggregate then needs no exchange) as two day-sorted
+    arrays. The task aligns them on shared days (P7), takes 0.0-fill log
+    returns over the aligned sequence (W2) and computes `_pair_stats`;
+    `with_dtw` adds the banded DTW of each symbol's own returns (X1), as
+    the reference bundle does (`similarity.py:440-530`).
+    """
+    import numpy as np
+
+    day_close = F.struct(F.unix_date("date").alias("day"), F.col("close"))
+    sides = [("a", sym_a), ("b", sym_b)]
+    gathered = (
+        bars.filter(F.col("symbol").isin(sym_a, sym_b) & _valid_price("close"))
+        .coalesce(1)
+        .agg(*[
+            F.array_sort(F.collect_list(F.when(F.col("symbol") == sym, day_close)))
+            .alias(side)
+            for side, sym in sides
+        ])
+        .select(*[
+            F.col(f"{side}.{field}").alias(f"{field}s_{side}")
+            for side, _sym in sides
+            for field in ("day", "close")
+        ])
     )
+
+    def bundle(batches):
+        for pdf in batches:
+            for r in pdf.itertuples(index=False):
+                ca, cb = np.asarray(r.closes_a, float), np.asarray(r.closes_b, float)
+                _, ia, ib = np.intersect1d(
+                    np.asarray(r.days_a, np.int64), np.asarray(r.days_b, np.int64),
+                    assume_unique=True, return_indices=True,
+                )
+                out = _pair_stats(
+                    _zero_fill_log_returns(ca[ia]), _zero_fill_log_returns(cb[ib])
+                )
+                if with_dtw:
+                    out["dtw"] = _dtw_numpy(
+                        _zero_fill_log_returns(ca), _zero_fill_log_returns(cb)
+                    )
+                yield pd.DataFrame([out])
+
+    schema = "euclidean double, pearson double, cosine double, n_points long"
+    return gathered.mapInPandas(bundle, schema + (", dtw double" if with_dtw else ""))
 
 
 def pair_metrics(bars: DataFrame, sym_a, sym_b) -> DataFrame:
     """X3 minus DTW: one row {euclidean, pearson, cosine, n_points}.
-
     `n_points` counts aligned RETURNS — len(returns_a) in the reference
-    (`similarity.py:528`), i.e. aligned price pairs − 1 — the same
-    population every metric aggregate runs over.
-    Pearson degenerates to 0.0 on zero variance (`similarity.py:188-190`),
-    cosine to 0.0 on a zero norm (`similarity.py:425-428`).
-    """
-    rets = aligned_returns(aligned_pairs(bars, sym_a, sym_b))
-    a, b = F.col("ret_a"), F.col("ret_b")
-    # try_divide, not plain corr / division: under ANSI mode (Spark 4
-    # default) both THROW DIVIDE_BY_ZERO on a zero-variance series or
-    # zero-norm vector — the exact degenerate inputs the reference
-    # special-cases to 0.0 (similarity.py:188-190, 425-428). The
-    # covar/std form equals corr wherever corr is defined.
-    return rets.agg(
-        F.sqrt(F.sum((a - b) * (a - b))).alias("euclidean"),
-        F.coalesce(
-            F.try_divide(
-                F.covar_samp(a, b),
-                F.stddev_samp(a) * F.stddev_samp(b),
-            ),
-            F.lit(0.0),
-        ).alias("pearson"),
-        F.coalesce(
-            F.try_divide(
-                F.sum(a * b),
-                F.sqrt(F.sum(a * a)) * F.sqrt(F.sum(b * b)),
-            ),
-            F.lit(0.0),
-        ).alias("cosine"),
-        F.count(F.lit(1)).alias("n_points"),
-    )
+    (`similarity.py:528`), i.e. aligned price pairs − 1."""
+    return _pair_bundle(bars, sym_a, sym_b, with_dtw=False)
 
 
 def per_symbol_returns(bars: DataFrame) -> DataFrame:
@@ -432,13 +469,11 @@ def _dtw_numpy(a, b, window=None, with_path: bool = False):
 
 def dtw_pairs(
     bars: DataFrame,
-    pairs: list[tuple] | None = None,
     window: int | None = None,
     use_returns: bool = True,
     min_abs_corr: float | None = None,
 ) -> DataFrame:
-    """X1 at scale: DTW distance for symbol pairs (all unordered pairs
-    by default).
+    """X1 at scale: DTW distance for every unordered symbol pair.
 
     Plan: per-symbol `collect_list(struct(date, close))` → one bounded
     array row per symbol → self-join on `sym_a < sym_b` (tiny, broadcast)
@@ -465,12 +500,6 @@ def dtw_pairs(
     a = series.select(F.col("symbol").alias("sym_a"), F.col("closes").alias("closes_a"))
     b = series.select(F.col("symbol").alias("sym_b"), F.col("closes").alias("closes_b"))
     joined = a.crossJoin(b).filter(F.col("sym_a") < F.col("sym_b"))
-    if pairs is not None:
-        cond = F.lit(False)
-        for pa, pb in pairs:
-            lo, hi = sorted((pa, pb))
-            cond = cond | ((F.col("sym_a") == lo) & (F.col("sym_b") == hi))
-        joined = joined.filter(cond)
     if min_abs_corr is not None:
         allowed = correlation_heatmap(bars).filter(
             F.abs(F.col("pearson")) >= min_abs_corr
@@ -578,14 +607,9 @@ def _zero_fill_log_returns(prices):
     return out
 
 
-def compare_two_assets(bars: DataFrame, sym_a, sym_b, window: int | None = None) -> DataFrame:
-    """X3 full bundle: euclidean/pearson/cosine natively + DTW UDF."""
-    metrics = pair_metrics(bars, sym_a, sym_b)
-    if sym_a == sym_b:
-        # dtw_pairs keeps sym_a < sym_b only; a series is 0 from itself
-        return metrics.withColumn("dtw", F.lit(0.0))
-    dtw = dtw_pairs(bars, pairs=[(sym_a, sym_b)], window=window).select("dtw")
-    return metrics.crossJoin(dtw)
+def compare_two_assets(bars: DataFrame, sym_a, sym_b) -> DataFrame:
+    """X3 full bundle: `pair_metrics` plus DTW, from the same one task."""
+    return _pair_bundle(bars, sym_a, sym_b, with_dtw=True)
 
 
 def dtw_path(

@@ -25,6 +25,8 @@ from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame
 
+from .report import MAX_ASSETS, TABLES, TITLE, report_rows
+
 PAGE_W, PAGE_H = 612, 792  # US letter, points
 MARGIN = 54
 LINE_H = 14
@@ -180,59 +182,23 @@ class PdfDoc:
 
 
 def render_pdf_report(
-    risk: DataFrame,
-    risk_summary: DataFrame,
-    pattern_stats: DataFrame,
-    title: str = "Portfolio analysis report",
-    max_assets: int = 100,
+    risk: DataFrame, risk_summary: DataFrame, pattern_stats: DataFrame
 ) -> bytes:
     """The reference's `/export/pdf` document from the X4/X5 result
-    DataFrames — same rows and slicing policy as the HTML twin
-    (`report.render_html_report`): top `max_assets` by rank so the
-    document stays bounded at any corpus size.
+    DataFrames — the same tables and rows as the HTML twin
+    (`report.report_rows`).
     """
-    summary_rows = [
-        (r.risk_class, r.n_assets)
-        for r in risk_summary.orderBy("risk_class").collect()
-    ]
-    risk_rows = [
-        (r.rank, r.symbol, round(r.volatility, 6), r.risk_class)
-        for r in risk.orderBy("rank").limit(max_assets).collect()
-    ]
-    pat_rows = [
-        (
-            r.symbol, r.total_ups, r.total_windows, r.max_streak,
-            r.total_gaps, r.max_gaps_in_window,
-        )
-        for r in pattern_stats.orderBy("symbol").limit(max_assets).collect()
-    ]
-
+    tables = report_rows(risk, risk_summary, pattern_stats)
     doc = PdfDoc()
-    doc.text(title, bold=True, size=20)
+    doc.text(TITLE, bold=True, size=20)
     doc.spacer(4)
     doc.text(
-        f"Assets analyzed: {len(risk_rows)} (top {max_assets} by rank)", size=10
+        f"Assets analyzed: {len(tables[1])} (top {MAX_ASSETS} by rank)", size=10
     )
     doc.spacer(LINE_H)
-    doc.table(
-        "Risk class distribution", ["risk class", "assets"], summary_rows,
-        widths=[180, 100],
-    )
-    doc.table(
-        "Assets by volatility rank",
-        ["rank", "symbol", "annualized volatility", "risk class"],
-        risk_rows,
-        widths=[60, 80, 180, 120],
-    )
-    doc.table(
-        "Pattern scan",
-        [
-            "symbol", "up days", "windows", "max streak (win)",
-            "gap-ups", "max gap-ups / window",
-        ],
-        pat_rows,
-        widths=[60, 70, 70, 110, 70, 120],
-    )
+    widths = ([180, 100], [60, 80, 180, 120], [60, 70, 70, 110, 70, 120])
+    for (title, cols), rows, w in zip(TABLES, tables, widths):
+        doc.table(title, cols, rows, widths=w)
     doc.spacer(4)
     doc.text("Methods", bold=True, size=13)
     doc.text(

@@ -35,18 +35,16 @@ def curate_corpus(
     keep_lang: str = KEEP_LANG,
     neardup_threshold: float = 0.2,
     max_bucket_size: int | None = 100,
-    max_dup_3gram_frac: float | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Surviving documents with their quality features.
 
     quality gate (word count + stopword-ratio band) ∧ language gate
-    (marker-frequency ID) ∧ optional repetition gate (Gopher-style
-    duplicate-trigram fraction, `max_dup_3gram_frac`), then MinHash-LSH
-    near-dup pairs among the survivors; the higher doc_id of each
-    verified pair is dropped via a left-anti join. Stats/lang are
-    projection-only; the repetition gate adds one n-gram count shuffle
-    over pre-dedup survivors — still upstream of the expensive stage.
+    (marker-frequency ID), then MinHash-LSH near-dup pairs among the
+    survivors; the higher doc_id of each verified pair is dropped via a
+    left-anti join. Stats/lang are projection-only. Repetition
+    (`text.text_quality`'s Gopher-style n-gram fractions) is scored,
+    not gated: no registered query filters on it.
 
     `shingles` optionally supplies the corpus's materialized (doc_id,
     shingle) relation (a standing shingle index at cluster scale, the
@@ -65,11 +63,6 @@ def curate_corpus(
         & (F.col("stopword_ratio") >= min_stopword_ratio)
         & (F.col("stopword_ratio") <= max_stopword_ratio)
     )
-    if max_dup_3gram_frac is not None:
-        rep = text.repetition_stats(docs).filter(
-            F.col("dup_3gram_frac") <= max_dup_3gram_frac
-        )
-        quality = quality.join(rep.select("doc_id"), "doc_id")
     # the survivor set feeds three plan branches (docs join, shingle
     # semi-join, final anti-join) and Catalyst does not CSE across
     # branches — without the checkpoint the regex-heavy gate projection

@@ -34,57 +34,57 @@ def _table(title: str, cols: list[str], rows: Iterable[tuple]) -> str:
     )
 
 
-def render_html_report(
-    risk: DataFrame,
-    risk_summary: DataFrame,
-    pattern_stats: DataFrame,
-    title: str = "Portfolio analysis report",
-    max_assets: int = 100,
-) -> str:
-    """One standalone HTML document from the risk + patterns results.
+TITLE = "Portfolio analysis report"
+# Both renderers (this HTML one and `pdf_report`) draw the top MAX_ASSETS
+# assets by rank, so a document stays bounded at any corpus size.
+MAX_ASSETS = 100
+# (title, column headers) of the tables both renderers draw, in order
+TABLES = (
+    ("Risk class distribution", ["risk class", "assets"]),
+    ("Assets by volatility rank", ["rank", "symbol", "annualized volatility", "risk class"]),
+    (
+        "Pattern scan",
+        ["symbol", "up days", "windows", "max streak (win)", "gap-ups", "max gap-ups / window"],
+    ),
+)
 
-    Inputs are the X4/X5 result DataFrames (one row per asset); the
-    report slices the top `max_assets` by rank so the rendered document
-    stays bounded no matter the corpus — the driver-side collect here
-    is the serving edge, same class as every JSON route.
-    """
-    summary_rows = [
-        (r.risk_class, r.n_assets)
-        for r in risk_summary.orderBy("risk_class").collect()
+
+def report_rows(
+    risk: DataFrame, risk_summary: DataFrame, pattern_stats: DataFrame
+) -> list[list[tuple]]:
+    """The rows of each of `TABLES` from the X4/X5 result DataFrames (one
+    row per asset). The driver-side collect here is the serving edge,
+    same class as every JSON route."""
+    return [
+        [(r.risk_class, r.n_assets) for r in risk_summary.orderBy("risk_class").collect()],
+        [
+            (r.rank, r.symbol, round(r.volatility, 6), r.risk_class)
+            for r in risk.orderBy("rank").limit(MAX_ASSETS).collect()
+        ],
+        [
+            (
+                r.symbol, r.total_ups, r.total_windows, r.max_streak,
+                r.total_gaps, r.max_gaps_in_window,
+            )
+            for r in pattern_stats.orderBy("symbol").limit(MAX_ASSETS).collect()
+        ],
     ]
-    risk_rows = [
-        (r.rank, r.symbol, round(r.volatility, 6), r.risk_class)
-        for r in risk.orderBy("rank").limit(max_assets).collect()
-    ]
-    pat_rows = [
-        (
-            r.symbol, r.total_ups, r.total_windows, r.max_streak,
-            r.total_gaps, r.max_gaps_in_window,
-        )
-        for r in pattern_stats.orderBy("symbol").limit(max_assets).collect()
-    ]
+
+
+def render_html_report(
+    risk: DataFrame, risk_summary: DataFrame, pattern_stats: DataFrame
+) -> str:
+    """One standalone HTML document from the risk + patterns results."""
+    rows = report_rows(risk, risk_summary, pattern_stats)
     parts = [
         "<!DOCTYPE html><html><head><meta charset='utf-8'>",
-        f"<title>{html.escape(title)}</title>",
+        f"<title>{html.escape(TITLE)}</title>",
         "<style>body{font-family:sans-serif;margin:2em}"
         "table{border-collapse:collapse}"
         "td,th{border:1px solid #999;padding:4px 8px;text-align:right}"
         "th{background:#eee}</style></head><body>",
-        f"<h1>{html.escape(title)}</h1>",
-        _table("Risk class distribution", ["risk class", "assets"], summary_rows),
-        _table(
-            "Assets by volatility rank",
-            ["rank", "symbol", "annualized volatility", "risk class"],
-            risk_rows,
-        ),
-        _table(
-            "Pattern scan",
-            [
-                "symbol", "up days", "windows", "max streak (win)",
-                "gap-ups", "max gap-ups / window",
-            ],
-            pat_rows,
-        ),
+        f"<h1>{html.escape(TITLE)}</h1>",
+        *(_table(title, cols, r) for (title, cols), r in zip(TABLES, rows)),
         "</body></html>",
     ]
     return "\n".join(parts)

@@ -33,6 +33,17 @@ from pyspark.sql import functions as F
 from .driver_queries import session_bars
 from .operators import patterns, sampling, similarity, volatility
 
+# /api/patterns and the reports scan 5-bar windows, as the reference's
+# pattern self-test (`algorithms/patterns.py:299-327`) and the
+# risk_classification profile do; /api/candlestick thins a series to at
+# most 200 bars (`app.py:215-229`).
+PATTERN_WINDOW = 5
+CANDLE_POINTS = 200
+# /api/patterns splits pattern_stats' row into the reference's two
+# dicts; a null field is absent, as in every `.toJSON()` row.
+_STREAK_KEYS = ("symbol", "total_ups", "total_windows", "max_streak")
+_GAP_KEYS = ("symbol", "total_gaps", "gap_dates", "max_gaps_in_window")
+
 
 def _rows(df: DataFrame) -> list[dict]:
     """Bounded result DataFrame → list of JSON-safe dicts (the S6
@@ -68,7 +79,9 @@ class JsonApi:
     plans alone takes 0.5-0.9 s per call at sf0.001, before any job
     runs. A memoized payload is shared by every caller, so callers must
     not mutate it. The per-symbol and per-pair routes build and run
-    their plans on every request.
+    their plans on every request, each as one small plan: the symbol's
+    (or pair's) bars in one partition, so its window and aggregate need
+    no exchange, and one job answers the request.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
@@ -102,28 +115,34 @@ class JsonApi:
         )
         return {"pairs": rows}
 
+    def _series(self, symbol: int) -> DataFrame:
+        """One symbol's bars in one partition: a single partition already
+        satisfies the per-symbol window and groupBy, so the route's plan
+        has no exchange and runs as one job."""
+        return self.bars.filter(F.col("symbol") == symbol).coalesce(1)
+
     # -- /api/candlestick/<symbol> (app.py:360-406): tail slice, thinned
-    def candlestick(self, symbol: int, max_points: int = 200) -> dict:
-        series = self.bars.filter(F.col("symbol") == symbol)
+    def candlestick(self, symbol: int) -> dict:
         thinned = sampling.stride_sample(
-            series, partition_col="symbol", order_cols=["date"],
-            max_points=max_points,
+            self._series(symbol), partition_col="symbol", order_cols=["date"],
+            max_points=CANDLE_POINTS,
         )
-        return {"symbol": symbol, "bars": _rows(thinned.orderBy("date"))}
+        # a sort inside the one partition, not a global orderBy: range
+        # partitioning would cost a sampling job for ≤ CANDLE_POINTS rows
+        return {"symbol": symbol, "bars": _rows(thinned.sortWithinPartitions("date"))}
 
     # -- /api/patterns/<symbol> (app.py:409-444)
-    def patterns(self, symbol: int, window_size: int = 5) -> dict:
-        one = self.bars.filter(F.col("symbol") == symbol)
-        streaks = _rows(patterns.streak_stats(one, window_size))
-        gaps = _rows(
-            patterns.gap_stats(one, window_size).withColumn(
+    def patterns(self, symbol: int) -> dict:
+        stats = _rows(
+            patterns.pattern_stats(self._series(symbol), PATTERN_WINDOW).withColumn(
                 "gap_dates", F.col("gap_dates").cast("array<string>")
             )
         )
+        row = stats[0] if stats else {}
         return {
             "symbol": symbol,
-            "streaks": streaks[0] if streaks else {},
-            "gaps": gaps[0] if gaps else {},
+            "streaks": {k: row[k] for k in _STREAK_KEYS if k in row},
+            "gaps": {k: row[k] for k in _GAP_KEYS if k in row},
         }
 
     # -- /api/risk (app.py:447-486)
@@ -143,9 +162,7 @@ class JsonApi:
         summary = volatility.risk_summary(
             classified.select("symbol", "volatility", "risk_class")
         )
-        streaks = patterns.streak_stats(self.bars, 5)
-        gaps = patterns.gap_stats(self.bars, 5)
-        pats = streaks.join(gaps, "symbol", "left")
+        pats = patterns.pattern_stats(self.bars, PATTERN_WINDOW)
         return classified, summary, pats
 
     # -- /export/report — the same document as /export/pdf rendered to

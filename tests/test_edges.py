@@ -91,7 +91,49 @@ def test_dtw_empty_series_is_zero():
 def test_pair_metrics_disjoint_dates(edge_bars):
     row = similarity.pair_metrics(edge_bars, 1, 3).first()
     assert row.n_points == 0
+    assert row.euclidean is None  # a sum over no points
     assert row.pearson == 0.0 and row.cosine == 0.0  # reference degeneracy values
+
+
+def test_pair_metrics_few_shared_dates(spark):
+    """Returns run between consecutive ALIGNED dates: one shared date
+    gives no return; two shared dates give one return across the gap,
+    and Pearson needs two points."""
+    import math
+
+    rows = [
+        (1, "2024-01-01", 10.0), (1, "2024-01-02", 11.0),
+        (1, "2024-01-03", 12.0), (1, "2024-01-05", 15.0),
+        (2, "2024-01-03", 20.0), (2, "2024-01-04", 30.0),
+        (2, "2024-01-05", 25.0),
+        (3, "2024-01-03", 7.0), (3, "2024-01-09", 8.0),
+    ]
+    bars = spark.createDataFrame(
+        rows, "symbol long, date string, close double"
+    ).withColumn("date", F.col("date").cast("date"))
+    one = similarity.pair_metrics(bars, 2, 3).first()
+    assert one.n_points == 0 and one.euclidean is None
+    assert one.pearson == 0.0 and one.cosine == 0.0
+    two = similarity.pair_metrics(bars, 1, 2).first()
+    ra, rb = math.log(15.0 / 12.0), math.log(25.0 / 20.0)
+    assert two.n_points == 1
+    assert two.euclidean == pytest.approx(abs(ra - rb))
+    assert two.pearson == 0.0
+    assert two.cosine == pytest.approx(1.0)
+
+
+def test_patterns_route_single_row_symbol(spark, edge_bars):
+    """A one-row symbol has no up or gap flag: the route answers with
+    empty dicts, not an error."""
+    from algoritmos_etl_spark.serve import JsonApi
+
+    class EdgeApi(JsonApi):
+        bars = None
+
+    api = EdgeApi(spark, "unused")
+    api.bars = edge_bars
+    out = api.patterns(1)
+    assert out == {"symbol": 1, "streaks": {}, "gaps": {}}
 
 
 def test_windowed_streak_histogram_window_too_big(edge_bars):
@@ -100,7 +142,11 @@ def test_windowed_streak_histogram_window_too_big(edge_bars):
 
 
 def test_dtw_single_point_series(edge_bars):
-    out = similarity.dtw_pairs(edge_bars, pairs=[(1, 3)], use_returns=False).first()
+    out = (
+        similarity.dtw_pairs(edge_bars, use_returns=False)
+        .filter("sym_a = 1 AND sym_b = 3")
+        .first()
+    )
     assert out is not None and out.dtw >= 0.0
 
 

@@ -40,21 +40,36 @@ def test_returns_bundle_matches_single_builders(bars):
     assert _rows(bundle_omit, "symbol", "date") == _rows(omit, "symbol", "date")
 
 
-def test_rolling_features_matches_sma_and_gap_windows(bars):
-    from algoritmos_etl_spark.operators import patterns
+def _trailing_gap_counts(bars, w):
+    """W6 (`algorithms/patterns.py:155-264`) in plain Python: per symbol,
+    gap[i] = open[i] > high[i-1] for i ≥ 1, then the trailing w-flag
+    count at every row that closes a full window of flags."""
+    import itertools
 
+    rows = sorted(tuple(r) for r in bars.select("symbol", "date", "open", "high").collect())
+    out = []
+    for sym, grp in itertools.groupby(rows, key=lambda r: r[0]):
+        grp = list(grp)
+        flags = [
+            None if cur[2] is None or prev[3] is None else int(cur[2] > prev[3])
+            for prev, cur in zip(grp, grp[1:])
+        ]
+        for i in range(w - 1, len(flags)):
+            win = [f for f in flags[i - w + 1 : i + 1] if f is not None]
+            out.append((sym, grp[i + 1][1], sum(win) if win else None))
+    return out
+
+
+def test_rolling_features_matches_sma_and_gap_windows(bars):
     fused = technical.rolling_features(bars, 5)
     sma = technical.sma(bars, 5).select("symbol", "date", "sma_5")
     assert _rows(
         fused.select("symbol", "date", "sma_5"), "symbol", "date"
     ) == _rows(sma, "symbol", "date")
-    gaps = patterns.gap_up_windows(bars, 5).select(
-        "symbol", "date", F.col("gaps_in_window").cast("long").alias("g")
-    )
     fused_gaps = fused.filter(F.col("gaps_in_window").isNotNull()).select(
         "symbol", "date", F.col("gaps_in_window").alias("g")
     )
-    assert _rows(fused_gaps, "symbol", "date") == _rows(gaps, "symbol", "date")
+    assert _rows(fused_gaps, "symbol", "date") == _trailing_gap_counts(bars, 5)
 
 
 def test_text_quality_matches_single_signals(tables):
@@ -133,8 +148,7 @@ def test_fused_operators_on_degenerate_series(spark):
 def test_risk_profile_fusion_matches_library_builders(spark):
     """The registered risk_classification profile (one shared-flags
     pass) must equal the composition of the single-op library builders
-    it fuses (analyze_portfolio_risk + series_stats + streak_stats +
-    gap_stats)."""
+    it fuses (analyze_portfolio_risk + series_stats + pattern_stats)."""
     import os
 
     from algoritmos_etl_spark.driver_queries import REGISTRY, r6
@@ -163,21 +177,16 @@ def test_risk_profile_fusion_matches_library_builders(spark):
         "n",
         "n_returns",
     )
-    streaks = patterns.streak_stats(bars, 5).select(
+    pats = patterns.pattern_stats(bars, 5).select(
         "symbol",
         F.col("total_ups").cast("long").alias("total_ups"),
         F.col("total_windows").cast("long").alias("total_windows"),
         F.col("max_streak").cast("int").alias("max_streak"),
-    )
-    gaps = patterns.gap_stats(bars, 5).select(
-        "symbol",
         F.col("total_gaps").cast("long").alias("total_gaps"),
         F.col("max_gaps_in_window").cast("long").alias("max_gaps_in_window"),
     )
     composed = (
-        risk.join(stats, "symbol")
-        .join(streaks, "symbol", "left")
-        .join(gaps, "symbol", "left")
+        risk.join(stats, "symbol").join(pats, "symbol", "left")
     ).select(*fused.columns)
     assert _rows(fused, "symbol") == _rows(composed, "symbol")
 

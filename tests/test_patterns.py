@@ -67,25 +67,26 @@ def test_windowed_streak_histogram_matches_reference(micro_bars):
     assert out == expect
 
 
+def _stats(bars, window):
+    rows = patterns.pattern_stats(bars, window).collect()
+    assert len(rows) == 1
+    return rows[0]
+
+
 def test_streak_stats(micro_bars):
-    row = patterns.streak_stats(
-        micro_bars.filter(F.col("symbol") == 1), WINDOW
-    ).collect()[0]
+    row = _stats(micro_bars.filter(F.col("symbol") == 1), WINDOW)
     assert row["total_ups"] == sum(UPS)
     assert row["total_windows"] == len(UPS) - WINDOW + 1
     assert row["max_streak"] == min(4, WINDOW)
 
 
 def test_gap_flags_and_windows(micro_bars):
-    sym1 = micro_bars.filter(F.col("symbol") == 1)
-    gaps = patterns.gap_flags(sym1).orderBy("date").collect()
-    assert [r["gap"] for r in gaps] == [0] * 14
-    row = patterns.gap_stats(sym1, WINDOW).collect()[0]
+    # 14 gap flags, all 0; 10 full windows of them, each counting 0
+    row = _stats(micro_bars.filter(F.col("symbol") == 1), WINDOW)
     assert row["total_gaps"] == 0
     assert row["max_gaps_in_window"] == 0
     assert row["gap_dates"] == []
-    windows = patterns.gap_up_windows(sym1, WINDOW)
-    assert windows.count() == 14 - WINDOW + 1
+    assert row["total_windows"] == 14 - WINDOW + 1
 
 
 def test_gap_detection_positive(spark):
@@ -100,20 +101,46 @@ def test_gap_detection_positive(spark):
         rows,
         "symbol long, date date, open double, high double, low double, close double, volume long",
     )
-    out = patterns.gap_flags(df).orderBy("date").collect()
-    assert [r["gap"] for r in out] == [1, 0, 1]
-    stats = patterns.gap_stats(df, 2).collect()[0]
+    stats = _stats(df, 2)  # gap flags 1 0 1
     assert stats["total_gaps"] == 2
     assert stats["max_gaps_in_window"] == 1
+    assert stats["gap_dates"] == [datetime.date(2024, 1, 2), datetime.date(2024, 1, 4)]
 
 
 def test_streak_stats_window_larger_than_series(micro_bars):
-    # window > len(ups) ⇒ zero windows examined ⇒ max_streak 0
-    row = patterns.streak_stats(
-        micro_bars.filter(F.col("symbol") == 1), 500
-    ).collect()[0]
+    # window > len(ups) ⇒ zero windows examined ⇒ max_streak 0, and no
+    # full window of gap flags ⇒ max_gaps_in_window null
+    row = _stats(micro_bars.filter(F.col("symbol") == 1), 500)
     assert row["total_windows"] == 0
     assert row["max_streak"] == 0
+    assert row["max_gaps_in_window"] is None
+    assert row["total_ups"] == sum(UPS)
+
+
+def test_pattern_stats_up_run_broken_by_null_close(spark):
+    """A null close has no up flag: it ends the run before it, and the
+    bar after it is not an up-day either (its previous close is null)."""
+    import datetime
+    closes = [1.0, 2.0, 3.0, None, 4.0, 5.0, 6.0, 7.0, 8.0]
+    df = spark.createDataFrame(
+        [
+            (5, datetime.date(2024, 1, d + 1), c, c, c, c, 1)
+            for d, c in enumerate(closes)
+        ],
+        "symbol long, date date, open double, high double, low double, close double, volume long",
+    )
+    # ups over rows 2..9: 1 1 null null 1 1 1 1 → runs 2 and 4
+    row = _stats(df, 5)
+    assert row["total_ups"] == 6
+    assert row["max_streak"] == 4
+    assert row["total_windows"] == 8 - 5 + 1
+    # a run longer than the window is truncated to it
+    assert _stats(df, 3)["max_streak"] == 3
+
+
+def test_pattern_stats_single_row_symbol_has_no_row(micro_bars):
+    one = micro_bars.filter((F.col("symbol") == 1) & (F.col("date") == "2024-01-01"))
+    assert patterns.pattern_stats(one, WINDOW).count() == 0
 
 
 # ---- analytic O(runs+w) histogram ≡ naive O(n·w) simulation ----

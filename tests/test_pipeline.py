@@ -118,5 +118,10 @@ def test_dtw_path_consistency(spark):
         di, dj = cur.i - prev.i, cur.j - prev.j
         assert di in (0, 1) and dj in (0, 1) and di + dj >= 1
     # full-matrix path distance equals dtw_pairs with window=0
-    dist = similarity.dtw_pairs(bars, pairs=[(0, 1)], window=0).first().dtw
+    dist = (
+        similarity.dtw_pairs(bars, window=0)
+        .filter("sym_a = 0 AND sym_b = 1")
+        .first()
+        .dtw
+    )
     assert rows[0].dtw == pytest.approx(dist)

@@ -326,6 +326,7 @@ _TEST_ONLY_OK = {
     "operators.text.text_stats": _FUSED_REF,
     "operators.text.token_counts": _FUSED_REF,
     "operators.text.pii_stats": _FUSED_REF,
+    "operators.text.repetition_stats": _FUSED_REF,
     "operators.multimodal.payload_stats": _FUSED_REF,
     "operators.multimodal.decode_features": _FUSED_REF,
     "operators.dedup.exact_dedup": _FUSED_REF,

@@ -88,6 +88,26 @@ def test_warm_candlestick_runs_few_tasks(spark, api):
     assert 0 < tasks < 8
 
 
+@pytest.mark.parametrize(
+    "path, query",
+    [
+        ("/api/similarity", {"a": "2", "b": "3"}),
+        ("/api/patterns/2", {}),
+        ("/api/candlestick/2", {}),
+    ],
+)
+def test_warm_per_symbol_route_runs_at_most_two_jobs(spark, api, path, query):
+    """Each per-symbol route is one small plan: no exchange for the
+    one-symbol window and aggregate, no per-pair DTW join, no range
+    sort's sampling job."""
+    api.dispatch(path, query)
+    (status, _), jobs = _jobs_of(
+        spark, f"serve-jobs{path}", lambda: api.dispatch(path, query)
+    )
+    assert status == 200
+    assert 0 < len(jobs) <= 2, f"{path} ran {len(jobs)} jobs"
+
+
 def test_symbols_route(api):
     status, out = api.dispatch("/api/symbols", {})
     assert status == 200
@@ -117,6 +137,8 @@ def test_candlestick_route_thinned(api):
     status, out = api.dispatch("/api/candlestick/0", {})
     assert status == 200
     assert out["bars"] and all("close" in b for b in out["bars"])
+    dates = [b["date"] for b in out["bars"]]
+    assert all(a < b for a, b in zip(dates, dates[1:])), "bars not in date order"
 
 
 def test_patterns_route(api):

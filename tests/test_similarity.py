@@ -128,6 +128,38 @@ def test_pair_metrics_on_aligned_returns(vec_bars):
     assert row["cosine"] == pytest.approx(1.0)
 
 
+@pytest.mark.parametrize("shape", ["random", "constant", "one_point"])
+def test_pair_stats_matches_sql_aggregates(spark, shape):
+    """`_pair_stats` replays the SQL aggregates pair metrics were first
+    defined by (the DuckDB oracle's form) over the same return rows."""
+    import random
+
+    import numpy as np
+
+    rng = random.Random(7)
+    n = {"random": 60, "constant": 30, "one_point": 1}[shape]
+    ra = [rng.gauss(0, 0.02) if shape == "random" else 0.01 for _ in range(n)]
+    rb = [rng.gauss(0, 0.03) if shape == "random" else 0.01 for _ in range(n)]
+    df = spark.createDataFrame(list(zip(ra, rb)), "a double, b double").coalesce(1)
+    a, b = F.col("a"), F.col("b")
+    want = df.agg(
+        F.sqrt(F.sum((a - b) * (a - b))).alias("euclidean"),
+        F.coalesce(
+            F.try_divide(F.covar_samp(a, b), F.stddev_samp(a) * F.stddev_samp(b)),
+            F.lit(0.0),
+        ).alias("pearson"),
+        F.coalesce(
+            F.try_divide(F.sum(a * b), F.sqrt(F.sum(a * a)) * F.sqrt(F.sum(b * b))),
+            F.lit(0.0),
+        ).alias("cosine"),
+        F.count(F.lit(1)).alias("n_points"),
+    ).first().asDict()
+    got = similarity._pair_stats(np.array(ra), np.array(rb))
+    assert got == pytest.approx(want, rel=1e-12, abs=1e-15)
+    if shape != "random":  # zero variance: exactly the degenerate 0.0
+        assert got["pearson"] == want["pearson"] == 0.0
+
+
 def test_dtw_pairs_on_bars(vec_bars):
     out = {
         (r["sym_a"], r["sym_b"]): r["dtw"]
@@ -142,6 +174,19 @@ def test_compare_two_assets_bundle(vec_bars):
     row = similarity.compare_two_assets(vec_bars, 1, 2).collect()[0]
     assert set(row.asDict()) == {"euclidean", "pearson", "cosine", "n_points", "dtw"}
     assert row["dtw"] == pytest.approx(0.0)
+    # DTW runs on each symbol's own returns, the other metrics on the
+    # aligned ones; both equal the per-pair DP and the aggregates
+    far = similarity.compare_two_assets(vec_bars, 1, 4).collect()[0]
+    ref = similarity.dtw_pairs(vec_bars).filter("sym_a = 1 AND sym_b = 4").first()
+    assert far["dtw"] == ref["dtw"] > 0
+    assert far["n_points"] == 4
+
+
+def test_compare_two_assets_same_symbol(vec_bars):
+    row = similarity.compare_two_assets(vec_bars, 4, 4).first()
+    assert row["dtw"] == 0.0 and row["euclidean"] == 0.0
+    assert row["pearson"] == pytest.approx(1.0)
+    assert row["n_points"] == 4
 
 
 def test_correlation_heatmap_pairs(vec_bars):
@@ -153,10 +198,9 @@ def test_correlation_heatmap_pairs(vec_bars):
 
 
 def test_aligned_pairs_bounded_for_global_window(bars):
-    """aligned_returns uses an UN-partitioned Window.orderBy(date) —
-    safe only because its input is one symbol pair's aligned dates
-    (≤ one row per trading day at any corpus scale). Pin the invariant
-    the safety argument rests on: no duplicate dates ever reach it."""
+    """pair_metrics aligns one symbol pair in a single task — safe only
+    because the pair has ≤ one row per trading day at any corpus scale.
+    Pin the invariant that argument rests on: no duplicate dates."""
     aligned = similarity.aligned_pairs(bars, 0, 1)
     dup_dates = (
         aligned.groupBy("date").count().filter(F.col("count") > 1).count()
