@@ -765,11 +765,10 @@ def q_heatmap(spark, sf_dir):
 # engines, so even the DP values hash-match.
 _DTW_INF = "1e300"
 # The REGISTERED query caps at symbols < 100 (4,950 pairs at any scale):
-# all-pairs DP over the full symbol universe is O(k²) and belongs to a
-# sampled/prefiltered path at scale (bench.py applies the same cap; the
-# library function runs any pair set, with min_abs_corr as the
-# documented all-pairs prefilter). The cap also bounds the oracle's
-# wavefront recursion at every sf.
+# all-pairs DP over the full symbol universe is O(k²) (bench.py applies
+# the same cap; the library function runs whatever pair set its bars
+# hold). The cap also bounds the oracle's wavefront recursion at every
+# sf.
 _DTW_SYMBOL_CAP = 100
 _DTW_RETS = f"""
 valid AS (SELECT symbol, date, close FROM bars
@@ -825,8 +824,7 @@ DTW_PAIRS_ORACLE = f"""WITH RECURSIVE {ORACLE_BARS_CTE},
 def dtw_pairs_distances(spark, sf_dir):
     """Spark side of the DTW-distance arm (X1 banded DTW over symbol
     pairs, algorithms/similarity.py:200-352), capped at 100 symbols =
-    4,950 pairs at any scale (all-pairs over the full universe is the
-    min_abs_corr-prefiltered library path)."""
+    4,950 pairs at any scale."""
     bars = session_bars(spark, sf_dir).filter(F.col("symbol") < _DTW_SYMBOL_CAP)
     out = similarity.dtw_pairs(bars)
     return out.select("sym_a", "sym_b", r6(F.col("dtw")).alias("dtw"))
@@ -866,7 +864,7 @@ def q_sort_rank(spark, sf_dir):
 
 @register(
     "pricing_summary",
-    """SELECT l_returnflag, l_linestatus,
+    f"""SELECT l_returnflag, l_linestatus,
            round(CAST(sum(l_quantity) AS DOUBLE), 2) AS sum_qty,
            round(CAST(sum(l_extendedprice) AS DOUBLE), 2) AS sum_base_price,
            round(CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE), 2) AS sum_disc_price,
@@ -876,7 +874,7 @@ def q_sort_rank(spark, sf_dir):
            round(avg(l_discount), 6) AS avg_disc,
            CAST(count(*) AS BIGINT) AS count_order
     FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    WHERE l_shipdate <= TIMESTAMP '{relational.PRICING_CUTOFF} 00:00:00'
     GROUP BY l_returnflag, l_linestatus""",
     "TPC-H Q1 shape: scan→filter→grouped 8-agg (the reference's §3.1 pipeline generalized)",
 )
@@ -909,14 +907,14 @@ def q_rev_nation(spark, sf_dir):
 
 @register(
     "top_customers_by_revenue",
-    """SELECT c_custkey, c_name, revenue FROM (
+    f"""SELECT c_custkey, c_name, revenue FROM (
         SELECT c_custkey, c_name,
                round(CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE), 2) AS revenue
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
         GROUP BY c_custkey, c_name
-    ) ORDER BY revenue DESC, c_custkey ASC LIMIT 10""",
+    ) ORDER BY revenue DESC, c_custkey ASC LIMIT {relational.TOP_CUSTOMERS_K}""",
     "TPC-H Q3 flavor: per-customer revenue top-10",
 )
 def q_top_customers(spark, sf_dir):
@@ -983,18 +981,18 @@ def q_revenue_rollup(spark, sf_dir):
 
 @register(
     "shipping_priority",
-    """SELECT l_orderkey AS orderkey, o_orderdate AS orderdate,
+    f"""SELECT l_orderkey AS orderkey, o_orderdate AS orderdate,
            o_orderpriority AS priority,
            CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
                                AS DECIMAL(30,10))), 2) AS DOUBLE) AS revenue
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_orderdate < TIMESTAMP '1998-03-15'
-      AND l_shipdate > TIMESTAMP '1998-03-15'
+    WHERE o_orderdate < TIMESTAMP '{relational.SHIPPING_CUTOFF}'
+      AND l_shipdate > TIMESTAMP '{relational.SHIPPING_CUTOFF}'
       AND o_custkey IN (SELECT c_custkey FROM customer
-                        WHERE c_mktsegment = 'BUILDING')
+                        WHERE c_mktsegment = '{relational.SHIPPING_SEGMENT}')
     GROUP BY 1, 2, 3
     ORDER BY revenue DESC, orderkey ASC
-    LIMIT 10""",
+    LIMIT {relational.SHIPPING_K}""",
     "TPC-H Q3 shape: unshipped-order revenue for one market segment, "
     "top-10. Both date predicates push to the parquet scans, the segment "
     "keys broadcast left-semi into orders, top-k plans as "
@@ -1010,7 +1008,7 @@ def q_shipping_priority(spark, sf_dir):
 
 @register(
     "small_qty_revenue",
-    """WITH thr AS (
+    f"""WITH thr AS (
         SELECT l_partkey AS t_partkey,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
                CAST(count(*) AS BIGINT) AS cnt_qty
@@ -1023,7 +1021,7 @@ def q_shipping_priority(spark, sf_dir):
     FROM lineitem
     JOIN thr ON l_partkey = t_partkey
     JOIN part ON p_partkey = l_partkey
-    WHERE p_size <= 10
+    WHERE p_size <= {relational.SMALL_PART_MAX_SIZE}
       AND 5 * CAST(l_quantity AS BIGINT) * cnt_qty < sum_qty
     GROUP BY p_brand""",
     "TPC-H Q17 shape: correlated per-part AVG subquery re-expressed as a "
@@ -1039,9 +1037,9 @@ def q_small_qty_revenue(spark, sf_dir):
 
 @register(
     "waiting_suppliers",
-    """WITH lo AS (
+    f"""WITH lo AS (
         SELECT l.l_orderkey AS okey, l.l_suppkey AS skey,
-               (l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY) AS is_late
+               (l.l_shipdate > o.o_orderdate + INTERVAL {relational.WAITING_LATE_DAYS} DAY) AS is_late
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         WHERE o.o_orderstatus = 'F'
@@ -1057,7 +1055,7 @@ def q_small_qty_revenue(spark, sf_dir):
                         AND l3.is_late)
     GROUP BY s.s_suppkey, s.s_name
     ORDER BY numwait DESC, s_suppkey ASC
-    LIMIT 20""",
+    LIMIT {relational.WAITING_TOP_K}""",
     "TPC-H Q21 shape: the multi-EXISTS/NOT-EXISTS same-table chain "
     "collapsed to ONE per-order aggregate on the fact's own shuffle "
     "grain (the oracle runs the literal EXISTS chain — two independent "
@@ -1110,7 +1108,7 @@ def q_bracket_revenue(spark, sf_dir):
 
 @register(
     "important_parts",
-    """WITH pp AS (
+    f"""WITH pp AS (
         SELECT l_partkey,
                CAST(sum(CAST(l_extendedprice AS DECIMAL(30,10)) * 100)
                     AS BIGINT) AS vc
@@ -1120,8 +1118,8 @@ def q_bracket_revenue(spark, sf_dir):
                  CAST(count(*) AS BIGINT) AS n FROM pp)
     SELECT l_partkey, round(CAST(vc AS DOUBLE) / 100, 2) AS value
     FROM pp, t
-    WHERE 3 * vc * n > 2 * tc
-    ORDER BY value DESC, l_partkey ASC LIMIT 50""",
+    WHERE {relational.IMPORTANT_MEAN_MULTIPLE[0]} * vc * n > {relational.IMPORTANT_MEAN_MULTIPLE[1]} * tc
+    ORDER BY value DESC, l_partkey ASC LIMIT {relational.IMPORTANT_TOP_K}""",
     "TPC-H Q11 shape: parts above 1.5x the MEAN part value — the "
     "group-aggregate against a scalar-subquery threshold; the global "
     "(total, n_parts) derives from the per-part aggregate (no second "
@@ -1136,7 +1134,7 @@ def q_important_parts(spark, sf_dir):
 
 @register(
     "dominant_suppliers",
-    """WITH os AS (
+    f"""WITH os AS (
         SELECT l_orderkey, l_suppkey,
                CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sq
         FROM lineitem GROUP BY 1, 2
@@ -1156,7 +1154,7 @@ def q_important_parts(spark, sf_dir):
     )
     SELECT s_suppkey, s_name, n_orders_dominated, total_qty
     FROM dom JOIN supplier ON s_suppkey = l_suppkey
-    ORDER BY n_orders_dominated DESC, s_suppkey ASC LIMIT 25""",
+    ORDER BY n_orders_dominated DESC, s_suppkey ASC LIMIT {relational.DOMINANT_TOP_K}""",
     "TPC-H Q20 shape: suppliers shipping >50% of a multi-supplier order's "
     "quantity — the nested correlated-aggregate chain on ONE fact shuffle "
     "to the (order, supplier) grain; per-order totals derive from that "
@@ -1172,7 +1170,7 @@ def q_dominant_suppliers(spark, sf_dir):
 
 @register(
     "bi_nation_volume",
-    """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
+    f"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
            CAST(year(l_shipdate) AS INT) AS ship_year,
            round(CAST(sum(CAST(l_extendedprice * (1 - l_discount)
                                AS DECIMAL(30,10))) AS DOUBLE), 2) AS revenue,
@@ -1183,8 +1181,8 @@ def q_dominant_suppliers(spark, sf_dir):
     JOIN orders ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
     JOIN nation cn ON c_nationkey = cn.n_nationkey
-    WHERE sn.n_name IN ('NATION_1', 'NATION_2')
-      AND cn.n_name IN ('NATION_1', 'NATION_2')
+    WHERE sn.n_name IN {relational.BI_NATIONS}
+      AND cn.n_name IN {relational.BI_NATIONS}
       AND sn.n_name <> cn.n_name
     GROUP BY 1, 2, 3""",
     "TPC-H Q7 shape: shipping volume between two named nations by year "
@@ -1204,16 +1202,16 @@ def q_bi_nation_volume(spark, sf_dir):
 
 @register(
     "nation_market_share",
-    """WITH rn AS (
+    f"""WITH rn AS (
         SELECT n_nationkey FROM nation
         JOIN region ON n_regionkey = r_regionkey
-        WHERE r_name = 'ASIA'
+        WHERE r_name = '{relational.SHARE_REGION}'
     ),
     j AS (
         SELECT year(o_orderdate) AS order_year,
                CAST(l_extendedprice * (1 - l_discount)
                     AS DECIMAL(30,10)) AS rev,
-               (sn.n_name = 'NATION_2') AS is_share
+               (sn.n_name = '{relational.SHARE_NATION}') AS is_share
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -1246,7 +1244,7 @@ def q_nation_market_share(spark, sf_dir):
 
 @register(
     "returned_item_customers",
-    """WITH per_cust AS (
+    f"""WITH per_cust AS (
         SELECT o_custkey,
                sum(CAST(l_extendedprice * (1 - l_discount)
                         AS DECIMAL(30,10))) AS rev,
@@ -1260,7 +1258,7 @@ def q_nation_market_share(spark, sf_dir):
     FROM per_cust
     JOIN customer ON o_custkey = c_custkey
     JOIN nation ON c_nationkey = n_nationkey
-    ORDER BY returned_rev DESC, c_custkey ASC LIMIT 20""",
+    ORDER BY returned_rev DESC, c_custkey ASC LIMIT {relational.RETURNED_TOP_K}""",
     "TPC-H Q10 shape: top returned-revenue customers — returnflag "
     "filter pushes to the scan, one fact shuffle, dims join the "
     "|customers|-bounded AGGREGATE (not the fact), "
@@ -1302,13 +1300,13 @@ def q_promo_revenue_share(spark, sf_dir):
 
 @register(
     "top_supplier_q15",
-    """WITH rev AS (
+    f"""WITH rev AS (
         SELECT l_suppkey,
                sum(CAST(l_extendedprice * (1 - l_discount)
                         AS DECIMAL(30,10))) AS rev
         FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-          AND l_shipdate < TIMESTAMP '1997-04-01'
+        WHERE l_shipdate >= TIMESTAMP '{relational.TOP_SUPPLIER_QUARTER[0]}'
+          AND l_shipdate < TIMESTAMP '{relational.TOP_SUPPLIER_QUARTER[1]}'
         GROUP BY 1
     )
     SELECT s_suppkey, s_name,
@@ -1745,22 +1743,6 @@ REGISTRY_ORDER = (
                              # incremental_revenue / streaming_heavy_hitters
     "asof_join_bars",        # hash-green r5-r8; DuckDB-native-ASOF
                              # oracle stays value-checked in the tail
-)
-
-# In-window entries whose oracle is None BY DESIGN (codec /
-# eigendecomposition / sketch-estimate pipelines no SQL engine
-# reproduces); the driver records rows-only rows for these — an
-# explicit, reviewed exception. Each is pinned by an exact non-SQL
-# reference in pytest (numpy PCA parity, codec round-trips,
-# union==one-shot HLL). bpe_encode left this set in r9: its oracle now
-# RELEARNS the tokenizer in SQL (driver_queries_ext._bpe_sql_ctes).
-WINDOW_ROWS_ONLY = frozenset(
-    {
-        "pca_projection",
-        "image_jpeg_neardup",
-        "audio_features",
-        "incremental_distinct",
-    }
 )
 
 assert len(REGISTRY_ORDER) == len(set(REGISTRY_ORDER))

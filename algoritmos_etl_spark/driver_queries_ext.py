@@ -21,7 +21,8 @@ from .driver_queries import (
     r6,
     session_bars,
 )
-from .operators import cleaning, dedup, graph, relational, text, vectors
+from .operators import cleaning, dedup, graph, profiling, relational, text, vectors
+from .plans import curation
 from .sources.readers import ORACLE_BARS_CTE, load_table
 
 # DuckDB fragments mirroring text.words_col / normalized_text / token_hash
@@ -239,18 +240,18 @@ def _doc_count(spark, sf_dir: str) -> int:
     )
 
 
-def _spread_n(spark, sf_dir: str, per_task_docs: int = 8) -> int:
+def _spread_n(spark, sf_dir: str) -> int:
     """Scale-adaptive landed-cache spread WITH a size floor (r13,
     VERDICT r12 #3 / guide §2.5): defaultParallelism partitions,
-    capped so one task never owns fewer than `per_task_docs`
-    documents' worth of rows. The r12 unconditional
+    capped so one task never owns fewer than 8 documents' worth of
+    rows. The r12 unconditional
     repartition(defaultParallelism) paid 32-way task overhead on
     tables of a few hundred rows (tiny SFs, low-core runs) — spread
     must be proportional to data, not to the core count alone."""
     n = _doc_count(spark, sf_dir)
     return max(
         1,
-        min(spark.sparkContext.defaultParallelism, n // per_task_docs),
+        min(spark.sparkContext.defaultParallelism, n // 8),
     )
 
 
@@ -332,7 +333,7 @@ def _ivf_cents(spark, sf_dir):
         sf_dir,
         lambda: vectors.ivf_train(
             load_table(spark, sf_dir, "embeddings"),
-            n_centroids=16,
+            n_centroids=vectors.IVF_CENTROIDS,
             iters=1,
             flat=_ivf_flat(spark, sf_dir),
         ),
@@ -593,8 +594,8 @@ def _stream_neardup_setup(spark, sf_dir: str) -> str:
     fdocs AS (
         SELECT d.doc_id, d.text
         FROM documents d JOIN stats USING (doc_id) JOIN langs USING (doc_id)
-        WHERE pred_lang = 'en' AND n_words >= 20
-          AND stopword_ratio >= 0.02 AND stopword_ratio <= 0.25
+        WHERE pred_lang = '{curation.KEEP_LANG}' AND n_words >= {curation.MIN_WORDS}
+          AND stopword_ratio >= {curation.MIN_STOPWORD_RATIO} AND stopword_ratio <= {curation.MAX_STOPWORD_RATIO}
     ),
     {_MINHASH.replace("FROM documents", "FROM fdocs").strip().lstrip()},
     small AS (
@@ -624,7 +625,7 @@ def _stream_neardup_setup(spark, sf_dir: str) -> str:
         JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
         JOIN sizes sa ON sa.doc_id = c.doc_a
         JOIN sizes sb ON sb.doc_id = c.doc_b
-        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= 0.2
+        WHERE CAST(i.n_inter AS DOUBLE) / (sa.n + sb.n - i.n_inter) >= {curation.NEARDUP_THRESHOLD}
     )
     SELECT f.doc_id, CAST(s.n_words AS BIGINT) AS n_words,
            s.stopword_ratio, l.pred_lang
@@ -638,9 +639,7 @@ def _stream_neardup_setup(spark, sf_dir: str) -> str:
     "— the composed training-data pipeline (M8)",
 )
 def q_corpus_curation(spark, sf_dir):
-    from .plans.curation import curate_corpus
-
-    out = curate_corpus(
+    out = curation.curate_corpus(
         load_table(spark, sf_dir, "documents"),
         shingles=_shingles(spark, sf_dir),
     )
@@ -715,6 +714,7 @@ def q_simhash(spark, sf_dir):
 # ---------------------------------------------------------------- vectors
 
 _DVEC = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
+_ANN_IDS = ", ".join(map(str, vectors.ANN_QUERY_IDS))
 
 
 @register(
@@ -731,7 +731,7 @@ def q_emb_norms(spark, sf_dir):
 @register(
     "ann_cosine_topk",
     f"""WITH base AS (SELECT vec_id, {_DVEC} AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN (0, 1, 2, 3, 4)),
+    q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN ({_ANN_IDS})),
     pairs AS (
         SELECT query_id, b.vec_id AS neighbor_id, qv, b.v AS nv
         FROM q, base b WHERE b.vec_id <> query_id
@@ -748,12 +748,14 @@ def q_emb_norms(spark, sf_dir):
         FROM dots
     )
     SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 10""",
+    FROM ranked WHERE rank <= {vectors.ANN_K}""",
     "Brute-force cosine top-10 for query vectors 0-4 (ANN baseline, M8)",
 )
 def q_ann_topk(spark, sf_dir):
     return vectors.cosine_topk(
-        load_table(spark, sf_dir, "embeddings"), [0, 1, 2, 3, 4], k=10
+        load_table(spark, sf_dir, "embeddings"),
+        list(vectors.ANN_QUERY_IDS),
+        k=vectors.ANN_K,
     )
 
 
@@ -1153,17 +1155,15 @@ def q_dtw_report(spark, sf_dir):
     return distances.unionByName(path)
 
 
-def _oracle_lsh_tables(
-    n_tables: int = vectors.LSH_TABLES,
-    planes_per_table: int = vectors.LSH_PLANES_PER_TABLE,
-) -> str:
+def _oracle_lsh_tables() -> str:
     """DuckDB twin of vectors.lsh_signatures with the vectors attached:
     the same integer-quantized plane dots (floor(val·1e9) is
     binary-exact on both engines; the ±1 components rebuild from the
     identical md5 family), as flat CTEs — usable as `bucketed` via
     `SELECT ... FROM ({this})`.
     """
-    n_planes = n_tables * planes_per_table
+    planes_per_table = vectors.LSH_PLANES_PER_TABLE
+    n_planes = vectors.LSH_TABLES * planes_per_table
     return f"""
     WITH flat AS (
         SELECT vec_id,
@@ -1234,7 +1234,7 @@ def q_emb_neardup(spark, sf_dir):
     "ann_lsh_topk",
     f"""WITH base AS (SELECT vec_id, {_DVEC} AS v FROM embeddings),
     bucketed AS ({_oracle_lsh_tables()}),
-    q AS (SELECT vec_id AS query_id, v AS qv, tbl, sig FROM bucketed WHERE vec_id IN (0, 1, 2, 3, 4)),
+    q AS (SELECT vec_id AS query_id, v AS qv, tbl, sig FROM bucketed WHERE vec_id IN ({_ANN_IDS})),
     cands AS (
         SELECT DISTINCT q.query_id, q.qv, b.vec_id, b.v
         FROM q JOIN bucketed b
@@ -1252,7 +1252,7 @@ def q_emb_neardup(spark, sf_dir):
         FROM dots
     )
     SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 10""",
+    FROM ranked WHERE rank <= {vectors.ANN_K}""",
     "LSH-bucketed ANN top-10 (random-hyperplane signs from md5 bits, M8 scale "
     "path) — oracle rebuilds the md5-derived plane signs, so even the "
     "approximate candidate set is engine-reproducible",
@@ -1260,16 +1260,13 @@ def q_emb_neardup(spark, sf_dir):
 def q_ann_lsh(spark, sf_dir):
     return vectors.lsh_topk(
         load_table(spark, sf_dir, "embeddings"),
-        [0, 1, 2, 3, 4],
-        k=10,
+        list(vectors.ANN_QUERY_IDS),
+        k=vectors.ANN_K,
         sigs=_lsh_sigs(spark, sf_dir),
     )
 
 
-def _oracle_ivf(
-    n_centroids: int = 16, nprobe: int = 4, k: int = 10,
-    query_ids: str = "0, 1, 2, 3, 4",
-) -> str:
+def _oracle_ivf() -> str:
     """DuckDB twin of vectors.ivf_topk (iters=1).
 
     Everything the argmaxes see is an integer-exact sum of
@@ -1301,7 +1298,7 @@ def _oracle_ivf(
     vnorm AS (SELECT vec_id, sum(q*q) AS n2 FROM flat GROUP BY 1),
     seed AS (
         SELECT f.vec_id AS centroid_id, f.idx, f.q AS c
-        FROM flat f JOIN (SELECT vec_id FROM base ORDER BY vec_id LIMIT {n_centroids}) s USING (vec_id)
+        FROM flat f JOIN (SELECT vec_id FROM base ORDER BY vec_id LIMIT {vectors.IVF_CENTROIDS}) s USING (vec_id)
     ),
     s_cnorm AS (SELECT centroid_id, sum(c*c) AS c2 FROM seed GROUP BY 1),
     s_dots AS (
@@ -1327,8 +1324,8 @@ def _oracle_ivf(
                        ORDER BY CAST(d.dot AS DOUBLE)/(sqrt(CAST(v.n2 AS DOUBLE))*sqrt(CAST(n.c2 AS DOUBLE))) DESC,
                                 d.centroid_id) AS rn
             FROM dots d JOIN vnorm v USING (vec_id) JOIN cnorm n USING (centroid_id)
-            WHERE d.vec_id IN ({query_ids})
-        ) WHERE rn <= {nprobe}
+            WHERE d.vec_id IN ({_ANN_IDS})
+        ) WHERE rn <= {vectors.IVF_NPROBE}
     ),
     cand AS (
         SELECT p.query_id, a.vec_id
@@ -1351,7 +1348,7 @@ def _oracle_ivf(
         FROM pdots p JOIN vnorm nq ON nq.vec_id = p.query_id JOIN vnorm nv ON nv.vec_id = p.vec_id
     )
     SELECT query_id, neighbor_id, round(cosine, 6) AS cosine, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= {k}"""
+    FROM ranked WHERE rank <= {vectors.ANN_K}"""
 
 
 @register(
@@ -1365,10 +1362,10 @@ def _oracle_ivf(
 def q_ann_ivf(spark, sf_dir):
     return vectors.ivf_topk(
         load_table(spark, sf_dir, "embeddings"),
-        [0, 1, 2, 3, 4],
-        k=10,
-        n_centroids=16,
-        nprobe=4,
+        list(vectors.ANN_QUERY_IDS),
+        k=vectors.ANN_K,
+        n_centroids=vectors.IVF_CENTROIDS,
+        nprobe=vectors.IVF_NPROBE,
         flat=_ivf_flat(spark, sf_dir),
         cents=_ivf_cents(spark, sf_dir),
     )
@@ -1403,10 +1400,7 @@ def _pq_codes(spark, sf_dir):
     )
 
 
-def _oracle_pq(
-    m: int = vectors.PQ_SUBS, ks: int = vectors.PQ_CODES, k: int = 10,
-    query_ids: str = "0, 1, 2, 3, 4",
-) -> str:
+def _oracle_pq() -> str:
     """DuckDB twin of vectors.pq_topk (one Lloyd step per subspace).
 
     Same integer-exactness argument as `_oracle_ivf`: every distance
@@ -1415,7 +1409,7 @@ def _oracle_pq(
     the code assignment, and the ADC distances are bit-identical
     across engines — the compressed index itself is oracle-checked.
     """
-    dsub = 64 // m  # embeddings are 64-d in every sf dir
+    dsub = 64 // vectors.PQ_SUBS  # embeddings are 64-d in every sf dir
 
     def argmin(d2_cte: str) -> str:
         return (
@@ -1440,7 +1434,7 @@ def _oracle_pq(
     seeds AS (
         SELECT vec_id,
                CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-        FROM (SELECT vec_id FROM base ORDER BY vec_id LIMIT {ks})
+        FROM (SELECT vec_id FROM base ORDER BY vec_id LIMIT {vectors.PQ_CODES})
     ),
     cents0 AS (
         SELECT f.sub, s.code, f.sidx, f.q AS c
@@ -1466,7 +1460,7 @@ def _oracle_pq(
     codes AS ({argmin("d1")}),
     qsub AS (
         SELECT vec_id AS query_id, sub, sidx, q AS qq
-        FROM sflat WHERE vec_id IN ({query_ids})
+        FROM sflat WHERE vec_id IN ({_ANN_IDS})
     ),
     dtab AS (
         SELECT q.query_id, c.sub, c.code, sum((q.qq - c.c)*(q.qq - c.c)) AS pd2
@@ -1487,7 +1481,7 @@ def _oracle_pq(
     )
     SELECT query_id, neighbor_id, CAST(adist AS BIGINT) AS adist,
            CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= {k}"""
+    FROM ranked WHERE rank <= {vectors.ANN_K}"""
 
 
 @register(
@@ -1502,8 +1496,8 @@ def _oracle_pq(
 def q_ann_pq(spark, sf_dir):
     return vectors.pq_topk(
         load_table(spark, sf_dir, "embeddings"),
-        [0, 1, 2, 3, 4],
-        k=10,
+        list(vectors.ANN_QUERY_IDS),
+        k=vectors.ANN_K,
         flat=_ivf_flat(spark, sf_dir),
         codebooks=_pq_cents(spark, sf_dir),
         codes=_pq_codes(spark, sf_dir),
@@ -2726,7 +2720,7 @@ def q_lm_topk(spark, sf_dir):
     return uni.unionByName(bi)
 
 
-def _kmeans_chain(n_centroids: int = 16) -> str:
+def _kmeans_chain() -> str:
     """Shared k-means WITH-chain (same integer-exact seed/assign/Lloyd
     steps as `_oracle_ivf`), ending at `best` = every vector's final
     cluster assignment (+ cosine to its centroid). Leaves `flat` and
@@ -2742,7 +2736,7 @@ def _kmeans_chain(n_centroids: int = 16) -> str:
     vnorm AS (SELECT vec_id, sum(q*q) AS n2 FROM flat GROUP BY 1),
     seed AS (
         SELECT f.vec_id AS centroid_id, f.idx, f.q AS c
-        FROM flat f JOIN (SELECT vec_id FROM base ORDER BY vec_id LIMIT {n_centroids}) s USING (vec_id)
+        FROM flat f JOIN (SELECT vec_id FROM base ORDER BY vec_id LIMIT {vectors.IVF_CENTROIDS}) s USING (vec_id)
     ),
     s_cnorm AS (SELECT centroid_id, sum(c*c) AS c2 FROM seed GROUP BY 1),
     s_dots AS (
@@ -2775,21 +2769,21 @@ def _kmeans_chain(n_centroids: int = 16) -> str:
     )"""
 
 
-def _oracle_kmeans(n_centroids: int = 16) -> str:
+def _oracle_kmeans() -> str:
     """DuckDB twin of vectors.kmeans_cluster_profile (iters=1): the
     shared chain, then per-cluster membership stats."""
-    return f"""{_kmeans_chain(n_centroids)}
+    return f"""{_kmeans_chain()}
     SELECT centroid_id, CAST(count(*) AS BIGINT) AS n_members,
            round(avg(cosine), 6) AS avg_cosine,
            min(vec_id) AS min_vec_id
     FROM best GROUP BY centroid_id"""
 
 
-def _oracle_semantic_dedup(tau: float, n_centroids: int = 16) -> str:
+def _oracle_semantic_dedup(tau: float) -> str:
     """DuckDB twin of vectors.semantic_dedup: the shared k-means chain,
     then within-cluster integer-exact pair cosines and the greedy
     keep-smallest-id decision."""
-    return f"""{_kmeans_chain(n_centroids)},
+    return f"""{_kmeans_chain()},
     pairs AS (
         SELECT b.vec_id AS ia, a.vec_id AS ib
         FROM best a JOIN best b
@@ -2835,7 +2829,7 @@ def q_kmeans_clusters(spark, sf_dir):
 
     return _v.kmeans_cluster_profile(
         load_table(spark, sf_dir, "embeddings"),
-        n_centroids=16,
+        n_centroids=_v.IVF_CENTROIDS,
         iters=1,
         flat=_ivf_flat(spark, sf_dir),
         cents=_ivf_cents(spark, sf_dir),
@@ -3258,25 +3252,23 @@ _BPE_N_MERGES = 8
 _BPE_MIN_FREQ = 2
 
 
-def _bpe_sql_ctes(
-    n_merges: int = _BPE_N_MERGES, min_freq: int = _BPE_MIN_FREQ
-) -> str:
+def _bpe_sql_ctes() -> str:
     """DuckDB CTE chain reconstructing the ENTIRE BPE pipeline in SQL —
     both training and application — so the 'iteratively-learned
     encoding' queries carry FULL value oracles (r9; they were
     rows-only through r8).
 
-    Training: the word-frequency table, then `n_merges` unrolled
+    Training: the word-frequency table, then `_BPE_N_MERGES` unrolled
     rounds of (adjacent-pair count over the current tokenization →
     argmax with the learner's exact count-desc/left-asc/right-asc
-    tiebreak and min_freq gate → greedy left-to-right merge). The
+    tiebreak and `_BPE_MIN_FREQ` gate → greedy left-to-right merge). The
     greedy fold (`operators/bpe._apply_merge`) maps onto
     `list_reduce` with the accumulator encoded as a space-joined
     token string: merge when the accumulator's LAST token equals
     `left` and the element equals `right` — plain `replace()` would
     diverge on odd runs of a self-pair ('a a a a a' must give
     'aa aa a', not 'aa a aa'). An empty m{{i}} (best count below
-    min_freq) LEFT-JOINs as NULL and round i becomes a no-op,
+    the gate) LEFT-JOINs as NULL and round i becomes a no-op,
     matching the learner's early break.
 
     Application: per-doc ordered token lists via the word join
@@ -3286,6 +3278,7 @@ def _bpe_sql_ctes(
     as the `vocab` CTE. The training corpus is the encoding corpus,
     so the byte fallback is unreachable and every token resolves in
     `vocab`."""
+    n_merges, min_freq = _BPE_N_MERGES, _BPE_MIN_FREQ
     parts = [
         "docs_w AS (SELECT doc_id, "
         "list_filter(string_split(trim(lower(text)), ' '), x -> x <> '') "
@@ -3619,7 +3612,7 @@ def q_table_history(spark, sf_dir):
 
 @register(
     "priority_drift_categorical",
-    """WITH b AS (
+    f"""WITH b AS (
         SELECT coalesce(CAST(o_orderpriority AS VARCHAR), '__NULL__')
                AS category
         FROM orders WHERE year(o_orderdate) <= 1997
@@ -3631,7 +3624,7 @@ def q_table_history(spark, sf_dir):
     ),
     bc AS (SELECT category, count(*) AS n FROM b GROUP BY 1),
     top AS (SELECT category FROM bc
-            ORDER BY n DESC, category ASC LIMIT 100),
+            ORDER BY n DESC, category ASC LIMIT {profiling.PSI_MAX_CATEGORIES}),
     grid AS (SELECT DISTINCT category FROM
              (SELECT category FROM top UNION ALL SELECT '__OTHER__')),
     fb AS (SELECT CASE WHEN t.category IS NOT NULL THEN b.category
@@ -5387,13 +5380,13 @@ def q_streaming_heavy_hitters(spark, sf_dir):
 
 @register(
     "forecast_revenue",
-    """SELECT round(CAST(sum(CAST(l_extendedprice * l_discount
+    f"""SELECT round(CAST(sum(CAST(l_extendedprice * l_discount
                  AS DECIMAL(30,10))) AS DOUBLE), 2) AS revenue,
            CAST(count(*) AS BIGINT) AS n_items
     FROM lineitem
-    WHERE year(l_shipdate) = 1996
-      AND round(l_discount, 2) BETWEEN 0.04 AND 0.06
-      AND l_quantity < 24""",
+    WHERE year(l_shipdate) = {relational.FORECAST_YEAR}
+      AND round(l_discount, 2) BETWEEN {relational.FORECAST_DISCOUNT_BAND[0]} AND {relational.FORECAST_DISCOUNT_BAND[1]}
+      AND l_quantity < {relational.FORECAST_MAX_QTY}""",
     "TPC-H Q6 shape: one-year discount-band small-lot revenue forecast "
     "— the suite's pure-pushdown query: every predicate (year, "
     "2-decimal discount band, quantity cap) reaches the parquet scan, "
@@ -5406,11 +5399,11 @@ def q_forecast_revenue(spark, sf_dir):
 
 @register(
     "product_profit",
-    """SELECT n.n_name AS nation,
+    f"""SELECT n.n_name AS nation,
            CAST(year(o.o_orderdate) AS INT) AS o_year,
            round(CAST(sum(CAST(
                (l.l_extendedprice * (1 - l.l_discount))
-               - (0.6 * p.p_retailprice) * l.l_quantity
+               - ({relational.PROFIT_COST_FRAC} * p.p_retailprice) * l.l_quantity
                AS DECIMAL(30,10))) AS DOUBLE), 2) AS profit,
            CAST(count(*) AS BIGINT) AS n_items
     FROM lineitem l
@@ -5418,7 +5411,7 @@ def q_forecast_revenue(spark, sf_dir):
     JOIN supplier s ON l.l_suppkey = s.s_suppkey
     JOIN nation n ON s.s_nationkey = n.n_nationkey
     JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE contains(p.p_name, 'bolt')
+    WHERE contains(p.p_name, '{relational.PROFIT_NAME_PATTERN}')
     GROUP BY 1, 2""",
     "TPC-H Q9 shape: profit by supplier nation x order year for "
     "name-matched parts (supply cost proxied as 0.6*p_retailprice/unit "
@@ -5441,12 +5434,12 @@ def q_product_profit(spark, sf_dir):
 
 @register(
     "customer_distribution",
-    """WITH cnt AS (
+    f"""WITH cnt AS (
         SELECT c.c_custkey,
                CAST(count(o.o_orderkey) AS BIGINT) AS c_count
         FROM customer c
         LEFT JOIN (SELECT o_orderkey, o_custkey FROM orders
-                   WHERE o_orderpriority <> '1-URGENT') o
+                   WHERE o_orderpriority <> '{relational.EXCLUDED_PRIORITY}') o
           ON c.c_custkey = o.o_custkey
         GROUP BY c.c_custkey)
     SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
@@ -6301,15 +6294,15 @@ def q_pdf_extraction(spark, sf_dir):
 # ---------------- round 11: Gopher/Dolma document rule pack (VERDICT #6)
 
 
-def _quality_sig_sql(src: str, id_col: str = "doc_id") -> str:
+def _quality_sig_sql(src: str) -> str:
     """Parametrized DuckDB twin of `text._quality_signals` over
-    relation `src` (must expose `id_col` and `text`): yields CTEs
+    relation `src` (must expose `doc_id` and `text`): yields CTEs
     `w` and `sig`. Shared by the quality_rules oracle and the
     crawl_corpus composition oracle so the signal spelling exists
     once."""
     stops = ", ".join(f"'{s}'" for s in text.GOPHER_STOPWORDS)
     lines = "list_filter(string_split(text, chr(10)), l -> l <> '')"
-    return f"""w AS (SELECT {id_col} AS _qid, {_W} AS ws, text FROM {src}),
+    return f"""w AS (SELECT doc_id AS _qid, {_W} AS ws, text FROM {src}),
     sig AS (
         SELECT _qid,
             CAST(len(ws) AS BIGINT) AS n_words,
@@ -6959,9 +6952,7 @@ def q_host_pagerank(spark, sf_dir):
 # ------ round 12: byte-level pre-tokenized BPE arm (VERDICT r11 #4)
 
 
-def _bpe_bytes_sql_ctes(
-    n_merges: int = _BPE_N_MERGES, min_freq: int = _BPE_MIN_FREQ
-) -> str:
+def _bpe_bytes_sql_ctes() -> str:
     """DuckDB twin of the BYTE-level BPE pipeline (`bpe.PRETOKEN_RE`
     GPT-2-style pre-tokenizer over RAW text, UTF-8 hex-chunk grain,
     no END marker, ids 0..255 = bytes / 256+ = merges) — the
@@ -6974,6 +6965,7 @@ def _bpe_bytes_sql_ctes(
     from .operators.bpe import PRETOKEN_RE
 
     pat = PRETOKEN_RE.replace("'", "''")
+    n_merges, min_freq = _BPE_N_MERGES, _BPE_MIN_FREQ
     parts = [
         f"bpt AS (SELECT doc_id, regexp_extract_all(text, '{pat}') "
         "AS pts FROM documents)",
@@ -7097,6 +7089,7 @@ from .sources.warc import IMG_URL_PREFIX, img_pairs_sql  # noqa: E402
 
 
 def _oracle_image_caption_pairs() -> str:
+    from .operators.links import CAPTION_MAX_CHARS, CAPTION_MIN_WORDS
     from .sources.warc import IMG_POOL
 
     return f"""WITH {_warc_live_urls_cte()},
@@ -7127,7 +7120,7 @@ def _oracle_image_caption_pairs() -> str:
            '{IMG_URL_PREFIX}' || g || '.png' AS img_url,
            page_url, caption,
            CAST(nw AS BIGINT) AS n_caption_words,
-           (nw >= 3 AND length(caption) <= 200) AS caption_ok
+           (nw >= {CAPTION_MIN_WORDS} AND length(caption) <= {CAPTION_MAX_CHARS}) AS caption_ok
     FROM gated"""
 
 
@@ -7167,15 +7160,13 @@ def q_image_caption_pairs(spark, sf_dir):
     return links.mine_image_caption_pairs(deduped, images).drop("payload")
 
 
-def _bpe_bytes_train_sql(
-    n_merges: int = _BPE_N_MERGES, min_freq: int = _BPE_MIN_FREQ
-) -> str:
+def _bpe_bytes_train_sql() -> str:
     """The TRAINING-ONLY prefix of `_bpe_bytes_sql_ctes` (pre-token
     frequency table + merge rounds + vocab — all vocabulary-grain, so
     it fits any notch), for the sharded big-notch oracle: the 100x
     one-shot CTE OOM'd on the per-doc APPLICATION stage, not on
     training."""
-    full = _bpe_bytes_sql_ctes(n_merges, min_freq)
+    full = _bpe_bytes_sql_ctes()
     # drop the two per-doc application parts (they are re-derived per
     # shard); keep everything else verbatim so the dialects can't fork
     cut = full.index("per_bpt_pos AS")

@@ -54,10 +54,10 @@ def date_to_unix(date: Column) -> Column:
     return F.unix_timestamp(date.cast("timestamp"))
 
 
-def date_parts(df: DataFrame, date_col: str = "date") -> DataFrame:
-    """F2: year/month/day extraction (the reference slices the ISO
-    string; DateType makes these native)."""
-    d = F.col(date_col)
+def date_parts(df: DataFrame) -> DataFrame:
+    """F2: year/month/day extraction from `date` (the reference slices
+    the ISO string; DateType makes these native)."""
+    d = F.col("date")
     return df.withColumns(
         {
             "year": F.year(d),
@@ -89,21 +89,16 @@ def fixed6(col: Column) -> Column:
     return F.floor(col * 1_000_000 + F.lit(0.5)).cast("long")
 
 
-def regression_line(
-    df: DataFrame, y: str, x: str, group: list[str] | None = None
-) -> DataFrame:
-    """F8: least-squares slope/intercept per group — the scatter-plot
-    regression the reference computes client-side in JS. Built-in
+def regression_line(df: DataFrame, y: str, x: str) -> DataFrame:
+    """F8: least-squares slope/intercept — the scatter-plot regression
+    the reference computes client-side in JS. Built-in
     `regr_slope`/`regr_intercept` (Spark 3.4+), one aggregation pass."""
-    aggs = [
+    return df.agg(
         F.regr_slope(F.col(y), F.col(x)).alias("slope"),
         F.regr_intercept(F.col(y), F.col(x)).alias("intercept"),
         F.regr_r2(F.col(y), F.col(x)).alias("r2"),
         F.regr_count(F.col(y), F.col(x)).alias("n"),
-    ]
-    if group:
-        return df.groupBy(*group).agg(*aggs)
-    return df.agg(*aggs)
+    )
 
 
 # Per-SparkContext memo of reusable unresolved Column trees (r13):

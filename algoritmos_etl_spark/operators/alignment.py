@@ -33,11 +33,10 @@ def align_to_calendar(df: DataFrame) -> DataFrame:
     return scaffold.join(df, ["symbol", "date"], "left")
 
 
-def to_wide(
-    df: DataFrame,
-    symbols: Sequence[str] | None = None,
-    fields: Sequence[str] = ("open", "high", "low", "close", "volume"),
-) -> DataFrame:
+BAR_FIELDS = ("open", "high", "low", "close", "volume")
+
+
+def to_wide(df: DataFrame, symbols: Sequence[str] | None = None) -> DataFrame:
     """Pivot long bars to the reference's wide master table (J3).
 
     Output: one row per date, columns `{symbol}_{field}` — the shape of
@@ -49,15 +48,12 @@ def to_wide(
     pivoted = (
         df.groupBy("date")
         .pivot("symbol", list(symbols) if symbols is not None else None)
-        .agg(*[F.first(f).alias(f) for f in fields])
+        .agg(*[F.first(f).alias(f) for f in BAR_FIELDS])
     )
     return pivoted
 
 
-def wide_to_long(
-    wide: DataFrame,
-    fields: Sequence[str] = ("open", "high", "low", "close", "volume"),
-) -> DataFrame:
+def wide_to_long(wide: DataFrame) -> DataFrame:
     """Inverse of `to_wide`: melt `{symbol}_{field}` columns back to the
     long model (S3 parity — re-ingesting the reference's wide CSV).
 
@@ -72,7 +68,7 @@ def wide_to_long(
     structs = [
         F.struct(
             F.lit(s).alias("symbol"),
-            *[F.col(f"{s}_{f}").alias(f) for f in fields],
+            *[F.col(f"{s}_{f}").alias(f) for f in BAR_FIELDS],
         )
         for s in symbols
     ]

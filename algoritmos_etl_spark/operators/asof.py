@@ -32,14 +32,9 @@ def asof_join(
     left_time: str,
     right_time: str,
     value_cols: list[str],
-    tolerance=None,
 ) -> DataFrame:
     """Each left row + the latest right `value_cols` at-or-before its
-    time (NULLs when no prior right row, or none within `tolerance`).
-
-    `tolerance` (optional Column/literal, same units as the time cols'
-    difference) drops matches older than `left_time - tolerance`.
-    """
+    time (NULLs when no prior right row)."""
     l_tagged = left.withColumn("_t", F.col(left_time)).withColumn(
         "_side", F.lit(1)
     )
@@ -74,15 +69,6 @@ def asof_join(
     )
 
     out = filled.filter(F.col("_side") == 1)
-    if tolerance is not None:
-        keep = F.col("_match_t").isNotNull() & (
-            F.col("_t") - F.col("_match_t") <= tolerance
-        )
-        for v in value_cols:
-            out = out.withColumn(
-                f"_r_{v}", F.when(keep, F.col(f"_r_{v}"))
-            )
-        out = out.withColumn("_match_t", F.when(keep, F.col("_match_t")))
     renames = {f"_r_{v}": f"asof_{v}" for v in value_cols}
     for old, new in renames.items():
         out = out.withColumnRenamed(old, new)

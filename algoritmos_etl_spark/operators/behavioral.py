@@ -95,9 +95,9 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     )
 
 
-def props_stats(events: DataFrame, field: str = "k") -> DataFrame:
-    """F10 (JSON navigation) at the registered-query grain: extract an
-    integer field from the `props` JSON column with `get_json_object`
+def props_stats(events: DataFrame) -> DataFrame:
+    """F10 (JSON navigation) at the registered-query grain: extract the
+    integer field `k` from the `props` JSON column with `get_json_object`
     (JVM-side Jackson path evaluation — no Python in the loop) and
     aggregate it per event type. The extraction is a projection fused
     into the scan; the groupBy key is the bounded event-type domain.
@@ -106,7 +106,7 @@ def props_stats(events: DataFrame, field: str = "k") -> DataFrame:
     payloads field-by-field; this is the same navigation as a columnar
     expression over a JSON-typed column.
     """
-    val = F.get_json_object(F.col("props"), f"$.{field}").cast("int")
+    val = F.get_json_object(F.col("props"), "$.k").cast("int")
     return events.select("event_type", val.alias("v")).groupBy("event_type").agg(
         F.count("v").alias("n_present"),
         F.round(F.avg("v"), 6).alias("avg_v"),

@@ -213,10 +213,9 @@ def interpolate_missing(
     value_col: str = "close",
     date_col: str = "date",
     partition_col: str = "symbol",
-    out_col: str = "interp",
 ) -> DataFrame:
-    """Linear time-weighted interpolation of null gaps: each missing
-    value gets prev + (next − prev) · Δt_frac, where the fraction is
+    """Linear time-weighted interpolation of null gaps into `interp`:
+    each missing value gets prev + (next − prev) · Δt_frac, where the fraction is
     measured on the TIME axis (a 3-day gap interpolates by calendar
     distance, not row position) — the gap-fill idiom of every
     time-series store, extending the reference's forward-fill (W1,
@@ -253,4 +252,4 @@ def interpolate_missing(
             prev_v + (next_v - prev_v) * frac,
         )
     )
-    return df.withColumn(out_col, interp)
+    return df.withColumn("interp", interp)

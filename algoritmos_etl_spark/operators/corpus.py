@@ -31,12 +31,12 @@ from .text import words_col
 def contamination_stats(
     docs: DataFrame,
     benchmark: DataFrame,
-    k: int = 3,
     min_overlap: float = 0.5,
     shingles: DataFrame | None = None,
     benchmark_shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document k-shingle overlap against a benchmark/eval corpus.
+    """Per-document 3-word-shingle overlap against a benchmark/eval
+    corpus.
 
     Shape for 100 TB: the benchmark side is an eval suite — thousands
     of documents, megabytes of text — so its distinct shingle set is
@@ -46,7 +46,7 @@ def contamination_stats(
 
     Output: (doc_id, n_shingles, n_hit, overlap_frac, contaminated)
     for every corpus doc with at least one shingle; `contaminated` is
-    overlap_frac >= min_overlap. Docs shorter than k words have no
+    overlap_frac >= min_overlap. Docs shorter than 3 words have no
     shingles and are structurally uncontaminated (omitted).
 
     `shingles` / `benchmark_shingles` optionally supply materialized
@@ -56,12 +56,12 @@ def contamination_stats(
     bench_base = (
         benchmark_shingles
         if benchmark_shingles is not None
-        else doc_shingles(benchmark, k)
+        else doc_shingles(benchmark, 3)
     )
     bench_sh = bench_base.select("shingle").distinct().withColumn(
         "_hit", F.lit(1)
     )
-    corpus_sh = shingles if shingles is not None else doc_shingles(docs, k)
+    corpus_sh = shingles if shingles is not None else doc_shingles(docs, 3)
     marked = corpus_sh.join(F.broadcast(bench_sh), "shingle", "left")
     agg = marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
@@ -83,18 +83,21 @@ def _pack_sort_key(doc_id: Column, salt: str = "pack:") -> Column:
     return F.md5(F.concat(F.lit(salt), doc_id.cast("string")))
 
 
+# Requested bucket count of `hashed_prefix_sum`, read at call time.
+PREFIX_BUCKETS = 256
+
+
 def hashed_prefix_sum(
     counted: DataFrame,
     val_col: str,
     salt: str = "pack:",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Exclusive prefix sum of `val_col` over the md5-shuffled global
     doc order, WITHOUT a global sort — the two-phase idiom shared by
     `pack_sequences_counted` (token stream offsets) and
     `sampling.pps_sample` (cumulative weight): documents land in one of
-    ~`n_buckets` ordered buckets (a hex PREFIX of the md5 sort key, so
-    bucket order is consistent with the global key order), the
+    ~`PREFIX_BUCKETS` ordered buckets (a hex PREFIX of the md5 sort
+    key, so bucket order is consistent with the global key order), the
     per-bucket cumulative sum runs partition-parallel, and only the
     bucket-total table passes through a single-partition window before
     broadcasting back. At any corpus size the serial step is
@@ -109,7 +112,7 @@ def hashed_prefix_sum(
     # order-preserving bucketing requires a KEY PREFIX, so the bucket
     # count is the nearest power of 16 (hex digits) to the request;
     # capped at 16^4 so the offsets table stays trivially one-task
-    hex_len = min(4, max(1, round(math.log(max(n_buckets, 16), 16))))
+    hex_len = min(4, max(1, round(math.log(max(PREFIX_BUCKETS, 16), 16))))
     skey = _pack_sort_key(F.col("doc_id"), salt)
     base = counted.select(
         "doc_id",
@@ -124,7 +127,7 @@ def hashed_prefix_sum(
         "_cum_in_bucket", F.sum(val_col).over(in_bucket)
     )
     totals = base.groupBy("_bucket").agg(F.sum(val_col).alias("_total"))
-    # n_buckets rows total: the only single-partition window in the op
+    # ~PREFIX_BUCKETS rows total: the only single-partition window in the op
     # (explicit non-foldable constant key, see scalars.one_partition)
     offsets = totals.withColumn(
         "_offset",
@@ -152,7 +155,6 @@ def hashed_prefix_sum(
 def pack_sequences(
     docs: DataFrame,
     ctx_len: int = 2048,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Assign documents to fixed-`ctx_len` training windows in a
     deterministic pseudo-shuffled order, split-on-boundary semantics
@@ -160,7 +162,7 @@ def pack_sequences(
     cut every ctx_len tokens; a document may span several windows).
 
     The global token prefix-sum is computed WITHOUT a global sort:
-    documents land in one of ~`n_buckets` ordered buckets (a hex PREFIX
+    documents land in one of ~`PREFIX_BUCKETS` ordered buckets (a hex PREFIX
     of the md5 sort key, so bucket order is consistent with the global
     key order; the count rounds to the nearest power of 16), the
     per-bucket cumulative sum runs partition-parallel, and only the
@@ -184,13 +186,12 @@ def pack_sequences(
         .cast("long")
         .alias("n_tokens"),
     )
-    return pack_sequences_counted(counted, ctx_len=ctx_len, n_buckets=n_buckets)
+    return pack_sequences_counted(counted, ctx_len=ctx_len)
 
 
 def pack_sequences_counted(
     counted: DataFrame,
     ctx_len: int = 2048,
-    n_buckets: int = 256,
 ) -> DataFrame:
     """`pack_sequences`' window math over PRECOMPUTED per-doc token
     counts — the tokenizer-aware arm: feed it (doc_id, n_tokens) from
@@ -198,7 +199,7 @@ def pack_sequences_counted(
     sized by the model's real sequence lengths instead of whitespace
     words. Same two-phase prefix sum, same split-on-boundary
     semantics."""
-    packed = hashed_prefix_sum(counted, "n_tokens", n_buckets=n_buckets)
+    packed = hashed_prefix_sum(counted, "n_tokens")
     token_start = F.col("_start")
     pack_first = F.floor(token_start / F.lit(ctx_len)).cast("long")
     pack_last = F.floor(
@@ -393,8 +394,6 @@ DSIR_BUCKETS = 1024
 def nb_quality_scores(
     docs: DataFrame,
     is_pos: Column | None = None,
-    n_buckets: int = DSIR_BUCKETS,
-    scale: int = 10**6,
 ) -> DataFrame:
     """CCNet-style trained quality scorer (Wenzek et al. 2020 train a
     Wikipedia-vs-crawl LM; the linear twin is a hashed-unigram Naive
@@ -417,13 +416,13 @@ def nb_quality_scores(
     length-normalized rank.
 
     Scale shape: the label is row-local (no label-table join), both
-    class distributions reduce to `n_buckets` cells in ONE partial-agg
+    class distributions reduce to `DSIR_BUCKETS` cells in ONE partial-agg
     shuffle over the token explode, the weight table BROADCASTS at any
     corpus size (B rows), and scoring is a map-side-combinable sum on
     doc_id. The token explode is localCheckpointed so training and
     scoring share one materialization instead of re-exploding 100 TB.
     """
-    toks, weights = _nb_train(docs, is_pos, n_buckets, scale)
+    toks, weights = _nb_train(docs, is_pos)
     scored = (
         toks.join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")
@@ -450,11 +449,12 @@ def nb_quality_scores(
     )
 
 
-def _nb_train(docs, is_pos, n_buckets, scale):
+def _nb_train(docs, is_pos):
     """(labeled token table, weight table): the training pass of
     `nb_quality_scores`; its scoring reuses the token table."""
     from .text import curation_gate_col, token_hash, words_col
 
+    n_buckets, scale = DSIR_BUCKETS, 10**6
     if is_pos is None:
         is_pos = curation_gate_col(F.col("text"))
     # pre-project label + word array BEFORE the explode: codegen does
@@ -503,11 +503,7 @@ def _nb_train(docs, is_pos, n_buckets, scale):
 
 
 
-def dsir_weights(
-    raw: DataFrame,
-    target: DataFrame,
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+def dsir_weights(raw: DataFrame, target: DataFrame) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al. 2023,
     NeurIPS — DSIR): score every raw document by how much its hashed
     unigram profile looks like the TARGET domain rather than the raw
@@ -519,7 +515,7 @@ def dsir_weights(
     classifier). Output: (doc_id, n_tokens, log_weight), log_weight
     rounded to 6, NULL for empty documents.
 
-    Scale shape: both distributions reduce to `n_buckets` cells
+    Scale shape: both distributions reduce to `DSIR_BUCKETS` cells
     (partial-agg shuffles), the log-ratio table BROADCASTS (it is
     n_buckets rows regardless of corpus size), and the per-doc score
     is one token explode + map-side-combinable sum on doc_id. Hashing
@@ -527,6 +523,8 @@ def dsir_weights(
     pipeline is oracle-reproducible.
     """
     from .text import token_hash, words_col
+
+    n_buckets = DSIR_BUCKETS
 
     def toks(df: DataFrame) -> DataFrame:
         return df.select(
@@ -588,7 +586,6 @@ def dsir_weights(
 def mixture_sample(
     docs: DataFrame,
     budgets: dict[str, int],
-    ppm_scale: int = 10**6,
 ) -> DataFrame:
     """Deterministic token-budget mixture sampling — the "data mixing"
     step that turns per-source budgets (the published mixture tables:
@@ -635,14 +632,14 @@ def mixture_sample(
         .select(
             "source",
             F.least(
-                F.lit(ppm_scale).cast("long"),
-                F.expr(f"({ppm_scale} * CAST(budget AS BIGINT)) DIV t"),
+                F.lit(10**6).cast("long"),
+                F.expr(f"({10**6} * CAST(budget AS BIGINT)) DIV t"),
             ).alias("rate_ppm"),
         )
     )
     gate = F.pmod(
         token_hash(F.lit("mix"), F.col("doc_id").cast("string")),
-        F.lit(ppm_scale),
+        F.lit(10**6),
     )
     return (
         base.join(F.broadcast(rates), "source")
@@ -651,11 +648,7 @@ def mixture_sample(
     )
 
 
-def quality_tiers(
-    docs: DataFrame,
-    is_pos: Column | None = None,
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+def quality_tiers(docs: DataFrame) -> DataFrame:
     """CCNet's head/middle/tail selection (Wenzek 2020 §4.3) closed
     over the trained scorer: documents rank by the length-normalized
     classifier score and split at the corpus's exact score TERCILES —
@@ -676,9 +669,7 @@ def quality_tiers(
     # (token explode, weight broadcast, doc_id shuffle) executes twice,
     # no CSE across the crossJoin branches (r12 optimization round:
     # plan went 40 Exchanges → 11)
-    scored = nb_quality_scores(
-        docs, is_pos=is_pos, n_buckets=n_buckets
-    ).localCheckpoint(eager=False)
+    scored = nb_quality_scores(docs).localCheckpoint(eager=False)
     cuts = scored.filter(F.col("per_token_e6").isNotNull()).agg(
         F.percentile(
             F.col("per_token_e6"),
@@ -702,8 +693,6 @@ def quality_tiers(
 def mine_triplets(
     docs: DataFrame,
     pairs: DataFrame,
-    key: str = "doc_id",
-    salt: str = "tm",
 ) -> DataFrame:
     """Contrastive training triplets from a near-dup pair table:
     (anchor, positive) = each verified near-dup pair (the two texts a
@@ -716,9 +705,9 @@ def mine_triplets(
     gets a 0-based rank in the md5-shuffled corpus order via
     `hashed_prefix_sum` (weight 1 — rank = count of docs strictly
     before; no global sort), the corpus size N rides as a 1-row
-    broadcast, and each pair draws rank r = md5(salt:neg:anchor:positive)
-    mod N — the salt parameterizes BOTH the rank order and the draw,
-    so two mining runs with different salts are independent. A drawn negative that collides with the anchor or positive
+    broadcast, and each pair draws rank r = md5(tm:neg:anchor:positive)
+    mod N — the salt "tm" keys BOTH the rank order and the draw. A
+    drawn negative that collides with the anchor or positive
     drops the triplet (deterministic, rare: 2/N per pair) rather than
     re-rolling — keeps both engines' selection identical with no
     retry unrolling.
@@ -729,9 +718,9 @@ def mine_triplets(
     from .text import token_hash
 
     ranked = hashed_prefix_sum(
-        docs.select(F.col(key).alias("doc_id"), F.lit(1).alias("_one")),
+        docs.select("doc_id", F.lit(1).alias("_one")),
         "_one",
-        salt=f"{salt}:",
+        salt="tm:",
     ).select(F.col("doc_id").alias("_neg_id"), F.col("_start").alias("_rnk"))
     nd = docs.agg(F.count(F.lit(1)).alias("_n"))
     extras = [c for c in pairs.columns if c not in ("doc_a", "doc_b")]
@@ -739,7 +728,7 @@ def mine_triplets(
         "_r",
         F.pmod(
             token_hash(
-                F.lit(f"{salt}:neg"),
+                F.lit("tm:neg"),
                 F.col("doc_a").cast("string"),
                 F.col("doc_b").cast("string"),
             ),

@@ -322,8 +322,9 @@ def _with_base_hash(sh: DataFrame) -> DataFrame:
 from ..functions.scalars import ctx_memo as _ctx_memo  # noqa: E402
 
 
-def _minhash_aggs(n_hashes: int = MINHASH_HASHES) -> list:
+def _minhash_aggs() -> list:
     """Min-aggregates of the affine permutation family over `_h`."""
+    n_hashes = MINHASH_HASHES
     return _ctx_memo(
         ("mh_aggs", n_hashes),
         lambda: [
@@ -354,9 +355,10 @@ def _band_structs(n_hashes: int, n_bands: int) -> list:
     return bands
 
 
-def minhash_bands(sigs: DataFrame, n_bands: int = MINHASH_BANDS) -> DataFrame:
+def minhash_bands(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, band_sig): md5 over each band's concatenated rows."""
     n_hashes = len([c for c in sigs.columns if c.startswith("h")])
+    n_bands = MINHASH_BANDS
     bands = _ctx_memo(
         ("mh_bands", n_hashes, n_bands),
         lambda: _band_structs(n_hashes, n_bands),
@@ -369,7 +371,6 @@ def minhash_bands(sigs: DataFrame, n_bands: int = MINHASH_BANDS) -> DataFrame:
 def minhash_lsh_dedup(
     docs: DataFrame,
     threshold: float = 0.2,
-    k_shingle: int | None = None,
     max_bucket_size: int | None = None,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -390,10 +391,9 @@ def minhash_lsh_dedup(
     `shingles` optionally supplies the materialized (doc_id, shingle)
     relation (see `ngram_jaccard_pairs`) so one shingle pass serves
     both the Jaccard and the MinHash dedup over the same corpus."""
-    k = k_shingle if k_shingle is not None else 3
     # the shingle index feeds the signature pass AND the verification
     # join (3 branches) — one materialization, GC-scoped
-    sh = shingles if shingles is not None else _shingle_index(docs, k)
+    sh = shingles if shingles is not None else _shingle_index(docs, 3)
     # bands feeds the bucket-size filter AND both join sides (3 plan
     # branches) — materialize once so the 16 min-aggregates over the
     # shingle explode run a single time
@@ -488,7 +488,6 @@ def minhash_lsh_incremental(
     new_docs: DataFrame,
     path: str,
     threshold: float = 0.2,
-    k_shingle: int = 3,
     max_bucket_size: int | None = None,
     max_batch_id_exclusive: int | None = None,
     sh_new: DataFrame | None = None,
@@ -520,7 +519,7 @@ def minhash_lsh_incremental(
     the base corpus is batch -1 and always included).
     """
     if sh_new is None:
-        sh_new = _shingle_index(new_docs, k_shingle)
+        sh_new = _shingle_index(new_docs, 3)
     if bands_new is None:
         bands_new = minhash_bands(
             _with_base_hash(sh_new).groupBy("doc_id").agg(*_minhash_aggs())
@@ -571,12 +570,11 @@ def minhash_lsh_incremental(
     return _verify_jaccard(candidates, sh_all, threshold)
 
 
-def simhash(
-    docs: DataFrame, bits: int = SIMHASH_BITS, chunks: int = SIMHASH_CHUNKS
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc SimHash: sign of the per-bit ±1 vote sum over token
     hashes. Output: doc_id, chunk values c0..c{chunks-1} (each
-    `bits/chunks` wide) and the packed `simhash` long.
+    `bits/chunks` wide) and the packed `simhash` long, with bits =
+    SIMHASH_BITS and chunks = SIMHASH_CHUNKS read at call time.
 
     One row per (doc, token) with `bits` conditional-sum aggregates —
     NOT an explode over (token × bit): the vote for bit b is a pure
@@ -594,6 +592,7 @@ def simhash(
     disjoint bit ranges is carry-free, so the packed value is exact
     even when bit 63 lands set (negative long).
     """
+    bits, chunks = SIMHASH_BITS, SIMHASH_CHUNKS
     chunk_bits = bits // chunks
     toks = doc_tokens(docs)
 
@@ -661,15 +660,11 @@ def simhash(
     )
 
 
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    chunks: int = SIMHASH_CHUNKS,
-) -> DataFrame:
-    """SimHash near-dup pairs: chunk-banding candidates (a pair within
-    hamming ≤ chunks−1 must share at least one chunk — pigeonhole), then
-    exact hamming verification as bit_count(xor) of the PACKED hashes.
+def simhash_neardup_pairs(docs: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs within hamming ≤ 3: chunk-banding
+    candidates (a pair within hamming ≤ chunks−1 must share at least
+    one chunk — pigeonhole), then exact hamming verification as
+    bit_count(xor) of the PACKED hashes.
 
     The packed 64-bit value rides through the banding join instead of
     the chunk array: chunks occupy disjoint bit ranges (carry-free
@@ -680,7 +675,7 @@ def simhash_neardup_pairs(
     exactly). Sign is irrelevant: only xor/bit_count touch the value.
     The DuckDB oracle keeps the per-chunk formulation — same result,
     no 64-bit-literal handling needed there."""
-    sh = simhash(docs, bits=bits, chunks=chunks)
+    sh = simhash(docs)
     # feeds BOTH self-join sides — materialize once or the whole
     # token-hash vote-aggregate pipeline executes twice (no CSE across
     # self-join branches)
@@ -689,7 +684,7 @@ def simhash_neardup_pairs(
             "doc_id",
             "simhash",
             F.posexplode(
-                F.array(*[F.col(f"c{c}") for c in range(chunks)])
+                F.array(*[F.col(f"c{c}") for c in range(SIMHASH_CHUNKS)])
             ).alias("chunk", "chunk_val"),
         )
         .localCheckpoint(eager=False)
@@ -706,12 +701,12 @@ def simhash_neardup_pairs(
         .select("doc_a", "doc_b", "sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
     )
 
 
-def neardup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
+def neardup_clusters(pairs: DataFrame) -> DataFrame:
     """Collapse near-dup pairs into clusters: connected components by
     iterative min-label propagation (the GraphFrames/Pregel idiom in
     plain DataFrame ops).
@@ -746,7 +741,7 @@ def neardup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         .withColumn("label", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iterations):
+    for _ in range(20):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.doc_id)
             .groupBy("src")

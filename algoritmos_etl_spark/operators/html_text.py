@@ -53,11 +53,11 @@ def html_to_text_col(html: Column) -> Column:
     return F.trim(F.regexp_replace(s, _WS, " "))
 
 
-def html_to_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def html_to_text(pages: DataFrame) -> DataFrame:
     """Scale-tier extraction: (doc_id, text, n_words) from raw markup.
     One whole-stage-codegen projection — at 100 TB this is a map-only
     pass with zero shuffle."""
-    text = html_to_text_col(F.coalesce(F.col(html_col), F.lit("")))
+    text = html_to_text_col(F.coalesce(F.col("html"), F.lit("")))
     return pages.select(
         "doc_id",
         text.alias("text"),

@@ -39,7 +39,6 @@ def fuzzy_join(
     right_id: str,
     right_name: str,
     max_distance: int = 2,
-    max_block_size: int | None = None,
 ) -> DataFrame:
     """Blocked fuzzy linkage of two name catalogs: every (left, right)
     pair whose names are within `max_distance` Levenshtein edits,
@@ -57,27 +56,12 @@ def fuzzy_join(
     distinct candidate pair → ONE JVM `levenshtein` per candidate (no
     Python UDF anywhere). Cost is Σ_block |L_tok∩block|·|R_tok∩block|:
     linear in the dirty side when the catalog side's per-token counts
-    are bounded (a vocabulary catalog). For open-vocabulary sides,
-    pass `max_block_size`: tokens whose RIGHT-side block exceeds it
-    (stop-word-sized blocks — 'the', 'inc', 'ltd' in a company
-    catalog) are dropped from candidate generation by a broadcast
-    anti-join BEFORE the blocking join, exactly the shingle df-cap
-    idiom from `dedup.ngram_jaccard_dedup`. Multi-token names keep
-    their discriminative tokens, so recall loss is confined to pairs
-    whose ONLY shared token is a stop word — the trade documented on
-    the dedup family.
+    are bounded (a vocabulary catalog); a stop-word token shared by
+    the whole catalog ('the', 'inc', 'ltd') blocks |L_tok|·|R_tok|
+    candidates that the distance filter then rejects.
     """
     lt = _tokens(left, left_id, left_name, "left_id", "left_name")
     rt = _tokens(right, right_id, right_name, "right_id", "right_name")
-    if max_block_size is not None:
-        hot = (
-            rt.groupBy("_tok")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_block_size)
-            .select("_tok")
-        )
-        lt = lt.join(F.broadcast(hot), "_tok", "left_anti")
-        rt = rt.join(F.broadcast(hot), "_tok", "left_anti")
     cands = (
         lt.join(rt, "_tok")
         .select("left_id", "left_name", "right_id", "right_name")

@@ -211,15 +211,14 @@ def synthesize_image_url_corpus(
     )
 
 
-def mine_image_caption_pairs(
-    pages: DataFrame,
-    images: DataFrame,
-    url_col: str = "url_norm",
-    html_col: str = "html",
-    min_caption_words: int = 3,
-    max_caption_chars: int = 200,
-) -> DataFrame:
-    """LAION-shape image-text pair mining over a (deduped) crawl:
+# The LAION-style alt-text gate, read by the miner and its oracle.
+CAPTION_MIN_WORDS = 3
+CAPTION_MAX_CHARS = 200
+
+
+def mine_image_caption_pairs(pages: DataFrame, images: DataFrame) -> DataFrame:
+    """LAION-shape image-text pair mining over a (deduped) crawl of
+    (url_norm, html) pages:
     harvest <img src, alt> pairs, resolve each src against its page,
     normalize, and inner-join the URL-keyed image corpus — one row
     per (page, img tag) whose image the corpus actually has:
@@ -237,11 +236,11 @@ def mine_image_caption_pairs(
     from .text import words_col
     from .url_ops import normalize_url_col
 
-    host = url_host_col(F.col(url_col))
+    host = url_host_col(F.col("url_norm"))
     tagged = pages.select(
-        F.col(url_col).alias("page_url"),
+        F.col("url_norm").alias("page_url"),
         host.alias("_page_host"),
-        F.explode(extract_img_pairs_col(F.col(html_col))).alias("_t"),
+        F.explode(extract_img_pairs_col(F.col("html"))).alias("_t"),
     )
     resolved = tagged.select(
         "page_url",
@@ -257,8 +256,8 @@ def mine_image_caption_pairs(
         "caption",
         n_words.alias("n_caption_words"),
         (
-            (n_words >= min_caption_words)
-            & (F.length("caption") <= max_caption_chars)
+            (n_words >= CAPTION_MIN_WORDS)
+            & (F.length("caption") <= CAPTION_MAX_CHARS)
         ).alias("caption_ok"),
     )
     return gated.join(images, "img_url").select(

@@ -381,7 +381,7 @@ def synthesize_png_corpus(docs: DataFrame, cluster: int = 5) -> DataFrame:
     )
 
 
-def image_dhash(images: DataFrame, payload_col: str = "payload") -> DataFrame:
+def image_dhash(images: DataFrame) -> DataFrame:
     """Perceptual difference-hash over a binary image column: REAL
     stdlib decode (PNG via `decode_png`, baseline-DCT JPEG via
     `decode_jpeg` — sniffed by signature) → integer-exact grayscale →
@@ -396,7 +396,7 @@ def image_dhash(images: DataFrame, payload_col: str = "payload") -> DataFrame:
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     data = bytes(payload)
                     if data[:2] == b"\xff\xd8":
@@ -436,25 +436,21 @@ def image_dhash(images: DataFrame, payload_col: str = "payload") -> DataFrame:
                     rows.append((doc_id, None, str(exc)))
             yield pd.DataFrame(rows, columns=["doc_id", "dhash", "error"])
 
-    return images.select("doc_id", payload_col).mapInPandas(
+    return images.select("doc_id", "payload").mapInPandas(
         hash_batch, schema="doc_id bigint, dhash long, error string"
     )
 
 
-def image_neardup_pairs(
-    hashed: DataFrame,
-    max_hamming: int = 3,
-    chunks: int = DHASH_CHUNKS,
-    max_bucket_size: int | None = 200,
-) -> DataFrame:
+def image_neardup_pairs(hashed: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate image pairs by dHash hamming distance — the
     SimHash banding shape reused: 16-bit chunks of the 64-bit hash
     bucket the corpus (65,536 values per chunk keeps buckets small),
     candidates share ≥1 chunk, verification is one JVM `bit_count` of
-    the XOR. Pigeonhole: with `chunks` chunks, any pair within hamming
+    the XOR. Pigeonhole: with `DHASH_CHUNKS` chunks, any pair within hamming
     ≤ chunks−1 leaves at least one chunk untouched, so for
     max_hamming ≤ chunks−1 the banding is COMPLETE — no recall loss
     (pinned vs brute force in tests)."""
+    chunks = DHASH_CHUNKS
     width = 64 // chunks
     ok = hashed.filter(F.col("dhash").isNotNull())
     # ONE pass, not a chunks-way union: each union arm re-evaluates the
@@ -478,20 +474,19 @@ def image_neardup_pairs(
         .select("doc_id", "dhash", "ck.chunk_i", "ck.chunk_v")
         .localCheckpoint(eager=False)
     )
-    if max_bucket_size is not None:
-        # cap pathological buckets (a run of byte-identical images puts
-        # the whole corpus in one bucket per chunk → O(n²) candidates);
-        # same contract as the MinHash/shingle caps: identical images
-        # are EXACT dupes — route them through checksum dedup, not the
-        # perceptual join. Near-identical clusters stay intact as long
-        # as they're smaller than the cap.
-        small = (
-            banded.groupBy("chunk_i", "chunk_v")
-            .count()
-            .filter(F.col("count") <= max_bucket_size)
-            .drop("count")
-        )
-        banded = banded.join(F.broadcast(small), ["chunk_i", "chunk_v"])
+    # cap pathological buckets at 200 (a run of byte-identical images
+    # puts the whole corpus in one bucket per chunk → O(n²) candidates);
+    # same contract as the MinHash/shingle caps: identical images are
+    # EXACT dupes — route them through checksum dedup, not the
+    # perceptual join. Near-identical clusters stay intact as long as
+    # they're smaller than the cap.
+    small = (
+        banded.groupBy("chunk_i", "chunk_v")
+        .count()
+        .filter(F.col("count") <= 200)
+        .drop("count")
+    )
+    banded = banded.join(F.broadcast(small), ["chunk_i", "chunk_v"])
     cand = (
         banded.alias("a")
         .join(
@@ -637,14 +632,16 @@ def decode_wav(data: bytes) -> dict:
     }
 
 
-def synthesize_wav_corpus(docs: DataFrame, rate: int = 8000) -> DataFrame:
+def synthesize_wav_corpus(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-WAV fixture corpus: (doc_id, payload) where
-    payload is a valid PCM16 mono WAV — an integer triangle wave whose
+    payload is a valid 8 kHz PCM16 mono WAV — an integer triangle wave whose
     frequency and amplitude derive from md5(doc_id), so every field the
     decoder reports is exactly predictable. The audio twin of
     `synthesize_png_corpus`."""
     import hashlib
     import struct
+
+    rate = 8000
 
     def wav_bytes(doc_id: int) -> bytes:
         seed = hashlib.md5(f"wav:{int(doc_id)}".encode()).digest()
@@ -681,7 +678,7 @@ def synthesize_wav_corpus(docs: DataFrame, rate: int = 8000) -> DataFrame:
     )
 
 
-def audio_features(audio: DataFrame, payload_col: str = "payload") -> DataFrame:
+def audio_features(audio: DataFrame) -> DataFrame:
     """Real audio feature extraction over a binary WAV column — the
     audio leg of the multimodal seam, with an Arrow-batched quarantine
     contract: one pass, undecodable rows survive as (doc_id, error)."""
@@ -689,7 +686,7 @@ def audio_features(audio: DataFrame, payload_col: str = "payload") -> DataFrame:
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     m = decode_wav(bytes(payload))
                     rows.append(
@@ -712,7 +709,7 @@ def audio_features(audio: DataFrame, payload_col: str = "payload") -> DataFrame:
                 ],
             )
 
-    return audio.select("doc_id", payload_col).mapInPandas(
+    return audio.select("doc_id", "payload").mapInPandas(
         feats,
         schema=(
             "doc_id bigint, sample_rate int, channels int, n_samples int, "

@@ -61,15 +61,10 @@ def profile_table(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return wide.select(F.explode(F.array(*per_col)).alias("p")).select("p.*")
 
 
-def approx_profile(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    numeric_quantiles: tuple[float, ...] = (0.25, 0.5, 0.75),
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Sketch tier: HLL++ distinct counts for every column and t-digest
-    quantiles for numeric ones. Single pass, mergeable, constant memory
-    per column — the 100 TB shape."""
+def approx_profile(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
+    """Sketch tier: HLL++ distinct counts (rsd 0.02) for every column
+    and t-digest quartiles for numeric ones. Single pass, mergeable,
+    constant memory per column — the 100 TB shape."""
     cols = columns or df.columns
     numeric = {
         name
@@ -80,12 +75,12 @@ def approx_profile(
     aggs: list = [F.count(F.lit(1)).alias("_n_rows")]
     for c in cols:
         aggs.append(
-            F.approx_count_distinct(F.col(c), rsd=rsd).alias(f"_and_{c}")
+            F.approx_count_distinct(F.col(c), rsd=0.02).alias(f"_and_{c}")
         )
         if c in numeric:
             aggs.append(
                 F.percentile_approx(
-                    F.col(c), list(numeric_quantiles), 10000
+                    F.col(c), [0.25, 0.5, 0.75], 10000
                 ).alias(f"_q_{c}")
             )
     wide = df.agg(*aggs)
@@ -219,16 +214,18 @@ def drift_psi(
     return scored
 
 
+# Baseline categories `drift_psi_categorical` keeps before folding the
+# rest into '__OTHER__' (its oracle reads the same constant).
+PSI_MAX_CATEGORIES = 100
+
+
 def drift_psi_categorical(
-    baseline: DataFrame,
-    current: DataFrame,
-    value_col: str,
-    max_categories: int = 100,
+    baseline: DataFrame, current: DataFrame, value_col: str
 ) -> DataFrame:
     """`drift_psi`'s CATEGORICAL arm — the other half of a production
     drift monitor (status codes, priorities, country/source columns):
     category frequencies replace quantile buckets, with the
-    BASELINE's top-`max_categories` categories kept as-is (count
+    BASELINE's top-`PSI_MAX_CATEGORIES` categories kept as-is (count
     desc, value asc tiebreak — deterministic cross-engine) and
     everything else folded into '__OTHER__' so unbounded-cardinality
     columns stay bounded. NULL is its own category ('__NULL__').
@@ -241,7 +238,7 @@ def drift_psi_categorical(
 
     Scale shape: each side reduces map-side to its category counts
     (bounded after the top-N fold), the kept-category list is a
-    broadcast of ≤ max_categories+2 rows, and the PSI itself runs on
+    broadcast of ≤ PSI_MAX_CATEGORIES+2 rows, and the PSI itself runs on
     that bounded grid — 100 TB costs two partial-agg passes.
     """
     from pyspark.sql import Window
@@ -259,7 +256,7 @@ def drift_psi_categorical(
     # both the top-N cut and the baseline's folded histogram (folding
     # the COUNTS table instead of re-scanning the raw rows — summing
     # folded counts equals counting folded rows); `top` is bounded
-    # (≤ max_categories rows) and referenced by two broadcasts + the
+    # (≤ PSI_MAX_CATEGORIES rows) and referenced by two broadcasts + the
     # grid, so it is materialized too. r12 optimization round:
     # priority_drift_categorical's plan carried 20 parquet scans of
     # `orders`, now 2 — one per side.
@@ -268,7 +265,7 @@ def drift_psi_categorical(
         base_counts.orderBy(
             F.col("n_base").desc(), F.col("category").asc()
         )
-        .limit(max_categories)
+        .limit(PSI_MAX_CATEGORIES)
         .select("category")
         .localCheckpoint(eager=False)
     )

@@ -28,13 +28,10 @@ def interval_join(
     start: str,
     end: str,
     bucket_width: int,
-    how: str = "inner",
 ) -> DataFrame:
     """Rows of `points` matched to every interval of the same key with
     `start <= point_time < end`. Times are numeric (epoch units);
     `bucket_width` in the same units.
-
-    `how='left'` keeps unmatched points with NULL interval columns.
     """
     p = points.withColumn(
         "_bucket", F.floor(F.col(point_time) / F.lit(bucket_width))
@@ -58,26 +55,5 @@ def interval_join(
     )
     on = [p[by] == iv["_iv_by"], p["_bucket"] == iv["_bucket"]]
     cond = (p[point_time] >= iv[start]) & (p[point_time] < iv[end])
-    if how == "inner":
-        joined = p.join(iv, on).filter(cond)
-        return joined.drop(iv["_iv_by"]).drop(p["_bucket"]).drop(iv["_bucket"])
-    if how == "left":
-        matched = (
-            p.join(iv, on)
-            .filter(cond)
-            .drop(iv["_iv_by"])
-            .drop(p["_bucket"])
-            .drop(iv["_bucket"])
-        )
-        iv_cols = [c for c in intervals.columns if c != by]
-        unmatched = p.drop("_bucket").join(
-            matched.select(*points.columns).distinct(),
-            points.columns,
-            "left_anti",
-        )
-        for c in iv_cols:
-            unmatched = unmatched.withColumn(
-                c, F.lit(None).cast(dict(intervals.dtypes)[c])
-            )
-        return matched.unionByName(unmatched)
-    raise ValueError(f"unsupported how={how!r}")
+    joined = p.join(iv, on).filter(cond)
+    return joined.drop(iv["_iv_by"]).drop(p["_bucket"]).drop(iv["_bucket"])

@@ -24,9 +24,9 @@ def table_diff(
     left: DataFrame,
     right: DataFrame,
     key_cols: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Keyed snapshot diff: one row per key that differs —
+    """Keyed snapshot diff over every non-key column of `left`: one
+    row per key that differs —
     (key…, diff_type ∈ {added, removed, changed}, changed_cols) where
     `changed_cols` is the comma-joined sorted list of differing
     columns (NULL for added/removed). `added` = in right only,
@@ -43,8 +43,7 @@ def table_diff(
     duplicate keys a full-outer join multiplies rows and the per-key
     diff is ill-defined; dedupe first (`cleaning.keep_latest`).
     """
-    if compare_cols is None:
-        compare_cols = [c for c in left.columns if c not in set(key_cols)]
+    compare_cols = [c for c in left.columns if c not in set(key_cols)]
     lsel = left.select(
         *[F.col(c).alias(f"_lk_{c}") for c in key_cols],
         *[F.col(c).alias(f"_l_{c}") for c in compare_cols],
@@ -106,7 +105,6 @@ def cdc_merge(
     ts_col: str,
     op_col: str,
     tiebreak: Sequence[str] = (),
-    delete_op: str = "D",
     target_op_col: str | None = None,
     keep_tombstones: bool = False,
 ) -> DataFrame:
@@ -133,7 +131,7 @@ def cdc_merge(
     win the next argmax unopposed and silently resurrect the key.
     With `keep_tombstones` the output retains every key's newest
     record including deletes (the op exposed as `op_col`); filter
-    `op_col != delete_op` at the serving edge. `target_op_col` names
+    `op_col != 'D'` at the serving edge. `target_op_col` names
     the op column of such a tombstone-carrying target (instead of the
     implicit all-upsert target).
     """
@@ -170,7 +168,7 @@ def cdc_merge(
             *[F.col(f"_w.{c}").alias(c) for c in data_cols],
         )
     return (
-        merged.filter(F.col("_w._op") != delete_op)
+        merged.filter(F.col("_w._op") != "D")
         .select(
             *key_cols,
             F.col("_w._ts").alias(ts_col),

@@ -17,13 +17,38 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# TPC-H substitution values: each builder below and its DuckDB oracle
+# in driver_queries/driver_queries_ext read the same constant.
+PRICING_CUTOFF = "1998-09-02"  # Q1
+TOP_CUSTOMERS_K = 10  # Q3 flavour
+SHIPPING_SEGMENT = "BUILDING"  # Q3
+SHIPPING_CUTOFF = "1998-03-15"
+SHIPPING_K = 10
+SMALL_PART_MAX_SIZE = 10  # Q17
+WAITING_LATE_DAYS = 30  # Q21
+WAITING_TOP_K = 20
+IMPORTANT_MEAN_MULTIPLE = (3, 2)  # Q11: parts above 3/2 of the mean
+IMPORTANT_TOP_K = 50
+DOMINANT_TOP_K = 25  # Q20
+BI_NATIONS = ("NATION_1", "NATION_2")  # Q7
+SHARE_REGION = "ASIA"  # Q8
+SHARE_NATION = "NATION_2"
+RETURNED_TOP_K = 20  # Q10
+TOP_SUPPLIER_QUARTER = ("1997-01-01", "1997-04-01")  # Q15
+FORECAST_YEAR = 1996  # Q6
+FORECAST_DISCOUNT_BAND = (0.04, 0.06)
+FORECAST_MAX_QTY = 24
+PROFIT_NAME_PATTERN = "bolt"  # Q9
+PROFIT_COST_FRAC = 0.6
+EXCLUDED_PRIORITY = "1-URGENT"  # Q13
 
-def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFrame:
+
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q1 shape: grouped pricing aggregates after a pushed filter."""
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
-        lineitem.filter(F.col("l_shipdate") <= F.lit(cutoff).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") <= F.lit(PRICING_CUTOFF).cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
@@ -61,7 +86,7 @@ def revenue_by_nation(
 
 
 def top_customers_by_revenue(
-    lineitem: DataFrame, orders: DataFrame, customer: DataFrame, k: int = 10
+    lineitem: DataFrame, orders: DataFrame, customer: DataFrame
 ) -> DataFrame:
     """Q3-flavored: revenue per customer, top-k (TakeOrderedAndProject)."""
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -71,7 +96,9 @@ def top_customers_by_revenue(
         .groupBy("c_custkey", "c_name")
         .agg(F.round(F.sum(revenue), 2).alias("revenue"))
     )
-    return per_cust.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc()).limit(k)
+    return per_cust.orderBy(F.col("revenue").desc(), F.col("c_custkey").asc()).limit(
+        TOP_CUSTOMERS_K
+    )
 
 
 def order_priority_counts(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -170,9 +197,6 @@ def shipping_priority(
     lineitem: DataFrame,
     orders: DataFrame,
     customer: DataFrame,
-    segment: str = "BUILDING",
-    cutoff: str = "1998-03-15",
-    k: int = 10,
 ) -> DataFrame:
     """TPC-H Q3 proper: unshipped-order revenue for one market segment,
     top-k. Both date predicates push into the parquet scans; the
@@ -181,8 +205,8 @@ def shipping_priority(
     only real shuffle is lineitem ⋈ surviving orders on the order key,
     pre-shrunk by both pushed filters. Top-k is TakeOrderedAndProject.
     """
-    cut = F.lit(cutoff).cast("timestamp")
-    cust = customer.filter(F.col("c_mktsegment") == segment).select("c_custkey")
+    cut = F.lit(SHIPPING_CUTOFF).cast("timestamp")
+    cust = customer.filter(F.col("c_mktsegment") == SHIPPING_SEGMENT).select("c_custkey")
     open_orders = orders.filter(F.col("o_orderdate") < cut).join(
         F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"), "left_semi"
     )
@@ -195,7 +219,7 @@ def shipping_priority(
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.round(F.sum(revenue), 2).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(k)
+        .limit(SHIPPING_K)
         .select(
             F.col("l_orderkey").alias("orderkey"),
             F.col("o_orderdate").alias("orderdate"),
@@ -515,9 +539,7 @@ def price_quantiles_by_priority(orders: DataFrame) -> DataFrame:
     )
 
 
-def idle_rich_customers(
-    customer: DataFrame, orders: DataFrame, nations: list[int] | None = None
-) -> DataFrame:
+def idle_rich_customers(customer: DataFrame, orders: DataFrame) -> DataFrame:
     """TPC-H Q22 shape: per nation, count customers whose balance beats
     the GLOBAL positive-balance average but who have never ordered —
     the two classic subquery forms in one query: a scalar aggregate
@@ -531,16 +553,13 @@ def idle_rich_customers(
     rollup groups on the bounded nation key. Decimal-exact balance
     sums at the output.
     """
-    cust = customer
-    if nations is not None:
-        cust = cust.filter(F.col("c_nationkey").isin(nations))
     avg_bal = (
-        cust.filter(F.col("c_acctbal") > 0)
+        customer.filter(F.col("c_acctbal") > 0)
         .agg(F.avg("c_acctbal").alias("avg_bal"))
     )
-    never_ordered = cust.join(
+    never_ordered = customer.join(
         orders.select("o_custkey").distinct(),
-        cust["c_custkey"] == F.col("o_custkey"),
+        customer["c_custkey"] == F.col("o_custkey"),
         "left_anti",
     )
     return (
@@ -559,12 +578,10 @@ def idle_rich_customers(
     )
 
 
-def small_quantity_revenue(
-    lineitem: DataFrame, part: DataFrame, max_size: int = 10
-) -> DataFrame:
+def small_quantity_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     """TPC-H Q17 shape: revenue lost to small-lot orders — lines whose
     quantity is below 20% of THAT PART's average order quantity, for
-    small parts (p_size <= max_size), reported per brand as the Q17
+    small parts (p_size <= SMALL_PART_MAX_SIZE), reported per brand as the Q17
     `avg_yearly` = sum(extendedprice)/7.
 
     The classic formulation is a correlated scalar subquery
@@ -607,7 +624,7 @@ def small_quantity_revenue(
     return (
         small_lots.join(
             F.broadcast(
-                part.filter(F.col("p_size") <= max_size).select(
+                part.filter(F.col("p_size") <= SMALL_PART_MAX_SIZE).select(
                     "p_partkey", "p_brand"
                 )
             ),
@@ -633,12 +650,10 @@ def waiting_suppliers(
     lineitem: DataFrame,
     orders: DataFrame,
     supplier: DataFrame,
-    late_days: int = 30,
-    top_k: int = 20,
 ) -> DataFrame:
     """TPC-H Q21 shape: suppliers who ALONE held up a multi-supplier
     order — for finished orders (o_orderstatus = 'F'), a line is late
-    when it shipped more than `late_days` after the order date (this
+    when it shipped more than `WAITING_LATE_DAYS` after the order date (this
     dataset has no commit/receipt dates; the ship-lag predicate plays
     that role). A supplier gets blamed for an order when (1) they have
     a late line in it, (2) EXISTS another supplier's line in the same
@@ -662,7 +677,7 @@ def waiting_suppliers(
     s_suppkey as the deterministic tiebreak.
     """
     late = F.col("l_shipdate") > F.col("o_orderdate") + F.expr(
-        f"INTERVAL {int(late_days)} DAYS"
+        f"INTERVAL {WAITING_LATE_DAYS} DAYS"
     )
     lines = (
         lineitem.select("l_orderkey", "l_suppkey", "l_shipdate")
@@ -700,7 +715,7 @@ def waiting_suppliers(
         )
         .select("s_suppkey", "s_name", "numwait")
         .orderBy(F.col("numwait").desc(), F.col("s_suppkey").asc())
-        .limit(top_k)
+        .limit(WAITING_TOP_K)
     )
 
 
@@ -757,11 +772,9 @@ def bracket_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     )
 
 
-def important_parts(
-    lineitem: DataFrame, mean_multiple: tuple[int, int] = (3, 2), top_k: int = 50
-) -> DataFrame:
+def important_parts(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q11 shape: parts whose total line value exceeds a
-    MULTIPLE OF THE MEAN part value (default 3/2 = 1.5x) -- the
+    MULTIPLE OF THE MEAN part value (3/2 = 1.5x) -- the
     group-aggregate vs global-scalar-subquery comparison. A
     mean-relative threshold instead of Q11's global-fraction one: the
     part count grows with scale factor, so a fixed global share
@@ -783,7 +796,7 @@ def important_parts(
     ~$1e6/part -- far beyond the bench corpora; a 100 TB deployment
     re-scales to dollars.
     """
-    num, den = mean_multiple
+    num, den = IMPORTANT_MEAN_MULTIPLE
     cents = F.col("l_extendedprice").cast("decimal(30,10)") * 100
     per_part = lineitem.groupBy("l_partkey").agg(
         F.sum(cents).cast("long").alias("vc")
@@ -802,13 +815,11 @@ def important_parts(
             F.round(F.col("vc").cast("double") / 100, 2).alias("value"),
         )
         .orderBy(F.col("value").desc(), F.col("l_partkey").asc())
-        .limit(top_k)
+        .limit(IMPORTANT_TOP_K)
     )
 
 
-def dominant_suppliers(
-    lineitem: DataFrame, supplier: DataFrame, top_k: int = 25
-) -> DataFrame:
+def dominant_suppliers(lineitem: DataFrame, supplier: DataFrame) -> DataFrame:
     """TPC-H Q20 shape: suppliers who DOMINATE orders — shipped
     strictly more than half of a multi-supplier order's total quantity
     (the nested correlated-aggregate chain: per-(order, supplier)
@@ -849,7 +860,7 @@ def dominant_suppliers(
         .orderBy(
             F.col("n_orders_dominated").desc(), F.col("s_suppkey").asc()
         )
-        .limit(top_k)
+        .limit(DOMINANT_TOP_K)
     )
 
 
@@ -859,8 +870,6 @@ def bi_nation_volume(
     customer: DataFrame,
     supplier: DataFrame,
     nation: DataFrame,
-    nation_a: str = "NATION_1",
-    nation_b: str = "NATION_2",
 ) -> DataFrame:
     """TPC-H Q7 shape: shipping volume BETWEEN two named nations by
     year and direction — the double-dimension-chain join where the
@@ -875,7 +884,7 @@ def bi_nation_volume(
     join is the one fact shuffle; the group key (2×2×years) is
     bounded. Decimal-exact revenue.
     """
-    n_a = nation.filter(F.col("n_name").isin(nation_a, nation_b))
+    n_a = nation.filter(F.col("n_name").isin(*BI_NATIONS))
     cust_n = customer.join(
         F.broadcast(n_a),
         customer["c_nationkey"] == n_a["n_nationkey"],
@@ -922,8 +931,6 @@ def market_share(
     supplier: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "ASIA",
-    share_nation: str = "NATION_2",
 ) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of a region's yearly order
     revenue — the conditional-numerator / total-denominator ratio
@@ -938,7 +945,7 @@ def market_share(
     bounded per-year rollup with decimal-exact operands.
     """
     region_nations = nation.join(
-        F.broadcast(region.filter(F.col("r_name") == region_name)),
+        F.broadcast(region.filter(F.col("r_name") == SHARE_REGION)),
         nation["n_regionkey"] == region["r_regionkey"],
     ).select("n_nationkey")
     cust_r = customer.join(
@@ -950,7 +957,7 @@ def market_share(
         supplier["s_nationkey"] == nation["n_nationkey"],
     ).select(
         F.col("s_suppkey").alias("sk"),
-        (F.col("n_name") == share_nation).alias("is_share_nation"),
+        (F.col("n_name") == SHARE_NATION).alias("is_share_nation"),
     )
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(30,10)"
@@ -985,7 +992,6 @@ def returned_item_customers(
     orders: DataFrame,
     customer: DataFrame,
     nation: DataFrame,
-    top_k: int = 20,
 ) -> DataFrame:
     """TPC-H Q10 shape: customers who returned the most revenue — the
     classic churn-risk report: fact filtered to returned lines
@@ -1029,7 +1035,7 @@ def returned_item_customers(
             "n_lines",
         )
         .orderBy(F.col("returned_rev").desc(), F.col("c_custkey").asc())
-        .limit(top_k)
+        .limit(RETURNED_TOP_K)
     )
 
 
@@ -1078,8 +1084,6 @@ def promo_revenue_share(
 def top_supplier(
     lineitem: DataFrame,
     supplier: DataFrame,
-    quarter_start: str = "1997-01-01",
-    quarter_end: str = "1997-04-01",
 ) -> DataFrame:
     """TPC-H Q15 shape: the supplier(s) with MAXIMUM revenue over a
     window — the aggregate-vs-its-own-max pattern (Q15's view +
@@ -1092,6 +1096,7 @@ def top_supplier(
     back runs at the rollup grain. Decimal-exact revenue makes the
     tie semantics deterministic cross-engine.
     """
+    quarter_start, quarter_end = TOP_SUPPLIER_QUARTER
     rev = (
         lineitem.filter(
             (F.col("l_shipdate") >= F.lit(quarter_start).cast("timestamp"))
@@ -1123,13 +1128,7 @@ def top_supplier(
     )
 
 
-def forecast_revenue(
-    lineitem: DataFrame,
-    year: int = 1996,
-    disc_lo: float = 0.04,
-    disc_hi: float = 0.06,
-    max_qty: int = 24,
-) -> DataFrame:
+def forecast_revenue(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6 shape: the revenue-change forecast — what discounted
     small-lot revenue would have been forgone in one year if discounts
     in a band were eliminated. The simplest query in the suite, and
@@ -1144,9 +1143,9 @@ def forecast_revenue(
     amt = F.col("l_extendedprice") * F.col("l_discount")
     return (
         lineitem.filter(
-            (F.year("l_shipdate") == year)
-            & F.round(F.col("l_discount"), 2).between(disc_lo, disc_hi)
-            & (F.col("l_quantity") < max_qty)
+            (F.year("l_shipdate") == FORECAST_YEAR)
+            & F.round(F.col("l_discount"), 2).between(*FORECAST_DISCOUNT_BAND)
+            & (F.col("l_quantity") < FORECAST_MAX_QTY)
         )
         .agg(
             F.round(F.sum(amt.cast("decimal(30,10)")), 2)
@@ -1163,14 +1162,12 @@ def product_profit(
     supplier: DataFrame,
     nation: DataFrame,
     orders: DataFrame,
-    name_pattern: str = "bolt",
-    cost_frac: float = 0.6,
 ) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier nation × order year for parts
     whose name matches a pattern. Supply cost is proxied as
-    `cost_frac · p_retailprice` per unit (this dataset has no partsupp
+    `PROFIT_COST_FRAC · p_retailprice` per unit (this dataset has no partsupp
     table — same adaptation as Q2's `min_cost_supplier`), so
-    amount = extprice·(1−disc) − cost_frac·retail·qty.
+    amount = extprice·(1−disc) − PROFIT_COST_FRAC·retail·qty.
 
     Plan shape this query exists to exercise: the suite's one
     deliberate FACT⋈FACT join — lineitem⋈orders on the order key to
@@ -1182,7 +1179,7 @@ def product_profit(
     nation broadcasts, and the final rollup reduces map-side to the
     bounded (nation, year) grain.
     """
-    matched = part.filter(F.col("p_name").contains(name_pattern)).select(
+    matched = part.filter(F.col("p_name").contains(PROFIT_NAME_PATTERN)).select(
         "p_partkey", "p_retailprice"
     )
     sup_nat = supplier.join(
@@ -1191,7 +1188,7 @@ def product_profit(
     ).select("s_suppkey", "n_name")
     amount = (
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    ) - (F.lit(cost_frac) * F.col("p_retailprice")) * F.col("l_quantity")
+    ) - (F.lit(PROFIT_COST_FRAC) * F.col("p_retailprice")) * F.col("l_quantity")
     return (
         lineitem.join(
             F.broadcast(matched), F.col("l_partkey") == F.col("p_partkey")
@@ -1214,7 +1211,6 @@ def product_profit(
 def customer_order_distribution(
     customer: DataFrame,
     orders: DataFrame,
-    exclude_priority: str = "1-URGENT",
 ) -> DataFrame:
     """TPC-H Q13 shape: the distribution of per-customer order counts
     INCLUDING customers with zero qualifying orders — the suite's one
@@ -1231,7 +1227,7 @@ def customer_order_distribution(
     """
     cnt = (
         customer.join(
-            orders.filter(F.col("o_orderpriority") != exclude_priority)
+            orders.filter(F.col("o_orderpriority") != EXCLUDED_PRIORITY)
             .select("o_orderkey", "o_custkey"),
             customer["c_custkey"] == F.col("o_custkey"),
             "left",

@@ -51,14 +51,12 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     top_k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
     tfs: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k BM25 docs per query: (query_id, doc_id, score, rank).
 
     Score = Σ over DISTINCT query terms of
-        idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl)),
+        idf(t) · tf / (tf + k1·(1 − b + b·dl/avgdl)),  k1 = 1.2, b = 0.75,
     idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))  (Lucene BM25 — always
     positive, so a term in most docs degrades gracefully instead of
     subtracting).
@@ -105,7 +103,7 @@ def bm25_topk(
     )
     tf_part = F.col("tf") / (
         F.col("tf")
-        + F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+        + F.lit(1.2) * (F.lit(1 - 0.75) + F.lit(0.75) * F.col("dl") / F.col("avgdl"))
     )
     scored = (
         tfs.join(F.broadcast(qterms), "term")
@@ -175,14 +173,13 @@ def hybrid_rrf_topk(
     query_ids: list[int],
     top_k: int = 10,
     k_each: int = 20,
-    rrf_k: int = 60,
     tfs: DataFrame | None = None,
 ) -> DataFrame:
     """Hybrid more-like-this retrieval with Reciprocal Rank Fusion
     (Cormack et al. 2009 — the fusion OpenSearch/Elastic hybrid search
     ships): for each query document, the BM25 ranking of its distinct
     words and the exact-cosine ranking of its embedding are fused as
-    RRF(d) = Σ_side 1/(rrf_k + rank_side(d)); top-k by fused score.
+    RRF(d) = Σ_side 1/(60 + rank_side(d)); top-k by fused score.
     Output: (query_id, doc_id, rrf, lex_rank, dense_rank, rank) —
     side ranks NULL where the doc reached only one list.
 
@@ -228,8 +225,8 @@ def hybrid_rrf_topk(
         F.col("doc_id") != F.col("query_id")
     )
     rrf = F.coalesce(
-        1.0 / (F.lit(rrf_k) + F.col("lex_rank")), F.lit(0.0)
-    ) + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("dense_rank")), F.lit(0.0))
+        1.0 / (F.lit(60) + F.col("lex_rank")), F.lit(0.0)
+    ) + F.coalesce(1.0 / (F.lit(60) + F.col("dense_rank")), F.lit(0.0))
     w = Window.partitionBy("query_id").orderBy(
         rrf.desc(), F.col("doc_id").asc()
     )

@@ -66,21 +66,17 @@ def robots_path_regex_col(path: Column) -> Column:
     )
 
 
-def parse_robots(
-    robots: DataFrame,
-    host_col: str = "host",
-    body_col: str = "body",
-) -> DataFrame:
-    """Parse robots.txt bodies into the rule table
+def parse_robots(robots: DataFrame) -> DataFrame:
+    """Parse (host, body) robots.txt bodies into the rule table
     (host, agent, allow, path, plen, rx): one row per
     (user-agent, directive) pair, with `rx` the anchored match regex
     and `plen` the raw pattern length (the precedence key). Empty
     Disallow ("allow all" idiom) emits no rule. Unknown directives
     (crawl-delay, sitemap) are ignored."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
+        "host",
         F.posexplode(
-            F.split(F.regexp_replace(F.col(body_col), "\r", ""), "\n")
+            F.split(F.regexp_replace(F.col("body"), "\r", ""), "\n")
         ).alias("idx", "_raw"),
     ).select(
         "host", "idx", _norm_line(F.col("_raw")).alias("line")
@@ -137,10 +133,9 @@ def robots_gate(
     pages: DataFrame,
     rules: DataFrame,
     agent: str = "trainingbot",
-    url_col: str = "url_norm",
 ) -> DataFrame:
     """Append (allowed, rule_path) to `pages`: the RFC 9309 verdict of
-    `rules` for `agent` against each page's URL path. Group
+    `rules` for `agent` against each page's `url_norm` path. Group
     resolution per RFC §2.2.1: hosts with any rule for the NAMED
     agent use exactly those; otherwise the `*` group; hosts with no
     rules (or absent from `rules`) allow everything.
@@ -164,12 +159,12 @@ def robots_gate(
         .localCheckpoint(eager=False)
     )
 
-    path = F.regexp_extract(F.col(url_col), "^[a-z+.-]+://[^/]*(/.*)?$", 1)
+    path = F.regexp_extract(F.col("url_norm"), "^[a-z+.-]+://[^/]*(/.*)?$", 1)
     keyed = pages.withColumn(
-        "_r_host", url_host_col(F.col(url_col))
+        "_r_host", url_host_col(F.col("url_norm"))
     ).withColumn("_r_path", F.when(path == "", "/").otherwise(path))
     hits = (
-        keyed.select(F.col(url_col).alias("_r_url"), "_r_host", "_r_path")
+        keyed.select(F.col("url_norm").alias("_r_url"), "_r_host", "_r_path")
         .join(
             F.broadcast(applicable),
             F.col("_r_host") == F.col("host"),
@@ -179,7 +174,7 @@ def robots_gate(
         .agg(F.max(F.struct("plen", "allow", "path")).alias("_best"))
     )
     return (
-        keyed.join(hits, keyed[url_col] == hits["_r_url"], "left")
+        keyed.join(hits, keyed["url_norm"] == hits["_r_url"], "left")
         .select(
             *pages.columns,
             F.coalesce(F.col("_best.allow"), F.lit(True)).alias("allowed"),

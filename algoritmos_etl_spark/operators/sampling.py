@@ -24,22 +24,17 @@ def split_bucket(key: Column, salt: str = "split") -> Column:
     return F.pmod(token_hash(F.lit(salt), key.cast("string")), F.lit(SPLIT_BUCKETS))
 
 
-def with_split(
-    df: DataFrame,
-    key: str,
-    train_frac: float = 0.8,
-    valid_frac: float = 0.1,
-    salt: str = "split",
-) -> DataFrame:
-    """Adds a `split` column: train / valid / test by hash bucket.
+def with_split(df: DataFrame, key: str) -> DataFrame:
+    """Adds a `split` column: train / valid / test (80/10/10) by hash
+    bucket.
 
-    Fractions are exact over the bucket space (e.g. 0.8 → buckets
-    0-7999); actual row proportions converge to the fractions by the
-    hash's uniformity. No shuffle — one projection.
+    Fractions are exact over the bucket space (0.8 → buckets 0-7999);
+    actual row proportions converge to the fractions by the hash's
+    uniformity. No shuffle — one projection.
     """
-    b = split_bucket(F.col(key), salt)
-    train_hi = int(train_frac * SPLIT_BUCKETS)
-    valid_hi = train_hi + int(valid_frac * SPLIT_BUCKETS)
+    b = split_bucket(F.col(key))
+    train_hi = int(0.8 * SPLIT_BUCKETS)
+    valid_hi = train_hi + int(0.1 * SPLIT_BUCKETS)
     return df.withColumn(
         "split",
         F.when(b < train_hi, F.lit("train"))
@@ -53,7 +48,6 @@ def balanced_sample(
     key: str,
     strata_col: str,
     target_per_stratum: int,
-    salt: str = "strata",
 ) -> DataFrame:
     """Downsample every stratum toward ~`target_per_stratum` rows —
     the corpus-rebalancing step of a training pipeline (cap the
@@ -76,7 +70,7 @@ def balanced_sample(
     strata = counts.select(strata_col, thr)
     return (
         df.join(F.broadcast(strata), strata_col)
-        .filter(split_bucket(F.col(key), salt) < F.col("_thr"))
+        .filter(split_bucket(F.col(key), "strata") < F.col("_thr"))
         .drop("_thr")
     )
 
@@ -115,8 +109,6 @@ def pps_sample(
     key: str,
     weight_col: str,
     k: int,
-    salt: str = "pps",
-    n_buckets: int = 256,
 ) -> DataFrame:
     """Systematic probability-proportional-to-size sampling: draw
     exactly `k` threshold hits with each row's hit probability
@@ -156,9 +148,7 @@ def pps_sample(
         # break the exactly-k guarantee
         F.greatest(F.col(weight_col).cast("long"), F.lit(0)).alias("_w"),
     )
-    pre = hashed_prefix_sum(
-        counted, "_w", salt=f"pps:{salt}:", n_buckets=n_buckets
-    )
+    pre = hashed_prefix_sum(counted, "_w", salt="pps:pps:")
     total = pre.agg(F.sum("_w").alias("_W"))
     # rename before the 1-row cross join: both sides descend from `pre`,
     # so an un-aliased `_w` reference would be lineage-ambiguous
@@ -166,7 +156,7 @@ def pps_sample(
         "doc_id", F.col("_w").alias("_wv"), "_start"
     ).join(F.broadcast(total))
     w_safe = F.greatest(F.col("_W"), F.lit(1))
-    o = F.pmod(token_hash(F.lit(f"pps:o:{salt}")), w_safe)
+    o = F.pmod(token_hash(F.lit("pps:o:pps")), w_safe)
 
     # floor((x + W) / W) for x >= -W via Spark's integral `div` —
     # exact at any long magnitude, unlike a double `/` whose quotient
@@ -200,12 +190,11 @@ def epoch_shards(
     key: str,
     n_epochs: int = 2,
     n_shards: int = 8,
-    salt: str = "epoch",
 ) -> DataFrame:
     """Deterministic multi-epoch training-serving order: every row gets,
     per epoch, a shard assignment and a position within that shard —
     the (epoch, shard, pos) triple a data loader consumes. Each epoch's
-    order is an independent hash permutation (md5 over salt:epoch:key),
+    order is an independent hash permutation (md5 over "epoch":epoch:key),
     so epochs present the corpus in different orders, every run/engine
     reproduces the same order, and adding documents never reorders
     existing (epoch, shard) files beyond the insertion points.
@@ -226,7 +215,7 @@ def epoch_shards(
         ),
     )
     okey = token_hash(
-        F.lit(salt), F.col("epoch").cast("string"), F.col(key).cast("string")
+        F.lit("epoch"), F.col("epoch").cast("string"), F.col(key).cast("string")
     )
     shard = F.pmod(okey, F.lit(n_shards)).cast("int")
     w = Window.partitionBy("epoch", "shard").orderBy("_okey", key)

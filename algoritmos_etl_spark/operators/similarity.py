@@ -178,9 +178,8 @@ def correlation_heatmap(bars: DataFrame) -> DataFrame:
     (`app.py:344-346`) kept as a query-shape choice; mirror at the edge
     if a full matrix is needed. Returns are joined on date so only
     co-traded days feed each pair's correlation. The date join shuffles
-    O(pairs × shared days) rows: the small-corpus path (`/api/heatmap`,
-    the DTW prefilter) and the reference `correlation_heatmap_blocked`
-    is tested against.
+    O(pairs × shared days) rows: the small-corpus path (`/api/heatmap`)
+    and the reference `correlation_heatmap_blocked` is tested against.
     """
     rets = per_symbol_returns(bars)
     a = rets.select(F.col("symbol").alias("sym_a"), "date", F.col("ret").alias("ret_a"))
@@ -467,25 +466,14 @@ def _dtw_numpy(a, b, window=None, with_path: bool = False):
     return float(prev[m])
 
 
-def dtw_pairs(
-    bars: DataFrame,
-    window: int | None = None,
-    use_returns: bool = True,
-    min_abs_corr: float | None = None,
-) -> DataFrame:
-    """X1 at scale: DTW distance for every unordered symbol pair.
+def dtw_pairs(bars: DataFrame) -> DataFrame:
+    """X1 at scale: banded DTW distance between the zero-filled log
+    returns of every unordered symbol pair.
 
     Plan: per-symbol `collect_list(struct(date, close))` → one bounded
     array row per symbol → self-join on `sym_a < sym_b` (tiny, broadcast)
-    → `applyInPandas` DP per pair. Each task handles one pair; the DP
-    arrays are one trading-day series each, so executor memory is flat.
-
-    `min_abs_corr` is the documented scale path for all-pairs DTW: the
-    k² pair count is the real cost at corpus scale, so prefilter pairs
-    by |Pearson| ≥ τ (one cheap JVM-side aggregation over the same
-    date-join the heatmap uses) and run the O(n·w) DP only on the
-    survivors. Correlated series are exactly the low-DTW candidates —
-    recall of the prefilter is pinned by tests.
+    → `mapInPandas` DP over batches of pairs. The DP arrays are one
+    trading-day series each, so executor memory is flat.
     """
     valid = bars.filter(_valid_price("close"))
     series = (
@@ -500,24 +488,14 @@ def dtw_pairs(
     a = series.select(F.col("symbol").alias("sym_a"), F.col("closes").alias("closes_a"))
     b = series.select(F.col("symbol").alias("sym_b"), F.col("closes").alias("closes_b"))
     joined = a.crossJoin(b).filter(F.col("sym_a") < F.col("sym_b"))
-    if min_abs_corr is not None:
-        allowed = correlation_heatmap(bars).filter(
-            F.abs(F.col("pearson")) >= min_abs_corr
-        ).select("sym_a", "sym_b")
-        joined = joined.join(allowed, ["sym_a", "sym_b"], "left_semi")
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         prepped = []
         for row in pdf.itertuples(index=False):
-            pa = np.asarray(row.closes_a, dtype=float)
-            pb = np.asarray(row.closes_b, dtype=float)
-            if use_returns:
-                ra = _zero_fill_log_returns(pa)
-                rb = _zero_fill_log_returns(pb)
-            else:
-                ra, rb = pa, pb
+            ra = _zero_fill_log_returns(np.asarray(row.closes_a, dtype=float))
+            rb = _zero_fill_log_returns(np.asarray(row.closes_b, dtype=float))
             prepped.append((row.sym_a, row.sym_b, ra, rb))
         # batch the DP across pairs of the SAME series shape (on one
         # calendar that is nearly every pair): the banded row loop is
@@ -535,12 +513,12 @@ def dtw_pairs(
             if n_a == 0 or n_b == 0 or len(grp) == 1:
                 for sym_a, sym_b, ra, rb in grp:
                     rows.append(
-                        (sym_a, sym_b, _dtw_numpy(ra, rb, window=window), n_a, n_b)
+                        (sym_a, sym_b, _dtw_numpy(ra, rb), n_a, n_b)
                     )
                 continue
             a = np.stack([g[2] for g in grp])
             b = np.stack([g[3] for g in grp])
-            dists = _dtw_numpy_batch(a, b, window=window)
+            dists = _dtw_numpy_batch(a, b)
             rows.extend(
                 (g[0], g[1], float(d), n_a, n_b) for g, d in zip(grp, dists)
             )
@@ -562,24 +540,19 @@ def dtw_pairs(
     )
 
 
-def _dtw_numpy_batch(a, b, window=None):
-    """`_dtw_numpy`'s distance-only DP advanced for P same-shape pairs
-    at once: a is (P, n), b is (P, m), same band/cost/recurrence per
-    pair (equality with the per-pair kernel is pinned in tests). The
-    j-recurrence stays a Python loop — cur[j-1] is a true sequential
-    dependency — but each step is a width-P vector op, so the
-    Python-iteration count is n·w per GROUP instead of per pair."""
+def _dtw_numpy_batch(a, b):
+    """`_dtw_numpy`'s default-band distance-only DP advanced for P
+    same-shape pairs at once: a is (P, n), b is (P, m), same
+    band/cost/recurrence per pair (equality with the per-pair kernel
+    is pinned in tests). The j-recurrence stays a Python loop —
+    cur[j-1] is a true sequential dependency — but each step is a
+    width-P vector op, so the Python-iteration count is n·w per GROUP
+    instead of per pair."""
     import numpy as np
 
     p, n = a.shape
     m = b.shape[1]
-    if window is None:
-        w = max(10, max(n, m) // 4)
-    elif window == 0:
-        w = max(n, m)
-    else:
-        w = window
-    w = max(w, abs(n - m))
+    w = max(10, max(n, m) // 4, abs(n - m))
     inf = float("inf")
     prev = np.full((p, m + 1), inf)
     prev[:, 0] = 0.0
@@ -612,21 +585,18 @@ def compare_two_assets(bars: DataFrame, sym_a, sym_b) -> DataFrame:
     return _pair_bundle(bars, sym_a, sym_b, with_dtw=True)
 
 
-def dtw_path(
-    bars: DataFrame, sym_a, sym_b, use_returns: bool = True,
-    target_points: int | None = 80, path_points: int | None = 60,
-) -> DataFrame:
+def dtw_path(bars: DataFrame, sym_a, sym_b) -> DataFrame:
     """X2: full-matrix DTW with the optimal warping path
-    (`algorithms/similarity.py:536-608`). One exploded row per path
-    step (i, j) — viz-oriented, single-pair only.
+    (`algorithms/similarity.py:536-608`) between two symbols' zero-
+    filled log returns. One exploded row per path step (i, j) —
+    viz-oriented, single-pair only.
 
     Reference parity (`app.py:246-265`): each returns vector is stride-
-    downsampled to ~`target_points` (step = max(1, len//target)) BEFORE
-    the full-matrix DP, and the backtracked path is thinned to
-    ~`path_points` (step = max(1, len(path)//path_points)) — the full
-    O(n·m) matrix is the cost of backtracking, so the reference never
-    runs it on raw-length series and neither do we. Pass None for
-    either to disable (exact full-resolution path)."""
+    downsampled to ~80 points (step = max(1, len//80)) BEFORE the
+    full-matrix DP, and the backtracked path is thinned to ~60 steps
+    (step = max(1, len(path)//60)) — the full O(n·m) matrix is the cost
+    of backtracking, so the reference never runs it on raw-length
+    series and neither do we."""
     valid = bars.filter(
         F.col("symbol").isin([sym_a, sym_b]) & _valid_price("close")
     )
@@ -648,17 +618,13 @@ def dtw_path(
 
         for pdf in batches:
             for row in pdf.itertuples(index=False):
-                pa = np.asarray(row.closes_a, dtype=float)
-                pb = np.asarray(row.closes_b, dtype=float)
-                if use_returns:
-                    pa, pb = _zero_fill_log_returns(pa), _zero_fill_log_returns(pb)
-                if target_points:
-                    # reference sample_list: lst[::step], per-series step
-                    pa = pa[:: max(1, len(pa) // target_points)]
-                    pb = pb[:: max(1, len(pb) // target_points)]
+                pa = _zero_fill_log_returns(np.asarray(row.closes_a, dtype=float))
+                pb = _zero_fill_log_returns(np.asarray(row.closes_b, dtype=float))
+                # reference sample_list: lst[::step], per-series step
+                pa = pa[:: max(1, len(pa) // 80)]
+                pb = pb[:: max(1, len(pb) // 80)]
                 dist, path = _dtw_numpy(pa, pb, window=0, with_path=True)
-                if path_points:
-                    path = path[:: max(1, len(path) // path_points)]
+                path = path[:: max(1, len(path) // 60)]
                 yield pd.DataFrame(
                     {
                         "sym_a": row.sym_a,

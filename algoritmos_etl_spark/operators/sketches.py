@@ -159,22 +159,22 @@ def bloom_semi_join(
     keys: DataFrame,
     big_key: str,
     keys_key: str | None = None,
-    n_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
 ) -> DataFrame:
     """Prune `big` to rows whose `big_key` PROBABLY appears in
-    `keys[keys_key]`: `n_hashes` consecutive broadcast left-semi joins
-    against the partitioned Bloom bit tables.
+    `keys[keys_key]`: `BLOOM_HASHES` consecutive broadcast left-semi
+    joins against the partitioned Bloom bit tables.
 
     Never drops a true match (no false negatives); survivors may
-    include false positives at rate ≈ (k_distinct/n_bits)^n_hashes, so
-    callers MUST still apply the real join/filter — whose result is
-    then exactly the unpruned plan's. `big` is never shuffled: each
-    semi-join broadcasts a ≤ n_bits-row bit table and filters map-side.
+    include false positives at rate ≈ (k_distinct/n_bits)^n_hashes
+    (n_bits = BLOOM_BITS), so callers MUST still apply the real
+    join/filter — whose result is then exactly the unpruned plan's.
+    `big` is never shuffled: each semi-join broadcasts a
+    ≤ n_bits-row bit table and filters map-side.
     """
     keys_key = keys_key or big_key
+    n_bits = BLOOM_BITS
     pruned = big
-    for d in range(n_hashes):
+    for d in range(BLOOM_HASHES):
         # qualified references (bits[...]) rather than bare F.col: a
         # big side that itself carries a column named `bit` would make
         # an unqualified condition lineage-ambiguous

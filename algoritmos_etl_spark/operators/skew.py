@@ -23,7 +23,7 @@ partition or results become non-reproducible.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,37 +32,22 @@ def salted_join(
     small: DataFrame,
     on: str,
     n_salts: int = 16,
-    how: str = "inner",
-    salt_by: Column | None = None,
 ) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated.
+    """Inner equi-join with the big side salted and the small side
+    replicated.
 
-    big rows get `_salt = pmod(hash(salt_by), n_salts)` (default: hash
-    of every big-side column — deterministic per row); small rows are
+    big rows get `_salt = pmod(hash(<every big-side column>), n_salts)`
+    — deterministic per row; small rows are
     exploded across all salts, so each big row still meets each matching
     small row exactly once. A key with 40% of the rows now spreads over
     `n_salts` shuffle partitions instead of one.
 
     Cost model: replicates the SMALL side n_salts×. Use when the small
     side is too big to broadcast but far smaller than the skewed side.
-
-    Only inner/left (and the semi/anti variants, which emit no
-    small-side rows) preserve unsalted-join semantics: under
-    right/full, an unmatched small-side row would surface once per
-    salt replica, so those modes are rejected.
     """
-    allowed = {"inner", "left", "leftouter", "left_outer", "left_semi",
-               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
-    if how.lower() not in allowed:
-        raise ValueError(
-            f"salted_join(how={how!r}): only inner/left/semi/anti joins "
-            "match the unsalted join exactly (right/full would replicate "
-            "unmatched small-side rows once per salt)"
-        )
-    if salt_by is None:
-        salt_by = F.hash(*[F.col(c) for c in big.columns])
+    salt_by = F.hash(*[F.col(c) for c in big.columns])
     salted_big = big.withColumn("_salt", F.pmod(salt_by, F.lit(n_salts)))
     replicated_small = small.withColumn(
         "_salt", F.explode(F.array(*[F.lit(s) for s in range(n_salts)]))
     )
-    return salted_big.join(replicated_small, [on, "_salt"], how).drop("_salt")
+    return salted_big.join(replicated_small, [on, "_salt"]).drop("_salt")

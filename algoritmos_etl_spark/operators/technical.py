@@ -21,17 +21,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _series_window(partition: str = "symbol", order: str = "date") -> Window:
-    return Window.partitionBy(partition).orderBy(order)
+def _series_window() -> Window:
+    return Window.partitionBy("symbol").orderBy("date")
 
 
-def log_returns(
-    df: DataFrame,
-    price_col: str = "close",
-    zero_fill: bool = True,
-    out_col: str = "ret",
-) -> DataFrame:
-    """Per-symbol log returns ln(p_i / p_{i-1}), i ≥ 1.
+def log_returns(df: DataFrame, zero_fill: bool = True) -> DataFrame:
+    """Per-symbol log returns `ret` = ln(close_i / close_{i-1}), i ≥ 1.
 
     zero_fill=True  → W2: invalid pairs (either price ≤ 0 or null)
                       emit 0.0 (`technical.py:144-153`).
@@ -41,30 +36,29 @@ def log_returns(
     both variants (reference returns length n−1).
     """
     w = _series_window()
-    prev = F.lag(price_col).over(w)
-    cur = F.col(price_col)
+    prev = F.lag("close").over(w)
+    cur = F.col("close")
     valid = prev.isNotNull() & cur.isNotNull() & (prev > 0) & (cur > 0)
     ret = F.log(cur / prev)
     if zero_fill:
-        out = df.withColumn(out_col, F.when(valid, ret).otherwise(F.lit(0.0)))
+        out = df.withColumn("ret", F.when(valid, ret).otherwise(F.lit(0.0)))
     else:
-        out = df.withColumn(out_col, F.when(valid, ret))
+        out = df.withColumn("ret", F.when(valid, ret))
     out = out.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") > 1)
     if not zero_fill:
-        out = out.filter(F.col(out_col).isNotNull())
+        out = out.filter(F.col("ret").isNotNull())
     return out.drop("_rn")
 
 
-def simple_returns(
-    df: DataFrame, price_col: str = "close", out_col: str = "ret"
-) -> DataFrame:
-    """W3: (p_i − p_{i-1}) / p_{i-1}; 0.0 when p_{i-1} == 0."""
+def simple_returns(df: DataFrame) -> DataFrame:
+    """W3: `ret` = (p_i − p_{i-1}) / p_{i-1} on close; 0.0 when
+    p_{i-1} == 0."""
     w = _series_window()
-    prev = F.lag(price_col).over(w)
+    prev = F.lag("close").over(w)
     out = df.withColumn(
-        out_col,
+        "ret",
         F.when(
-            prev.isNotNull() & (prev != 0), (F.col(price_col) - prev) / prev
+            prev.isNotNull() & (prev != 0), (F.col("close") - prev) / prev
         ).otherwise(F.lit(0.0)),
     )
     return (
@@ -74,13 +68,9 @@ def simple_returns(
     )
 
 
-def sma(
-    df: DataFrame,
-    window_size: int,
-    price_col: str = "close",
-    out_col: str | None = None,
-) -> DataFrame:
-    """W4: trailing simple moving average; warm-up rows yield NULL.
+def sma(df: DataFrame, window_size: int) -> DataFrame:
+    """W4: trailing simple moving average of close as `sma_<window>`;
+    warm-up rows yield NULL.
 
     The reference emits n−w+1 values and the API pads the first w−1
     positions with None (`technical.py:193-243`, `app.py:384-390`);
@@ -91,19 +81,18 @@ def sma(
     per symbol; if w is ever huge, the cumsum−lag(cumsum, w) difference
     trick restores O(n) (SURVEY.md §4).
     """
-    out_col = out_col or f"sma_{window_size}"
     w = _series_window()
     frame = w.rowsBetween(-(window_size - 1), 0)
     return df.withColumn(
-        out_col,
+        f"sma_{window_size}",
         F.when(
             F.row_number().over(w) >= window_size,
-            F.avg(price_col).over(frame),
+            F.avg("close").over(frame),
         ),
     )
 
 
-def returns_bundle(df: DataFrame, price_col: str = "close") -> DataFrame:
+def returns_bundle(df: DataFrame) -> DataFrame:
     """W2/W2b/W3 in ONE window pass: per-symbol rows (first row dropped,
     reference returns length n−1) with all three return semantics as
     columns — `ret_zero` (0.0-fill, `technical.py:144-153`), `ret_omit`
@@ -113,7 +102,7 @@ def returns_bundle(df: DataFrame, price_col: str = "close") -> DataFrame:
     One shuffle on symbol, one WindowExec, three projections — strictly
     cheaper at scale than three separate scans."""
     w = _series_window()
-    cur = F.col(price_col)
+    cur = F.col("close")
     # lag/row_number are materialized BEFORE the rn>1 filter — re-deriving
     # lag after the filter would see the truncated frame and null out the
     # first surviving row's predecessor.
@@ -121,7 +110,7 @@ def returns_bundle(df: DataFrame, price_col: str = "close") -> DataFrame:
     valid = prev.isNotNull() & cur.isNotNull() & (prev > 0) & (cur > 0)
     logret = F.log(cur / prev)
     return (
-        df.withColumn("_prev", F.lag(price_col).over(w))
+        df.withColumn("_prev", F.lag("close").over(w))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") > 1)
         .withColumn("ret_zero", F.when(valid, logret).otherwise(F.lit(0.0)))
@@ -136,7 +125,7 @@ def returns_bundle(df: DataFrame, price_col: str = "close") -> DataFrame:
     )
 
 
-def series_stats(df: DataFrame, price_col: str = "close") -> DataFrame:
+def series_stats(df: DataFrame) -> DataFrame:
     """A1/A2/A12 + A3 in ONE aggregation: per-symbol close moments
     (mean, sample stddev, min, max, n) and annualized volatility over
     omit-semantics log returns (`algorithms/volatility.py:63-121`).
@@ -147,19 +136,19 @@ def series_stats(df: DataFrame, price_col: str = "close") -> DataFrame:
     import math
 
     w = _series_window()
-    prev = F.lag(price_col).over(w)
-    cur = F.col(price_col)
+    prev = F.lag("close").over(w)
+    cur = F.col("close")
     valid = prev.isNotNull() & cur.isNotNull() & (prev > 0) & (cur > 0)
     ret = F.when(valid, F.log(cur / prev))
     return (
         df.withColumn("_ret", ret)
         .groupBy("symbol")
         .agg(
-            F.avg(price_col).alias("mean"),
-            F.stddev_samp(price_col).alias("std_dev"),
-            F.min(price_col).alias("min_close"),
-            F.max(price_col).alias("max_close"),
-            F.count(price_col).alias("n"),
+            F.avg("close").alias("mean"),
+            F.stddev_samp("close").alias("std_dev"),
+            F.min("close").alias("min_close"),
+            F.max("close").alias("max_close"),
+            F.count("close").alias("n"),
             (
                 F.coalesce(F.stddev_samp("_ret"), F.lit(0.0))
                 * math.sqrt(252.0)
@@ -276,13 +265,9 @@ def resample_bars(
     )
 
 
-def acf_report(
-    df: DataFrame,
-    value_col: str = "close",
-    max_lag: int = 5,
-) -> DataFrame:
+def acf_report(df: DataFrame, max_lag: int = 5) -> DataFrame:
     """Autocorrelation function per symbol: Pearson correlation of the
-    series with its lag-k shifted self for k = 1..max_lag — the
+    close series with its lag-k shifted self for k = 1..max_lag — the
     stationarity/memory diagnostic of classical time-series analysis,
     extending the reference's cross-series Pearson (A7,
     `algorithms/similarity.py`) to the self-lag axis. Output:
@@ -295,7 +280,7 @@ def acf_report(
     frames — map-side partial, no second sort.
     """
     w = _series_window().orderBy("date")
-    v = F.col(value_col)
+    v = F.col("close")
     lagged = df.select(
         "symbol",
         v.alias("x"),
@@ -331,13 +316,12 @@ def acf_report(
 
 def seasonal_decomposition(
     df: DataFrame,
-    value_col: str = "close",
     period: int = 7,
     trend_window: int = 7,
 ) -> DataFrame:
-    """Classical additive seasonal decomposition on the calendar-day
-    axis: trend = centered moving average over `trend_window` rows,
-    seasonal = the per-(symbol, position-in-period) mean of the
+    """Classical additive seasonal decomposition of close on the
+    calendar-day axis: trend = centered moving average over
+    `trend_window` rows, seasonal = the per-(symbol, position-in-period) mean of the
     detrended series, residual = value − trend − seasonal. The
     moving-average decomposition of classical time-series analysis
     (the non-parametric ancestor of STL), here with a day-of-week
@@ -355,7 +339,7 @@ def seasonal_decomposition(
         .orderBy("date")
         .rowsBetween(-half, trend_window - half - 1)
     )
-    v = F.col(value_col)
+    v = F.col("close")
     with_trend = df.select(
         "symbol",
         "date",

@@ -305,12 +305,7 @@ LANGID_BUCKETS = 2048
 LANGID_N = 3
 
 
-def lang_id_trained(
-    docs: DataFrame,
-    n: int = LANGID_N,
-    n_buckets: int = LANGID_BUCKETS,
-    scale: int = 10**6,
-) -> DataFrame:
+def lang_id_trained(docs: DataFrame) -> DataFrame:
     """TRAINED language-ID: a multiclass Naive Bayes over hashed
     char-n-grams (the fastText/CLD3 shape), distantly supervised by
     the marker heuristic — `lang_id`'s confident rows (pred != 'und')
@@ -351,6 +346,7 @@ def lang_id_trained(
     with NULL scores for docs with no grams; argmax tie-break is the
     heuristic's fixed order (en > es > de > fr).
     """
+    n, n_buckets, scale = LANGID_N, LANGID_BUCKETS, 10**6
     # the seed label is a ROW-LOCAL projection (marker counts), so it
     # rides inline on the gram explode — joining lang_id's output back
     # would self-join the corpus on doc_id carrying full text for

@@ -89,16 +89,16 @@ def normalize_url_col(url: Column) -> Column:
     return F.when(scheme == "", F.trim(F.lower(url))).otherwise(rebuilt)
 
 
-def normalize_url_cte(src: str, url_col: str = "url") -> str:
+def normalize_url_cte(src: str) -> str:
     """DuckDB twin of `normalize_url_col` as a WITH-fragment: consumes
-    relation `src` (which must expose `url_col`), defines relations
+    relation `src` (which must expose `url`), defines relations
     `_n0.._n2` and `normed` = src + `url_norm`. Kept next to the
     Column version so the dialects cannot drift. DuckDB gotchas
     pinned here: regexp_extract returns '' on no-match (same as
     Spark), string_split('') is [''] (same), but array_to_string([])
     is NULL where Spark's array_join([]) is '' — hence the coalesce."""
     return f"""_n0 AS (
-        SELECT *, regexp_replace({url_col}, '#.*$', '') AS _u0 FROM {src}
+        SELECT *, regexp_replace(url, '#.*$', '') AS _u0 FROM {src}
     ),
     _n1 AS (
         SELECT *,
@@ -123,7 +123,7 @@ def normalize_url_cte(src: str, url_col: str = "url") -> str:
     normed AS (
         SELECT * EXCLUDE (_u0, _scheme, _auth, _rawpath, _q, _host,
                           _path, _q2),
-            CASE WHEN _scheme = '' THEN trim(lower({url_col}))
+            CASE WHEN _scheme = '' THEN trim(lower(url))
                  ELSE _scheme || '://' || _host || _path ||
                       (CASE WHEN _q2 = '' THEN ''
                             ELSE '?' || _q2 END) END AS url_norm
@@ -495,25 +495,11 @@ def domain_gate(
     pages: DataFrame,
     blocklist: list[str],
     url_col: str = "url",
-    psl: bool = False,
 ) -> DataFrame:
-    """Drop pages whose registrable domain is blocklisted (the C4
-    bad-domain filter). Map-only: the verdict is a per-row expression
-    against the bounded literal list — zero shuffles, composes in
-    front of any curation gate. `psl=True` evaluates the grain with
-    the PSL longest-suffix match (broadcast joins, still map-only) so
-    a blocklist entry like example.co.uk matches exactly that
-    registrant instead of nothing (naive grain: co.uk)."""
-    if psl:
-        hosted = pages.withColumn(
-            "_gate_host", url_host_col(normalize_url_col(F.col(url_col)))
-        )
-        gated = with_registrable_domain_psl(
-            hosted, "_gate_host", out_col="_gate_domain"
-        )
-        return gated.filter(
-            ~F.col("_gate_domain").isin(*blocklist)
-        ).drop("_gate_host", "_gate_domain")
+    """Drop pages whose naive 2-label registrable domain is
+    blocklisted (the C4 bad-domain filter). Map-only: the verdict is a
+    per-row expression against the bounded literal list — zero
+    shuffles, composes in front of any curation gate."""
     dom = registrable_domain_col(
         url_host_col(normalize_url_col(F.col(url_col)))
     )

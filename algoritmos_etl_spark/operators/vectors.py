@@ -31,6 +31,14 @@ from pyspark.sql import functions as F
 LSH_TABLES = 16
 LSH_PLANES_PER_TABLE = 8
 
+# The ANN queries' workload, shared by their builders and DuckDB
+# oracles: the query handful they rank neighbours for and k, and the
+# IVF coarse quantizer's cluster count and probe width.
+ANN_QUERY_IDS = (0, 1, 2, 3, 4)
+ANN_K = 10
+IVF_CENTROIDS = 16
+IVF_NPROBE = 4
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -46,9 +54,9 @@ def _norm(a: Column) -> Column:
     )
 
 
-def with_dvec(df: DataFrame, col: str = "embedding") -> DataFrame:
+def with_dvec(df: DataFrame) -> DataFrame:
     """Cast float vectors to double once, up front (fold math in double)."""
-    return df.withColumn("dvec", F.col(col).cast("array<double>"))
+    return df.withColumn("dvec", F.col("embedding").cast("array<double>"))
 
 
 def cosine_topk(
@@ -123,17 +131,16 @@ def _plane_literal(plane_id: int, dim: int) -> list[float]:
     return comps
 
 
-def _infer_dim(embeddings: DataFrame, col: str = "embedding") -> int:
+def _infer_dim(embeddings: DataFrame) -> int:
     """Vector dimensionality from one row (embeddings are fixed-width);
     0 for an empty relation (downstream Arrow stages never execute on
     empty input, so 0 planes is a valid degenerate family)."""
-    row = embeddings.select(F.size(col).alias("d")).first()
+    row = embeddings.select(F.size("embedding").alias("d")).first()
     return 0 if row is None else row.d
 
 
 def lsh_topk(
     embeddings: DataFrame, query_ids: list[int], k: int = 10,
-    n_tables: int = LSH_TABLES, planes_per_table: int = LSH_PLANES_PER_TABLE,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """ANN top-k: rank only candidates sharing a multi-table LSH bucket
@@ -151,9 +158,7 @@ def lsh_topk(
     """
     if sigs is None:
         # the signature table feeds both join sides — materialize once
-        sigs = lsh_signatures(
-            embeddings, n_tables, planes_per_table
-        ).localCheckpoint(eager=False)
+        sigs = lsh_signatures(embeddings).localCheckpoint(eager=False)
     base = with_dvec(embeddings).select("vec_id", "dvec")
     qvecs = base.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("query_id"), F.col("dvec").alias("qvec")
@@ -205,10 +210,7 @@ def embedding_norms(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def lsh_signatures(
-    embeddings: DataFrame, n_tables: int = LSH_TABLES,
-    planes_per_table: int = LSH_PLANES_PER_TABLE, dim: int | None = None
-) -> DataFrame:
+def lsh_signatures(embeddings: DataFrame) -> DataFrame:
     """Multi-table hyperplane LSH signatures: (vec_id, tbl, sig) only —
     the narrow table every LSH consumer joins on. Vectors are NOT
     carried: a materialized signature table (the session cache, or a
@@ -220,7 +222,8 @@ def lsh_signatures(
     One table of many planes is over-selective for moderate cosine
     thresholds (recall p^planes decays fast); T independent tables of
     fewer planes recover recall 1−(1−p^b)^T while each table's buckets
-    stay small. Plane t·b+p is `_plane_literal(t·b+p, dim)`.
+    stay small: T = LSH_TABLES, b = LSH_PLANES_PER_TABLE, read at call
+    time. Plane t·b+p is `_plane_literal(t·b+p, dim)`.
 
     Plan shape: elements are QUANTIZED to integers with
     floor(val·1e9) — `floor` on a double is binary-exact on every
@@ -240,7 +243,8 @@ def lsh_signatures(
     import numpy as np
 
     base = with_dvec(embeddings)
-    dim = dim or _infer_dim(embeddings)
+    dim = _infer_dim(embeddings)
+    n_tables, planes_per_table = LSH_TABLES, LSH_PLANES_PER_TABLE
     n_planes = n_tables * planes_per_table
     planes = np.array(
         [_plane_literal(p, dim) for p in range(n_planes)], dtype=np.int64
@@ -276,7 +280,7 @@ def lsh_signatures(
 IVF_SCALE = 1_000_000  # component quantization for integer-exact dots
 
 
-def _quantized_flat(df: DataFrame, id_col: str, vec_col: str = "dvec") -> DataFrame:
+def _quantized_flat(df: DataFrame, id_col: str) -> DataFrame:
     """(id, idx, q) with q = floor(val * 1e6) — the IVF math runs on
     integers so every dot/norm is an order-independent exact sum.
 
@@ -286,7 +290,7 @@ def _quantized_flat(df: DataFrame, id_col: str, vec_col: str = "dvec") -> DataFr
     on every engine (the same rationale as `lsh_signatures`).
     """
     return df.select(
-        F.col(id_col), F.posexplode(vec_col).alias("idx", "val")
+        F.col(id_col), F.posexplode("dvec").alias("idx", "val")
     ).select(id_col, "idx", F.floor(F.col("val") * F.lit(float(IVF_SCALE))).alias("q"))
 
 
@@ -365,10 +369,9 @@ def _ivf_assign(
 def ivf_topk(
     embeddings: DataFrame,
     query_ids: list[int],
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 1,
+    k: int,
+    n_centroids: int,
+    nprobe: int,
     flat: DataFrame | None = None,
     cents: DataFrame | None = None,
 ) -> DataFrame:
@@ -390,9 +393,9 @@ def ivf_topk(
         F.sum(F.col("q") * F.col("q")).alias("n2")
     ).localCheckpoint(eager=False)
     if cents is None:
-        cents = ivf_train(
-            embeddings, n_centroids, iters, flat=flat
-        ).localCheckpoint(eager=False)
+        cents = ivf_train(embeddings, n_centroids, flat=flat).localCheckpoint(
+            eager=False
+        )
     assign = _ivf_assign(flat, vec_norms, cents)
     cent_norms = cents.groupBy("centroid_id").agg(
         F.sum(F.col("c") * F.col("c")).alias("c2")
@@ -597,18 +600,14 @@ def _pq_quantize(pdf, col: str):
     return np.floor(v * float(IVF_SCALE)).astype(np.int64)
 
 
-def pq_train(
-    embeddings: DataFrame,
-    m: int = PQ_SUBS,
-    ks: int = PQ_CODES,
-    flat: DataFrame | None = None,
-) -> DataFrame:
+def pq_train(embeddings: DataFrame, flat: DataFrame | None = None) -> DataFrame:
     """Product-quantization codebooks: (sub, code, sidx, c) integer
-    components — `m` independent k-means quantizers, one per
-    dim/m-wide subspace (Jégou et al., "Product Quantization for
-    Nearest Neighbor Search", TPAMI 2011).
+    components — `PQ_SUBS` independent k-means quantizers of
+    `PQ_CODES` codes each, one per dim/PQ_SUBS-wide subspace (Jégou et
+    al., "Product Quantization for Nearest Neighbor Search", TPAMI
+    2011).
 
-    Deterministic like `ivf_train`: seeds are the first `ks` vectors
+    Deterministic like `ivf_train`: seeds are the first `PQ_CODES` vectors
     by vec_id (their subspace slices seed every codebook), then one
     Lloyd step under integer-exact squared-L2 — assign each (vector,
     subspace) slice to its argmin-distance seed (ties → lowest code),
@@ -627,6 +626,7 @@ def pq_train(
     """
     import numpy as np
 
+    m, ks = PQ_SUBS, PQ_CODES
     base = with_dvec(embeddings)
     dim = _infer_dim(embeddings)
     if dim % m:
@@ -690,7 +690,6 @@ def pq_train(
 def pq_encode(
     embeddings: DataFrame,
     codebooks: DataFrame,
-    m: int = PQ_SUBS,
     flat: DataFrame | None = None,
 ) -> DataFrame:
     """(vec_id, sub, code): the PQ-compressed corpus — m small codes
@@ -707,6 +706,7 @@ def pq_encode(
     the corpus path doesn't need the exploded relation.)"""
     import numpy as np
 
+    m = PQ_SUBS
     dim = _infer_dim(embeddings)
     dsub = dim // m
     books_np = _pq_books_np(_pq_collect_codebooks(codebooks, m, dsub))
@@ -736,9 +736,7 @@ def pq_encode(
 def pq_topk(
     embeddings: DataFrame,
     query_ids: list[int],
-    k: int = 10,
-    m: int = PQ_SUBS,
-    ks: int = PQ_CODES,
+    k: int,
     flat: DataFrame | None = None,
     codebooks: DataFrame | None = None,
     codes: DataFrame | None = None,
@@ -759,15 +757,13 @@ def pq_topk(
     """
     base = with_dvec(embeddings)
     dim = _infer_dim(embeddings)
-    dsub = dim // m
+    dsub = dim // PQ_SUBS
     if flat is None:
         flat = _quantized_flat(base, "vec_id").localCheckpoint(eager=False)
     if codebooks is None:
-        codebooks = pq_train(embeddings, m, ks, flat=flat).localCheckpoint(
-            eager=False
-        )
+        codebooks = pq_train(embeddings, flat=flat).localCheckpoint(eager=False)
     if codes is None:
-        codes = pq_encode(embeddings, codebooks, m, flat=flat)
+        codes = pq_encode(embeddings, codebooks, flat=flat)
     qsub = (
         _pq_subflat(flat, dsub)
         .filter(F.col("vec_id").isin(query_ids))
@@ -805,7 +801,7 @@ def pq_topk(
 
 # ------------------------------------------------------------------ PCA
 
-def pca_fit(embeddings: DataFrame, k: int = 8, col: str = "embedding"):
+def pca_fit(embeddings: DataFrame, k: int = 8):
     """Fit PCA distributedly: one corpus pass computes the Gram matrix
     and mean, the (tiny) eigenproblem solves on the driver.
 
@@ -823,7 +819,8 @@ def pca_fit(embeddings: DataFrame, k: int = 8, col: str = "embedding"):
     """
     import numpy as np
 
-    dim = _infer_dim(embeddings, col)
+    col = "embedding"
+    dim = _infer_dim(embeddings)
     n_cells = dim * dim + dim + 1
 
     def partials(batches):
@@ -869,22 +866,15 @@ def pca_fit(embeddings: DataFrame, k: int = 8, col: str = "embedding"):
     return mean, comps, ratio
 
 
-def pca_project(
-    embeddings: DataFrame,
-    k: int = 8,
-    col: str = "embedding",
-    fitted=None,
-) -> DataFrame:
+def pca_project(embeddings: DataFrame, k: int = 8) -> DataFrame:
     """(vec_id, pc1..pck): corpus projected onto the top-k principal
     axes. The fit is one Gram pass (see `pca_fit`); the projection is
     pure JVM expression work — the centered vector folds against each
     component as literal arrays, no Python in the projection path, so
     it pipelines into whatever consumes the reduced vectors."""
-    mean, comps, _ = fitted if fitted is not None else pca_fit(
-        embeddings, k, col
-    )
+    mean, comps, _ = pca_fit(embeddings, k)
     centered = F.zip_with(
-        F.col(col).cast("array<double>"),
+        F.col("embedding").cast("array<double>"),
         F.array(*[F.lit(float(v)) for v in mean]),
         lambda x, m: x - m,
     )
@@ -900,10 +890,7 @@ def pca_project(
 def lsh_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
-    n_tables: int = LSH_TABLES,
-    planes_per_table: int = LSH_PLANES_PER_TABLE,
     sigs: DataFrame | None = None,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Multi-table-LSH-blocked near-duplicate pairs — the 100 TB path
     for `cosine_neardup_pairs`.
@@ -914,25 +901,9 @@ def lsh_neardup_pairs(
     the all-pairs baseline is pinned by tests. `sigs` shares a
     materialized narrow signature table across LSH consumers (see
     `lsh_topk`); verification joins vectors from the columnar source.
-
-    `max_bucket_size` mirrors the MinHash pipeline's banding cap
-    (`dedup.minhash_lsh_dedup`): verification is one applyInPandas task
-    per (tbl, sig) bucket holding an n×dim stack plus 1024×n gram
-    blocks, so a degenerate bucket on a clustered corpus would OOM or
-    straggle a single task. Oversized buckets are dropped from
-    candidate generation via a broadcast anti-join (their pairs are
-    overwhelmingly caught in the other T−1 tables).
     """
     if sigs is None:
-        sigs = lsh_signatures(embeddings, n_tables, planes_per_table)
-    if max_bucket_size is not None:
-        big = (
-            sigs.groupBy("tbl", "sig")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket_size)
-            .select("tbl", "sig")
-        )
-        sigs = sigs.join(F.broadcast(big), ["tbl", "sig"], "left_anti")
+        sigs = lsh_signatures(embeddings)
     vecs = with_dvec(embeddings).select("vec_id", "dvec")
     # One shuffle lays the corpus out as the T hash tables themselves:
     # (tbl, sig) buckets carrying their member vectors. Verification
@@ -998,8 +969,6 @@ def lsh_neardup_pairs(
 def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.9,
-    n_centroids: int = 16,
-    iters: int = 1,
     flat: DataFrame | None = None,
     cents: DataFrame | None = None,
 ) -> DataFrame:
@@ -1014,7 +983,7 @@ def semantic_dedup(
     one shuffle lays the corpus out as (centroid_id → members), then
     one BLAS gram matrix per cluster inside `applyInPandas` (the same
     bucket-local verification as `lsh_neardup_pairs`; the pair relation
-    is never materialized). With n_centroids ~ sqrt(n) the per-task
+    is never materialized). With IVF_CENTROIDS ~ sqrt(n) the per-task
     stack stays bounded; a degenerate cluster would straggle one task,
     which is what the quantizer's balance (pinned in tests) prevents.
 
@@ -1034,9 +1003,9 @@ def semantic_dedup(
         F.sum(F.col("q") * F.col("q")).alias("n2")
     )
     if cents is None:
-        cents = ivf_train(
-            embeddings, n_centroids, iters, flat=flat
-        ).localCheckpoint(eager=False)
+        cents = ivf_train(embeddings, IVF_CENTROIDS, flat=flat).localCheckpoint(
+            eager=False
+        )
     assign = _ivf_assign(flat, vec_norms, cents)
     members = assign.join(base.select("vec_id", "dvec"), "vec_id")
     tau = float(threshold)

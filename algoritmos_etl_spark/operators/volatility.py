@@ -31,10 +31,8 @@ TRADING_DAYS = 252
 CONSERVATIVE, MODERATE, AGGRESSIVE = "Conservador", "Moderado", "Agresivo"
 
 
-def historical_volatility(
-    df: DataFrame, annualize: bool = True, trading_days: int = TRADING_DAYS
-) -> DataFrame:
-    """A3: stddev_samp of omit-semantics log returns, ×√252 if annualized.
+def historical_volatility(df: DataFrame) -> DataFrame:
+    """A3: stddev_samp of omit-semantics log returns, annualized ×√252.
 
     <2 valid returns ⇒ stddev_samp is NULL; the reference reports 0.0
     there (→ Conservador), so coalesce — otherwise NULL falls through
@@ -42,15 +40,13 @@ def historical_volatility(
     nulls-first in the rank window.
     """
     rets = log_returns(df, zero_fill=False)
-    vol = F.coalesce(F.stddev_samp("ret"), F.lit(0.0))
-    if annualize:
-        vol = vol * math.sqrt(trading_days)
+    vol = F.coalesce(F.stddev_samp("ret"), F.lit(0.0)) * math.sqrt(TRADING_DAYS)
     return rets.groupBy("symbol").agg(
         vol.alias("volatility"), F.count("ret").alias("n_returns")
     )
 
 
-def classify_risk(vol_df: DataFrame, p_low: float = 0.33, p_high: float = 0.66) -> DataFrame:
+def classify_risk(vol_df: DataFrame) -> DataFrame:
     """W7+W8: bucket by exact P33/P66 thresholds, rank ascending.
 
     Ties in volatility break by symbol for determinism (the reference's
@@ -62,8 +58,8 @@ def classify_risk(vol_df: DataFrame, p_low: float = 0.33, p_high: float = 0.66) 
     (the r10 PSI-boundary lesson at the ordering grain).
     """
     thresholds = vol_df.agg(
-        F.percentile("volatility", F.lit(p_low)).alias("p_low"),
-        F.percentile("volatility", F.lit(p_high)).alias("p_high"),
+        F.percentile("volatility", F.lit(0.33)).alias("p_low"),
+        F.percentile("volatility", F.lit(0.66)).alias("p_high"),
     )
     # single-partition window is safe HERE: vol_df is one row per symbol
     # (an aggregate), thousands of rows at any data scale — not the raw
@@ -89,17 +85,18 @@ def risk_summary(classified: DataFrame) -> DataFrame:
     return classified.groupBy("risk_class").agg(F.count(F.lit(1)).alias("n_assets"))
 
 
-def analyze_portfolio_risk(bars: DataFrame, min_prices: int = 10) -> DataFrame:
+def analyze_portfolio_risk(bars: DataFrame) -> DataFrame:
     """X4: the full `/api/risk` lifecycle as one DataFrame plan.
 
-    bars → (P9 length guard) → A3 volatility → A10 thresholds →
-    W8 classify → W7 rank. Returns one row per qualifying symbol.
+    bars → (P9 length guard: more than 10 prices) → A3 volatility →
+    A10 thresholds → W8 classify → W7 rank. Returns one row per
+    qualifying symbol.
     """
     valid = bars.filter(F.col("close").isNotNull())
     counts = (
         valid.groupBy("symbol")
         .agg(F.count(F.lit(1)).alias("n_prices"))
-        .filter(F.col("n_prices") > min_prices)
+        .filter(F.col("n_prices") > 10)
         .select("symbol")
     )
     guarded = valid.join(F.broadcast(counts), "symbol", "left_semi")

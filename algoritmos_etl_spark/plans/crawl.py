@@ -43,9 +43,6 @@ def crawl_to_corpus(
     parsed: DataFrame,
     blocklist: list[str],
     quality_rules: tuple[str, ...] | None = None,
-    host_rank: DataFrame | None = None,
-    robots_rules: DataFrame | None = None,
-    robots_agent: str = "trainingbot",
 ) -> DataFrame:
     """`parsed` is `sources.warc.parse_warc_records` output. Returns
     one row per SURVIVING document: (doc_id — the 60-bit hash of the
@@ -53,27 +50,9 @@ def crawl_to_corpus(
     crawl records have no upstream id —, url_norm, domain, warc_date,
     n_dups, n_words, n_chars, text). `quality_rules` selects the
     rule-pack subset for this source (the Dolma per-source config
-    shape); default = the full pack. `host_rank` is an optional
-    (domain, rank_e12) table at the PSL registrable grain
-    (`operators.links.host_pagerank` output — the RefinedWeb-style
-    domain-quality prior): when given, the corpus gains a
-    `host_rank_e12` signal column via a broadcast left join keyed on
-    the page's PSL domain (the rank table is bounded by the web's
-    domain count; unranked domains — no link evidence — carry NULL).
-    Stays one-shuffle: the join build side is broadcast."""
+    shape); default = the full pack."""
     pages = parsed.filter(F.col("ok") & (F.col("warc_type") == "response"))
     deduped = url_ops.url_dedup(pages, "url", "warc_date")
-    if robots_rules is not None:
-        # RFC 9309 compliance stage (operators/robots): gate BEFORE
-        # extraction, after dedup — a disallowed URL never pays HTML
-        # processing; the rule table is bounded and broadcast
-        from ..operators.robots import robots_gate
-
-        deduped = (
-            robots_gate(deduped, robots_rules, agent=robots_agent)
-            .filter(F.col("allowed"))
-            .drop("allowed", "rule_path")
-        )
     gated = url_ops.domain_gate(deduped, blocklist, url_col="url_norm")
     text = html_to_text_col(F.coalesce(F.col("html"), F.lit("")))
     docs = gated.select(
@@ -94,7 +73,7 @@ def crawl_to_corpus(
         # the materialized attribute.
         F.explode(F.array(text)).alias("text"),
     )
-    out = docs.filter(
+    return docs.filter(
         quality_keep_expr(F.col("text"), rules=quality_rules)
     ).select(
         "doc_id",
@@ -106,20 +85,3 @@ def crawl_to_corpus(
         F.length("text").cast("long").alias("n_chars"),
         "text",
     )
-    if host_rank is not None:
-        hosted = out.withColumn(
-            "_rank_host", url_ops.url_host_col(F.col("url_norm"))
-        )
-        psl = url_ops.with_registrable_domain_psl(
-            hosted, "_rank_host", out_col="_rank_domain"
-        )
-        rank = F.broadcast(
-            host_rank.select(
-                F.col("domain").alias("_rank_domain"),
-                F.col("rank_e12").alias("host_rank_e12"),
-            )
-        )
-        out = psl.join(rank, "_rank_domain", "left").drop(
-            "_rank_domain", "_rank_host"
-        )
-    return out

@@ -21,30 +21,26 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, text
 
+# The gates, read by the builder and by the `corpus_curation` oracle.
 MIN_WORDS = 20
 MIN_STOPWORD_RATIO = 0.02
 MAX_STOPWORD_RATIO = 0.25
 KEEP_LANG = "en"
+NEARDUP_THRESHOLD = 0.2  # MinHash-verified Jaccard of a dropped pair
+MAX_BUCKET_SIZE = 100  # LSH band buckets above this are not paired
 
 
-def curate_corpus(
-    docs: DataFrame,
-    min_words: int = MIN_WORDS,
-    min_stopword_ratio: float = MIN_STOPWORD_RATIO,
-    max_stopword_ratio: float = MAX_STOPWORD_RATIO,
-    keep_lang: str = KEEP_LANG,
-    neardup_threshold: float = 0.2,
-    max_bucket_size: int | None = 100,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def curate_corpus(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """Surviving documents with their quality features.
 
-    quality gate (word count + stopword-ratio band) ∧ language gate
-    (marker-frequency ID), then MinHash-LSH near-dup pairs among the
-    survivors; the higher doc_id of each verified pair is dropped via a
-    left-anti join. Stats/lang are projection-only. Repetition
-    (`text.text_quality`'s Gopher-style n-gram fractions) is scored,
-    not gated: no registered query filters on it.
+    quality gate (MIN_WORDS words, stopword ratio within
+    [MIN_STOPWORD_RATIO, MAX_STOPWORD_RATIO]) ∧ language gate
+    (marker-frequency ID = KEEP_LANG), then MinHash-LSH near-dup pairs
+    (Jaccard ≥ NEARDUP_THRESHOLD) among the survivors; the higher
+    doc_id of each verified pair is dropped via a left-anti join.
+    Stats/lang are projection-only. Repetition (`text.text_quality`'s
+    Gopher-style n-gram fractions) is scored, not gated: no registered
+    query filters on it.
 
     `shingles` optionally supplies the corpus's materialized (doc_id,
     shingle) relation (a standing shingle index at cluster scale, the
@@ -58,10 +54,10 @@ def curate_corpus(
     # here would shuffle the whole corpus twice for nothing)
     stats = text.text_quality_gate(docs)
     quality = stats.filter(
-        (F.col("pred_lang") == keep_lang)
-        & (F.col("n_words") >= min_words)
-        & (F.col("stopword_ratio") >= min_stopword_ratio)
-        & (F.col("stopword_ratio") <= max_stopword_ratio)
+        (F.col("pred_lang") == KEEP_LANG)
+        & (F.col("n_words") >= MIN_WORDS)
+        & (F.col("stopword_ratio") >= MIN_STOPWORD_RATIO)
+        & (F.col("stopword_ratio") <= MAX_STOPWORD_RATIO)
     )
     # the survivor set feeds three plan branches (docs join, shingle
     # semi-join, final anti-join) and Catalyst does not CSE across
@@ -79,7 +75,7 @@ def curate_corpus(
         else None
     )
     pairs = dedup.minhash_lsh_dedup(
-        fdocs, threshold=neardup_threshold, max_bucket_size=max_bucket_size,
+        fdocs, threshold=NEARDUP_THRESHOLD, max_bucket_size=MAX_BUCKET_SIZE,
         shingles=fsh,
     )
     drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()

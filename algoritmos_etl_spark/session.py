@@ -104,7 +104,6 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
 def get_spark(
     app_name: str = "algoritmos_etl_spark",
     cpus: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
     cpus = cpus or DEFAULT_CPUS
@@ -157,8 +156,6 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
     )
-    for key, value in (extra_conf or {}).items():
-        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensure_package_on_workers(spark)

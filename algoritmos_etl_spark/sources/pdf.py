@@ -398,15 +398,13 @@ def decode_pdf(data: bytes) -> dict:
         raise ValueError(ERR_TRUNCATED) from e
 
 
-def synthesize_pdf_corpus(
-    docs: DataFrame, torn_every: int = PDF_TORN_EVERY
-) -> DataFrame:
+def synthesize_pdf_corpus(docs: DataFrame) -> DataFrame:
     """(doc_id, payload) — a real-PDF fixture corpus written by the
     package's OWN writer (`pdf_report.PdfDoc`): each document's text
     space-greedy-wrapped at WORDS_PER_LINE words per line, paginated
     by the writer's cursor, content streams Flate-compressed for even
     doc_ids and stored raw for odd (both reader paths exercised).
-    Every `torn_every`-th-ish doc (doc_id % torn_every == 3) is
+    Every `PDF_TORN_EVERY`-th-ish doc (doc_id % PDF_TORN_EVERY == 3) is
     tail-truncated at 60% — the trailer/xref vanish, the reader
     quarantines with ERR_TRUNCATED. Layout is pure integer math so
     the pdf_extraction oracle rebuilds text AND page count in SQL."""
@@ -420,7 +418,7 @@ def synthesize_pdf_corpus(
         for i in range(0, len(words), WORDS_PER_LINE):
             doc.text(" ".join(words[i : i + WORDS_PER_LINE]), size=10)
         out = doc.render(compress=doc_id % 2 == 0)
-        if torn_every and doc_id % torn_every == 3:
+        if doc_id % PDF_TORN_EVERY == 3:
             out = out[: len(out) * 3 // 5]
         return out
 
@@ -441,9 +439,7 @@ def synthesize_pdf_corpus(
     )
 
 
-def extract_pdf_text(
-    pdfs: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
+def extract_pdf_text(pdfs: DataFrame) -> DataFrame:
     """(doc_id, n_pages, n_chars, text, ok, err) — the codec seam:
     Arrow-batched `mapInPandas`, quarantine rows instead of task
     failure (a 100 TB paper corpus always contains torn PDFs).
@@ -455,7 +451,7 @@ def extract_pdf_text(
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     meta = decode_pdf(
                         bytes(payload) if payload is not None else b""

@@ -411,10 +411,9 @@ def scan_plan(
     col: str,
     lo=None,
     hi=None,
-    version: int | None = None,
 ) -> tuple[list[str], list[str], dict]:
     """File-skipping plan for a range predicate on `col`: which of the
-    manifest's files can contain a matching row, by the per-file
+    current manifest's files can contain a matching row, by the per-file
     min/max metrics `snapshot_commit(stats_cols=...)` recorded.
     Pure metadata — no Spark job, no file I/O beyond the manifest.
 
@@ -431,13 +430,7 @@ def scan_plan(
     versions = _versions(table_dir)
     if not versions:
         raise ValueError(f"no snapshots under {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(
-            f"version {v} not retained (have {versions}) — vacuumed or "
-            "never committed"
-        )
-    m = _read_manifest(table_dir, v)
+    m = _read_manifest(table_dir, versions[-1])
     stats = m.get("stats", {})
     qlo, qhi = _stat_value(lo), _stat_value(hi)
     kept = []
@@ -461,17 +454,16 @@ def snapshot_scan(
     col: str,
     lo=None,
     hi=None,
-    version: int | None = None,
 ) -> DataFrame:
-    """Range-filtered snapshot read with manifest-level file skipping:
-    only files whose recorded [min, max] can intersect [lo, hi] are
-    opened (Iceberg scan planning), then the residual row filter
+    """Range-filtered read of the current snapshot with manifest-level
+    file skipping: only files whose recorded [min, max] can intersect
+    [lo, hi] are opened (Iceberg scan planning), then the residual row filter
     applies — pruning is file-grain, correctness is row-grain, so the
     result EQUALS `read_as_of(...).filter(lo <= col <= hi)` exactly
     (that identity is the registered oracle's contract)."""
     from pyspark.sql import functions as F
 
-    kept, _all, m = scan_plan(table_dir, col, lo, hi, version)
+    kept, _all, m = scan_plan(table_dir, col, lo, hi)
     if not kept:
         base = _read_manifest_df(spark, table_dir, m)  # schema only
         return base.filter(F.lit(False))
@@ -501,11 +493,9 @@ def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
     )
 
 
-def snapshot_compact(
-    spark: SparkSession, table_dir: str, target_files: int = 1
-) -> int:
-    """Rewrite the current snapshot into `target_files` files and
-    commit the result as a new version. Readers pinned at older
+def snapshot_compact(spark: SparkSession, table_dir: str) -> int:
+    """Rewrite the current snapshot into one file and commit the
+    result as a new version. Readers pinned at older
     versions keep their (still-present) files — snapshot isolation,
     where an in-place overwrite would race them."""
     while True:
@@ -515,7 +505,7 @@ def snapshot_compact(
         head = versions[-1]
         m = _read_manifest(table_dir, head)
         cur = _read_manifest_df(spark, table_dir, m)
-        files = _write_data(cur.coalesce(target_files), table_dir, head + 1)
+        files = _write_data(cur.coalesce(1), table_dir, head + 1)
         manifest = {
             "op": "compact",
             "files": files,

@@ -121,7 +121,7 @@ def charset_html_col(doc_id, text):
     return F.concat(prefix, body, F.lit(_HTML_SUFFIX))
 
 
-def charset_html_sql(doc_id_expr: str = "doc_id") -> str:
+def charset_html_sql() -> str:
     """DuckDB twin of `charset_html_col` over the documents view
     (text, doc_id). The meta tag is OMITTED on purpose: the tag
     regex replaces every tag with a space and collapses runs, so a
@@ -140,7 +140,7 @@ def charset_html_sql(doc_id_expr: str = "doc_id") -> str:
         for m, (_cs, _hdr, mk) in enumerate(CHARSET_MODES[:3])
     )
     body = (
-        f"(CASE ({doc_id_expr}) % 4 {arms}"
+        f"(CASE (doc_id) % 4 {arms}"
         f" ELSE {folded} || ' {CHARSET_MODES[3][2]}' END)"
     )
     return f"'{pre}' || {body} || '{suf}'"
@@ -338,14 +338,14 @@ def img_html_expr(e: str = "doc_id") -> str:
     )
 
 
-def img_pairs_sql(src: str, id_col: str = "doc_id") -> str:
+def img_pairs_sql(src: str) -> str:
     """DuckDB twin of `img_html_expr`'s PAIR-LIST consequence as a
-    WITH-fragment: consumes relation `src` (exposing `id_col`),
+    WITH-fragment: consumes relation `src` (exposing `doc_id`),
     yields `img_pairs` (i, j, g, absolute, caption) — one row per
     img tag those docs' pages carry."""
     return f"""_ij AS (
-        SELECT {id_col} AS i,
-               unnest(range(1, {id_col} % 3 + 1)) AS j
+        SELECT doc_id AS i,
+               unnest(range(1, doc_id % 3 + 1)) AS j
         FROM {src}
     ),
     img_pairs AS (
@@ -359,9 +359,9 @@ def img_pairs_sql(src: str, id_col: str = "doc_id") -> str:
     )"""
 
 
-def link_targets_sql(src: str, id_col: str = "doc_id") -> str:
+def link_targets_sql(src: str) -> str:
     """DuckDB twin of `link_html_expr`'s EDGE-LIST consequence as a
-    WITH-fragment: consumes relation `src` (exposing `id_col` =
+    WITH-fragment: consumes relation `src` (exposing `doc_id` =
     nonnegative BIGINT doc ids), yields `link_edges` (u, v, w) — the
     registrable-domain outlink edges those docs' pages carry, mailto
     and relative (self-edge) arms excluded, self-edges at the domain
@@ -371,8 +371,8 @@ def link_targets_sql(src: str, id_col: str = "doc_id") -> str:
         f"WHEN {k} THEN '{d}'" for k, d in enumerate(_LINK_DOMAINS)
     )
     return f"""_lj AS (
-        SELECT {id_col} AS i,
-               unnest(range(1, 2 + {id_col} % 3 + 1)) AS j
+        SELECT doc_id AS i,
+               unnest(range(1, 2 + doc_id % 3 + 1)) AS j
         FROM {src}
     ),
     _lt AS (
@@ -671,19 +671,13 @@ def _quarantine(err: str) -> dict:
     }
 
 
-def parse_warc_records(
-    files: DataFrame,
-    file_col: str = "warc_file",
-    content_col: str = "content",
-) -> DataFrame:
+def parse_warc_records(files: DataFrame) -> DataFrame:
     """(warc_file, url, warc_date, warc_type, http_status,
     content_type, html, ok, err) — one row per WARC record, quarantine
     rows (ok=false, err) for torn/malformed records, magic-scan resync
     after torn members. See the module doc for the member-walk and
     torn-region contracts."""
-    src = files.select(
-        F.col(file_col).alias("warc_file"), F.col(content_col).alias("content")
-    )
+    src = files.select("warc_file", "content")
 
     def parse(batches):
         import pandas as pd

@@ -37,6 +37,10 @@ _SUM_T = "decimal(30,10)"
 _PART_COLS = ("sum_part", "n_part")
 
 
+# availableNow maintenance runs that outrun this raise TimeoutError
+_DRAIN_TIMEOUT_S = 120
+
+
 def _partial(df: DataFrame, key_cols: list[str], value_col: str) -> DataFrame:
     return df.groupBy(*key_cols).agg(
         F.sum(F.col(value_col).cast(_SUM_T)).alias("sum_part"),
@@ -50,7 +54,6 @@ def streaming_agg_mv(
     key_cols: list[str],
     value_col: str,
     checkpoint: str,
-    timeout_sec: int = 120,
 ):
     """Maintain the (key → sum, count) view incrementally; see module
     docstring for the delta layout and idempotency contract."""
@@ -72,10 +75,10 @@ def streaming_agg_mv(
     # writer still in flight; returning normally then would hand the
     # caller a silently partial view (and racing cleanup code a live
     # writer). Stop the query and fail loudly instead.
-    if not query.awaitTermination(timeout_sec):
+    if not query.awaitTermination(_DRAIN_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
-            f"streaming_agg_mv: availableNow run exceeded {timeout_sec}s; "
+            f"streaming_agg_mv: availableNow run exceeded {_DRAIN_TIMEOUT_S}s; "
             f"view at {path} is incomplete"
         )
     return query
@@ -208,7 +211,6 @@ def read_cdc_state(
     path: str,
     before_batch: int | None = None,
     op_col: str = "op",
-    delete_op: str = "D",
     serving: bool = True,
 ):
     """Newest state snapshot, optionally restricted to versions written
@@ -232,7 +234,7 @@ def read_cdc_state(
         return None
     state = spark.read.parquet(f"{path}/state/version={versions[-1]}")
     if serving:
-        state = state.filter(F.col(op_col) != delete_op).drop(op_col)
+        state = state.filter(F.col(op_col) != "D").drop(op_col)
     return state
 
 
@@ -244,8 +246,6 @@ def streaming_cdc_merge(
     op_col: str,
     checkpoint: str,
     tiebreak: list[str] | None = None,
-    delete_op: str = "D",
-    timeout_sec: int = 120,
 ):
     """Maintain MERGE state incrementally: each micro-batch upserts
     onto the previous snapshot via `reconcile.cdc_merge` (keep-latest
@@ -269,8 +269,7 @@ def streaming_cdc_merge(
         # RAW read: tombstones ride along so older late arrivals
         # cannot win the next argmax against a deleted key
         prev = read_cdc_state(
-            spark, path, before_batch=batch_id,
-            op_col=op_col, delete_op=delete_op, serving=False,
+            spark, path, before_batch=batch_id, op_col=op_col, serving=False,
         )
         if prev is None:
             data_cols = [
@@ -289,7 +288,6 @@ def streaming_cdc_merge(
             ts_col=ts_col,
             op_col=op_col,
             tiebreak=tb,
-            delete_op=delete_op,
             target_op_col=op_col,
             keep_tombstones=True,
         )
@@ -303,11 +301,11 @@ def streaming_cdc_merge(
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_sec):
+    if not query.awaitTermination(_DRAIN_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
             f"streaming_cdc_merge: availableNow run exceeded "
-            f"{timeout_sec}s; state at {path} is incomplete"
+            f"{_DRAIN_TIMEOUT_S}s; state at {path} is incomplete"
         )
     return query
 
@@ -365,7 +363,6 @@ def streaming_distinct_mv(
     key_cols: list[str],
     value_col: str,
     checkpoint: str,
-    timeout_sec: int = 120,
 ):
     """Maintain (key → approx distinct values, row count) incrementally:
     one HLL partial per micro-batch under `path/delta/batch_id=N`,
@@ -385,11 +382,11 @@ def streaming_distinct_mv(
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_sec):
+    if not query.awaitTermination(_DRAIN_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
             f"streaming_distinct_mv: availableNow run exceeded "
-            f"{timeout_sec}s; view at {path} is incomplete"
+            f"{_DRAIN_TIMEOUT_S}s; view at {path} is incomplete"
         )
     return query
 
@@ -472,7 +469,6 @@ def streaming_sketch_mv(
     checkpoint: str,
     depth: int = 4,
     width: int = 1024,
-    timeout_sec: int = 120,
 ):
     """Maintain a count-min grid over a stream of items: one bounded
     (d, bucket, cnt_part) delta per micro-batch under
@@ -494,11 +490,11 @@ def streaming_sketch_mv(
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_sec):
+    if not query.awaitTermination(_DRAIN_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
             f"streaming_sketch_mv: availableNow run exceeded "
-            f"{timeout_sec}s; view at {path} is incomplete"
+            f"{_DRAIN_TIMEOUT_S}s; view at {path} is incomplete"
         )
     return query
 

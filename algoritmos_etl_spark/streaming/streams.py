@@ -41,6 +41,11 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..sources.readers import with_event_time
 
+WATERMARK = "2 hours"  # the late-data delay every operator here shares
+ATTRIBUTION_HORIZON = "30 minutes"  # purchase-after-click match window
+# availableNow drains that outrun this are an error (`_await_or_fail`)
+_DRAIN_TIMEOUT_S = 1800
+
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` as an unbounded stream via the file source.
@@ -68,18 +73,13 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_event_time(raw)
 
 
-def sliding_stats(
-    events: DataFrame,
-    duration: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding (overlapping) event-time windows: each event feeds
-    duration/slide windows; Spark expands the assignment internally —
+def sliding_stats(events: DataFrame) -> DataFrame:
+    """Sliding (overlapping) 2-hour event-time windows every hour: each
+    event feeds two windows; Spark expands the assignment internally —
     no self-union needed."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", duration, slide).alias("win"))
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("win"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             # decimal-exact sum -> ONE double conversion -> divide, and NO
@@ -102,15 +102,13 @@ def sliding_stats(
     )
 
 
-def session_stats(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-user sessions: windows merge while events arrive within
-    `gap`. Produces the same sessions as the batch lag+cumsum query
+def session_stats(events: DataFrame) -> DataFrame:
+    """Per-user sessions: windows merge while events arrive within 30
+    minutes. Produces the same sessions as the batch lag+cumsum query
     (driver_queries_ext `sessionization`), but incrementally."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -175,7 +173,7 @@ def streaming_running_streaks(events: DataFrame) -> DataFrame:
     )
 
 
-def _await_or_fail(query, timeout_sec: int) -> None:
+def _await_or_fail(query) -> None:
     """Block until an availableNow stream drains, or fail LOUDLY.
     awaitTermination(timeout) returning False leaves the query still
     running — a caller that proceeds to read the sink sees a partial
@@ -183,11 +181,11 @@ def _await_or_fail(query, timeout_sec: int) -> None:
     result (the 100× notch caught exactly that: a 500k-doc crawl
     batch outran the old fixed timeout and the query reported zero
     pairs). Timing out is an ERROR, never an empty success."""
-    if not query.awaitTermination(timeout_sec):
+    if not query.awaitTermination(_DRAIN_TIMEOUT_S):
         query.stop()
         raise TimeoutError(
-            f"streaming query did not drain within {timeout_sec}s — "
-            "raise timeout_sec for this corpus size"
+            f"streaming query did not drain within {_DRAIN_TIMEOUT_S}s — "
+            "raise _DRAIN_TIMEOUT_S for this corpus size"
         )
 
 
@@ -277,7 +275,6 @@ def streaming_neardup_against_index(
     out_path: str,
     threshold: float = 0.2,
     max_bucket_size: int | None = 100,
-    timeout_sec: int = 1800,
 ):
     """Streaming NEAR-dup via the materialized LSH index: every
     micro-batch (a) emits its near-dup pairs against the standing
@@ -311,7 +308,7 @@ def streaming_neardup_against_index(
         .trigger(availableNow=True)
         .start()
     )
-    _await_or_fail(query, timeout_sec)
+    _await_or_fail(query)
     return query
 
 
@@ -320,11 +317,8 @@ def streaming_warc_ingest(
     warc_dir: str,
     index_path: str,
     out_path: str,
-    doc_id_from_url: str = "doc/([0-9]+)$",
     threshold: float = 0.2,
     max_bucket_size: int | None = 100,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 1800,
 ):
     """End-to-end incremental crawl ingestion (VERDICT r10 task #5):
     a file-source stream of `.warc.gz` archives → binary WARC parse
@@ -336,7 +330,7 @@ def streaming_warc_ingest(
     quarantined, extracted, and deduped against everything ingested
     before.
 
-    Per micro-batch (one crawl file per trigger by default — the real
+    Per micro-batch (one crawl file per trigger — the real
     geometry, one ~1 GiB archive per unit of arrival): quarantine
     rows land in `out_path/quarantine/batch_id=N` (torn/malformed
     records stay VISIBLE to curation, the WARC contract), good pages
@@ -362,7 +356,7 @@ def streaming_warc_ingest(
             " length long, content binary"
         )
         .option("pathGlobFilter", "*.warc.gz")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .load(warc_dir)
         .select(
             F.element_at(F.split(F.col("path"), "/"), -1).alias("warc_file"),
@@ -397,7 +391,7 @@ def streaming_warc_ingest(
             parse_warc_records(batch_df)
         ).localCheckpoint(eager=True)
         good = pages.filter(F.col("ok")).select(
-            F.regexp_extract(F.col("url"), doc_id_from_url, 1)
+            F.regexp_extract(F.col("url"), "doc/([0-9]+)$", 1)
             .cast("long")
             .alias("doc_id"),
             "text",
@@ -423,27 +417,22 @@ def streaming_warc_ingest(
         .trigger(availableNow=True)
         .start()
     )
-    _await_or_fail(query, timeout_sec)
+    _await_or_fail(query)
     return query
 
 
-def attribution_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def attribution_join(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream event-time join: attribute each purchase to every
-    click by the same user within the preceding `horizon`.
+    click by the same user within the preceding `ATTRIBUTION_HORIZON`.
 
     The canonical watermarked stream-stream inner join: both sides
     carry watermarks and the join condition carries an explicit
     event-time range (`click_ts < purchase_ts <= click_ts + horizon`),
     which is what lets Spark BOUND the join state — clicks are
-    evictable `horizon + watermark` past their event time, purchases
-    `watermark` past theirs; without the range the state store grows
-    forever. State is keyed by user_id, so it spreads over executors
-    like any keyed aggregation.
+    evictable `horizon + WATERMARK` past their event time, purchases
+    `WATERMARK` past theirs (horizon = ATTRIBUTION_HORIZON); without
+    the range the state store grows forever. State is keyed by
+    user_id, so it spreads over executors like any keyed aggregation.
 
     The same function serves batch frames unchanged (the watermark is
     only attached to streaming inputs); the registered batch twin is
@@ -463,16 +452,16 @@ def attribution_join(
         F.col("value").alias("purchase_value"),
     )
     if clicks.isStreaming:
-        c = c.withWatermark("click_ts", watermark)
+        c = c.withWatermark("click_ts", WATERMARK)
     if purchases.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
+        p = p.withWatermark("purchase_ts", WATERMARK)
     joined = c.join(
         p,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
         ),
     )
     return joined.select(
@@ -514,12 +503,7 @@ def _has_aggregate(df: DataFrame) -> bool:
     return "Aggregate" in plan
 
 
-def attribution_join_outer(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    horizon: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def attribution_join_outer(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream event-time join: every purchase, with
     its attributing clicks where they exist and a NULL click row where
     none arrived — the "unattributed conversions" report.
@@ -531,8 +515,8 @@ def attribution_join_outer(
     when the watermark advances — Structured Streaming runs the final
     no-data batch under availableNow precisely to flush them. Same
     state-bounding as the inner form: the event-time range condition
-    plus both watermarks make click state evictable `horizon +
-    watermark` past event time.
+    plus both watermarks make click state evictable
+    `ATTRIBUTION_HORIZON + WATERMARK` past event time.
 
     Purchases is the LEFT side here (contrast `attribution_join`,
     which is click-major): the preserved side must be the one whose
@@ -551,16 +535,16 @@ def attribution_join_outer(
         F.col("ts").alias("click_ts"),
     )
     if purchases.isStreaming:
-        p = p.withWatermark("purchase_ts", watermark)
+        p = p.withWatermark("purchase_ts", WATERMARK)
     if clicks.isStreaming:
-        c = c.withWatermark("click_ts", watermark)
+        c = c.withWatermark("click_ts", WATERMARK)
     joined = p.join(
         c,
         (F.col("p_user_id") == F.col("user_id"))
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (
             F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {horizon}")
+            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
         ),
         "left_outer",
     )

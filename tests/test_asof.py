@@ -1,8 +1,6 @@
-"""As-of join semantics: inclusive match, no-prior NULL, tolerance."""
+"""As-of join semantics: inclusive match, no-prior NULL."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from algoritmos_etl_spark.operators import asof
 
@@ -33,17 +31,3 @@ def test_asof_matches(spark):
     assert out[3].asof_px == 300.0                             # latest of several
     assert out[4].asof_px is None                              # right row is later
     assert out[5].asof_px is None                              # key has no right rows
-
-
-def test_asof_tolerance(spark):
-    left, right = _frames(spark)
-    out = {
-        r.id: r
-        for r in asof.asof_join(
-            left, right, by="key", left_time="t", right_time="t",
-            value_cols=["px"], tolerance=F.lit(2),
-        ).collect()
-    }
-    assert out[1].asof_px == 100.0   # 5-4=1 <= 2
-    assert out[2].asof_px == 200.0   # 10-10=0
-    assert out[3].asof_px is None    # 15-12=3 exceeds tolerance -> dropped

@@ -27,7 +27,7 @@ class TestContamination:
         out = {
             r["doc_id"]: r
             for r in corpus.contamination_stats(
-                rest, bench, k=3, min_overlap=0.5
+                rest, bench, min_overlap=0.5
             ).collect()
         }
         assert out[1]["overlap_frac"] == 1.0 and out[1]["contaminated"]
@@ -42,11 +42,10 @@ class TestContamination:
     def test_precomputed_shingles_equal(self, docs):
         bench = docs.filter(F.col("doc_id") == 0)
         rest = docs.filter(F.col("doc_id") != 0)
-        direct = corpus.contamination_stats(rest, bench, k=3)
+        direct = corpus.contamination_stats(rest, bench)
         shared = corpus.contamination_stats(
             None,
             None,
-            k=3,
             shingles=dedup.doc_shingles(rest, 3),
             benchmark_shingles=dedup.doc_shingles(bench, 3),
         )
@@ -223,7 +222,7 @@ class TestEdges:
 
     def test_contamination_empty_benchmark(self, spark, docs):
         bench = docs.filter(F.lit(False))
-        out = corpus.contamination_stats(docs, bench, k=3).collect()
+        out = corpus.contamination_stats(docs, bench).collect()
         # every doc with shingles appears, nothing is contaminated
         assert len(out) == 5 and all(r["n_hit"] == 0 for r in out)
 
@@ -232,24 +231,25 @@ class TestEdges:
         assert corpus.vocab_topk(empty, 10).count() == 0
 
 
-    def test_bucket_count_preserves_global_order(self, spark):
-        """hex-prefix bucketing at any supported n_buckets must produce
-        the identical global order (bucket id is an order-preserving
-        prefix of the sort key)."""
+    def test_bucket_count_preserves_global_order(self, spark, monkeypatch):
+        """hex-prefix bucketing at any supported bucket count must
+        produce the identical global order (bucket id is an
+        order-preserving prefix of the sort key)."""
         docs = spark.createDataFrame(
             [(i, " ".join(["w"] * (i % 5 + 1))) for i in range(150)],
             ["doc_id", "text"],
         )
         base = {
             r["doc_id"]: r["token_start"]
-            for r in corpus.pack_sequences(docs, 16, n_buckets=256).collect()
+            for r in corpus.pack_sequences(docs, 16).collect()
         }
         for nb in (16, 4096):
+            monkeypatch.setattr(corpus, "PREFIX_BUCKETS", nb)
             got = {
                 r["doc_id"]: r["token_start"]
-                for r in corpus.pack_sequences(docs, 16, n_buckets=nb).collect()
+                for r in corpus.pack_sequences(docs, 16).collect()
             }
-            assert got == base, f"n_buckets={nb} changed the global order"
+            assert got == base, f"PREFIX_BUCKETS={nb} changed the global order"
 
 
 def test_dsir_weights_prefer_target_like_docs(spark):

@@ -67,11 +67,11 @@ def test_simhash_packed_matches_chunks(spark, docs):
         assert all(0 <= c < 2**16 for c in (r.c0, r.c1, r.c2, r.c3))
 
 
-def _simhash_candidate_count(docs, bits, chunks):
+def _simhash_candidate_count(docs):
     """Distinct doc pairs sharing a chunk value: the candidates the
     chunk-banding join generates before hamming verification."""
-    chunk_vals = F.array(*[F.col(f"c{c}") for c in range(chunks)])
-    exploded = dedup.simhash(docs, bits=bits, chunks=chunks).select(
+    chunk_vals = F.array(*[F.col(f"c{c}") for c in range(dedup.SIMHASH_CHUNKS)])
+    exploded = dedup.simhash(docs).select(
         "doc_id", F.posexplode(chunk_vals).alias("chunk", "chunk_val")
     )
     a = exploded.withColumnRenamed("doc_id", "doc_a")
@@ -85,7 +85,7 @@ def _simhash_candidate_count(docs, bits, chunks):
     )
 
 
-def test_simhash_widening_shrinks_candidates(spark):
+def test_simhash_widening_shrinks_candidates(spark, monkeypatch):
     """The point of 64-bit/16-bit-chunk banding: UNRELATED docs must
     almost never share a chunk. On n docs with disjoint vocabularies,
     expected random collisions are ~4·C(n,2)/2^chunk_bits — ~1,200 for
@@ -98,24 +98,26 @@ def test_simhash_widening_shrinks_candidates(spark):
         for i in range(n)
     ]
     rand_docs = spark.createDataFrame(rows, "doc_id long, text string")
-    wide = _simhash_candidate_count(rand_docs, bits=64, chunks=4)
-    narrow = _simhash_candidate_count(rand_docs, bits=32, chunks=4)
-    assert narrow >= 50 * max(wide, 1), f"narrow={narrow}, wide={wide}"
-    # and no unrelated pair should survive hamming verification
+    # no unrelated pair should survive hamming verification
     assert dedup.simhash_neardup_pairs(rand_docs).count() == 0
+    wide = _simhash_candidate_count(rand_docs)
+    monkeypatch.setattr(dedup, "SIMHASH_BITS", 32)  # 8-bit chunks
+    narrow = _simhash_candidate_count(rand_docs)
+    assert narrow >= 50 * max(wide, 1), f"narrow={narrow}, wide={wide}"
 
 
-def test_simhash_widening_on_real_corpus(spark):
+def test_simhash_widening_on_real_corpus(spark, monkeypatch):
     """On the real 500-doc corpus (dense true-duplicate clusters) the
     widening must still strictly shrink candidates and sharpen the
     hamming≤3 output — 64 bits separate 'similar' from 'same template'
-    far better than 32."""
+    far better than 32 (the width is the module constant, patched)."""
     docs500 = load_table(spark, "/root/testdata/sf0.01", "documents").cache()
-    wide = _simhash_candidate_count(docs500, bits=64, chunks=4)
-    narrow = _simhash_candidate_count(docs500, bits=32, chunks=4)
-    assert wide < narrow
+    wide = _simhash_candidate_count(docs500)
     out64 = dedup.simhash_neardup_pairs(docs500).count()
-    out32 = dedup.simhash_neardup_pairs(docs500, bits=32, chunks=4).count()
+    monkeypatch.setattr(dedup, "SIMHASH_BITS", 32)
+    narrow = _simhash_candidate_count(docs500)
+    out32 = dedup.simhash_neardup_pairs(docs500).count()
+    assert wide < narrow
     assert out64 < out32  # 32-bit hamming≤3 is saturated by template noise
 
 

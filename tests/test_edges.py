@@ -75,7 +75,8 @@ def test_volatility_single_row_and_all_null(edge_bars):
 
 
 def test_volatility_lt2_returns_classified_conservative(edge_bars):
-    out = volatility.analyze_portfolio_risk(edge_bars, min_prices=0)
+    # the /api/risk lifecycle without its >10-prices guard
+    out = volatility.classify_risk(volatility.historical_volatility(edge_bars))
     by_sym = {r.symbol: r for r in out.collect()}
     # 0.0 volatility lands in the lowest bucket, not the NULL-fallthrough one
     assert by_sym[3].risk_class == volatility.CONSERVATIVE
@@ -143,11 +144,14 @@ def test_windowed_streak_histogram_window_too_big(edge_bars):
 
 def test_dtw_single_point_series(edge_bars):
     out = (
-        similarity.dtw_pairs(edge_bars, use_returns=False)
+        similarity.dtw_pairs(edge_bars)
         .filter("sym_a = 1 AND sym_b = 3")
         .first()
     )
-    assert out is not None and out.dtw >= 0.0
+    # a one-close symbol has no returns: the reference's empty-series 0.0
+    assert out is not None and out.dtw == 0.0 and out.n_a == 0
+    # on raw closes the one point aligns to every point of the other
+    assert similarity._dtw_numpy([10.5], [5.5, 6.0]) == pytest.approx(9.5)
 
 
 def test_empty_documents(spark):

@@ -160,7 +160,8 @@ def test_risk_profile_fusion_matches_library_builders(spark):
     bars = daily_bars(load_table(spark, sf_dir, "events"))
     fused = REGISTRY["risk_classification"].build(spark, sf_dir)
 
-    risk = volatility.analyze_portfolio_risk(bars, min_prices=0).select(
+    # the /api/risk lifecycle without its >10-prices guard
+    risk = volatility.classify_risk(volatility.historical_volatility(bars)).select(
         "symbol",
         r6(F.col("volatility")).alias("volatility"),
         "risk_class",

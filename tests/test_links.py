@@ -132,35 +132,6 @@ def test_host_pagerank_shape(spark):
     assert ranks == sorted(ranks, reverse=True)
 
 
-def test_crawl_host_rank_signal(spark):
-    from algoritmos_etl_spark.plans.crawl import crawl_to_corpus
-
-    docs = spark.createDataFrame(
-        [(i, "word " * 60 + "tail.") for i in range(32)],
-        "doc_id long, text string",
-    )
-    files = warc.synthesize_warc_corpus(
-        docs, messy_urls=True, links=True, torn_every=0
-    )
-    parsed = warc.parse_warc_records(files)
-    pages = parsed.filter(F.col("ok") & (F.col("warc_type") == "response"))
-    rank = links.host_pagerank(url_ops.url_dedup(pages, "url", "warc_date"))
-    from algoritmos_etl_spark.operators.text import QUALITY_RULES
-
-    rules = tuple(n for n, _ in QUALITY_RULES if n != "stopword_floor")
-    corpus = crawl_to_corpus(
-        parsed, blocklist=["tracker.net"], quality_rules=rules,
-        host_rank=rank,
-    )
-    rows = corpus.collect()
-    assert rows and "host_rank_e12" in corpus.columns
-    # every surviving page's domain carries link evidence here, so the
-    # signal is populated; the join is a broadcast (no extra shuffle)
-    assert all(r["host_rank_e12"] is not None for r in rows)
-    plan = corpus._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
 # -------------------------------------- image-text pair mining
 
 

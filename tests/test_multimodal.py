@@ -226,21 +226,22 @@ def test_image_neardup_bucket_cap_drops_identical_floods(spark):
     dedup) while smaller near-dup clusters keep their pairs."""
     from algoritmos_etl_spark.operators import multimodal as MM
 
-    # 120 identical hashes + one 3-member near-identical cluster
-    flood = [(i, 0x0F0F0F0F0F0F0F0F) for i in range(120)]
-    cluster = [(200, 0x1000), (201, 0x1001), (202, 0x1003)]
-    hashed = spark.createDataFrame(
-        [(i, h, None) for i, h in flood + cluster],
-        "doc_id long, dhash long, error string",
-    )
-    capped = MM.image_neardup_pairs(hashed, max_hamming=3, max_bucket_size=50)
+    # 250 identical hashes (over the 200 cap) + one 3-member cluster
+    cluster = [(1000, 0x1000), (1001, 0x1001), (1002, 0x1003)]
+
+    def hashed(n_flood):
+        flood = [(i, 0x0F0F0F0F0F0F0F0F) for i in range(n_flood)]
+        return spark.createDataFrame(
+            [(i, h, None) for i, h in flood + cluster],
+            "doc_id long, dhash long, error string",
+        )
+
+    capped = MM.image_neardup_pairs(hashed(250), max_hamming=3)
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
-    assert got == {(200, 201), (200, 202), (201, 202)}
-    # uncapped, the flood contributes all its pairs
-    uncapped = MM.image_neardup_pairs(
-        hashed, max_hamming=3, max_bucket_size=None
-    )
-    assert uncapped.count() == 120 * 119 // 2 + 3
+    assert got == {(1000, 1001), (1000, 1002), (1001, 1002)}
+    # under the cap, the flood contributes all its pairs
+    under = MM.image_neardup_pairs(hashed(120), max_hamming=3)
+    assert under.count() == 120 * 119 // 2 + 3
 
 
 # ----------------------------------------------------------- audio (WAV/PCM)
@@ -270,7 +271,7 @@ def test_audio_features_end_to_end_and_quarantine(spark):
     from algoritmos_etl_spark.operators import multimodal as MM
 
     docs = spark.range(0, 20).select(F.col("id").alias("doc_id"))
-    wavs = MM.synthesize_wav_corpus(docs, rate=8000)
+    wavs = MM.synthesize_wav_corpus(docs)
     feats = {r.doc_id: r for r in MM.audio_features(wavs).collect()}
     assert len(feats) == 20
     for r in feats.values():

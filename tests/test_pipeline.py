@@ -105,23 +105,40 @@ def test_read_wide_csv_rejects_malformed_headers(spark, tmp_path):
 
 
 def test_dtw_path_consistency(spark):
+    import numpy as np
+
     bars = session_bars(spark, SF_DIR)
-    # downsampling off: this test pins the raw DP/backtrack invariants
-    path_df = similarity.dtw_path(
-        bars, 0, 1, target_points=None, path_points=None
-    ).cache()
-    rows = path_df.orderBy("step").collect()
+    rows = similarity.dtw_path(bars, 0, 1).orderBy("step").collect()
     assert rows, "path must be non-empty"
-    # path endpoints: (0,0) .. (n-1, m-1), monotone non-decreasing steps
+    # the thinned path still starts at (0,0) and never steps backwards
     assert (rows[0].i, rows[0].j) == (0, 0)
     for prev, cur in zip(rows, rows[1:]):
-        di, dj = cur.i - prev.i, cur.j - prev.j
+        assert cur.i >= prev.i and cur.j >= prev.j
+    # the raw DP/backtrack invariants, on the kernel at full resolution:
+    # path (0,0) .. (n-1, m-1) in unit steps
+    closes = {
+        s: np.array(
+            [
+                r.close
+                for r in bars.filter(F.col("symbol") == s)
+                .filter(F.col("close") > 0)
+                .orderBy("date")
+                .collect()
+            ]
+        )
+        for s in (0, 1)
+    }
+    ra, rb = (similarity._zero_fill_log_returns(closes[s]) for s in (0, 1))
+    full, path = similarity._dtw_numpy(ra, rb, window=0, with_path=True)
+    assert path[0] == (0, 0) and path[-1] == (len(ra) - 1, len(rb) - 1)
+    for (pi, pj), (ci, cj) in zip(path, path[1:]):
+        di, dj = ci - pi, cj - pj
         assert di in (0, 1) and dj in (0, 1) and di + dj >= 1
-    # full-matrix path distance equals dtw_pairs with window=0
-    dist = (
-        similarity.dtw_pairs(bars, window=0)
-        .filter("sym_a = 0 AND sym_b = 1")
-        .first()
-        .dtw
+    # the route's distance is the full-matrix DP on the strided returns
+    sa, sb = ra[:: max(1, len(ra) // 80)], rb[:: max(1, len(rb) // 80)]
+    assert rows[0].dtw == pytest.approx(similarity._dtw_numpy(sa, sb, window=0))
+    # full matrix ≤ the banded distance dtw_pairs reports
+    banded = (
+        similarity.dtw_pairs(bars).filter("sym_a = 0 AND sym_b = 1").first().dtw
     )
-    assert rows[0].dtw == pytest.approx(dist)
+    assert full <= banded + 1e-12

@@ -384,73 +384,102 @@ def _import_aliases(tree, mod: str, is_pkg: bool) -> dict:
     return out
 
 
-def _reachability():
-    """({package unit: def node}, units reached from the roots, units
-    reached from the roots plus the allowlist)."""
+def _index(sources: dict) -> dict:
+    """{dotted module: (tree, aliases, top-level defs)} for sources
+    given as {dotted module: (source text, is a package __init__)}."""
+    files = {}
+    for mod, (text, is_pkg) in sources.items():
+        tree = ast.parse(text)
+        defs = {
+            n.name: n
+            for n in tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        files[mod] = (tree, _import_aliases(tree, mod, is_pkg), defs)
+    return files
+
+
+def _live_files() -> dict:
+    """The package, the driver entry, bench.py, tools/ and perfbench/
+    (not perfbench/tests/): every file whose calls count as live."""
     paths = [
         os.path.join(root, f)
         for root, _dirs, files in os.walk(_PKG)
         for f in files
         if f.endswith(".py")
     ]
-    scripts = [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
-    for sub in ("tools", "perfbench"):  # perfbench/tests/ is not listed
+    paths += [os.path.join(_REPO, f) for f in ("__spark_entry__.py", "bench.py")]
+    for sub in ("tools", "perfbench"):
         d = os.path.join(_REPO, sub)
-        scripts += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".py")]
-    files = {}  # dotted module → (tree, aliases, top-level defs)
-    for path in paths + scripts:
+        paths += [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".py")]
+    sources = {}
+    for path in paths:
         with open(path) as fh:
-            tree = ast.parse(fh.read())
-        mod = _dotted(path)
-        defs = {
-            n.name: n
-            for n in tree.body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        }
-        is_pkg = path.endswith("__init__.py")
-        files[mod] = (tree, _import_aliases(tree, mod, is_pkg), defs)
-    pkg = os.path.basename(_PKG)
-    units = {
+            sources[_dotted(path)] = (fh.read(), path.endswith("__init__.py"))
+    return _index(sources)
+
+
+def _package_units(files: dict, pkg: str) -> dict:
+    return {
         f"{m}.{n}": node
         for m, (_t, _a, defs) in files.items()
         if m.split(".")[0] == pkg
         for n, node in defs.items()
     }
 
-    def resolve(dotted: str, depth: int = 0):
-        parts = dotted.split(".")
-        for i in range(len(parts) - 1, 0, -1):
-            mod = ".".join(parts[:i])
-            if mod not in files:
-                continue
-            unit = f"{mod}.{parts[i]}"
-            if unit in units:
-                return unit
-            aliases = files[mod][1]  # a re-export: follow it
-            if parts[i] in aliases and depth < 8:
-                target = ".".join([aliases[parts[i]]] + parts[i + 1:])
-                return resolve(target, depth + 1)
-            return None
+
+def _resolve(files: dict, units: dict, dotted: str, depth: int = 0):
+    """(unit, the attribute names after it) that a dotted reference
+    names, following re-exports; None outside the units."""
+    parts = dotted.split(".")
+    for i in range(len(parts) - 1, 0, -1):
+        mod = ".".join(parts[:i])
+        if mod not in files:
+            continue
+        unit = f"{mod}.{parts[i]}"
+        if unit in units:
+            return unit, parts[i + 1:]
+        aliases = files[mod][1]  # a re-export: follow it
+        if parts[i] in aliases and depth < 8:
+            target = ".".join([aliases[parts[i]]] + parts[i + 1:])
+            return _resolve(files, units, target, depth + 1)
         return None
+    return None
+
+
+def _chain(node):
+    """(head name, [attributes]) of a Name/Attribute chain, else None."""
+    chain = []
+    while isinstance(node, ast.Attribute):
+        chain.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return node.id, chain[::-1]
+
+
+def _reachability():
+    """({package unit: def node}, units reached from the roots, units
+    reached from the roots plus the allowlist)."""
+    files = _live_files()
+    pkg = os.path.basename(_PKG)
+    units = _package_units(files, pkg)
 
     def refs(nodes, mod: str) -> set:
         _tree, aliases, defs = files[mod]
         out = set()
         for top in nodes:
             for node in ast.walk(top):
-                chain = []
-                while isinstance(node, ast.Attribute):
-                    chain.append(node.attr)
-                    node = node.value
-                if not isinstance(node, ast.Name):
+                named = _chain(node)
+                if named is None:
                     continue
-                chain = [node.id] + chain[::-1]
-                if node.id in defs and f"{mod}.{node.id}" in units:
-                    out.add(f"{mod}.{node.id}")
-                elif node.id in aliases:
-                    unit = resolve(".".join([aliases[node.id]] + chain[1:]))
-                    if unit:
-                        out.add(unit)
+                head, rest = named
+                if head in defs and f"{mod}.{head}" in units:
+                    out.add(f"{mod}.{head}")
+                elif head in aliases:
+                    hit = _resolve(files, units, ".".join([aliases[head]] + rest))
+                    if hit:
+                        out.add(hit[0])
         return out
 
     edges, roots = {}, set()
@@ -512,3 +541,272 @@ def test_no_test_only_package_functions():
     assert not stale, (
         f"_TEST_ONLY_OK entries that are gone or now have a real caller: {stale}"
     )
+
+
+# ---------------------------------------------------------------------------
+# Static option gate: a defaulted parameter that no live call sets is a
+# constant with a second spelling — a configuration nothing runs, that
+# tests and review must still cover. Calls resolve through the same
+# imports as the reachability gate; a call with *args/**kw sets every
+# parameter, and a method called on an instance (whose type the scan
+# cannot see) counts for every package method of that name. Parameters
+# of the _TEST_ONLY_OK functions are exempt: those functions exist for
+# tests. The same scan lists module-level names nothing references.
+# ---------------------------------------------------------------------------
+
+_OPTION_OK = {
+    "__version__": "package metadata that packaging tools read",
+    "serve.serve(port)": "deployment setting: the port the JSON API binds",
+    "operators.corpus.nb_quality_scores(is_pos)": (
+        "test seam: an injected label column lets tests hand-check the "
+        "closed-form Naive Bayes weights (live queries label with the "
+        "curation gate)"
+    ),
+}
+
+
+def _param_units(files: dict, pkg: str) -> dict:
+    """{function key: (positional params, defaulted params, kind)} for
+    every package function, method and nested function; a @dataclass
+    contributes its generated __init__. kind is "static", "class" or
+    "method" for methods, "function" otherwise."""
+    out = {}
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def add(key, fn, kind):
+        a = fn.args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        dflt = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        dflt += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        out[key] = (pos, dflt, kind)
+
+    def nested(node, prefix, in_fn):
+        """Functions nested in a function, keyed under it."""
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, fn_types + (ast.ClassDef,)):
+                key = f"{prefix}.{child.name}"
+                if in_fn and isinstance(child, fn_types):
+                    add(key, child, "function")
+                nested(child, key, isinstance(child, fn_types))
+            else:
+                nested(child, prefix, in_fn)
+
+    for mod, (tree, _aliases, defs) in files.items():
+        if mod.split(".")[0] != pkg:
+            continue
+        for name, node in defs.items():
+            if isinstance(node, ast.ClassDef):
+                decos = {ast.unparse(d).split("(")[0] for d in node.decorator_list}
+                if decos & {"dataclass", "dataclasses.dataclass"}:
+                    fields = [
+                        (f.target.id, f.value is not None)
+                        for f in node.body
+                        if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                    ]
+                    out[f"{mod}.{name}.__init__"] = (
+                        ["self"] + [f for f, _ in fields],
+                        [f for f, has in fields if has],
+                        "method",
+                    )
+                for m in node.body:
+                    if isinstance(m, fn_types):
+                        names = {ast.unparse(d) for d in m.decorator_list}
+                        kind = (
+                            "static" if "staticmethod" in names
+                            else "class" if "classmethod" in names
+                            else "method"
+                        )
+                        add(f"{mod}.{name}.{m.name}", m, kind)
+            else:
+                add(f"{mod}.{name}", node, "function")
+        nested(tree, mod, False)
+    return out
+
+
+def _set_params(files: dict, params: dict) -> dict:
+    """{function key: parameter names some call in `files` sets}; a
+    call with *args/**kw sets them all."""
+    units = {k.rsplit(".", 1)[0] for k in params} | set(params)
+    by_method = {}  # bare method name → method keys
+    by_nested = {}  # (module, bare name) → nested function keys
+    for key, (_pos, _dflt, kind) in params.items():
+        owner, name = key.rsplit(".", 1)
+        if kind != "function":
+            by_method.setdefault(name, []).append(key)
+        elif owner not in files:
+            mod = max((m for m in files if key.startswith(m + ".")), key=len)
+            by_nested.setdefault((mod, name), []).append(key)
+    out = {}
+
+    def on_instance(name):
+        """obj.name(...) on an object the scan cannot type: every
+        package method of that name, `self` implicit."""
+        return [
+            (k, 0 if params[k][2] == "static" else 1)
+            for k in by_method.get(name, ())
+        ]
+
+    def targets(call, mod):
+        """(function key, implicit leading positionals) per callee."""
+        _tree, aliases, defs = files[mod]
+        named = _chain(call.func)
+        if named is None:
+            if isinstance(call.func, ast.Attribute):
+                return on_instance(call.func.attr)
+            return []
+        head, rest = named
+        if head in defs:
+            hit = f"{mod}.{head}", rest
+        elif head in aliases:
+            hit = _resolve(files, units, ".".join([aliases[head]] + rest))
+            if hit is None:  # an outside module's function or method
+                return []
+        elif rest:
+            return on_instance(rest[-1])
+        else:
+            return [(k, 0) for k in by_nested.get((mod, head), ())]
+        unit, rest = hit
+        key = ".".join([unit] + rest)
+        if key in params:  # a function, or Class.method(...) with `self` explicit
+            return [(key, 1 if params[key][2] == "class" else 0)]
+        if not rest and f"{unit}.__init__" in params:  # instantiation
+            return [(f"{unit}.__init__", 1)]
+        return []
+
+    for mod, (tree, _aliases, _defs) in files.items():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            )
+            for key, shift in targets(call, mod):
+                pos = params[key][0]
+                got = out.setdefault(key, set())
+                if spread:
+                    got |= set(pos) | set(params[key][1])
+                    continue
+                got |= set(pos[shift : shift + len(call.args)])
+                got |= {k.arg for k in call.keywords}
+    return out
+
+
+def _unset_options(files: dict, pkg: str, exempt=()) -> list:
+    """Every "module.function(param)" of the package, relative to the
+    package, whose default no call in `files` overrides, plus every
+    module-level name of the package nothing in `files` references;
+    functions under an `exempt` prefix are skipped."""
+    params = _param_units(files, pkg)
+    set_by = _set_params(files, params)
+    listed = []
+    for key, (_pos, dflt, _kind) in params.items():
+        rel = key[len(pkg) + 1:]
+        if any(rel == e or rel.startswith(e + ".") for e in exempt):
+            continue
+        listed += [f"{rel}({p})" for p in dflt if p not in set_by.get(key, ())]
+    units = _package_units(files, pkg)
+    consts = {}
+    for mod, (tree, _aliases, _defs) in files.items():
+        if mod.split(".")[0] != pkg:
+            continue
+        for node in tree.body:
+            targets = (
+                node.targets if isinstance(node, ast.Assign)
+                else [node.target] if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            for t in targets:
+                if isinstance(t, ast.Name):
+                    consts[f"{mod}.{t.id}"] = t
+    used = set()
+    for mod, (tree, aliases, _defs) in files.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                used.add(f"{mod}.{node.id}")
+            named = _chain(node)
+            if named and named[0] in aliases:
+                dotted = ".".join([aliases[named[0]]] + named[1])
+                used.add(dotted)
+                parts = dotted.split(".")
+                for i in range(len(parts) - 1, 0, -1):  # through re-exports
+                    hit = _resolve(files, {**units, **consts}, ".".join(parts[: i + 1]))
+                    if hit:
+                        used.add(hit[0])
+            elif isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    used.add(aliases.get(a.asname or a.name, ""))
+    listed += [c[len(pkg) + 1:] for c in consts if c not in used]
+    return sorted(listed)
+
+
+def _option_findings(files: dict, pkg: str, exempt, option_ok: dict):
+    """(listed values not on `option_ok`, stale `option_ok` entries)."""
+    listed = _unset_options(files, pkg, exempt)
+    unset = [v for v in listed if v not in option_ok]
+    return unset, sorted(set(option_ok) - set(listed))
+
+
+def test_no_option_without_a_live_setter():
+    unset, stale = _option_findings(
+        _live_files(), os.path.basename(_PKG), _TEST_ONLY_OK, _OPTION_OK
+    )
+    assert not unset, (
+        f"{len(unset)} package options no live call sets (only tests do, or "
+        "nothing) and module-level names nothing references — fold each "
+        "into its body as a constant, or add a deployment setting or test "
+        "seam to _OPTION_OK with its reason: " + ", ".join(unset)
+    )
+    assert not stale, (
+        f"_OPTION_OK entries that are gone or now have a live setter: {stale}"
+    )
+
+
+_SCAN_PKG = '''
+USED = 1
+UNUSED = 2
+
+
+def f(a, b=1, c=2, d=3):
+    return a + USED
+
+
+def g(a, b=1):
+    return a
+
+
+def h(a, b=1):
+    return a
+
+
+class K:
+    def by_instance(self, x, y=0):
+        return x
+
+    def by_class(self, x, y=0):
+        return x
+'''
+
+_SCAN_CALLER = '''
+from p.m import K, f, g, h
+
+
+def run(args, kw):
+    f(1, 2)  # positional: b
+    f(1, c=3)  # keyword: c
+    K().by_instance(1, 2)  # self implicit: 2 is y
+    K.by_class(K(), 1)  # self explicit: 1 is x, y unset
+    g(*args)  # *args sets every parameter
+    h(1, **kw)  # so does **kw
+'''
+
+
+def test_option_scan_on_a_small_source():
+    files = _index(
+        {"p": ("", True), "p.m": (_SCAN_PKG, False), "tools.t": (_SCAN_CALLER, False)}
+    )
+    assert _unset_options(files, "p") == ["m.K.by_class(y)", "m.UNUSED", "m.f(d)"]
+    unset, stale = _option_findings(
+        files, "p", (), {"m.f(d)": "a seam", "m.f(b)": "set by f(1, 2)"}
+    )
+    assert unset == ["m.K.by_class(y)", "m.UNUSED"]
+    assert stale == ["m.f(b)"]

@@ -241,7 +241,7 @@ def test_decontamination_broadcasts_benchmark_set(spark):
     docs = load_table(spark, SF_DIR, "documents")
     bench = docs.filter(F.col("doc_id") % 10 == 0)
     rest = docs.filter(F.col("doc_id") % 10 != 0)
-    plan = _plan(corpus.contamination_stats(rest, bench, k=3))
+    plan = _plan(corpus.contamination_stats(rest, bench))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 

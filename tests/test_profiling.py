@@ -119,11 +119,11 @@ def test_drift_psi_categorical_detects_category_shift(spark):
     other = next(r for r in rows if r.category == "__OTHER__")
     assert other.n_base == 0 and other.n_cur == 500
     assert all(math.isfinite(r.contrib) for r in rows)
-    # long tail folds under max_categories
+    # long tail folds under PSI_MAX_CATEGORIES (100)
     wide = spark.createDataFrame(
-        [(f"cat{i % 50}",) for i in range(1000)], "v string"
+        [(f"cat{i % 150}",) for i in range(3000)], "v string"
     )
-    out = profiling.drift_psi_categorical(wide, wide, "v", max_categories=10)
+    out = profiling.drift_psi_categorical(wide, wide, "v")
     rows = out.collect()
-    assert len(rows) == 11  # top-10 + __OTHER__
+    assert len(rows) == profiling.PSI_MAX_CATEGORIES + 1  # top-100 + __OTHER__
     assert abs(rows[0].psi_total) < 1e-9  # identical sides → 0 drift

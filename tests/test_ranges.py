@@ -1,5 +1,4 @@
-"""Interval-join tests: exact membership, bucket-width independence,
-left join NULL fill."""
+"""Interval-join tests: exact membership, bucket-width independence."""
 
 from __future__ import annotations
 
@@ -31,14 +30,3 @@ def test_interval_join_membership(spark):
         }
         # t=5 in [0,10); t=10 in [10,20) (end exclusive, start inclusive)
         assert out == {1: "a", 2: "b"}
-
-
-def test_interval_join_left(spark):
-    points, intervals = _frames(spark)
-    out = {
-        r.id: r.label
-        for r in ranges.interval_join(
-            points, intervals, "key", "t", "s", "e", bucket_width=5, how="left"
-        ).collect()
-    }
-    assert out == {1: "a", 2: "b", 3: None, 4: None}

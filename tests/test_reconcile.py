@@ -53,11 +53,12 @@ def test_table_diff_null_vs_value_is_a_change(spark):
 
 def test_table_diff_compare_subset(snap_pair):
     left, right = snap_pair
-    # comparing only `s`: key 2 still changed, value-only changes vanish
+    # comparing only `s` (the projection is the column subset): key 2
+    # still changed, value-only changes vanish
     rows = {
         r.k: r
         for r in reconcile.table_diff(
-            left, right, ["k"], compare_cols=["s"]
+            left.select("k", "s"), right.select("k", "s"), ["k"]
         ).collect()
     }
     assert rows[2].changed_cols == "s"
@@ -183,29 +184,21 @@ def test_cdc_merge_incremental_equals_oneshot_property(spark):
         assert stepped == oneshot, f"split seed {seed} diverged"
 
 
-def test_fuzzy_join_block_cap_drops_stopword_blocks(spark):
-    """max_block_size: a stop-word token shared by the whole catalog
-    must not generate |L|x|R| candidates; names whose only shared
-    token is the stop word lose their match (documented trade), names
-    with a discriminative token keep theirs."""
+def test_fuzzy_join_stopword_blocks_fail_distance(spark):
+    """A stop-word token shared by the whole catalog blocks a name
+    against every catalog row, and the distance filter rejects them
+    all; a typo on the stop token still matches through the
+    discriminative token."""
     catalog = spark.createDataFrame(
         [(i, f"acme{i} inc") for i in range(10)] + [(99, "zeta inc")],
         "cid long, cname string",
     )
     dirty = spark.createDataFrame(
         [(1, "zeta ink"),      # typo on the STOP token; 'zeta' blocks
-         (2, "query inc")],    # only 'inc' shared → capped away
+         (2, "query inc")],    # only 'inc' shared → too far from all
         "id long, name string",
     )
     out = linkage.fuzzy_join(
-        dirty, catalog, "id", "name", "cid", "cname",
-        max_distance=2, max_block_size=5,
-    ).collect()
-    assert {(r.left_id, r.right_id) for r in out} == {(1, 99)}
-    # without the cap, 'query inc' would reach every catalog row as a
-    # candidate (and still fail the distance filter) — the cap is about
-    # candidate COUNT, pinned here via the uncapped candidate explosion
-    uncapped = linkage.fuzzy_join(
         dirty, catalog, "id", "name", "cid", "cname", max_distance=2
     )
-    assert {(r.left_id, r.right_id) for r in uncapped.collect()} == {(1, 99)}
+    assert {(r.left_id, r.right_id) for r in out.collect()} == {(1, 99)}

@@ -14,7 +14,22 @@ from algoritmos_etl_spark.driver_queries import (
     CORRECTNESS_WINDOW,
     REGISTRY,
     REGISTRY_ORDER,
-    WINDOW_ROWS_ONLY,
+)
+
+# In-window entries whose oracle is None BY DESIGN (codec /
+# eigendecomposition / sketch-estimate pipelines no SQL engine
+# reproduces); the driver records rows-only rows for these — an
+# explicit, reviewed exception. Each is pinned by an exact non-SQL
+# reference in pytest (numpy PCA parity, codec round-trips,
+# union==one-shot HLL). bpe_encode left this set in r9: its oracle now
+# RELEARNS the tokenizer in SQL (driver_queries_ext._bpe_sql_ctes).
+WINDOW_ROWS_ONLY = frozenset(
+    {
+        "pca_projection",
+        "image_jpeg_neardup",
+        "audio_features",
+        "incremental_distinct",
+    }
 )
 
 # Queries that MUST be inside the driver's correctness window: the

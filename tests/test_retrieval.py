@@ -184,7 +184,7 @@ def test_bm25_matches_python_model(spark):
     qdf = spark.createDataFrame(queries, "query_id int, query_text string")
     from algoritmos_etl_spark.operators import retrieval
 
-    k1, b, top_k = 1.2, 0.75, 7
+    k1, b, top_k = 1.2, 0.75, 7  # the operator's fixed BM25 parameters
     tfs = {i: Counter(t.lower().split()) for i, t in raw}
     dls = {i: sum(c.values()) for i, c in tfs.items()}
     n_docs = len(raw)
@@ -207,7 +207,7 @@ def test_bm25_matches_python_model(spark):
             expect[(qid, d)] = (s, rank)
     got = {
         (r.query_id, r.doc_id): (r.score, r.rank)
-        for r in retrieval.bm25_topk(docs, qdf, top_k=top_k, k1=k1, b=b).collect()
+        for r in retrieval.bm25_topk(docs, qdf, top_k=top_k).collect()
     }
     assert got == expect
 

@@ -195,8 +195,8 @@ def test_fixture_bodies_parse_parity(spark):
 
 
 def test_crawl_composition_with_robots_stage(spark):
-    """crawl_to_corpus(robots_rules=...) drops exactly the
-    disallowed URLs between dedup and extraction."""
+    """robots_gate composed onto the crawl corpus drops exactly the
+    disallowed URLs."""
     from algoritmos_etl_spark.operators.text import QUALITY_RULES
     from algoritmos_etl_spark.plans.crawl import crawl_to_corpus
     from algoritmos_etl_spark.sources import warc
@@ -218,9 +218,8 @@ def test_crawl_composition_with_robots_stage(spark):
     )
     q = tuple(n for n, _ in QUALITY_RULES if n != "stopword_floor")
     plain = crawl_to_corpus(parsed, blocklist=[], quality_rules=q)
-    gated = crawl_to_corpus(
-        parsed, blocklist=[], quality_rules=q, robots_rules=rules,
-        robots_agent=robots.ROBOTS_AGENT,
+    gated = robots.robots_gate(plain, rules, agent=robots.ROBOTS_AGENT).filter(
+        "allowed"
     )
     plain_urls = {r["url_norm"] for r in plain.collect()}
     gated_urls = {r["url_norm"] for r in gated.collect()}

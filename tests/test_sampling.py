@@ -207,7 +207,7 @@ def test_epoch_shards_matches_python_reference(spark):
     got = {
         (r.epoch, r.shard, r.pos): r.doc_id
         for r in sampling.epoch_shards(
-            df, "doc_id", n_epochs=2, n_shards=4, salt="epoch"
+            df, "doc_id", n_epochs=2, n_shards=4
         ).collect()
     }
     want = {}

@@ -4,7 +4,8 @@ FIXTURES.md F3 = `algorithms/similarity.py:613-652`:
 a=[1..5], b=a, c=reversed, d=noisy; euclidean(a,b)=0, pearson(a,b)=1,
 pearson(a,c)=−1, cosine(a,b)=1, dtw(a,b)=0. The engine applies metrics
 to aligned log-returns in the bundle path, so the raw-vector pins are
-tested through `dtw_pairs(use_returns=False)` and a direct agg.
+tested on the DTW kernels (`_dtw_numpy`, `_dtw_numpy_batch`) and a
+direct agg.
 """
 
 import datetime
@@ -90,34 +91,15 @@ def test_dtw_path_downsamples_like_reference(spark):
     assert max(r.i for r in out) <= 80 and max(r.j for r in out) <= 80
     # path thinned to ~60 steps (path length ≤ 2·80, step ≥ 2 → ≤ ~81)
     assert len(out) <= 90
-    full = similarity.dtw_path(
-        bars, 1, 2, target_points=None, path_points=None
-    ).count()
-    assert full > len(out)  # downsampling actually reduced the work
+    import numpy as np
 
-
-def test_dtw_pairs_corr_prefilter_recall(vec_bars):
-    """The correlation prefilter must keep exactly the high-|corr|
-    pairs and their DTW values unchanged — correlated series are the
-    low-DTW candidates, so pruning by |pearson| is recall-safe for
-    near-duplicate hunting."""
-    full = {
-        (r.sym_a, r.sym_b): r.dtw
-        for r in similarity.dtw_pairs(vec_bars, use_returns=False).collect()
+    closes = {
+        s: np.array([r[2] for r in rows if r[0] == s]) for s in (1, 2)
     }
-    kept = {
-        (r.sym_a, r.sym_b): r.dtw
-        for r in similarity.dtw_pairs(
-            vec_bars, use_returns=False, min_abs_corr=0.99
-        ).collect()
-    }
-    # A=B identical: the |corr|=1 duplicate pair survives
-    assert (1, 2) in kept
-    assert kept.keys() < full.keys()  # strictly pruned
-    for pair, d in kept.items():
-        assert d == pytest.approx(full[pair])
-    # the zero-distance (true duplicate) pair is retained
-    assert kept[(1, 2)] == pytest.approx(0.0)
+    ra, rb = (similarity._zero_fill_log_returns(closes[s]) for s in (1, 2))
+    _, full = similarity._dtw_numpy(ra, rb, window=0, with_path=True)
+    assert len(full) > len(out)  # downsampling actually reduced the work
+    assert out[0].dtw == similarity._dtw_numpy(ra[::5], rb[::5], window=0)
 
 
 def test_pair_metrics_on_aligned_returns(vec_bars):
@@ -161,13 +143,19 @@ def test_pair_stats_matches_sql_aggregates(spark, shape):
 
 
 def test_dtw_pairs_on_bars(vec_bars):
+    import numpy as np
+
     out = {
         (r["sym_a"], r["sym_b"]): r["dtw"]
-        for r in similarity.dtw_pairs(vec_bars, use_returns=False).collect()
+        for r in similarity.dtw_pairs(vec_bars).collect()
     }
     assert len(out) == 6  # C(4,2)
     assert out[(1, 2)] == pytest.approx(0.0)
     assert out[(1, 3)] > 0
+    # the raw-vector pins on the batched kernel dtw_pairs runs
+    raw = similarity._dtw_numpy_batch(np.array([A, A, A]), np.array([B, C, D]))
+    assert raw[0] == 0.0 and raw[1] > 0 and raw[2] > 0
+    assert list(raw) == [similarity._dtw_numpy(A, x) for x in (B, C, D)]
 
 
 def test_compare_two_assets_bundle(vec_bars):
@@ -328,11 +316,9 @@ def test_dtw_batch_kernel_matches_per_pair():
     )
 
     rng = np.random.default_rng(0)
-    for n, m, w in [(90, 90, None), (250, 250, None), (40, 40, 0), (30, 30, 5)]:
+    for n, m in [(90, 90), (250, 250), (40, 40), (30, 30)]:
         a = rng.normal(size=(17, n))
         b = rng.normal(size=(17, m))
-        batch = _dtw_numpy_batch(a, b, window=w)
-        single = np.array(
-            [_dtw_numpy(a[i], b[i], window=w) for i in range(17)]
-        )
+        batch = _dtw_numpy_batch(a, b)
+        single = np.array([_dtw_numpy(a[i], b[i]) for i in range(17)])
         assert np.array_equal(batch, single)

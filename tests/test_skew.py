@@ -35,21 +35,3 @@ def test_salted_join_equals_plain_join(spark):
     assert salted.exceptAll(plain).isEmpty()
     assert plain.exceptAll(salted).isEmpty()
 
-
-def test_salted_join_left_outer(spark):
-    big, dim = _skewed(spark)
-    dim_missing = dim.filter(F.col("k") != "hot")  # hot key unmatched
-    plain = big.join(dim_missing, "k", "left").select("k", "payload", "dim_val")
-    salted = skew.salted_join(big, dim_missing, on="k", n_salts=8, how="left").select(
-        "k", "payload", "dim_val"
-    )
-    assert salted.exceptAll(plain).isEmpty() and plain.exceptAll(salted).isEmpty()
-
-
-def test_salted_join_rejects_right_full(spark):
-    import pytest
-
-    big, dim = _skewed(spark)
-    for how in ("right", "full", "outer", "full_outer"):
-        with pytest.raises(ValueError):
-            skew.salted_join(big, dim, on="k", how=how)

@@ -66,18 +66,20 @@ def test_curation_is_a_subset_with_gates_applied(docs):
     assert orphan == 0
 
 
-def test_curation_drops_near_duplicates(spark):
-    base = "the quick brown fox jumps over the lazy dog and runs far away in the morning sun with a friend of mine it is a good day to be alive and well"
-    rows = [(0, base), (1, base + " extra token"), (2, "unrelated " * 25 + "the a of it is in and to the a of it is in and to")]
+def _gate_survivors(docs, n):
+    """Texts of the first `n` corpus documents the curation gates keep."""
+    ids = [r.doc_id for r in curate_corpus(docs).orderBy("doc_id").limit(n).collect()]
+    by_id = {r.doc_id: r.text for r in docs.filter(F.col("doc_id").isin(ids)).collect()}
+    return [by_id[i] for i in ids]
+
+
+def test_curation_drops_near_duplicates(spark, docs):
+    (base,) = _gate_survivors(docs, 1)
+    rows = [(0, base), (1, base + " extra token")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = {
-        r.doc_id
-        for r in curate_corpus(
-            df, min_words=5, max_stopword_ratio=1.0, max_bucket_size=None
-        ).collect()
-    }
+    kept = {r.doc_id for r in curate_corpus(df).collect()}
     # docs 0 and 1 are near-dups: greedy pair-drop keeps the lower id
-    assert 0 in kept and 1 not in kept
+    assert kept == {0}
 
 
 def test_curation_with_precomputed_shingles_equals_recompute(docs):
@@ -151,19 +153,16 @@ def test_repetition_stats_flags_looped_text(spark):
         assert out[d].dup_3gram_frac == 0.0
 
 
-def test_curation_keeps_repetitive_docs(spark):
+def test_curation_keeps_repetitive_docs(spark, docs):
     """Repetition is a scored signal, not a curation gate: a looped doc
     that passes the quality and language gates survives, while
     `repetition_stats` still flags it."""
-    clean = "the quick brown fox jumps over a lazy dog and then it runs far away in the morning to see a friend of mine"
-    looped = ("the spam of ham is a thing " * 8).strip()
+    clean, other = _gate_survivors(docs, 2)
+    looped = " ".join([other] * 3)
     df = spark.createDataFrame(
         [(0, clean), (1, looped)], "doc_id long, text string"
     )
-    kept = curate_corpus(
-        df, min_words=5, min_stopword_ratio=0.0, max_stopword_ratio=1.0,
-        max_bucket_size=None,
-    )
+    kept = curate_corpus(df)
     assert {r.doc_id for r in kept.collect()} == {0, 1}
     dup = {r.doc_id: r.dup_3gram_frac for r in text.repetition_stats(df).collect()}
     assert dup[1] > 0.5 >= dup[0]

@@ -318,24 +318,29 @@ def test_psl_blocklist_no_overmatch(spark):
     # naive grain: the registrant entry matches NOTHING (both are co.uk)
     assert url_ops.domain_gate(df, ["example.co.uk"]).count() == 2
     # PSL grain: exactly the one registrant is blocked
-    kept = {
-        r["url"]
-        for r in url_ops.domain_gate(df, ["example.co.uk"], psl=True)
-        .collect()
+    blocked = {
+        r["domain"]: r["blocked"]
+        for r in url_ops.domain_rollup(
+            df, blocklist=["example.co.uk"], psl=True
+        ).collect()
     }
-    assert kept == {"https://blog.other.co.uk/c"}
-    # ...and blocking a public suffix at PSL grain nukes nothing,
+    assert blocked == {"example.co.uk": True, "other.co.uk": False}
+    # ...and blocking a public suffix at PSL grain blocks nothing,
     # because no host's REGISTRABLE domain is ever a bare suffix
-    assert url_ops.domain_gate(df, ["co.uk"], psl=True).count() == 2
+    assert not any(
+        r["blocked"]
+        for r in url_ops.domain_rollup(df, blocklist=["co.uk"], psl=True)
+        .collect()
+    )
 
 
 def test_psl_gate_is_map_only(spark):
     # r12 optimization round: the PSL match is a pure codegen
     # projection over a compile-time rule table — no join of ANY kind
     # (the old shape paid 3 BroadcastExchanges per call), no shuffle
-    df = spark.createDataFrame([("https://a.co.uk/x",)], "url string")
+    df = spark.createDataFrame([("a.co.uk",)], "host string")
     plan = (
-        url_ops.domain_gate(df, ["b.co.uk"], psl=True)
+        url_ops.with_registrable_domain_psl(df, "host")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Join" not in plan

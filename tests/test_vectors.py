@@ -82,35 +82,10 @@ def test_lsh_neardup_recall_and_precision(emb):
         assert recall >= floor, f"recall {recall} below floor {floor}"
 
 
-def test_lsh_neardup_bucket_cap(emb):
-    """max_bucket_size must only DROP candidates (precision stays 1.0,
-    subset of the uncapped result), and a cap larger than any bucket
-    must be a no-op — the same policy as minhash_lsh_dedup's cap."""
-    base = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in vectors.lsh_neardup_pairs(emb, threshold=0.4).collect()
-    }
-    capped = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in vectors.lsh_neardup_pairs(
-            emb, threshold=0.4, max_bucket_size=8
-        ).collect()
-    }
-    for pair, cos in capped.items():
-        assert pair in base and cos == pytest.approx(base[pair])
-    uncapped = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in vectors.lsh_neardup_pairs(
-            emb, threshold=0.4, max_bucket_size=10**9
-        ).collect()
-    }
-    assert uncapped == base
-
-
-def _lsh_candidate_count(emb, n_tables, planes):
+def _lsh_candidate_count(emb):
     """Distinct vector pairs sharing a (table, signature) bucket: the
     candidates the banding join generates before cosine verification."""
-    sigs = vectors.lsh_signatures(emb, n_tables, planes)
+    sigs = vectors.lsh_signatures(emb)
     a = sigs.withColumnRenamed("vec_id", "vec_a")
     b = sigs.withColumnRenamed("vec_id", "vec_b")
     return (
@@ -122,13 +97,14 @@ def _lsh_candidate_count(emb, n_tables, planes):
     )
 
 
-def test_lsh_width_tradeoff_curve(emb):
+def test_lsh_width_tradeoff_curve(emb, monkeypatch):
     """Pins the recall/candidate-count curve at the narrow (4×4) and
     wide (16×8) operating points: widening must cut the candidate set
     hard (16-value signatures held ~n/16 of the corpus per bucket),
     and empirical recall must track the analytic banding formula at
     BOTH widths — that is the evidence the hash family is healthy and
-    the trade-off is the theoretical one, not an implementation bug."""
+    the trade-off is the theoretical one, not an implementation bug.
+    The narrow width is the module constants patched for this test."""
     exact = {
         (r.vec_a, r.vec_b): r.cosine
         for r in vectors.cosine_neardup_pairs(emb, threshold=0.4).collect()
@@ -136,10 +112,12 @@ def test_lsh_width_tradeoff_curve(emb):
     n = emb.count()
     all_pairs = n * (n - 1) // 2
     for n_tables, planes in [(4, 4), (16, 8)]:
-        cand = _lsh_candidate_count(emb, n_tables, planes)
+        monkeypatch.setattr(vectors, "LSH_TABLES", n_tables)
+        monkeypatch.setattr(vectors, "LSH_PLANES_PER_TABLE", planes)
+        cand = _lsh_candidate_count(emb)
         got = {
             (r.vec_a, r.vec_b)
-            for r in vectors.lsh_neardup_pairs(emb, 0.4, n_tables, planes).collect()
+            for r in vectors.lsh_neardup_pairs(emb, 0.4).collect()
         }
         recall = len(got & set(exact)) / len(exact)
         analytic = _analytic_recall(exact.values(), n_tables, planes)
@@ -274,8 +252,9 @@ def test_semantic_dedup_drops_within_cluster_dups(spark):
         (20, _vec(2)),
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = vectors.ivf_train(emb, n_centroids=2)
     out = {r.vec_id: r for r in vectors.semantic_dedup(
-        emb, threshold=0.95, n_centroids=2
+        emb, threshold=0.95, cents=cents
     ).collect()}
     assert len(out) == 5
     assert not out[10].is_kept and out[10].dup_of == 0
@@ -465,7 +444,7 @@ def test_pca_matches_numpy_full_reference(emb):
     assert np.allclose(comps, ref, atol=1e-6)
     assert np.allclose(ratio, evals[order] / evals.sum(), atol=1e-9)
 
-    out = vectors.pca_project(emb, k=k, fitted=(mean, comps, ratio))
+    out = vectors.pca_project(emb, k=k)
     got = {r.vec_id: [r[f"pc{i}"] for i in range(1, k + 1)] for r in out.collect()}
     proj = (X - X.mean(axis=0)) @ ref.T
     for vid, r in zip((r.vec_id for r in rows), proj):
