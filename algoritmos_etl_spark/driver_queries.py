@@ -151,18 +151,14 @@ def q_bars(spark, sf_dir):
     "etl/data_cleaner.py:88-147)",
 )
 def q_cleaning_report(spark, sf_dir):
-    miss = (
-        _nulled(spark, sf_dir)
-        .groupBy(F.col("user_id").alias("symbol"))
-        .agg(
-            F.sum(F.col("value_n").isNull().cast("long")).alias("null_value"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
+    miss = cleaning.missing_value_summary(
+        _nulled(spark, sf_dir).withColumnRenamed("user_id", "symbol"),
+        cols=("value_n",),
     )
     nul_date = F.lit(None).cast("string").alias("date")
     m1 = miss.select(
         "symbol", nul_date, F.lit("null_value").alias("metric"),
-        F.col("null_value").alias("n"),
+        F.col("null_value_n").alias("n"),
     )
     m2 = miss.select(
         "symbol", nul_date, F.lit("n_rows").alias("metric"),

@@ -17,16 +17,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-OHLCV_COLS = ("open", "high", "low", "close", "volume")
 
-
-def missing_value_summary(
-    df: DataFrame, cols: Sequence[str] = OHLCV_COLS, group: str = "symbol"
-) -> DataFrame:
-    """Per-group count of null cells per column + rows with ≥1 null.
+def missing_value_summary(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Per-symbol count of null cells per column + rows with ≥1 null.
 
     Reference: `etl/data_cleaner.py:27-85` returns (total null cells,
-    indices of rows with any null); relational form keys by group
+    indices of rows with any null); relational form keys by symbol
     instead of positional index. One scan, map-side partial aggregation.
     """
     aggs = [
@@ -38,7 +34,7 @@ def missing_value_summary(
         any_null = cond if any_null is None else (any_null | cond)
     aggs.append(F.sum(any_null.cast("long")).alias("rows_with_null"))
     aggs.append(F.count(F.lit(1)).alias("n_rows"))
-    return df.groupBy(group).agg(*aggs)
+    return df.groupBy("symbol").agg(*aggs)
 
 
 def detect_inconsistencies(df: DataFrame) -> DataFrame:
@@ -103,25 +99,6 @@ def remove_invalid_rows(df: DataFrame, critical_col: str = "close") -> DataFrame
     parquet scan Catalyst turns it into a row-group-level IS NOT NULL.
     """
     return df.filter(F.col(critical_col).isNotNull())
-
-
-def drop_empty_symbols(df: DataFrame, min_rows: int = 1) -> DataFrame:
-    """Drop symbols with fewer than `min_rows` valid rows.
-
-    Reference: P6 `etl/etl_pipeline.py:157` (empty assets) and P9
-    `app.py:454-458` (≤10 valid closes before risk). Implemented as an
-    aggregate + broadcast semi-join on the symbol list — the grouped
-    side is tiny (one row per symbol) so no large shuffle of the fact
-    table beyond the groupBy itself.
-    """
-    keep = (
-        df.filter(F.col("close").isNotNull())
-        .groupBy("symbol")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_rows)
-        .select("symbol")
-    )
-    return df.join(F.broadcast(keep), "symbol", "left_semi")
 
 
 def keep_latest(

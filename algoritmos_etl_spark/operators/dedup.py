@@ -902,23 +902,28 @@ def _maximal_diagonal_runs(
 ) -> DataFrame:
     """Shared ExactSubstr core: coalesce string-verified k-shingle
     matches into maximal runs along alignment diagonals. `sh` is any
-    (doc_id, pos, shingle) positional-shingle table — word grain
+    (doc_id, pos, h, shingle) positional-shingle table — word grain
     (`positional_shingles`) or token grain
     (`positional_token_shingles`); `len_alias` names the output span
-    length in the grain's unit.
+    length in the grain's unit. `h` must be a deterministic hash of
+    `shingle` (both producers emit the 60-bit md5 prefix); it only
+    narrows, so collisions ADD candidates and never a match. A table
+    without `h` fails analysis.
 
     Exchange discipline (the 100 TB shape): the only FULL-CORPUS
-    shuffle keys on an 8-byte engine-internal `xxhash64` of the
-    shingle — (hash, partial count) rows, ~20x narrower than the raw
-    ~k·width shingle string the old plan exchanged (sf1 measured:
-    199 B avg token shingle). The >= 2 hash count narrows `sh` to
-    duplicate candidates via a semi-join against the hot-hash table,
-    materialized once (eager checkpoint — it is needed for the size
-    decision anyway) and BROADCAST while it fits the bounded budget
-    (sized for HashedRelation's real tens-of-bytes/row cost, not raw
-    8 B/hash: sf1 has 663k hot hashes; the guard trips past ~8M
-    distinct duplicated shingles ≈ 300-500 MB materialized, where the
-    fallback partitioned semi-join still keys on the 8-byte hash). No upper
+    shuffle keys on the 8-byte `h` — (hash, partial count) rows, ~20x
+    narrower than the raw ~k·width shingle string the old plan
+    exchanged (sf1 measured: 199 B avg token shingle), and over the
+    landed parquet artifact the hot-count scan prunes the shingle
+    STRINGS away entirely (ReadSchema = doc_id, pos, h). The >= 2 hash
+    count narrows `sh` to duplicate candidates via a semi-join against
+    the hot-hash table, materialized once (eager checkpoint — it is
+    needed for the size decision anyway) and BROADCAST while it fits
+    the bounded budget (sized for HashedRelation's real
+    tens-of-bytes/row cost, not raw 8 B/hash: sf1 has 663k hot hashes;
+    the guard trips past ~8M distinct duplicated shingles ≈ 300-500 MB
+    materialized, where the fallback partitioned semi-join still keys
+    on the 8-byte hash). No upper
     df-cap on the hash count: a collision-merged count above max_occ
     must never exclude a string that is under the cap. Raw strings
     are exchanged only for the narrowed candidate subset (sf1: 9% of
@@ -927,19 +932,7 @@ def _maximal_diagonal_runs(
     verification, and the candidate join + self-join reuse one string
     partitioning (a hash collision can therefore never flag a clean
     position; the hash only ever narrows)."""
-    if "h" in sh.columns:
-        # the positional table already carries a 60-bit md5-prefix
-        # hash (the landed parquet artifact): narrowing on it lets the
-        # hot-count scan prune the shingle STRINGS away entirely
-        # (parquet ReadSchema = doc_id, pos, h), instead of reading
-        # every string to recompute xxhash64 (r13). Any
-        # hash-of-the-shingle works here — collisions only ADD
-        # candidates; the exact-string recount below verifies.
-        sh = sh.select("doc_id", "pos", "shingle", F.col("h").alias("_h"))
-    else:
-        sh = sh.select(
-            "doc_id", "pos", "shingle", F.xxhash64("shingle").alias("_h")
-        )
+    sh = sh.select("doc_id", "pos", "shingle", F.col("h").alias("_h"))
     hot = (
         sh.groupBy("_h")
         .agg(F.count(F.lit(1)).alias("_nh"))
@@ -1018,11 +1011,12 @@ def _runs_from_candidates(
 def positional_token_shingles(encoded: DataFrame, k: int) -> DataFrame:
     """Positional k-TOKEN shingles over ordered token-ID sequences
     (`bpe.bpe_encode` output: doc_id, token_ids array<int>): one row
-    per window start, shingle = the comma-joined id window. The join
-    key is injective in the id sequence (ids are integers, ',' never
-    appears in one), so shingle string equality IS token-sequence
-    equality — the token-grain twin of `positional_shingles`' exact
-    verification story, no hash step needed."""
+    per window start, shingle = the comma-joined id window, h = its
+    60-bit md5 prefix (as in `positional_shingles`). The join key is
+    injective in the id sequence (ids are integers, ',' never appears
+    in one), so shingle string equality IS token-sequence equality —
+    the token-grain twin of `positional_shingles`' exact verification
+    story; `h` only narrows."""
     shingles = F.when(
         F.size("token_ids") >= k,
         F.transform(
@@ -1032,8 +1026,16 @@ def positional_token_shingles(encoded: DataFrame, k: int) -> DataFrame:
             ),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    return encoded.select(
+    pos = encoded.select(
         "doc_id", F.posexplode(shingles).alias("pos", "shingle")
+    )
+    return pos.select(
+        "doc_id",
+        "pos",
+        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10)
+        .cast("long")
+        .alias("h"),
+        "shingle",
     )
 
 

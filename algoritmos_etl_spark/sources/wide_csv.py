@@ -47,22 +47,22 @@ def string_null(col: F.Column) -> F.Column:
     return F.when(t.isin(*NULL_STRINGS), F.lit(None)).otherwise(col)
 
 
-def read_wide_csv(
-    spark: SparkSession, path: str, date_col: str = "date"
-) -> DataFrame:
+def read_wide_csv(spark: SparkSession, path: str) -> DataFrame:
     """Wide master CSV → the engine's long bars model.
 
     Reads header-first with every column as `string`, applies the F6
     null predicate, casts each `{symbol}_{field}` column by its field's
-    type, and melts via the F5 suffix scan in `wide_to_long`. Column
+    type, and melts via the F5 suffix scan in `wide_to_long`. The date
+    header matches case-insensitively, as Spark's resolver does: the
+    reference writes `Date`, the engine's own export `date`. Column
     count is 1 + symbols×fields (bounded by the export that wrote it);
     rows scale with the calendar, so the single explode-melt pass is
     the whole ingest cost.
     """
     raw = spark.read.option("header", True).csv(path)
-    cols = [F.col(date_col).cast("date").alias("date")]
+    cols = [F.col("date").cast("date").alias("date")]
     for c in raw.columns:
-        if c == date_col:
+        if c.lower() == "date":
             continue
         # the reference writes `{SYM}_Close` (capitalized field); the
         # engine's own export writes `{sym}_close` — normalize the
@@ -77,8 +77,7 @@ def read_wide_csv(
             # a '_close' phantom symbol flow into the suffix scan
             raise ValueError(
                 f"wide CSV column {c!r} is not '{{symbol}}_{{field}}' "
-                f"with field in {sorted(FIELD_TYPES)} (or the date "
-                f"column {date_col!r})"
+                f"with field in {sorted(FIELD_TYPES)} (or the date column)"
             )
         cols.append(
             string_null(F.col(c)).cast(FIELD_TYPES[field]).alias(f"{sym}_{field}")

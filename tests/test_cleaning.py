@@ -5,7 +5,11 @@ from algoritmos_etl_spark.operators import cleaning
 
 
 def test_missing_value_summary(micro_bars):
-    out = {r["symbol"]: r for r in cleaning.missing_value_summary(micro_bars).collect()}
+    cols = ("open", "high", "low", "close", "volume")
+    out = {
+        r["symbol"]: r
+        for r in cleaning.missing_value_summary(micro_bars, cols).collect()
+    }
     assert out[1]["rows_with_null"] == 0
     assert out[2]["null_close"] == 2
     assert out[2]["rows_with_null"] == 2
@@ -32,12 +36,10 @@ def test_forward_fill_leading_null_stays(micro_bars):
     assert by_date["2024-01-05"] == 13.0          # real value untouched
 
 
-def test_remove_invalid_and_drop_empty(micro_bars):
+def test_remove_invalid_rows(micro_bars):
     assert cleaning.remove_invalid_rows(micro_bars).filter(
         F.col("close").isNull()
     ).count() == 0
-    kept = cleaning.drop_empty_symbols(micro_bars, min_rows=10)
-    assert [r["symbol"] for r in kept.select("symbol").distinct().collect()] == [1]
 
 
 def test_keep_latest_deterministic(spark):

@@ -549,6 +549,19 @@ def test_exact_repeat_runs_tokens_hash_first_equals_string_first(spark):
     assert ref.exceptAll(got).count() == 0
 
 
+def test_maximal_diagonal_runs_requires_the_hash_column(spark):
+    """The positional table's `h` is part of the run core's contract:
+    a table without it fails analysis instead of being rehashed."""
+    from pyspark.errors import AnalysisException
+
+    df = spark.createDataFrame(
+        [(0, [1, 2, 3, 1, 2, 3])], "doc_id long, token_ids array<int>"
+    )
+    sh = dedup.positional_token_shingles(df, 3).drop("h")
+    with pytest.raises(AnalysisException):
+        dedup._maximal_diagonal_runs(sh, 3, 8, "len_tokens")
+
+
 def test_exact_repeat_runs_tokens_end_to_end_bpe(spark):
     """Lee 2022 composition: a passage shared verbatim by two docs must
     surface as a >= 50-token verified run at the positions bpe_encode

@@ -1,4 +1,4 @@
-"""End-to-end ETL lifecycle + DTW path tests."""
+"""Wide master CSV re-ingest + DTW path tests."""
 
 from __future__ import annotations
 
@@ -8,34 +8,8 @@ from pyspark.sql import functions as F
 
 from algoritmos_etl_spark.driver_queries import session_bars
 from algoritmos_etl_spark.operators import similarity
-from algoritmos_etl_spark.plans import run_etl
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def test_run_etl_end_to_end(spark, tmp_path):
-    out = str(tmp_path / "etl_out")
-    report = run_etl(spark, SF_DIR, out, max_wide_symbols=5)
-    assert report["n_symbols"] > 0
-    assert report["rows_long"] == report["n_symbols"] * report["n_dates"]
-
-    master = spark.read.parquet(f"{out}/master_long.parquet")
-    assert master.count() == report["rows_long"]
-    # forward-fill + drop-invalid ran BEFORE alignment: any null close in
-    # the master is an alignment gap (symbol didn't trade that day)
-    assert set(master.columns) >= {"symbol", "date", "close", "volume"}
-
-    wide = spark.read.option("header", True).csv(f"{out}/master_wide_csv")
-    assert wide.count() == report["n_dates"]
-    assert len(wide.columns) == 1 + 5 * 5  # date + 5 fields x 5 symbols
-
-    # year-partitioned layout: a year filter must prune at planning time
-    some_year = master.select(F.min("year")).first()[0]
-    pruned = master.filter(F.col("year") == some_year)
-    fmt = pruned._sc._jvm.PythonSQLUtils.explainString(
-        pruned._jdf.queryExecution(), "formatted"
-    )
-    assert "PartitionFilters: [isnotnull(year" in fmt, fmt
 
 
 def test_read_wide_csv_reference_format(spark, tmp_path):
@@ -54,7 +28,7 @@ def test_read_wide_csv_reference_format(spark, tmp_path):
     )
     out = {
         (r.symbol, str(r.date)): r
-        for r in read_wide_csv(spark, str(csv), date_col="Date").collect()
+        for r in read_wide_csv(spark, str(csv)).collect()
     }
     assert len(out) == 6  # 2 symbols x 3 dates (missing rows kept, NULL)
     assert out[("AAPL", "2024-01-02")].close == 1.5
@@ -70,23 +44,24 @@ def test_read_wide_csv_reference_format(spark, tmp_path):
     assert {s for s, _ in out} == {"AAPL", "MSFT"}
 
 
-def test_wide_csv_roundtrip_through_own_export(spark, tmp_path):
-    """The engine's own wide export re-ingests through the same reader
-    (lowercase field suffixes take the same path)."""
-    from algoritmos_etl_spark.operators import alignment
-    from algoritmos_etl_spark.sources import daily_bars, load_table, read_wide_csv
-    from pyspark.sql import functions as F
+def test_wide_csv_roundtrip_through_own_export(spark):
+    """`wide_roundtrip` writes the engine's own wide export (lowercase
+    field suffixes) once per session and re-ingests it through the
+    same reader: every bar of its symbols comes back, and a second
+    build reuses the one written CSV."""
+    from algoritmos_etl_spark import store
+    from algoritmos_etl_spark.driver_queries import REGISTRY
 
-    bars = daily_bars(load_table(spark, SF_DIR, "events")).filter(
-        F.col("symbol").isin(0, 1)
-    )
-    wide = alignment.to_wide(bars, symbols=["0", "1"])
-    path = str(tmp_path / "wide_csv")
-    wide.coalesce(1).write.option("header", True).csv(path)
-    back = read_wide_csv(spark, path).filter(F.col("close").isNotNull())
-    orig = {(r.symbol, str(r.date), r.close) for r in bars.collect()}
-    got = {(int(r.symbol), str(r.date), r.close) for r in back.collect()}
-    assert got == orig
+    build = REGISTRY["wide_roundtrip"].build
+    back = build(spark, SF_DIR)
+    bars = session_bars(spark, SF_DIR).filter(F.col("symbol").isin(0, 1, 2, 3))
+    cols = ["symbol", "date", "open", "high", "low", "close", "volume"]
+    orig = {tuple(r) for r in bars.select(*cols).collect()}
+    assert orig
+    assert {tuple(r) for r in back.collect()} == orig
+    build(spark, SF_DIR).count()
+    keys = [k for k in store._ENTRIES if k[1:] == ("wide_csv", SF_DIR)]
+    assert len(keys) == 1
 
 
 def test_read_wide_csv_rejects_malformed_headers(spark, tmp_path):
@@ -101,7 +76,7 @@ def test_read_wide_csv_rejects_malformed_headers(spark, tmp_path):
         csv = tmp_path / f"bad_{bad_col}.csv"
         csv.write_text(f"Date,AAPL_Close,{bad_col}\n2024-01-02,1.5,1.4\n")
         with pytest.raises(ValueError, match="symbol"):
-            read_wide_csv(spark, str(csv), date_col="Date")
+            read_wide_csv(spark, str(csv))
 
 
 def test_dtw_path_consistency(spark):

@@ -127,7 +127,9 @@ def test_no_antipattern_in_plan(spark, name):
 # in ENGINE modules is allowed only at the documented provably-bounded
 # sites below; serving/report edges are exempt by module. A new
 # .collect()/.toPandas() anywhere else fails this test until it is
-# either made distributed or documented here with its bound.
+# either made distributed or documented here with its bound. Each
+# allowance is exact and each listed module must exist, so a removed
+# site or module cannot leave an unused allowance behind.
 # ---------------------------------------------------------------------------
 
 import os
@@ -138,7 +140,7 @@ _PKG = os.path.join(
     "algoritmos_etl_spark",
 )
 
-# module (relative to the package) -> (max allowed sites, bound argument)
+# module (relative to the package) -> (number of sites, bound argument)
 _COLLECT_BOUNDED = {
     "operators/vectors.py": (
         3,
@@ -162,11 +164,6 @@ _COLLECT_BOUNDED = {
         "the copy-on-write delete's touched-file list (bounded by the "
         "delete batch's file spread)",
     ),
-    "plans/etl_pipeline.py": (
-        1,
-        "wide-CSV export symbol list (distinct symbols, "
-        "limit(max_wide_symbols))",
-    ),
 }
 # presentation/serving edges: collect IS their job
 _EDGE_MODULES = {"serve.py", "report.py", "pdf_report.py"}
@@ -175,7 +172,7 @@ _PATTERN = re.compile(r"\.collect\(\)|\.toPandas\(\)")
 
 
 def test_no_undeclared_driver_collect_in_engine_modules():
-    violations = []
+    violations, seen = [], set()
     for root, _dirs, files in os.walk(_PKG):
         for fname in files:
             if not fname.endswith(".py"):
@@ -184,17 +181,19 @@ def test_no_undeclared_driver_collect_in_engine_modules():
             rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
             if rel in _EDGE_MODULES:
                 continue
+            seen.add(rel)
             with open(path) as fh:
                 n = len(_PATTERN.findall(fh.read()))
-            if n == 0:
-                continue
             allowed = _COLLECT_BOUNDED.get(rel, (0, ""))[0]
-            if n > allowed:
-                violations.append(f"{rel}: {n} collect sites (allowed {allowed})")
+            if n != allowed:
+                violations.append(f"{rel}: {n} collect sites (declared {allowed})")
     assert not violations, (
-        "undeclared driver-side collect in engine modules — make it "
-        f"distributed or declare the bound: {violations}"
+        "driver-side collect count differs from its declaration in engine "
+        "modules — make a new site distributed or declare its bound, and "
+        f"lower the allowance when a site goes: {violations}"
     )
+    stale = sorted(set(_COLLECT_BOUNDED) - seen)
+    assert not stale, f"_COLLECT_BOUNDED entries that are gone: {stale}"
 
 
 # ---------------------------------------------------------------------------
@@ -305,10 +304,6 @@ _DISK_STATE = (
     "disk-state maintenance and recovery, the target of the "
     "kill-and-resume harness (ROADMAP item 5)"
 )
-_INGEST = (
-    "reference ingest surface: the paper's data_fetcher, etl_pipeline "
-    "and wide-CSV stages"
-)
 _TEST_ONLY_OK = {
     "operators.patterns._windowed_streak_hist_naive": _TEST_REF,
     "operators.vectors.cosine_neardup_pairs": (
@@ -344,17 +339,6 @@ _TEST_ONLY_OK = {
     "streaming.mv.compact_sketch_mv": _DISK_STATE,
     "streaming.mv.vacuum_agg_mv": _DISK_STATE,
     "streaming.mv.vacuum_cdc_state": _DISK_STATE,
-    "plans.etl_pipeline.run_etl": _INGEST,
-    "operators.cleaning.missing_value_summary": _INGEST,
-    "operators.cleaning.drop_empty_symbols": _INGEST,
-    "sources.json_source.urllib_fetch": _INGEST,
-    "sources.json_source.fetch_with_retry": _INGEST,
-    "sources.json_source.fetch_multiple": _INGEST,
-    "sources.json_source.assert_min_success": _INGEST,
-    "sources.json_source.parse_chart_payloads": _INGEST,
-    "sources.json_source.read_chart_payloads": _INGEST,
-    "sources.wide_csv.read_wide_csv": _INGEST,
-    "sources.wide_csv.string_null": _INGEST,
 }
 _EDGE_ROOTS = ("serve", "report", "pdf_report")
 
